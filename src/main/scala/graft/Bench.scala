@@ -47,15 +47,6 @@ object Bench {
       case c            => c.toString
     }
 
-    // every memoized cross-query artifact (see train_serve_split below)
-    def clearAllArtifactCaches(): Unit = {
-      graft.ops.Relational.clearExactPctCache()
-      graft.ops.Dedup.clearLabelsCache()
-      graft.ops.Similarity.clearArtifactCache()
-      graft.ops.TextAnalysis.clearLmScoreCache()
-      graft.ops.TextAnalysis.clearTokenizerCache()
-    }
-
     def runOnce(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
       try {
@@ -101,7 +92,7 @@ object Bench {
     // rides for free on the warmup.
     val measured: Seq[Map[String, Either[String, Double]]] =
       (1 to passes).map { _ =>
-        clearAllArtifactCaches()
+        graft.ops.Artifacts.clearCache()
         names.map(n => n -> runOnce(n)).toMap
       }
     // per-query min over the passes a query succeeded in; a query that
@@ -132,7 +123,7 @@ object Bench {
       "approx_quantiles"                          // exact-percentile table
     ).filter(names.contains)
     val trainServe: Seq[(String, Double, Double)] = splitNames.flatMap { n =>
-      clearAllArtifactCaches()
+      graft.ops.Artifacts.clearCache()
       (runOnce(n), runOnce(n)) match {
         case (Right(cold), Right(warm)) => Some((n, cold, warm))
         case (c, w) =>

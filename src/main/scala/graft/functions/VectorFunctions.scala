@@ -23,14 +23,6 @@ object VectorMath {
     acc
   }
 
-  def norm2F(a: ArrayData): Double = {
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) { val v = a.getFloat(i).toDouble; acc += v * v; i += 1 }
-    acc
-  }
-
   /** cosine = dot / (sqrt(|a|^2) * sqrt(|b|^2)); 0.0 for a zero vector.
     * Single pass over both arrays (dot and both norms accumulated
     * together — one memory walk instead of three). */
@@ -207,12 +199,6 @@ object VectorMathArr {
     var acc = 0.0
     var i   = 0
     while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
-  def norm2(a: Array[Float]): Double = {
-    var acc = 0.0
-    var i   = 0
-    while (i < a.length) { val v = a(i).toDouble; acc += v * v; i += 1 }
     acc
   }
 }

@@ -155,7 +155,8 @@ object Centroids {
     * centroid of its own super (the documented IVF recall trade); the
     * oracle implements the identical rule. Returns
     * (vec_id, embedding, cluster, sqd). */
-  private[graft] def kmeansAssignTwoLevel(base: DataFrame, k: Long): DataFrame = {
+  private[graft] def kmeansAssignTwoLevel(
+      base: DataFrame, k: Long): DataFrame = Checkpoints.scope { ck =>
     val s = math.max(1L, math.ceil(math.sqrt(k.toDouble)).toLong)
 
     // the one collected literal: s×dim super-centroids, O(√k·dim)
@@ -188,20 +189,19 @@ object Centroids {
           col("m.cluster").as("cluster"), col("m.sqd").as("sqd"))
     }
 
-    val cents0 = base.filter(col("vec_id") < k)
+    // k rows; feeds present-supers probe + the join
+    val cents0 = ck.ckpt(base.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"),
         transform(col("embedding"), x => x.cast("double")).as("c"))
-      .withColumn("super", superOfDouble(col("c")))
-      .localCheckpoint() // k rows; feeds present-supers probe + the join
+      .withColumn("super", superOfDouble(col("c"))))
     val a0 = assign(cents0)
-    val cents1 = a0
+    val cents1 = ck.ckpt(a0
       .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy("cluster", "dim").agg(round(avg(col("v").cast("double")), 6).as("av"))
       .groupBy("cluster")
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("av")))),
         e => e.getField("av")).as("c"))
-      .withColumn("super", superOfDouble(col("c")))
-      .localCheckpoint() // k rows
+      .withColumn("super", superOfDouble(col("c")))) // k rows
     assign(cents1)
   }
 
@@ -326,10 +326,9 @@ object Centroids {
     * convergence; the oracle replays all 5 rounds as chained
     * MATERIALIZED CTEs and `ClusteringSpec` pins the curve
     * non-increasing with round 1 equal to the seed assignment. */
-  def kmeansTrain(spark: SparkSession, dir: String): DataFrame = {
+  def kmeansTrain(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     import spark.implicits._
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .localCheckpoint()
+    val base = ck.ckpt(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
     var cents = seedCents(base, KmeansK)
     val curve = (1 to KmeansRounds).map { r =>
       val a = assignWith(base, cents)
@@ -812,29 +811,27 @@ object Centroids {
     * ∝ cluster diameter — a production deployment swaps ccOn for
     * pointer-doubling/star contraction at O(log n) rounds, noted not
     * faked. */
-  def dbscanGrid(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Tables.embeddings(spark, dir).select(col("vec_id").as("id"),
+  def dbscanGrid(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    // probed as both join sides + the final role union
+    val pts = ck.ckpt(Tables.embeddings(spark, dir).select(col("vec_id").as("id"),
         expr("CAST(round(CAST(element_at(embedding, 1) AS DOUBLE) * 1000000) AS BIGINT)").as("x"),
         expr("CAST(round(CAST(element_at(embedding, 2) AS DOUBLE) * 1000000) AS BIGINT)").as("y"))
       .withColumn("cx", expr(s"(x + $DbShift) div $DbEps"))
-      .withColumn("cy", expr(s"(y + $DbShift) div $DbEps"))
-      .localCheckpoint() // probed as both join sides + the final role union
+      .withColumn("cy", expr(s"(y + $DbShift) div $DbEps")))
     val offs = for (dx <- -1L to 1L; dy <- -1L to 1L) yield (dx, dy)
     val probe = pts.select(col("id").as("a_id"), col("x").as("ax"), col("y").as("ay"),
         explode(array(offs.map { case (dx, dy) =>
           struct((col("cx") + dx).as("ncx"), (col("cy") + dy).as("ncy")) }: _*)).as("nc"))
       .select(col("a_id"), col("ax"), col("ay"),
         col("nc.ncx").as("cx"), col("nc.ncy").as("cy"))
-    val pairs = probe
+    val pairs = ck.ckpt(probe
       .join(pts.select(col("id").as("b_id"), col("x").as("bx"),
         col("y").as("by"), col("cx"), col("cy")), Seq("cx", "cy"))
       .filter(col("a_id") =!= col("b_id"))
       .filter(expr(s"(ax - bx) * (ax - bx) + (ay - by) * (ay - by) <= ${DbEps * DbEps}"))
-      .select("a_id", "b_id")
-      .localCheckpoint() // feeds neighbor counts, core edges, border attach
-    val core = pairs.groupBy("a_id").agg(count(lit(1)).as("nn"))
-      .filter(col("nn") + 1L >= DbMinPts).select(col("a_id").as("id"))
-      .localCheckpoint()
+      .select("a_id", "b_id")) // feeds neighbor counts, core edges, border attach
+    val core = ck.ckpt(pairs.groupBy("a_id").agg(count(lit(1)).as("nn"))
+      .filter(col("nn") + 1L >= DbMinPts).select(col("a_id").as("id")))
     val coreEdges = pairs
       .join(core.withColumnRenamed("id", "a_id"), "a_id")
       .join(core.withColumnRenamed("id", "b_id"), "b_id")
@@ -938,31 +935,30 @@ object Centroids {
     * live to end-of-query (the SSE branches read them in the final
     * action), so the user-sized ones store MEMORY_AND_DISK_SER (the
     * link_predict r20 convention for pinned long-lived tables). */
-  def alsRank1(spark: SparkSession, dir: String): DataFrame = {
+  def alsRank1(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val cells = Tables.lineitem(spark, dir)
+    // feeds every half-step and the SSE passes
+    val cells = ck.ckpt(Tables.lineitem(spark, dir)
       .join(Tables.orders(spark, dir).select(col("o_orderkey").as("l_orderkey"),
         col("o_custkey").as("u")), "l_orderkey")
       .groupBy(col("u"), (col("l_partkey") % 211).as("i"))
-      .agg(sum(col("l_quantity").cast("long")).as("r"))
-      .localCheckpoint(true, ser) // feeds every half-step and the SSE passes
+      .agg(sum(col("l_quantity").cast("long")).as("r")), ser)
     // one pass; BroadcastExchange reuse shares it across the 4 SSE rows
     val nRow = cells.agg(
       countDistinct(col("u")).as("nu"), countDistinct(col("i")).as("ni"))
-    var ufac = cells.select(col("u")).distinct()
-      .select(col("u"), lit(1000000L).as("uf"))
-      .localCheckpoint(true, ser)
+    var ufac = ck.ckpt(cells.select(col("u")).distinct()
+      .select(col("u"), lit(1000000L).as("uf")), ser)
     val sseRows = (1 to AlsRounds).map { t =>
-      val vfac = cells.join(ufac, "u")
+      // item-sized (≤211 rows); feeds the u-step and the SSE join
+      val vfac = ck.ckpt(cells.join(ufac, "u")
         .groupBy("i")
         .agg(expr("""CAST((CAST(sum(CAST(r AS DECIMAL(38,0)) * uf) AS DECIMAL(38,0)) * 1000000000000)
-                    |     div sum(CAST(uf AS DECIMAL(38,0)) * uf) AS BIGINT)""".stripMargin).as("vf"))
-        .localCheckpoint() // item-sized (≤211 rows); feeds the u-step and the SSE join
-      ufac = cells.join(vfac, "i")
+                    |     div sum(CAST(uf AS DECIMAL(38,0)) * uf) AS BIGINT)""".stripMargin).as("vf")))
+      // feeds the SSE join and the next sweep
+      ufac = ck.ckpt(cells.join(vfac, "i")
         .groupBy("u")
         .agg(expr("""CAST((CAST(sum(CAST(r AS DECIMAL(38,0)) * vf) AS DECIMAL(38,0)) * 1000000000000)
-                    |     div sum(CAST(vf AS DECIMAL(38,0)) * vf) AS BIGINT)""".stripMargin).as("uf"))
-        .localCheckpoint(true, ser) // feeds the SSE join and the next sweep
+                    |     div sum(CAST(vf AS DECIMAL(38,0)) * vf) AS BIGINT)""".stripMargin).as("uf")), ser)
       cells.join(ufac, "u").join(vfac, "i")
         .agg(
           sum(expr("""(CAST(r AS DECIMAL(38,0)) * 1000000000000 - CAST(uf AS DECIMAL(38,0)) * vf)

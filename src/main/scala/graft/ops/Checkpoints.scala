@@ -1,88 +1,193 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, TimeoutException}
 
-/** Storage hygiene for `localCheckpoint`-per-round iterative operators.
+import scala.collection.mutable
+import scala.util.{Failure, Try}
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** The one owner of checkpointed state.
   *
-  * `Dataset.unpersist()` only clears CacheManager entries (`cache()` /
-  * `persist()`); a checkpoint's storage is RDD-level persistence behind
-  * a `LogicalRDD`, invisible to the CacheManager — so "unpersist the
-  * superseded round" was silently a no-op for checkpointed tables, and
-  * every walk leaked one edge- or node-sized block set per round until
-  * driver GC + ContextCleaner got around to it (probe-observed at 32×:
-  * a warm `coreness` rerun slowed 25 s → 39 s under the accumulated
-  * blocks). [[free]] reaches through to the checkpoint's RDD and drops
-  * its blocks directly.
+  * A `localCheckpoint` is RDD-level persistence behind a `LogicalRDD`
+  * with its lineage cut: freed blocks can NOT be recomputed, and any
+  * plan still reading them fails with a missing-block error. It is also
+  * invisible to the CacheManager, so `Dataset.unpersist()` never frees
+  * it; left alone its blocks live until driver GC lets the
+  * ContextCleaner find the RDD.
   *
-  * Safety contract: a checkpointed RDD has NO lineage — freed blocks
-  * cannot be recomputed — so callers must only free a table once every
-  * consumer (the next round's checkpoint, eager by default) has
-  * materialized.
+  * Ownership invariant:
+  *  - every checkpoint is taken inside a [[scope]] (`s.ckpt`,
+  *    `s.captured`, `s.partitioned`) and that scope owns it; nothing
+  *    else frees it. `s.free` frees a superseded round early, once its
+  *    successor has materialized;
+  *  - when the scope's body returns, the scope frees every checkpoint it
+  *    owns that the result does not read. "Reads" means the checkpoint's
+  *    RDD is reachable from a `LogicalRDD` in the result's analyzed plan
+  *    (subqueries included) through RDD dependencies, so a result never
+  *    loses a block it will scan, even through a lazy checkpoint.
+  *    Datasets nested in a tuple, case class or collection result count;
+  *    any other result reads none;
+  *  - the checkpoints a result reads pass to the enclosing scope on the
+  *    same thread (or to [[Scope.parallel]]'s scope on its workers),
+  *    which applies the same rule when it returns; with no enclosing
+  *    scope they are the caller's, and the ContextCleaner frees them once
+  *    the result is unreachable;
+  *  - when the body throws, the scope frees everything it owns;
+  *  - [[Artifacts]] runs its builds in a detached scope and holds what
+  *    the artifact reads until `Artifacts.clearCache`.
+  *
+  * A scope only frees; it never checkpoints or runs a Spark job.
   */
 object Checkpoints {
 
-  /** `localCheckpoint` that genuinely RETAINS `hashpartitioning(partKeys)`
-    * and the `sortKeys` ordering in the resulting `LogicalRDD`, so every
-    * downstream equi-join on `partKeys` plans exchange- AND sort-free on
-    * this arm (PlanSpec pins the mechanism executably).
-    *
-    * Why the AQE-off scope: under AQE (on by default) `localCheckpoint`
-    * captures `UnknownPartitioning` and no ordering —
-    * `LogicalRDD.fromDataset` cannot see through `AdaptiveSparkPlanExec`
-    * to the final plan's partitioning — so the round-21 inline
-    * repartition+sort+checkpoint sites paid their shuffle+sort with ZERO
-    * downstream benefit (round-22 probe: the per-round joins still
-    * re-exchanged and re-sorted both arms). With AQE disabled for just
-    * this one materialization the capture works, and consumers planned
-    * with AQE back on honor the leaf partitioning.
-    *
-    * The partition count comes from `spark.sql.shuffle.partitions`
-    * (conf-driven — core count in Bench, cluster-sized in production),
-    * so the layout stays scale-adaptive; the single checkpoint job
-    * foregoes AQE coalescing, acceptable for the edge-/matrix-sized
-    * tables this guards. NOT thread-safe (session-global conf flip):
-    * call only on a query's serial spine, never inside thread-pool
-    * fan-outs. */
-  def partitionedCheckpoint(df: org.apache.spark.sql.DataFrame,
-                            partKeys: Seq[String],
-                            sortKeys: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val sk = if (sortKeys.isEmpty) partKeys else sortKeys
-    capturedCheckpoint(
-      df.repartition(partKeys.map(col): _*).sortWithinPartitions(sk.map(col): _*),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private val current = new ThreadLocal[Scope]
+
+  /** Upper bound on [[Scope.parallel]]'s threads: independent job chains
+    * overlap their straggler tails; more threads only queue stages. */
+  private val MaxParallel = 4
+
+  final class Scope private[Checkpoints] {
+    private val owned = mutable.Map.empty[Int, RDD[_]]
+
+    def ckpt[T](ds: Dataset[T]): Dataset[T] = own(ds.localCheckpoint())
+
+    def ckpt[T](ds: Dataset[T], level: StorageLevel): Dataset[T] =
+      own(ds.localCheckpoint(true, level))
+
+    /** Checkpoint materialized by the first action that reads it. */
+    def lazyCkpt[T](ds: Dataset[T]): Dataset[T] = own(ds.localCheckpoint(eager = false))
+
+    /** Checkpoint that keeps the partitioning and ordering `df`'s plan
+      * already produces. It runs with AQE off for this one
+      * materialization: under AQE the `LogicalRDD` records
+      * `UnknownPartitioning` (it cannot see through
+      * `AdaptiveSparkPlanExec`), and a repartition or sort before the
+      * checkpoint buys nothing downstream. The conf is session-global,
+      * so the flip and restore run under a lock on the session:
+      * concurrent callers cannot capture each other's "false" and leave
+      * AQE off. */
+    def captured(df: DataFrame, level: StorageLevel): DataFrame = {
+      val spark = df.sparkSession
+      val k     = "spark.sql.adaptive.enabled"
+      own(spark.synchronized {
+        val prev = spark.conf.get(k, "true")
+        spark.conf.set(k, "false")
+        try df.localCheckpoint(true, level)
+        finally spark.conf.set(k, prev)
+      })
+    }
+
+    /** Checkpoint hash-partitioned on `partKeys` and sorted within
+      * partitions on `sortKeys` (default: `partKeys`), with that layout
+      * kept in the `LogicalRDD`, so every downstream equi-join on
+      * `partKeys` plans exchange- and sort-free on this side. The
+      * partition count is `spark.sql.shuffle.partitions`. */
+    def partitioned(df: DataFrame, partKeys: Seq[String],
+                    sortKeys: Seq[String] = Nil): DataFrame = {
+      import org.apache.spark.sql.functions.col
+      val sk = if (sortKeys.isEmpty) partKeys else sortKeys
+      captured(df.repartition(partKeys.map(col): _*).sortWithinPartitions(sk.map(col): _*),
+        StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Frees a checkpoint this scope owns before the scope ends (a
+      * superseded round whose successor has materialized). No-op for
+      * anything else: a view over a checkpoint, or a checkpoint owned by
+      * another scope or by [[Artifacts]]. */
+    def free(ds: Dataset[_]): Unit =
+      rddOf(ds).flatMap(r => synchronized(owned.remove(r.id)))
+        .foreach(_.unpersist(blocking = false))
+
+    /** Runs independent thunks on up to [[MaxParallel]] threads, inside
+      * this scope, and returns their results in order. Waits until every
+      * thunk has settled, before rethrowing the first failure, so the
+      * scope never frees a block under a sibling's running job. After 60
+      * minutes the workers are interrupted, and once they have settled a
+      * `TimeoutException` is thrown. */
+    def parallel[A](thunks: Seq[() => A]): Seq[A] = {
+      val pool = Executors.newFixedThreadPool(math.max(1, math.min(MaxParallel, thunks.size)))
+      val scope = this
+      val tasks =
+        try thunks.map(t => pool.submit(new Callable[A] {
+          def call(): A = { current.set(scope); try t() finally current.remove() }
+        }))
+        finally pool.shutdown()
+      if (!pool.awaitTermination(60, TimeUnit.MINUTES)) {
+        pool.shutdownNow()
+        while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+        throw new TimeoutException("Checkpoints.parallel: thunks ran past 60 minutes")
+      }
+      val settled = tasks.map(f => Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      })
+      settled.collectFirst { case Failure(t) => throw t }
+      settled.map(_.get)
+    }
+
+    private def own[T](ds: Dataset[T]): Dataset[T] = { adopt(rddOf(ds)); ds }
+
+    private[Checkpoints] def adopt(rdds: Iterable[RDD[_]]): Unit =
+      synchronized(rdds.foreach(r => owned(r.id) = r))
+
+    /** Frees every owned checkpoint whose id is not in `keep`; returns
+      * the kept ones. */
+    private[Checkpoints] def release(keep: Set[Int]): Seq[RDD[_]] = {
+      val (kept, dead) = synchronized {
+        val all = owned.values.toSeq
+        owned.clear()
+        all.partition(r => keep(r.id))
+      }
+      dead.foreach(_.unpersist(blocking = false))
+      kept
+    }
   }
 
-  /** [[partitionedCheckpoint]] minus the repartition+sort: checkpoints
-    * `df` in the same brief AQE-off scope so whatever partitioning and
-    * ordering df's plan ALREADY produces (e.g. an explicit
-    * repartition(n, key) + key-partitioned window) is captured in the
-    * LogicalRDD instead of degraded to UnknownPartitioning. Same
-    * thread-safety caveat. */
-  def capturedCheckpoint(df: org.apache.spark.sql.DataFrame,
-                         level: org.apache.spark.storage.StorageLevel)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k, "true")
-    spark.conf.set(k, "false")
-    try df.localCheckpoint(true, level)
-    finally spark.conf.set(k, prev)
+  /** Runs `body` in a new scope nested in the current one (see the
+    * ownership invariant above). */
+  def scope[A](body: Scope => A): A = {
+    val parent = Option(current.get)
+    val (result, kept) = detached(body)
+    parent.foreach(_.adopt(kept))
+    result
   }
 
-  /** Frees the storage behind a `localCheckpoint`ed Dataset; no-op for
-    * anything that is not a direct checkpoint handle. */
-  def free(df: Dataset[_]): Unit = df.queryExecution.logical match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-    case _                                             => ()
+  /** Runs `body` in a new scope with no parent; returns the result and
+    * the checkpoints it reads, which the caller now owns. */
+  private[ops] def detached[A](body: Scope => A): (A, Seq[RDD[_]]) = {
+    val s     = new Scope
+    val outer = current.get
+    current.set(s)
+    val result =
+      try body(s)
+      catch { case t: Throwable => s.release(Set.empty); throw t }
+      finally current.set(outer)
+    (result, s.release(readIds(result)))
   }
 
-  /** [[free]] guarded for cache-eviction paths (round-21 ADVICE fix):
-    * artifact caches hold checkpoint handles whose session may already
-    * be stopped — those blocks died with the session and unpersist
-    * would throw; live-session handles must free here or every bench
-    * eviction strands vocabulary-sized blocks for the session
-    * lifetime. */
-  def freeIfLive(df: Dataset[_]): Unit =
-    if (!df.sparkSession.sparkContext.isStopped) free(df)
+  /** Ids of every RDD `result` can read when it runs. */
+  private def readIds(result: Any): Set[Int] = result match {
+    case ds: Dataset[_] =>
+      val seen  = mutable.Set.empty[Int]
+      val stack = mutable.Stack.empty[RDD[_]]
+      stack.pushAll(ds.queryExecution.analyzed.collectWithSubqueries {
+        case lr: LogicalRDD => lr.rdd
+      })
+      while (stack.nonEmpty) {
+        val r = stack.pop()
+        if (seen.add(r.id)) stack.pushAll(r.dependencies.map(_.rdd))
+      }
+      seen.toSet
+    case p: Product      => p.productIterator.flatMap(readIds).toSet
+    case c: Iterable[_]  => c.flatMap(readIds).toSet
+    case _               => Set.empty
+  }
+
+  private def rddOf(ds: Dataset[_]): Option[RDD[_]] = ds.queryExecution.logical match {
+    case lr: LogicalRDD => Some(lr.rdd)
+    case _              => None
+  }
 }

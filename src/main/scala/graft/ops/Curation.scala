@@ -650,14 +650,13 @@ object Curation {
     * training batches. Hash order is a uniform permutation for
     * training purposes while staying resumable: batch k is the same
     * rows on every rerun, so a crashed epoch restarts mid-stream. */
-  def trainShuffle(spark: SparkSession, dir: String): DataFrame = {
+  def trainShuffle(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), knuthBucket(col("doc_id"), 1000003L).as("h"))
-    val parted = docs
+    val parted = ck.ckpt(docs
       .repartitionByRange(ScanPartitions, col("h"), col("doc_id"))
       .sortWithinPartitions("h", "doc_id")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // pin partition ids before they are used twice
+      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
     val offs = parted.groupBy("pid").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
@@ -712,13 +711,12 @@ object Curation {
     * per-lang window ever serializes a dominant language into one task.
     * Shared by [[mixtureSample]] (quota cut) and [[epochMixture]]
     * (repetition threshold). */
-  private def perLangRank(docs: DataFrame): DataFrame = {
+  private def perLangRank(docs: DataFrame): DataFrame = Checkpoints.scope { ck =>
     val spark = docs.sparkSession
-    val parted = docs
+    val parted = ck.ckpt(docs
       .repartitionByRange(ScanPartitions, col("lang"), col("h"), col("doc_id"))
       .sortWithinPartitions("lang", "h", "doc_id")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // pin partition ids before they are used twice
+      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
     val offs = parted.groupBy("pid", "lang").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
       .groupBy(_._2).toSeq.flatMap { case (lang, rows) =>
@@ -876,7 +874,7 @@ object Curation {
     * corpus is the shifted self-union `dedup_exact_docs` uses, so dup
     * verdicts exist at every SF. Thresholds are integer-exact
     * cross-engine (n_chars·100 > n_tokens·572 — no division). */
-  def curationPipeline(spark: SparkSession, dir: String): DataFrame = {
+  def curationPipeline(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     // NULL text is normalized to '' ONCE at the source, mirrored by the
     // oracle's coalesce in its corpus CTE — so a NULL document flows
     // through stats → quality gate → fingerprint identically on both
@@ -891,14 +889,13 @@ object Curation {
         length(col("text")).cast("long").as("n_chars"),
         graft.functions.TextFunctions.tokenStats(col("text")).getField("n_tokens").as("n_tokens"),
         graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
-    val flagged = t.withColumn("qfail",
+    val flagged = ck.ckpt(t.withColumn("qfail",
       when(col("n_tokens") < 30L, "too_short")
-        .when(col("n_chars") * 100L > col("n_tokens") * 572L, "low_density"))
+        .when(col("n_chars") * 100L > col("n_tokens") * 572L, "low_density")))
       // consumed twice (group min + the label join-back); the rows are
       // (id, 3 longs, reason) — text is already dropped, so this
       // materializes the reduced stats table, not the corpus. Checkpoint,
-      // not cache: ContextCleaner-owned, never CacheManager-pinned
-      .localCheckpoint()
+      // not cache: scope-owned, never CacheManager-pinned
     val firstIds = flagged.filter(col("qfail").isNull)
       .groupBy("fp").agg(min("doc_id").as("keep_id"))
     flagged.join(firstIds, Seq("fp"), "left")
@@ -1279,7 +1276,7 @@ object Curation {
     * partials; documents collapse to (doc, type, k) cells BEFORE the
     * model equi-join (the tfidf shape); N_T/N_B/V ride along as one
     * broadcast 1-row aggregate. */
-  def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
+  def dsirWeights(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs  = Tables.documents(spark, dir)
     val toks  = docs.select(col("doc_id"), col("source"),
       explode(filter(split(col("text"), " "), x => x =!= "")).as("t"))
@@ -1287,9 +1284,9 @@ object Curation {
     val uniB = toks.groupBy("t").agg(count(lit(1)).as("cb"))
     val uniT = toks.filter(col("source") === "src0")
       .groupBy("t").agg(count(lit(1)).as("ct"))
-    val model = uniB.join(uniT, Seq("t"), "left")
-      .select(col("t"), col("cb"), coalesce(col("ct"), lit(0L)).as("ct"))
-      .localCheckpoint() // vocab-sized; feeds the totals and the score join
+    // vocab-sized; feeds the totals and the score join
+    val model = ck.ckpt(uniB.join(uniT, Seq("t"), "left")
+      .select(col("t"), col("cb"), coalesce(col("ct"), lit(0L)).as("ct")))
     val tot = model.agg(sum("cb").as("nb"), sum("ct").as("nt"),
       count(lit(1)).as("v"))
     val scoredModel = model.crossJoin(broadcast(tot))
@@ -1750,17 +1747,16 @@ object Curation {
     * key comparison, no per-group window, no data-sized shuffle. The
     * dimension attach is a 25-row broadcast. A billion-row hot group
     * costs the same as a small one. */
-  def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
+  def kAnonymity(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val dims = Tables.nation(spark, dir)
       .join(Tables.region(spark, dir), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"), col("r_name"))
-    val base = Tables.customer(spark, dir)
+    val base = ck.ckpt(Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
       .join(broadcast(dims), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("c_mktsegment"), col("n_nationkey"),
-        col("n_name"), col("r_name"))
+        col("n_name"), col("r_name")))
       // feeds the level-0 count, the re-attach, and the level-1 recount
-      .localCheckpoint()
     val g0 = base.groupBy("n_nationkey", "c_mktsegment").agg(count(lit(1)).as("n0"))
     val lvl0 = base.join(broadcast(g0), Seq("n_nationkey", "c_mktsegment"))
     val fail0 = lvl0.filter(col("n0") < KAnon)

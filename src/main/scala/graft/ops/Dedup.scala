@@ -129,9 +129,9 @@ object Dedup {
     * line list. No window, no driver state; a billion-page site's
     * shared header is ONE hot hash cell (AQE skew handles it), not a
     * cross-join. */
-  def lineDedup(spark: SparkSession, dir: String): DataFrame = {
+  def lineDedup(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val lines = docs.select(col("doc_id"),
+    val lines = ck.ckpt(docs.select(col("doc_id"),
       posexplode(array(
         concat(lit("nav home about contact v"), (col("doc_id") % 3).cast("string")),
         expr("substring(text, 1, length(text) div 2)"),
@@ -139,8 +139,7 @@ object Dedup {
         concat(lit("copyright footer y"), (col("doc_id") % 2).cast("string"))))
         .as(Seq("pos", "line")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("line"),
-        md5(col("line")).as("h"))
-      .localCheckpoint() // feeds the frequency agg and the reassembly
+        md5(col("line")).as("h"))) // feeds the frequency agg and the reassembly
     val freq = lines.groupBy("h").agg(countDistinct("doc_id").as("ndocs"))
     lines.join(freq, "h")
       .groupBy("doc_id")
@@ -394,11 +393,11 @@ object Dedup {
     * round-17 fix attempt: probe showed 32× unchanged at 211 s because
     * the intersect ran in the 16-partition post-join stage). */
   private def sizedForVerify(
-      candidates: DataFrame, key: String, inputBytes: BigInt): (DataFrame, Int) = {
+      candidates: DataFrame, key: String, inputBytes: BigInt): (DataFrame, Int) = Checkpoints.scope { ck =>
     val floor = candidates.sparkSession.sparkContext.defaultParallelism
     if (inputBytes < SizeGateBytes) (candidates.repartition(floor, col(key)), floor)
     else {
-      val ckpt = candidates.localCheckpoint()
+      val ckpt = ck.ckpt(candidates)
       val parts = math.min(4096L,
         math.max(floor.toLong, (ckpt.count() + VerifyRowsPerTask - 1) / VerifyRowsPerTask)).toInt
       (ckpt.repartition(parts, col(key)), parts)
@@ -407,10 +406,10 @@ object Dedup {
 
   private def lshCandidatesVerified(
       docs0: DataFrame, idCol: String,
-      wordGrams: Boolean, n: Int, threshold: Double): DataFrame = {
+      wordGrams: Boolean, n: Int, threshold: Double): DataFrame = Checkpoints.scope { ck =>
     // same row set the shingle-array pipeline kept: at least one window
     val base = docs0.filter(hasWindow(wordGrams, n)).select(col(idCol), col("text"))
-    val bands = bandTable(docs0, idCol, wordGrams, n).localCheckpoint()
+    val bands = ck.ckpt(bandTable(docs0, idCol, wordGrams, n))
     // AQE would coalesce this small ids-only set to ~1 partition (it
     // coalesces by BYTES, blind to downstream compute cost) and the
     // whole verify stage would run single-threaded — the classic
@@ -475,15 +474,14 @@ object Dedup {
     * NULL shape, mirrored by the oracle). The DuckDB oracle is the
     * brute-force batch×index jaccard join, so the hash-match also
     * re-proves LSH recall 1.0 at these parameters on the cross pairs. */
-  def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
+  def incrementalDedup(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val corpus = nearDupCorpus(spark, dir)
     val index  = corpus.filter(col("doc_id") < 1000000L)
     val batch  = corpus.filter(col("doc_id") >= 1000000L)
     val n      = 3
     // the standing corpus's stored artifact: its band table
-    val indexBands = bandTable(index, "doc_id", wordGrams = true, n = n)
-      .withColumnRenamed("doc_id", "index_id")
-      .localCheckpoint()
+    val indexBands = ck.ckpt(bandTable(index, "doc_id", wordGrams = true, n = n)
+      .withColumnRenamed("doc_id", "index_id"))
     val batchBands = bandTable(batch, "doc_id", wordGrams = true, n = n)
     val candidates = batchBands
       .join(indexBands, Seq("band", "bh"))
@@ -521,12 +519,11 @@ object Dedup {
     */
   val SimhashMaxHamming = 3
 
-  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    val hashed = nearDupCorpus(spark, dir)
-      .withColumn("sh", simhashMd5(filter(tokens(col("text")), t => t =!= "")))
+  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val hashed = ck.ckpt(nearDupCorpus(spark, dir)
+      .withColumn("sh", simhashMd5(filter(tokens(col("text")), t => t =!= ""))))
       // materialized: feeds both sides of the self-join (see
       // lshCandidatesVerified for the rationale)
-      .localCheckpoint()
     val chunks = hashed.select(
       col("doc_id"), col("sh"),
       explode(array((0 until 4).map(j =>
@@ -605,7 +602,7 @@ object Dedup {
     * candidate set only, at a partition count scaled to the measured
     * candidate volume ([[sizedForVerify]]). Same corpus/subset as
     * ngram_jaccard. */
-  def prefixJaccardJoin(spark: SparkSession, dir: String): DataFrame = {
+  def prefixJaccardJoin(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val corpus = nearDupCorpus(spark, dir).filter(col("doc_id") % 5 === 0)
     val toksed = corpus
       .select(col("doc_id"),
@@ -617,10 +614,10 @@ object Dedup {
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("c"), col("tok"))).cast("long"))
       .select("tok", "r")
-    val ranked = toksed.select(col("doc_id"), explode(col("ts")).as("tok"))
+    // feeds the prefix explode and both verify sides
+    val ranked = ck.ckpt(toksed.select(col("doc_id"), explode(col("ts")).as("tok"))
       .join(rank, "tok")
-      .groupBy("doc_id").agg(sort_array(collect_list(col("r"))).as("rs"))
-      .localCheckpoint() // feeds the prefix explode and both verify sides
+      .groupBy("doc_id").agg(sort_array(collect_list(col("r"))).as("rs")))
     // (doc, size, prefix-position, prefix-token): position feeds the
     // positional filter below
     val pref = ranked.select(col("doc_id"), size(col("rs")).cast("long").as("sz"),
@@ -703,12 +700,11 @@ object Dedup {
   /** plane-family offset keeping these tables independent of ann_lsh's. */
   private val NeardupPlaneBase = 100
 
-  def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
+  def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val corpus = base.union(
-      base.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
+    val corpus = ck.ckpt(base.union(
+      base.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))))
       // feeds the bucket explode and both candidate re-attach joins
-      .localCheckpoint()
     val buckets = corpus.select(
       col("vec_id"),
       posexplode(array((0 until NeardupTables).map(t =>
@@ -838,41 +834,17 @@ object Dedup {
     * appear in at least one near-dup pair; singleton docs are their own
     * cluster and are re-attached by the caller.
     *
-    * Memoized per (session, dir), exactly like `Relational`'s exact
-    * percentile table: in a real pipeline the labels are a materialized
-    * TABLE that both the cluster census and the representative
-    * selection read — re-running pair detection + label propagation
-    * per consumer would be pure duplicated work. The bench evicts this
-    * cache before every measured pass (so the first cluster query of a
-    * pass is charged the build), and entries for stopped sessions
-    * self-clean on the next access. */
-  private val labelsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop the memoized cluster-label tables (see [[clusterLabels]]).
-    * Frees the backing checkpoint blocks too (round-21 ADVICE).
-    *
-    * CONTRACT (round-22 ADVICE, applies to every `clear*Cache` sibling
-    * in Relational/TextAnalysis): the freed checkpoint blocks have no
-    * lineage, so eviction INVALIDATES every lazy DataFrame previously
-    * derived from a cached handle — such a plan fails with missing
-    * checkpoint blocks instead of recomputing. Callers must treat
-    * eviction as a barrier between fully-materialized passes (the
-    * bench calls it strictly between passes, never mid-query). */
-  def clearLabelsCache(): Unit = {
-    labelsCache.values.foreach(Checkpoints.freeIfLive)
-    labelsCache.clear()
-  }
-
-  def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    labelsCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    labelsCache.getOrElseUpdate((spark, dir), computeClusterLabels(spark, dir))
-  }
+    * An [[Artifacts]] memo: in a real pipeline the labels are a
+    * materialized TABLE that both the cluster census and the
+    * representative selection read — re-running pair detection + label
+    * propagation per consumer would be pure duplicated work. */
+  def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.memo(spark, ("cluster_labels", dir))(_ => computeClusterLabels(spark, dir))
 
   private def computeClusterLabels(spark: SparkSession, dir: String): DataFrame = {
     val pairs = dedupMinhash(spark, dir).select("id_a", "id_b")
     ccOn(pairs.union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .toDF("src", "dst"), directHandle = true) // the eviction must be able to free it
+      .toDF("src", "dst"), directHandle = true) // one materialized label table
   }
 
   /** Connected-component representatives over a SYMMETRIC (src, dst)
@@ -883,7 +855,7 @@ object Dedup {
     * id either way. Returns (id, rep) for nodes WITH at least one edge;
     * singletons are the caller's left-join concern. */
   private[graft] def ccOn(edges0: DataFrame, maxIters: Int = 20,
-                          directHandle: Boolean = false): DataFrame = {
+                          directHandle: Boolean = false): DataFrame = Checkpoints.scope { ck =>
     // (round-21 note: a lazy-block variant of this loop — self-loop
     // edges + geometric blocks of un-checkpointed rounds — was built
     // and MEASURED SLOWER on both deep and shallow consumers (dbscan
@@ -891,20 +863,19 @@ object Dedup {
     // per-round shape lets AQE broadcast the node-sized label table
     // every round so the edge table never re-shuffles, which beats the
     // saved barriers. Kept as the measured winner.)
-    val edges = edges0.localCheckpoint()
+    val edges = ck.ckpt(edges0)
     // init = identity fused with the first propagation round: rep0 =
     // min(id, min neighbor). Star components centered on their min id —
     // the dominant shape of a near-dup pair graph — converge right here,
     // so the loop's first pass is already the convergence check.
-    var labels = edges
+    var labels = ck.ckpt(edges
       .groupBy("src")
       .agg(least(col("src"), min(col("dst"))).as("rep"))
-      .select(col("src").as("id"), col("rep"))
-      .localCheckpoint()
+      .select(col("src").as("id"), col("rep")))
     var iter     = 0
     var changed  = 1L
     // the checkpoint HANDLE behind `labels` (from round 1 on, labels is
-    // a rename view Checkpoints.free can't reach)
+    // a rename view Scope.free can't reach)
     var labelsCkpt = labels
     while (changed > 0 && iter < maxIters) {
       // candidate labels from neighbors; keep the min of (own, neighbors').
@@ -912,18 +883,17 @@ object Dedup {
       // count and the next labels read the materialized result (the
       // count-then-eager-checkpoint pair used to evaluate it twice —
       // the round-2 1.4× bench regression).
-      val next = edges
+      val next = ck.ckpt(edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(min("rep").as("nbr_rep"))
         .join(labels, "id")
-        .select(col("id"), least(col("rep"), col("nbr_rep")).as("new_rep"), col("rep"))
-        .localCheckpoint()
+        .select(col("id"), least(col("rep"), col("nbr_rep")).as("new_rep"), col("rep")))
       changed = next.filter(col("new_rep") < col("rep")).count()
       val prevCkpt = labelsCkpt
       labels = next.select(col("id"), col("new_rep").as("rep"))
       labelsCkpt = next
-      Checkpoints.free(prevCkpt) // next is materialized; old round is dead
+      ck.free(prevCkpt) // next is materialized; old round is dead
       iter += 1
     }
     // a component with diameter > maxIters would get wrong representatives;
@@ -932,26 +902,12 @@ object Dedup {
       throw new IllegalStateException(
         s"clusterLabels: label propagation did not converge in $maxIters rounds " +
           s"($changed labels still changing) — raise maxIters for deeper components")
-    // the memoized labels read only the final round's checkpoint; the
-    // edge table's blocks are dead weight from here on
-    Checkpoints.free(edges)
-    // `labels` is a rename VIEW over the final round's 3-column
-    // checkpoint — a shape Checkpoints.free cannot reach through, so
-    // the r21 clearLabelsCache eviction was silently a no-op on the
-    // blocks and every bench pass stranded one labels-sized block set
-    // (caught by the new GraphSpec freeIfLive pin). directHandle pays
-    // ONE extra node-sized checkpoint to hand the caller a freeable
-    // handle (and releases the wider round table immediately) — taken
-    // only by the memoized clusterLabels/eviction path; single-use lazy
-    // consumers (dbscan, entity_resolve) keep the barrier-free view,
-    // whose tail block stays ContextCleaner-owned exactly as before
-    // (cold A/B: the unconditional extra barrier cost entity_resolve
-    // ~8% for nothing).
-    if (directHandle) {
-      val out = labels.localCheckpoint()
-      Checkpoints.free(labelsCkpt)
-      out
-    } else labels
+    // directHandle (the memoized clusterLabels path) pays ONE extra
+    // node-sized checkpoint so the artifact holds a compact (id, rep)
+    // table, not the wider round table; single-use lazy consumers
+    // (dbscan, entity_resolve) keep the barrier-free view (cold A/B: the
+    // unconditional extra barrier cost entity_resolve ~8% for nothing)
+    if (directHandle) ck.ckpt(labels) else labels
   }
 
   /** Per-CLUSTER keep-best — the composition real dedup pipelines run
@@ -1495,13 +1451,12 @@ object Dedup {
     * the ngram_jaccard LSH convention). Exact verify joins only the
     * candidate pairs' gram sets; the shuffle carries (doc_id, gram)
     * pairs, never text. */
-  def containmentDup(spark: SparkSession, dir: String): DataFrame = {
+  def containmentDup(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val corpus = containCorpus(spark, dir)
-    val grams = corpus.select(col("doc_id"),
-        explode(graft.functions.TextFunctions.wordShinglesDistinct(col("text"), 5)).as("ng"))
+    val grams = ck.ckpt(corpus.select(col("doc_id"),
+        explode(graft.functions.TextFunctions.wordShinglesDistinct(col("text"), 5)).as("ng")))
       // feeds anchors, both candidate-join sides, both verify sides,
       // and the per-doc sizes
-      .localCheckpoint()
     val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val w = Window.partitionBy("doc_id").orderBy(xxhash64(col("ng")), col("ng"))
     val anchors = grams
@@ -1701,7 +1656,7 @@ object Dedup {
     * size (the filter pushes to the scan); the brute-force truth join
     * is the designed one-off cost of parameter selection, quadratic in
     * the SAMPLE, constant in the corpus. */
-  def lshTuningMatrix(spark: SparkSession, dir: String): DataFrame = {
+  def lshTuningMatrix(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val n = 3
     // doc_id < 2e6 pins the sample to the FIRST corpus block (base ids
     // < 1e6 plus their twins): without it, any id-striped growth whose
@@ -1716,9 +1671,8 @@ object Dedup {
       .filter(hasWindow(wordGrams = true, n))
     // (doc_id, distinct shingles): feeds the signature pass and both
     // brute-force truth sides
-    val withSh = sample
-      .select(col("doc_id"), wordShinglesDistinct(col("text"), n).as("sh"))
-      .localCheckpoint()
+    val withSh = ck.ckpt(sample
+      .select(col("doc_id"), wordShinglesDistinct(col("text"), n).as("sh")))
     val sigs = withSh
       .select(col("doc_id"),
         transform(col("sh"), s => tuneResidue(md5Lower64Col(s))).as("m"))
@@ -1746,11 +1700,10 @@ object Dedup {
       .select(col("l.n_bands").as("n_bands"), col("l.rows_per_band").as("rows_per_band"),
         col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
       .distinct()
-    val truth = withSh.as("a")
+    val truth = ck.ckpt(withSh.as("a")
       .join(withSh.as("b"), col("a.doc_id") < col("b.doc_id"))
       .filter(jaccardDistinctCol(col("a.sh"), col("b.sh")) >= JaccardThreshold)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .localCheckpoint()
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")))
     val nTruth = truth.count() // bounded: ≤ C(2·TuneSampleDocs, 2)
     require(nTruth > 0, "tuning sample carries no true near-dup pairs")
     val agg = cands
@@ -1967,9 +1920,9 @@ object Dedup {
     * PassJoin (no all-pairs), propagation shuffles (name, rep) strings,
     * and the final size attach is a vocabulary-sized join. Oracle:
     * recursive-CTE transitive closure over the same pair predicate. */
-  def entityResolve(spark: SparkSession, dir: String): DataFrame = {
-    val names = Tables.part(spark, dir).select(col("p_name").as("n"))
-      .distinct().localCheckpoint() // feeds banding + the singleton join
+  def entityResolve(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val names = ck.ckpt(Tables.part(spark, dir).select(col("p_name").as("n"))
+      .distinct()) // feeds banding + the singleton join
     val pairs = fuzzyCandidates(names, MaxEditDist)
       .filter(levenshtein(col("name_a"), col("name_b")) <= MaxEditDist)
     val labels = ccOn(pairs.union(
@@ -2061,7 +2014,7 @@ object Dedup {
     * max cluster population). The corpus count that sizes k is one
     * bounded driver-side action; the prune set shuffles only distinct
     * vec_ids. */
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
+  def semanticDedup(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val perturbed = base.select(
       (col("vec_id") + 1000000L).as("vec_id"),
@@ -2069,14 +2022,12 @@ object Dedup {
         (x.cast("double") *
           (lit(1.0) + ((i % 5) - 2).cast("double") / lit(100.0))).cast("float"))
         .as("embedding"))
-    val corpus = base.union(perturbed)
+    val corpus = ck.ckpt(base.union(perturbed))
       // feeds the sizing count and the two kmeansAssign passes
-      .localCheckpoint()
-    val assigned = Centroids.kmeansAssignTwoLevel(corpus, semanticK(corpus.count()))
-      .select(col("vec_id"), col("embedding"), col("cluster"))
+    val assigned = ck.ckpt(Centroids.kmeansAssignTwoLevel(corpus, semanticK(corpus.count()))
+      .select(col("vec_id"), col("embedding"), col("cluster")))
       // feeds both sides of the pair join plus the final verdict join —
       // and kmeansAssign's two driver-side passes already scanned it
-      .localCheckpoint()
     val dupIds = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("b.vec_id") < col("a.vec_id"))

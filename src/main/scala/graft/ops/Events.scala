@@ -478,12 +478,11 @@ object Events {
     * deduped activity table, independent of raw event volume. The
     * BETWEEN-join oracle is the quadratic formulation the explode
     * avoids. */
-  def rollingDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val ud = Tables.events(spark, dir)
+  def rollingDistinct(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val ud = ck.ckpt(Tables.events(spark, dir)
       .select(col("user_id"), unix_millis(col("ts")).as("ms"))
       .select(col("user_id"), expr("ms div 86400000").as("day"))
-      .distinct()
-      .localCheckpoint() // (user, day) ≪ events; consumed by both the day set and the explode
+      .distinct()) // (user, day) ≪ events; consumed by both the day set and the explode
     val observed = ud.select("day").distinct()
     ud.select(col("user_id"), explode(sequence(col("day"), col("day") + 6)).as("day"))
       .join(broadcast(observed), "day")
@@ -498,15 +497,14 @@ object Events {
     * probabilities. One per-user window shuffle, then a partial+final
     * count on the ≤|types|² pairs; the probability is one division of
     * exact longs. The behavioral-model staple for session analysis. */
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
+  def eventTransitions(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val cnt = Tables.events(spark, dir)
+    val cnt = ck.ckpt(Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type").as("from_type"))
       .withColumn("to_type", lead(col("from_type"), 1).over(w))
       .filter(col("to_type").isNotNull)
       .groupBy("from_type", "to_type")
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // ≤|types|² rows, consumed twice — don't re-run the window
+      .agg(count(lit(1)).as("n"))) // ≤|types|² rows, consumed twice — don't re-run the window
     val tot = cnt.groupBy("from_type").agg(sum("n").as("tot"))
     cnt.join(broadcast(tot), "from_type")
       .select(col("from_type"), col("to_type"), col("n"),
@@ -624,16 +622,15 @@ object Events {
     * window — one shuffle on user_id, same as sessionize/streaks); the
     * count collapse is ≤|types|³ cells, the total is a broadcast 1-row,
     * and the cut is a TakeOrdered top-20, never a global sort. */
-  def frequentSequences(spark: SparkSession, dir: String): DataFrame = {
+  def frequentSequences(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val tri = Tables.events(spark, dir)
+    val tri = ck.ckpt(Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type").as("t1"))
       .withColumn("t2", lead(col("t1"), 1).over(w))
       .withColumn("t3", lead(col("t1"), 2).over(w))
       .filter(col("t3").isNotNull)
       .groupBy("t1", "t2", "t3")
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // ≤|types|³ cells; feeds the total and the cut
+      .agg(count(lit(1)).as("n"))) // ≤|types|³ cells; feeds the total and the cut
     val tot = tri.agg(sum("n").as("tot"))
     tri.crossJoin(broadcast(tot))
       .select(col("t1"), col("t2"), col("t3"), col("n"),

@@ -62,24 +62,23 @@ object Graph {
     * `localCheckpoint`s every reused intermediate — the reduced edge /
     * node / degree tables once, ranks per round — so (a) the logical
     * plan stays O(1) per round and (b) NOTHING is registered with the
-    * CacheManager: checkpoint blocks are dropped by the ContextCleaner
-    * as soon as the result goes out of scope, where a `.cache()` would
-    * pin storage for the rest of a 180-query bench run (round-13
-    * verdict #1). `materialize = false` keeps the whole pipeline lazy
-    * (no cache, no checkpoint) so plan specs can assert on the real
-    * join/aggregate shapes instead of truncated LogicalRDD leaves. */
+    * CacheManager: the operator's scope frees every checkpoint its
+    * result does not read, where a `.cache()` would pin storage for the
+    * rest of a 180-query bench run (round-13 verdict #1).
+    * `materialize = false` keeps the whole pipeline lazy (no cache, no
+    * checkpoint) so plan specs can assert on the real join/aggregate
+    * shapes instead of truncated LogicalRDD leaves. */
   private[graft] def pageRankOn(
-      edgesDf: DataFrame, iters: Int, materialize: Boolean): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint() else df
-    val e = ckpt(edgesDf
-      .filter(col("src") =!= col("dst"))
-      .distinct())
-    val nodes = ckpt(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
+      edgesDf: DataFrame, iters: Int, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
+    val e0 = edgesDf.filter(col("src") =!= col("dst")).distinct()
+    val e  = if (materialize) ck.ckpt(e0) else e0
+    val nodes0 = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+    val nodes  = if (materialize) ck.ckpt(nodes0) else nodes0
     val n   = nodes.agg(count(lit(1)).as("n"))
     // deg and nodes feed every iteration plus the output join — reduce
     // them once instead of re-shuffling per iteration
-    val deg = ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
+    val deg0 = e.groupBy("src").agg(count(lit(1)).as("d"))
+    val deg  = if (materialize) ck.ckpt(deg0) else deg0
 
     // Round-22: rank rounds checkpoint EAGERLY again (the r20 shape).
     // Round 21 made them a lazy single-consumer chain — faster in this
@@ -88,8 +87,9 @@ object Graph {
     // the one-shot deep plan's analysis + AQE replan + janino codegen
     // is charged per cold run, and at 3 rounds the saved barriers don't
     // cover it. Superseded rank checkpoints are freed immediately.
-    var ranks = ckpt(nodes.crossJoin(broadcast(n))
-      .select(col("node"), round(lit(1.0) / col("n"), 9).as("r")))
+    val ranks0 = nodes.crossJoin(broadcast(n))
+      .select(col("node"), round(lit(1.0) / col("n"), 9).as("r"))
+    var ranks  = if (materialize) ck.ckpt(ranks0) else ranks0
     for (_ <- 1 to iters) {
       val contribs = e
         .join(ranks.select(col("node").as("src"), col("r")), "src")
@@ -98,20 +98,17 @@ object Graph {
           round((col("r") / col("d")) * 1e9).cast("long").as("cn"))
         .groupBy("node")
         .agg(sum("cn").as("sn"))
-      val prev = ranks
-      ranks = ckpt(nodes
+      val next = nodes
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(n))
         .select(col("node"),
           round(lit(0.15) / col("n") +
-            lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9).as("r")))
-      if (materialize) Checkpoints.free(prev) // new ranks materialized; old round dead
-    }
-    if (materialize) {
-      // the output join reads only the final ranks + deg; the edge and
-      // node checkpoints are dead weight from here on
-      Checkpoints.free(e)
-      Checkpoints.free(nodes)
+            lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9).as("r"))
+      if (materialize) {
+        val prev = ranks
+        ranks = ck.ckpt(next)
+        ck.free(prev) // new ranks materialized; old round dead
+      } else ranks = next
     }
     ranks
       .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
@@ -173,28 +170,27 @@ object Graph {
     * the high-PPR tail; the same walk powers who-to-follow style
     * recommendation). Identical machinery and determinism contract as
     * [[pageRankOn]] — exact-nanos contribution sums, 9 dp re-rounding
-    * per round, per-round `localCheckpoint` + [[Checkpoints.free]] —
+    * per round, per-round `localCheckpoint` + [[Checkpoints.Scope.free]] —
     * with ONE change: the teleport term lands only on seeds (0.15/|S|
     * instead of 0.15/N), so mass injects at the seeds and decays
     * outward by 0.85 per hop. Nodes unreachable from the seed set stay
     * at EXACTLY 0.0 — the walk never visits them — which is the
     * filtering property the curation use case reads. The 1-row seed
     * count broadcasts like pagerank's N. */
-  private[graft] def pprOn(edgesDf: DataFrame, iters: Int): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = ckpt(edgesDf
+  private[graft] def pprOn(edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
+    val e = ck.ckpt(edgesDf
       .filter(col("src") =!= col("dst"))
       .distinct())
-    val nodes = ckpt(e.select(col("src").as("node"))
+    val nodes = ck.ckpt(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     val s   = nodes.filter(col("node") < PprSeedMax).agg(count(lit(1)).as("s"))
-    val deg = ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
+    val deg = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
     val teleport =
       when(col("node") < PprSeedMax, lit(0.15) / col("s")).otherwise(lit(0.0))
     // Round-22: eager per-round rank checkpoints restored (the r20
     // shape) — the driver's cold bench had the r21 lazy chain at 0.53×
     // (VERDICT r21 #1); see the pageRankOn note.
-    var ranks = ckpt(nodes.crossJoin(broadcast(s))
+    var ranks = ck.ckpt(nodes.crossJoin(broadcast(s))
       .select(col("node"),
         when(col("node") < PprSeedMax, round(lit(1.0) / col("s"), 9))
           .otherwise(lit(0.0)).as("r")))
@@ -207,18 +203,15 @@ object Graph {
         .groupBy("node")
         .agg(sum("cn").as("sn"))
       val prev = ranks
-      ranks = ckpt(nodes
+      ranks = ck.ckpt(nodes
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(s))
         .select(col("node"),
           round(teleport +
             lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9)
             .as("r")))
-      Checkpoints.free(prev) // new ranks materialized; old round dead
+      ck.free(prev) // new ranks materialized; old round dead
     }
-    // the output join reads only the final ranks + deg
-    Checkpoints.free(e)
-    Checkpoints.free(nodes)
     ranks
       .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
       .select(col("node"), coalesce(col("d"), lit(0L)).as("out_deg"), col("r").as("rank"))
@@ -325,30 +318,32 @@ object Graph {
   /** The working body — same `materialize` contract as [[pageRankOn]]:
     * the served path `localCheckpoint`s the thrice-consumed edge table
     * and the reused degree / oriented tables (eagerly materialized,
-    * ContextCleaner-owned, never CacheManager-pinned — round-13 verdict
-    * #1); plan specs pass `false` for the fully-lazy join shapes. The
-    * wedge join and close stay lazy on both paths — they are
+    * scope-owned, never CacheManager-pinned — round-13 verdict #1);
+    * plan specs pass `false` for the fully-lazy join shapes. The wedge
+    * join and close stay lazy on both paths — they are
     * single-consumption and MUST stream (the wedge set is the O(m^1.5)
     * bulk that never deserves materializing). */
-  private[graft] def triangleCountOn(edgesDf: DataFrame, materialize: Boolean): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint() else df
-    val e = ckpt(edgesDf)
+  private[graft] def triangleCountOn(
+      edgesDf: DataFrame, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
+    val e = if (materialize) ck.ckpt(edgesDf) else edgesDf
     // deg and the oriented edge list each feed ≥2 downstream joins
     // (both wedge sides, the close, the output) — materialize the
     // reduced (long, long) tables once instead of re-running their
     // shuffles per consumer. MEMORY_AND_DISK, so at cluster scale this
     // is the standard spill-safe reuse of an O(m) intermediate.
-    val deg = ckpt(e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg")))
+    val deg0 = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val deg  = if (materialize) ck.ckpt(deg0) else deg0
 
     // orient each edge from the lower-(deg, id) endpoint to the higher
     val ej = e
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
     val uFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val or = ckpt(ej.select(
+    val or0 = ej.select(
       when(uFirst, col("u")).otherwise(col("v")).as("src"),
-      when(uFirst, col("v")).otherwise(col("u")).as("dst")))
+      when(uFirst, col("v")).otherwise(col("u")).as("dst"))
+    val or  = if (materialize) ck.ckpt(or0) else or0
 
     // wedges at a common center; a.dst < b.dst by id makes the pair
     // canonical, so the close probes the u<v edge set directly
@@ -498,8 +493,9 @@ object Graph {
 
   /** Bounded k-truss peel over an arbitrary canonical u<v edge table —
     * split out so specs can drive it with a hand-checkable graph. */
-  private[graft] def kTrussOn(edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edgesDf.localCheckpoint()
+  private[graft] def kTrussOn(
+      edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = Checkpoints.scope { ck =>
+    var e = ck.ckpt(edgesDf)
     var round = 1
     var lastSup: Option[DataFrame] = None
     while (round <= rounds && lastSup.isEmpty) {
@@ -510,10 +506,10 @@ object Graph {
       // stages is not guaranteed — the lsa_topic lesson); with the
       // captured layout both arms read the one materialization
       // exchange- and sort-free
-      val or = Checkpoints.partitionedCheckpoint(
+      val or = ck.partitioned(
         orientedOn(e), Seq("src"), Seq("src", "dst"))
-      val sup = supportFromOriented(or, e).localCheckpoint()
-      Checkpoints.free(or) // sup is materialized; the oriented view is dead
+      val sup = ck.ckpt(supportFromOriented(or, e))
+      ck.free(or) // sup is materialized; the oriented view is dead
       // probe convergence on the support checkpoint FIRST (one cheap
       // aggregate) — the converged round (the common case at sf0.1,
       // where the peel fixes in one pass) used to also pay an
@@ -527,11 +523,10 @@ object Graph {
         // one round)
         lastSup = Some(sup)
       } else {
-        val kept = sup.filter(col("s") >= k - 2)
-          .select(col("u"), col("v"))
-          .localCheckpoint()
-        Checkpoints.free(e)
-        Checkpoints.free(sup)
+        val kept = ck.ckpt(sup.filter(col("s") >= k - 2)
+          .select(col("u"), col("v")))
+        ck.free(e)
+        ck.free(sup)
         e = kept
       }
       round += 1
@@ -645,17 +640,18 @@ object Graph {
 
   /** [[bfsDistancesOn]] minus the final sort: returns the raw
     * checkpointed distance table, so callers that only take an argmax
-    * over it ([[graphDiameterOn]]) can `Checkpoints.free` it directly
-    * (free is a no-op through a Sort wrapper). */
-  private[graft] def bfsDistTable(edgesDf: DataFrame, source: Long, iters: Int): DataFrame = {
+    * over it ([[graphDiameterOn]]) can free it directly (free is a
+    * no-op through a Sort wrapper). */
+  private[graft] def bfsDistTable(
+      edgesDf: DataFrame, source: Long, iters: Int): DataFrame = Checkpoints.scope { ck =>
     // PLAIN checkpoint (round 22). The round-21 repartition(src)+sort
     // never captured its layout (LogicalRDD records UnknownPartitioning
     // under AQE) — a pure upfront exchange+sort. And CAPTURING it
-    // (Checkpoints.partitionedCheckpoint) cold-measured 0.83x here: the
+    // (Scope.partitioned) cold-measured 0.83x here: the
     // pinned layout locks every frontier join into SortMergeJoin, while
     // with a plain checkpoint AQE broadcasts the tiny frontier and the
     // edge arm never shuffles at all.
-    val e = symmetrize(edgesDf).localCheckpoint()
+    val e = ck.ckpt(symmetrize(edgesDf))
     val spark = edgesDf.sparkSession
     import spark.implicits._
     // Round-21 (opt guide §1.2): only the FRONTIER checkpoints per
@@ -665,23 +661,18 @@ object Graph {
     // barrier job copying every settled node again each round. The
     // final union materializes once here so callers keep a direct
     // checkpoint handle (graphDiameterOn frees it).
-    var frontier = Seq((source, 0L)).toDF("node", "dist").localCheckpoint()
-    val frontiers = scala.collection.mutable.ArrayBuffer(frontier)
+    var frontier = ck.ckpt(Seq((source, 0L)).toDF("node", "dist"))
     var dist: DataFrame = frontier
     var t = 1
     while (t <= iters && !frontier.isEmpty) {
       val expand = frontier.join(e.select(col("src").as("node"), col("dst")), "node")
         .select(col("dst").as("node"), lit(t.toLong).as("dist"))
         .distinct()
-      frontier = expand.join(dist, Seq("node"), "left_anti").localCheckpoint()
-      frontiers += frontier
+      frontier = ck.ckpt(expand.join(dist, Seq("node"), "left_anti"))
       dist = dist.union(frontier)
       t += 1
     }
-    val out = dist.localCheckpoint()
-    frontiers.foreach(Checkpoints.free) // the union materialized above
-    Checkpoints.free(e)
-    out
+    ck.ckpt(dist)
   }
 
   /** `e0`/`e` CTEs of the shared order-derived undirected graph —
@@ -735,11 +726,11 @@ object Graph {
     graphDiameterOn(spark, rawEdges(spark, dir, 211L, 197L), BfsSource, BfsIters)
 
   private[graft] def graphDiameterOn(
-      spark: SparkSession, edgesDf: DataFrame, source: Long, iters: Int): DataFrame = {
+      spark: SparkSession, edgesDf: DataFrame, source: Long, iters: Int): DataFrame = Checkpoints.scope { ck =>
     import spark.implicits._
     def far(bfs: DataFrame): (Long, Long) = {
       val r = bfs.orderBy(col("dist").desc, col("node")).limit(1).collect()(0)
-      Checkpoints.free(bfs) // argmax collected; the distance table is dead
+      ck.free(bfs) // argmax collected; the distance table is dead
       (r.getLong(0), r.getLong(1))
     }
     val (u, ecc1) = far(bfsDistTable(edgesDf, source, iters))
@@ -782,9 +773,8 @@ object Graph {
   def degreeAssortativity(spark: SparkSession, dir: String): DataFrame =
     assortativityOn(rawEdges(spark, dir, 211L, 197L))
 
-  private[graft] def assortativityOn(edgesDf: DataFrame): DataFrame = {
-    val sym = symmetrize(edgesDf)
-      .localCheckpoint() // feeds the degree count and the pairing joins
+  private[graft] def assortativityOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { ck =>
+    val sym = ck.ckpt(symmetrize(edgesDf)) // feeds the degree count and the pairing joins
     val deg = sym.groupBy("src").agg(count(lit(1)).as("d"))
     sym
       .join(deg, "src")
@@ -855,33 +845,33 @@ object Graph {
     * to exact integer NANOS before the order-insensitive long sum (the
     * pagerank convention — association-free, partition-layout-proof).
     * Every level and every δ table is `localCheckpoint`ed and freed as
-    * soon as superseded ([[Checkpoints.free]]); per-round work is one
+    * soon as superseded ([[Checkpoints.Scope.free]]); per-round work is one
     * frontier-edge join, never a re-traversal of settled levels.
     * Output: node, accumulated dependency over the sampled sources in
     * nanos (sources' own rows excluded, unreached nodes absent). */
   def betweenness(spark: SparkSession, dir: String): DataFrame =
     betweennessOn(rawEdges(spark, dir, 211L, 197L), BcSources, BcHops)
 
-  def betweennessOn(edgesDf: DataFrame, sources: Seq[Long], hops: Int): DataFrame = {
+  def betweennessOn(
+      edgesDf: DataFrame, sources: Seq[Long], hops: Int): DataFrame = Checkpoints.scope { ck =>
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    val e = symmetrize(edgesDf).localCheckpoint()
+    val e = ck.ckpt(symmetrize(edgesDf))
     def deltasFor(s: Long): DataFrame = {
       // forward: levels.head is the deepest level, (node, sigma) each;
       // the visited set accumulates LAZILY over the level checkpoints
       // (round 21 — the bfsDistTable convention; a per-hop visited
       // checkpoint was a second barrier job per hop)
-      var levels  = List(Seq((s, 1L)).toDF("node", "sigma").localCheckpoint())
+      var levels  = List(ck.ckpt(Seq((s, 1L)).toDF("node", "sigma")))
       var visited = levels.head.select("node")
       var h    = 1
       var stop = false
       while (h <= hops && !stop) {
-        val next = levels.head.join(e, col("node") === col("src"))
+        val next = ck.ckpt(levels.head.join(e, col("node") === col("src"))
           .groupBy(col("dst")).agg(sum("sigma").as("sigma"))
           .select(col("dst").as("node"), col("sigma"))
-          .join(visited, Seq("node"), "left_anti")
-          .localCheckpoint()
-        if (next.isEmpty) { Checkpoints.free(next); stop = true }
+          .join(visited, Seq("node"), "left_anti"))
+        if (next.isEmpty) { ck.free(next); stop = true }
         else {
           visited = visited.union(next.select("node"))
           levels = next :: levels
@@ -891,9 +881,8 @@ object Graph {
       // backward: deepest level has delta = 0 by the hop-bounded
       // definition; each shallower level joins ONLY the level below
       // (shortest-path successors sit at exactly dist+1)
-      var below = levels.head
-        .select(col("node"), col("sigma"), lit(0L).as("delta"))
-        .localCheckpoint()
+      var below = ck.ckpt(levels.head
+        .select(col("node"), col("sigma"), lit(0L).as("delta")))
       var acc = List(below)
       for (lvl <- levels.tail) {
         val terms = lvl.as("v").join(e, col("v.node") === col("src"))
@@ -902,52 +891,25 @@ object Graph {
             round(col("v.sigma").cast("double") / col("w.sigma")
               * (lit(1000000000L) + col("w.delta"))).cast("long").as("term"))
           .groupBy("node").agg(sum("term").as("d"))
-        below = lvl.join(terms, Seq("node"), "left")
-          .select(col("node"), col("sigma"), coalesce(col("d"), lit(0L)).as("delta"))
-          .localCheckpoint()
+        below = ck.ckpt(lvl.join(terms, Seq("node"), "left")
+          .select(col("node"), col("sigma"), coalesce(col("d"), lit(0L)).as("delta")))
         acc = below :: acc
       }
-      val out = acc.map(_.select("node", "delta")).reduce(_ union _)
-        .filter(col("node") =!= s)
-        .localCheckpoint() // materialize so the per-level tables can free
-      (acc ++ levels).foreach(Checkpoints.free)
+      val out = ck.ckpt(acc.map(_.select("node", "delta")).reduce(_ union _)
+        .filter(col("node") =!= s)) // materialize so the per-level tables can free
+      (acc ++ levels).foreach(ck.free)
       out
     }
     // The sampled sources are INDEPENDENT Brandes sweeps (opt guide
-    // §2.6: overlap independent jobs) — run them from a small thread
-    // pool so one sweep's straggler tail back-fills with the next
-    // sweep's stages instead of idling the scheduler; the final
-    // aggregate is an association-free long sum, so the result is
-    // partition- and completion-order-independent.
-    val perSource: Seq[DataFrame] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      import scala.util.{Failure, Success}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(4, sources.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      // await every sweep as a Try (r21 ADVICE): if one sweep fails,
-      // the completed siblings' per-source checkpoints and the edge
-      // checkpoint must still free — a bare Future.sequence rethrows
-      // before the frees below run and strands them for the session
-      val settled = try Await.result(
-        Future.sequence(sources.map(s => Future(deltasFor(s)).transform(Success(_)))),
-        60.minutes)
-      finally pool.shutdown()
-      settled.collectFirst { case Failure(t) => t }.foreach { t =>
-        settled.foreach(_.foreach(Checkpoints.free))
-        Checkpoints.free(e)
-        throw t
-      }
-      settled.map(_.get)
-    }
-    val bc = perSource.reduce(_ union _)
+    // §2.6: overlap independent jobs) — run them in parallel so one
+    // sweep's straggler tail back-fills with the next sweep's stages
+    // instead of idling the scheduler; the final aggregate is an
+    // association-free long sum, so the result is partition- and
+    // completion-order-independent.
+    val perSource = ck.parallel(sources.map(s => () => deltasFor(s)))
+    ck.ckpt(perSource.reduce(_ union _)
       .groupBy("node").agg(sum("delta").as("bc_nanos"))
-      .orderBy(desc("bc_nanos"), col("node"))
-      .localCheckpoint()
-    perSource.foreach(Checkpoints.free)
-    Checkpoints.free(e)
-    bc
+      .orderBy(desc("bc_nanos"), col("node")))
   }
 
   private val WalkSteps = 4
@@ -974,34 +936,27 @@ object Graph {
   def randomWalks(spark: SparkSession, dir: String): DataFrame =
     randomWalksOn(rawEdges(spark, dir, 211L, 197L), WalkSteps)
 
-  def randomWalksOn(edgesDf: DataFrame, steps: Int): DataFrame = {
+  def randomWalksOn(edgesDf: DataFrame, steps: Int): DataFrame = Checkpoints.scope { ck =>
     // PLAIN checkpoint (round 22): the round-21 pre-partitioning never
     // captured its layout under AQE (pure upfront cost), and capturing
     // it cold-measured 0.80x — it forces SortMergeJoin where AQE
     // otherwise broadcasts the per-step frontier (see bfsDistTable)
-    val e = symmetrize(edgesDf).localCheckpoint()
-    var cur = e.select(col("src").as("start")).distinct()
-      .select(col("start"), col("start").as("node"))
-      .localCheckpoint()
-    // every step's frame feeds the final union, so the checkpoints are
-    // freed only once the result materializes (unlike bfs/sssp, whose
+    val e = ck.ckpt(symmetrize(edgesDf))
+    var cur = ck.ckpt(e.select(col("src").as("start")).distinct()
+      .select(col("start"), col("start").as("node")))
+    // every step's frame feeds the final union, so the checkpoints
+    // live until the result materializes (unlike bfs/sssp, whose
     // superseded rounds really are dead mid-walk)
-    var frames = List(cur)
     var out    = cur.select(col("start"), lit(0L).as("step"), col("node"))
     for (t <- 1 to steps) {
-      cur = cur.join(e, col("node") === col("src"))
+      cur = ck.ckpt(cur.join(e, col("node") === col("src"))
         .select(col("start"),
           struct(walkHash(col("node"), col("dst"), t).as("h"), col("dst").as("n")).as("hn"))
         .groupBy("start").agg(min("hn").as("hn"))
-        .select(col("start"), col("hn.n").as("node"))
-        .localCheckpoint()
-      frames = cur :: frames
+        .select(col("start"), col("hn.n").as("node")))
       out = out.union(cur.select(col("start"), lit(t.toLong).as("step"), col("node")))
     }
-    val res = out.orderBy("start", "step").localCheckpoint()
-    frames.foreach(Checkpoints.free)
-    Checkpoints.free(e)
-    res
+    ck.ckpt(out.orderBy("start", "step"))
   }
 
   /** return-step penalty multiplier (≈ node2vec p = 4). */
@@ -1034,29 +989,27 @@ object Graph {
   def node2vecWalks(spark: SparkSession, dir: String): DataFrame =
     node2vecWalksOn(rawEdges(spark, dir, 211L, 197L), WalkSteps)
 
-  def node2vecWalksOn(edgesDf: DataFrame, steps: Int): DataFrame = {
+  def node2vecWalksOn(edgesDf: DataFrame, steps: Int): DataFrame = Checkpoints.scope { ck =>
     // PLAIN checkpoint (round 22): the round-21 repartition(src)+sort
     // never captured its layout under AQE (pure upfront cost), and
     // capturing it cold-measured 0.70x — it forces SortMergeJoin where
     // AQE otherwise broadcasts the frontier (see bfsDistTable)
-    val e = symmetrize(edgesDf).localCheckpoint()
+    val e = ck.ckpt(symmetrize(edgesDf))
     val starts = e.select(col("src").as("start")).distinct()
     var out = starts.select(col("start"), lit(0L).as("step"), col("start").as("node"))
     // step 1 has no previous node: uniform hash argmin (randomWalks)
-    var cur = starts.select(col("start"), col("start").as("node"))
+    var cur = ck.ckpt(starts.select(col("start"), col("start").as("node"))
       .join(e, col("node") === col("src"))
       .select(col("start"),
         struct(walkHash(col("node"), col("dst"), 1).as("h"), col("dst").as("n")).as("hn"))
       .groupBy("start").agg(min("hn").as("hn"))
-      .select(col("start"), col("start").as("prev"), col("hn.n").as("node"))
-      .localCheckpoint()
-    var frames = List(cur)
+      .select(col("start"), col("start").as("prev"), col("hn.n").as("node")))
     out = out.union(cur.select(col("start"), lit(1L).as("step"), col("node")))
     for (t <- 2 to steps) {
       val cand = cur.join(e, col("node") === col("src"))
         .select(col("start"), col("prev"), col("node"), col("dst").as("x"))
       val near = e.select(col("src").as("prev"), col("dst").as("x"), lit(1).as("isn"))
-      cur = cand.join(near, Seq("prev", "x"), "left")
+      cur = ck.ckpt(cand.join(near, Seq("prev", "x"), "left")
         .withColumn("m",
           when(col("x") === col("prev"), lit(N2vP))
             .when(col("isn").isNotNull, lit(1L))
@@ -1066,15 +1019,10 @@ object Graph {
             col("x").as("n")).as("hn"))
         .groupBy("start")
         .agg(min("hn").as("hn"), min("node").as("prev")) // node is per-walker unique
-        .select(col("start"), col("prev"), col("hn.n").as("node"))
-        .localCheckpoint()
-      frames = cur :: frames
+        .select(col("start"), col("prev"), col("hn.n").as("node")))
       out = out.union(cur.select(col("start"), lit(t.toLong).as("step"), col("node")))
     }
-    val res = out.orderBy("start", "step").localCheckpoint()
-    frames.foreach(Checkpoints.free)
-    Checkpoints.free(e)
-    res
+    ck.ckpt(out.orderBy("start", "step"))
   }
 
   /** Probe-only node-GROWING node2vec fixture (the k_truss_grown
@@ -1237,7 +1185,7 @@ object Graph {
     * convention) and its materialization makes the empty-frontier early
     * exit free. Expects an e(src, dst, w) table with BOTH directions of
     * each undirected edge present. */
-  def ssspOn(edgesDf: DataFrame, source: Long, iters: Int): DataFrame = {
+  def ssspOn(edgesDf: DataFrame, source: Long, iters: Int): DataFrame = Checkpoints.scope { ck =>
     // Round 21 pre-partitioned+sorted this checkpoint on src (guide
     // §2.4) to make the per-round frontier joins exchange-free; the
     // driver's cold bench measured it 0.72× (VERDICT r21 #3): the
@@ -1245,14 +1193,13 @@ object Graph {
     // while delta-relaxation converges in few rounds AND the per-round
     // frontier is tiny (AQE broadcasts it), so the avoided edge-side
     // exchanges never materialize anyway. Round 22: plain checkpoint.
-    val e = edgesDf.select(col("src"), col("dst"), col("w"))
-      .localCheckpoint()
+    val e = ck.ckpt(edgesDf.select(col("src"), col("dst"), col("w")))
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    var dist     = Seq((source, 0L)).toDF("node", "dist").localCheckpoint()
+    var dist     = ck.ckpt(Seq((source, 0L)).toDF("node", "dist"))
     var frontier = dist
     // the checkpoint HANDLE behind `frontier` (frontier itself is a
-    // rename view from round 1 on, which Checkpoints.free can't reach)
+    // rename view from round 1 on, which free can't reach)
     var frontierCkpt = dist
     var round = 1
     while (round <= iters && !frontier.isEmpty) {
@@ -1261,27 +1208,24 @@ object Graph {
       val offers = frontier.join(e, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("d"))
         .groupBy("node").agg(min(col("d")).as("d"))
-      val improved = offers.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
+      val improved = ck.ckpt(offers.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
         .filter(col("old").isNull || col("d") < col("old"))
-        .select(col("node"), col("d"))
-        .localCheckpoint()
+        .select(col("node"), col("d")))
       val updated = dist.join(improved.withColumnRenamed("d", "nd"), Seq("node"), "left")
         .select(col("node"), coalesce(col("nd"), col("dist")).as("dist"))
       val added = improved.join(dist, Seq("node"), "left_anti")
         .select(col("node"), col("d").as("dist"))
       val prevDist         = dist
       val prevFrontierCkpt = frontierCkpt
-      dist = updated.union(added).localCheckpoint()
+      dist = ck.ckpt(updated.union(added))
       frontier = improved.withColumnRenamed("d", "dist")
       frontierCkpt = improved
       // the new dist and improved are materialized; the superseded
       // node tables' blocks are dead (round 1 aliases both, free once)
-      if (prevFrontierCkpt ne prevDist) Checkpoints.free(prevFrontierCkpt)
-      Checkpoints.free(prevDist)
+      if (prevFrontierCkpt ne prevDist) ck.free(prevFrontierCkpt)
+      ck.free(prevDist)
       round += 1
     }
-    if (frontierCkpt ne dist) Checkpoints.free(frontierCkpt) // last frontier is dead too
-    Checkpoints.free(e) // dist is materialized with truncated lineage
     dist.orderBy("node")
   }
 
@@ -1348,15 +1292,14 @@ object Graph {
   }
 
   /** Label-propagation core over ALREADY-symmetrized edges. Returns the
-    * final (node, label) table as a DIRECT `localCheckpoint` handle —
-    * the caller owns its storage (`Checkpoints.free` once consumed;
-    * `lpaCommunitiesOn` instead lets its result ride the handle). */
-  private[graft] def lpaLabelsOn(sym: DataFrame, iters: Int): DataFrame = {
+    * final (node, label) table as a DIRECT checkpoint handle, which
+    * passes to the caller's scope. */
+  private[graft] def lpaLabelsOn(sym: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
     // PLAIN checkpoint (round 22): the round-21 pre-partitioning never
     // captured its layout under AQE (pure upfront cost), and capturing
     // it cold-measured 0.76x — it forces SortMergeJoin where AQE
     // otherwise broadcasts the node-sized label table (see bfsDistTable)
-    val e = sym.localCheckpoint()
+    val e = ck.ckpt(sym)
     val adj = e.select(col("src").as("node"), col("dst"))
     var labels: DataFrame = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
@@ -1367,9 +1310,7 @@ object Graph {
         .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m").getField("nl")).as("label"))
     }
-    val out = labels.localCheckpoint() // one job runs the whole round chain
-    Checkpoints.free(e)
-    out
+    ck.ckpt(labels) // one job runs the whole round chain
   }
 
   /** Oracle mirrors the argmax RESULT, not the struct-max mechanism:
@@ -1425,11 +1366,10 @@ object Graph {
     * scoring joins attach labels to the canonical edge list by node id
     * — label tables are node-sized, edges shuffle once per endpoint —
     * and everything after is O(communities) cells. */
-  private[graft] def modularityOn(edgesDf: DataFrame, iters: Int): DataFrame = {
-    val sym = symmetrize(edgesDf).localCheckpoint()
-    // direct checkpoint handle (deterministically freed below) — re-
-    // checkpointing lpaCommunitiesOn's output left its backing RDD to
-    // async ContextCleaner GC, which the storage-hygiene pin flaked on
+  private[graft] def modularityOn(
+      edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
+    val sym = ck.ckpt(symmetrize(edgesDf))
+    // direct checkpoint handle, freed when this scope ends
     val labels = lpaLabelsOn(sym, iters)
     val und = sym.filter(col("src") < col("dst"))
     val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
@@ -1443,7 +1383,10 @@ object Graph {
       .groupBy("label").agg(sum("d").as("dsum"))
     val cells = dc.join(ic, Seq("label"), "left")
       .select(col("label"), coalesce(col("ec"), lit(0L)).as("ec"), col("dsum"))
-    val out = cells.crossJoin(broadcast(mRow))
+    // the result is ONE row; materialize it so the node-sized label
+    // and edge checkpoints free with this scope instead of riding its
+    // lineage (probe-caught: 736 MB retained heap at 32× without this)
+    ck.ckpt(cells.crossJoin(broadcast(mRow))
       .agg(
         count(lit(1)).as("n_communities"), max("m").as("m"),
         sum(expr("CAST(4 AS DECIMAL(38,0)) * m * ec - CAST(dsum AS DECIMAL(38,0)) * dsum"))
@@ -1455,14 +1398,7 @@ object Graph {
                |  ((abs(num) * 1000000) div (CAST(4 AS DECIMAL(38,0)) * m * m))
                |  AS BIGINT)""".stripMargin).as("q_micros"),
         expr("CAST((CAST(ec_tot AS DECIMAL(38,0)) * 1000000) div m AS BIGINT)")
-          .as("coverage_micros"))
-      // the result is ONE row; materialize it so the node-sized label
-      // and edge checkpoints can be freed instead of riding its lineage
-      // (probe-caught: 736 MB retained heap at 32× without this)
-      .localCheckpoint()
-    Checkpoints.free(labels)
-    Checkpoints.free(sym)
-    out
+          .as("coverage_micros")))
   }
 
   private val modularitySql: String =
@@ -1518,7 +1454,7 @@ object Graph {
     * the edge election, and the contraction runs min-label propagation
     * on the COMPONENT graph — one row per component, never per node or
     * edge; rounds are O(log n) because components at least halve.
-    * Per-round `localCheckpoint` + inline `Checkpoints.free` of every
+    * Per-round `localCheckpoint` + inline `Scope.free` of every
     * superseded table (the [[ssspOn]] discipline).
     *
     * The oracle replays Kruskal exactly (same total order, same unique
@@ -1531,40 +1467,32 @@ object Graph {
       .select((col("o_custkey") % 211L).as("src"), (col("o_orderkey") % 197L).as("dst"))
       .filter(col("src") =!= col("dst")))
 
-  private[graft] def mstForestOn(edgesDf: DataFrame): DataFrame = {
+  private[graft] def mstForestOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { ck =>
     val sym = symmetrize(edgesDf)
-    val und = sym.filter(col("src") < col("dst"))
+    val und = ck.ckpt(sym.filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
-      .withColumn("w", lit(1L) + (col("u") * 31L + col("v")) % 9L)
-      .localCheckpoint()
-    var comp = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint()
+      .withColumn("w", lit(1L) + (col("u") * 31L + col("v")) % 9L))
+    var comp = ck.ckpt(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     var forest: DataFrame = null
-    // direct handles of the per-round chosen-edge checkpoints: the lazy
-    // forest chain reads them at the final materialization, after which
-    // they are freed below
-    val chosenHandles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 1
     val maxRounds = 16 // components at least halve per round; 2^16 ≫ any fixture
     var done = false
     while (round <= maxRounds && !done) {
-      val lab = und
+      val lab = ck.ckpt(und
         .join(comp.select(col("node").as("u"), col("label").as("cu")), "u")
         .join(comp.select(col("node").as("v"), col("label").as("cv")), "v")
-        .filter(col("cu") =!= col("cv"))
-        .localCheckpoint()
-      if (lab.isEmpty) { done = true; Checkpoints.free(lab) }
+        .filter(col("cu") =!= col("cv")))
+      if (lab.isEmpty) { done = true; ck.free(lab) }
       else {
         // every component elects its min outgoing edge (total order)
         val cand = lab.select(col("cu").as("c"),
             struct(col("w"), col("u"), col("v")).as("k"))
           .union(lab.select(col("cv").as("c"),
             struct(col("w"), col("u"), col("v")).as("k")))
-        val chosen = cand.groupBy("c").agg(min("k").as("k"))
+        val chosen = ck.ckpt(cand.groupBy("c").agg(min("k").as("k"))
           .select(col("k.u").as("u"), col("k.v").as("v"), col("k.w").as("w"))
-          .distinct()
-          .localCheckpoint()
-        chosenHandles += chosen
+          .distinct())
         // the forest accumulates LAZILY (round-21, opt guide §1.2): it
         // is only consumed by the final sort, so the ≤rounds-deep
         // union+distinct chain over the per-round `chosen` checkpoints
@@ -1575,12 +1503,11 @@ object Graph {
         // (≤ one row per component) until fixpoint — exact merge, so
         // a stale label can never re-elect a cycle-closing edge
         val pb = chosen.join(lab, Seq("u", "v", "w"))
-        val pairs = pb.select(col("cu").as("a"), col("cv").as("b"))
+        val pairs = ck.ckpt(pb.select(col("cu").as("a"), col("cv").as("b"))
           .union(pb.select(col("cv").as("a"), col("cu").as("b")))
-          .distinct()
-          .localCheckpoint()
-        var lmH = comp.select(col("label")).distinct()
-          .select(col("label"), col("label").as("ml")).localCheckpoint()
+          .distinct())
+        var lmH = ck.ckpt(comp.select(col("label")).distinct()
+          .select(col("label"), col("label").as("ml")))
         var lm = lmH // (label, ml) view over the current direct handle
         var changed = true
         while (changed) {
@@ -1589,32 +1516,27 @@ object Graph {
           // checkpoint job PLUS a join-shuffle emptiness job
           val nb = pairs.join(lm.select(col("label").as("b"), col("ml").as("mlb")), "b")
             .groupBy(col("a").as("label")).agg(min("mlb").as("nbml"))
-          val next = lm.join(nb, Seq("label"), "left")
+          val next = ck.ckpt(lm.join(nb, Seq("label"), "left")
             .select(col("label"), col("ml").as("old"),
-              least(col("ml"), coalesce(col("nbml"), col("ml"))).as("ml"))
-            .localCheckpoint()
+              least(col("ml"), coalesce(col("nbml"), col("ml"))).as("ml")))
           changed = !next.filter(col("ml") =!= col("old")).isEmpty
-          Checkpoints.free(lmH)
+          ck.free(lmH)
           lmH = next
           lm = next.select(col("label"), col("ml"))
         }
-        val newComp = comp.join(lm, "label")
-          .select(col("node"), col("ml").as("label")).localCheckpoint()
-        Checkpoints.free(lmH)
-        Checkpoints.free(pairs)
-        Checkpoints.free(lab)
-        Checkpoints.free(comp)
+        val newComp = ck.ckpt(comp.join(lm, "label")
+          .select(col("node"), col("ml").as("label")))
+        ck.free(lmH)
+        ck.free(pairs)
+        ck.free(lab)
+        ck.free(comp)
         forest = newForest
         comp = newComp
       }
       round += 1
     }
-    Checkpoints.free(comp)
-    val res = if (forest == null) und.limit(0).select("u", "v", "w")
-      else forest.distinct().select("u", "v", "w").orderBy("w", "u", "v").localCheckpoint()
-    chosenHandles.foreach(Checkpoints.free) // forest chain materialized above
-    Checkpoints.free(und)
-    res
+    if (forest == null) und.limit(0).select("u", "v", "w")
+    else ck.ckpt(forest.distinct().select("u", "v", "w").orderBy("w", "u", "v"))
   }
 
   private val mstSql: String =
@@ -1670,9 +1592,10 @@ object Graph {
   def louvainMove(spark: SparkSession, dir: String): DataFrame =
     louvainMoveOn(rawEdges(spark, dir, TriMod.toLong, TriMod.toLong), LpaIters)
 
-  private[graft] def louvainMoveOn(edgesDf: DataFrame, iters: Int): DataFrame = {
-    val sym = symmetrize(edgesDf).localCheckpoint()
-    val labels = lpaLabelsOn(sym, iters) // direct handle, freed below
+  private[graft] def louvainMoveOn(
+      edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
+    val sym = ck.ckpt(symmetrize(edgesDf))
+    val labels = lpaLabelsOn(sym, iters) // direct handle, freed with this scope
     val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("ki"))
     val mT = sym.filter(col("src") < col("dst")).agg(count(lit(1)).as("m"))
     val sig = labels.join(deg, "node")
@@ -1686,7 +1609,7 @@ object Graph {
     val base = self.join(deg, "node")
       .join(sig.select(col("label").as("d"), col("sigma").as("sigd")), "d")
       .join(kid, Seq("node"), "left").na.fill(0L, Seq("kid"))
-    val out = kic.join(base, "node").filter(col("c") =!= col("d"))
+    ck.ckpt(kic.join(base, "node").filter(col("c") =!= col("d"))
       .join(sig.select(col("label").as("c"), col("sigma").as("sigc")), "c")
       .crossJoin(broadcast(mT))
       .withColumn("g",
@@ -1697,11 +1620,7 @@ object Graph {
       .filter(col("b.g") > 0)
       .select(col("node"), col("d").as("old_label"),
         (-col("b.nc")).as("new_label"), col("b.g").cast("long").as("gain_x2m2"))
-      .orderBy("node")
-      .localCheckpoint()
-    Checkpoints.free(labels)
-    Checkpoints.free(sym)
-    out
+      .orderBy("node"))
   }
 
   private val louvainSql: String =
@@ -1764,27 +1683,25 @@ object Graph {
     * k-core runs; the edge table only ever shrinks. Per-round eager
     * `localCheckpoint` keeps the logical plan O(1) per round (the
     * [[ssspOn]] convention) and makes the convergence early-exit free. */
-  def kcoreOn(edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = symmetrize(edgesDf).localCheckpoint()
+  def kcoreOn(edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = Checkpoints.scope { ck =>
+    var e = ck.ckpt(symmetrize(edgesDf))
     var round = 1
     var converged = false
     while (round <= rounds && !converged) {
-      val bad = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      val bad = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") < k)
-        .select(col("src"))
-        .localCheckpoint()
+        .select(col("src")))
       if (bad.isEmpty) converged = true
       else {
         val prev = e
-        e = e.join(bad, Seq("src"), "left_anti")
+        e = ck.ckpt(e.join(bad, Seq("src"), "left_anti")
           .join(bad.withColumnRenamed("src", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"))
-          .localCheckpoint()
+          .select(col("src"), col("dst")))
         // the rewritten edge table is materialized; the superseded
         // (edge-sized!) round and its deleted-node table are dead
-        Checkpoints.free(prev)
+        ck.free(prev)
       }
-      Checkpoints.free(bad)
+      ck.free(bad)
       round += 1
     }
     e.groupBy("src").agg(count(lit(1)).as("core_deg"))
@@ -1847,7 +1764,7 @@ object Graph {
   /** Bounded h-index coreness over an arbitrary directed edge list
     * (symmetrized here) — split out so specs can drive it with a
     * hand-checkable graph. `iters = 0` returns plain degrees. */
-  def corenessOn(edgesDf: DataFrame, iters: Int): DataFrame = {
+  def corenessOn(edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
     // Round-21 re-shape (opt guide §2.4/§1.2). (a — REVISED round 22)
     // The edge table checkpoints plain: see the comment at the
     // checkpoint below. (b) The h-index rounds are a SINGLE-CONSUMER
@@ -1863,7 +1780,7 @@ object Graph {
     // never captured its layout under AQE (pure upfront cost), and
     // capturing it cold-measured 0.79x — it forces SortMergeJoin where
     // AQE otherwise broadcasts the node-sized degree table
-    val e = symmetrize(edgesDf).localCheckpoint()
+    val e = ck.ckpt(symmetrize(edgesDf))
     val adj = e.select(col("dst").as("node"), col("src").as("v"))
     var c: DataFrame = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("c"))
     var cH: DataFrame = null // direct handle of the last block checkpoint
@@ -1880,14 +1797,11 @@ object Graph {
         .agg(max(least(col("nc"), col("cum"))).as("c"))
       if (r % CorenessLazyBlock == 0 || r == iters) {
         val prev = cH
-        cH = c.localCheckpoint()
+        cH = ck.ckpt(c)
         c = cH
-        if (prev != null) Checkpoints.free(prev)
+        if (prev != null) ck.free(prev)
       }
     }
-    // iters = 0 (spec-only): c is still lazy over e — e then rides the
-    // result's lineage instead of being freed here
-    if (cH != null) Checkpoints.free(e)
     c.select(col("node"), col("c").as("coreness")).orderBy("node")
   }
 
@@ -1942,13 +1856,12 @@ object Graph {
     * so floor = truncate on both engines — and all sums are exact
     * longs with the products in DECIMAL(38,0)/HUGEINT. Same per-round
     * shuffle shape as pagerank (join on the node id, partial-agg sum),
-    * per-round `localCheckpoint` + [[Checkpoints.free]]. */
-  private[graft] def hitsOn(edgesDf: DataFrame, iters: Int): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = ckpt(edgesDf
+    * per-round `localCheckpoint` + [[Checkpoints.Scope.free]]. */
+  private[graft] def hitsOn(edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
+    val e = ck.ckpt(edgesDf
       .filter(col("src") =!= col("dst"))
       .distinct())
-    val nodes = ckpt(e.select(col("src").as("node"))
+    val nodes = ck.ckpt(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     def normalized(raw: DataFrame): DataFrame = {
       // raw: (node, raw) — re-quantize to micros of the total
@@ -1960,30 +1873,24 @@ object Graph {
             |ELSE CAST((CAST(coalesce(raw, 0) AS DECIMAL(38,0)) * 1000000)
             |          div tot AS BIGINT) END""".stripMargin).as("s"))
     }
-    var hub  = ckpt(nodes.select(col("node"), lit(1000000L).as("s")))
+    var hub  = ck.ckpt(nodes.select(col("node"), lit(1000000L).as("s")))
     var auth = hub
     for (i <- 1 to iters) {
       val prevAuth = auth
-      auth = ckpt(normalized(e
+      auth = ck.ckpt(normalized(e
         .join(hub.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node")).agg(sum("s").as("raw"))))
-      if (i > 1) Checkpoints.free(prevAuth) // round 1's "prev" is hub's alias
+      if (i > 1) ck.free(prevAuth) // round 1's "prev" is hub's alias
       val prevHub = hub
-      hub = ckpt(normalized(e
+      hub = ck.ckpt(normalized(e
         .join(auth.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(sum("s").as("raw"))))
-      Checkpoints.free(prevHub)
+      ck.free(prevHub)
     }
-    Checkpoints.free(e)
-    val out = hub.withColumnRenamed("s", "hub_micros")
+    ck.ckpt(hub.withColumnRenamed("s", "hub_micros")
       .join(auth.withColumnRenamed("s", "auth_micros"), "node")
       .select(col("node"), col("auth_micros"), col("hub_micros"))
-      .orderBy("node")
-    val result = out.localCheckpoint()
-    Checkpoints.free(nodes)
-    Checkpoints.free(hub)
-    Checkpoints.free(auth)
-    result
+      .orderBy("node"))
   }
 
   private val hitsSql: String = {
@@ -2072,7 +1979,7 @@ object Graph {
     * against the canonical edge set, and the top-[[LpTopN]] cut is a
     * TakeOrderedAndProject on the (aa desc, x, y) total order — never
     * a global sort. */
-  def linkPredictOn(edgesDf: DataFrame): DataFrame = {
+  def linkPredictOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { ck =>
     // Both long-lived tables here (ec feeds adjacency + the final
     // anti-join; adjW feeds both wedge arms) are pinned for the WHOLE
     // query, so they cannot be freed inline like the random_walks
@@ -2081,7 +1988,7 @@ object Graph {
     // bytes, bounding the 256×-grown heap that deserialized blocks blew
     // to 7.4 GB, at the price of a decode on each of the 2-3 reads.
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val ec = edgesDf.localCheckpoint(true, ser) // feeds adjacency + the anti-join
+    val ec = ck.ckpt(edgesDf, ser) // feeds adjacency + the anti-join
     // Volume-scaled parallelism (the sizedForVerify precedent): the
     // wedge stage emits up to (cap−1)/2 pairs per adjacency row and
     // the pair aggregation carries them all — at the session-default
@@ -2106,7 +2013,7 @@ object Graph {
     // a deg-1 center forms none) — one shuffle, no degree join; the
     // explicit repartition both sizes the stage and satisfies the
     // window's distribution (no second exchange)
-    val adjW = Checkpoints.capturedCheckpoint(adj
+    val adjW = ck.captured(adj
       .repartition(parts, col("c"))
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("c")))
       .filter(col("deg") <= LpDegCap && col("deg") >= 2)
@@ -2180,7 +2087,7 @@ object Graph {
     * Scale shape: every step is an equi-join on the node key against
     * the (src, dst) long-pair edge table plus a partial-aggregated min
     * — the sssp/lpa family shape, same reused hash partitioning every
-    * round. Per-round `localCheckpoint` + `Checkpoints.free` keeps the
+    * round. Per-round `localCheckpoint` + `Scope.free` keeps the
     * plan and storage constant; the only driver state is loop-control
     * booleans/counts (bounded metadata). Output: node, scc_id (= min
     * node id in the component), scc_size. */
@@ -2190,37 +2097,36 @@ object Graph {
   /** SCC over an arbitrary directed (src, dst) edge list — split out so
     * specs can drive it with hand-checkable graphs (incl. the
     * label-pair counterexample). */
-  private[graft] def sccComponentsOn(edgesDf: DataFrame): DataFrame = {
+  private[graft] def sccComponentsOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { ck =>
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    var e = edgesDf.select(col("src"), col("dst")).distinct()
-      .filter(col("src") =!= col("dst")).localCheckpoint()
-    var done = Seq.empty[(Long, Long)].toDF("node", "scc_id").localCheckpoint()
-    var active = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    var e = ck.ckpt(edgesDf.select(col("src"), col("dst")).distinct()
+      .filter(col("src") =!= col("dst")))
+    var done = ck.ckpt(Seq.empty[(Long, Long)].toDF("node", "scc_id"))
+    var active = ck.ckpt(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     while (!active.isEmpty) {
       // ---- trim fixpoint: nodes missing an in- OR out-edge in the
       // induced subgraph are singleton SCCs
       var trimming = true
       while (trimming && !active.isEmpty) {
-        val keep = active
+        val keep = ck.ckpt(active
           .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
-          .join(e.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi")
-          .localCheckpoint()
+          .join(e.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi"))
         val peel = active.join(keep, Seq("node"), "left_anti")
           .select(col("node"), col("node").as("scc_id"))
         val nPeel = peel.count()
         if (nPeel == 0L) {
-          Checkpoints.free(keep)
+          ck.free(keep)
           trimming = false
         } else {
           val prevDone = done; val prevActive = active; val prevE = e
-          done = done.union(peel).localCheckpoint()
+          done = ck.ckpt(done.union(peel))
           active = keep
-          e = e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+          e = ck.ckpt(e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
             .join(active.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")).localCheckpoint()
-          Checkpoints.free(prevDone); Checkpoints.free(prevActive); Checkpoints.free(prevE)
+            .select(col("src"), col("dst")))
+          ck.free(prevDone); ck.free(prevActive); ck.free(prevE)
         }
       }
       if (!active.isEmpty) {
@@ -2230,26 +2136,24 @@ object Graph {
         // convergence is one cheap filter-count over the materialized
         // checkpoint instead of a second join-shuffle job per
         // iteration (node-sized exchange × 2, every round).
-        var colorsCkpt = active.select(col("node"), col("node").as("color"))
-          .localCheckpoint()
+        var colorsCkpt = ck.ckpt(active.select(col("node"), col("node").as("color")))
         var colors = colorsCkpt // (node, color) view over the handle
         var coloring = true
         while (coloring) {
           val offers = colors.join(e, col("node") === col("src"))
             .select(col("dst").as("node"), col("color").as("c2"))
             .groupBy("node").agg(min("c2").as("c2"))
-          val next = colors.join(offers, Seq("node"), "left")
+          val next = ck.ckpt(colors.join(offers, Seq("node"), "left")
             .select(col("node"), col("color").as("old"),
-              least(col("color"), coalesce(col("c2"), col("color"))).as("color"))
-            .localCheckpoint()
+              least(col("color"), coalesce(col("c2"), col("color"))).as("color")))
           val changed = next.filter(col("color") < col("old")).count()
-          Checkpoints.free(colorsCkpt)
+          ck.free(colorsCkpt)
           colorsCkpt = next
           colors = next.select(col("node"), col("color"))
           coloring = changed > 0L
         }
         // ---- backward sweep inside each color class from its root
-        var reached = colors.filter(col("node") === col("color")).localCheckpoint()
+        var reached = ck.ckpt(colors.filter(col("node") === col("color")))
         var frontier = reached
         var sweeping = true
         while (sweeping) {
@@ -2257,31 +2161,29 @@ object Graph {
             .select(col("src").as("node"), col("color").as("fc")).distinct()
           val sameColor = preds.join(colors, Seq("node"))
             .filter(col("fc") === col("color")).select(col("node"), col("color"))
-          val fresh = sameColor.join(reached, Seq("node"), "left_anti").localCheckpoint()
+          val fresh = ck.ckpt(sameColor.join(reached, Seq("node"), "left_anti"))
           if (fresh.isEmpty) {
-            Checkpoints.free(fresh)
+            ck.free(fresh)
             sweeping = false
           } else {
             val prevReached = reached; val prevFrontier = frontier
-            reached = reached.union(fresh).localCheckpoint()
+            reached = ck.ckpt(reached.union(fresh))
             frontier = fresh
-            Checkpoints.free(prevReached)
-            if (prevFrontier ne prevReached) Checkpoints.free(prevFrontier)
+            ck.free(prevReached)
+            if (prevFrontier ne prevReached) ck.free(prevFrontier)
           }
         }
-        if (frontier ne reached) Checkpoints.free(frontier)
+        if (frontier ne reached) ck.free(frontier)
         val prevDone = done; val prevActive = active; val prevE = e
-        done = done.union(reached.select(col("node"), col("color").as("scc_id")))
-          .localCheckpoint()
-        active = active.join(reached, Seq("node"), "left_anti").localCheckpoint()
-        e = e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+        done = ck.ckpt(done.union(reached.select(col("node"), col("color").as("scc_id"))))
+        active = ck.ckpt(active.join(reached, Seq("node"), "left_anti"))
+        e = ck.ckpt(e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
           .join(active.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).localCheckpoint()
-        Checkpoints.free(reached); Checkpoints.free(colorsCkpt)
-        Checkpoints.free(prevDone); Checkpoints.free(prevActive); Checkpoints.free(prevE)
+          .select(col("src"), col("dst")))
+        ck.free(reached); ck.free(colorsCkpt)
+        ck.free(prevDone); ck.free(prevActive); ck.free(prevE)
       }
     }
-    Checkpoints.free(active); Checkpoints.free(e)
     val sizes = done.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
     done.join(sizes, Seq("scc_id"))
       .select(col("node"), col("scc_id"), col("scc_size"))

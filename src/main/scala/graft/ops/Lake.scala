@@ -24,40 +24,40 @@ object Lake {
     * losslessly, while double formatting would drift. Explicit read
     * schema: schema inference over JSON is a full extra pass at scale
     * and can widen types under drift. */
-  def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame =
+  def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-json") { tmp =>
       Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("price_cents"))
         .write.mode("overwrite").json(tmp)
-      spark.read
+      ck.ckpt(spark.read
         .schema("o_orderkey LONG, o_orderstatus STRING, price_cents LONG")
         .json(tmp)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"),
           min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
-        .orderBy("o_orderstatus")
-        .localCheckpoint()
+        .orderBy("o_orderstatus"))
     }
+  }
 
   /** ORC round-trip, driver-checked: the second columnar format next to
     * parquet — binary-exact for doubles, predicate-pushdown-capable.
     * Same shape as the parquet path: write a projection, read it back,
     * aggregate to cents. */
-  def orcRoundtrip(spark: SparkSession, dir: String): DataFrame =
+  def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-orc") { tmp =>
       Tables.lineitem(spark, dir)
         .select("l_orderkey", "l_linenumber", "l_returnflag",
           "l_quantity", "l_extendedprice")
         .write.mode("overwrite").orc(tmp)
-      spark.read.orc(tmp)
+      ck.ckpt(spark.read.orc(tmp)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("long")).as("sum_qty"),
           sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
-        .orderBy("l_returnflag")
-        .localCheckpoint()
+        .orderBy("l_returnflag"))
     }
+  }
 
   /** Target compacted file size. 128 MB locally and at scale — the
     * standard parquet target; the fixture tables compact to one file. */
@@ -90,19 +90,19 @@ object Lake {
     * compacted to ~128 MB files, read back and aggregated — proving the
     * compaction is content-preserving. CompactionSpec asserts the file
     * counts (64 → 1 on the fixtures). */
-  def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame =
+  def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-frag") { frag =>
       withTempDir("graft-compact") { compacted =>
         Tables.events(spark, dir).repartition(64)
           .write.mode("overwrite").parquet(frag)
         compactTo(spark, frag, compacted)
-        spark.read.parquet(compacted)
+        ck.ckpt(spark.read.parquet(compacted)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_value_cents"))
-          .orderBy("event_type")
-          .localCheckpoint()
+          .orderBy("event_type"))
       }
     }
+  }
 
   /** Deletes every data file in `tableDir` whose name is not in
     * `manifest` — the VACUUM/orphan-cleanup primitive every
@@ -160,19 +160,19 @@ object Lake {
     * orders oracle. The table is never rewritten — vacuum touches only
     * dead bytes, which is what makes it safe to run continuously on a
     * 100 TB lake. */
-  def vacuumOrphans(spark: SparkSession, dir: String): DataFrame =
+  def vacuumOrphans(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-vacuum") { tbl =>
       Tables.orders(spark, dir).repartition(4)
         .write.mode("overwrite").parquet(tbl)
       val manifest = dataFiles(spark, tbl)
       plantOrphans(spark, tbl, 3)
       vacuumTo(spark, tbl, manifest)
-      spark.read.parquet(tbl)
+      ck.ckpt(spark.read.parquet(tbl)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("sum_cents"))
-        .orderBy("o_orderstatus")
-        .localCheckpoint() // materialize before the temp dir is deleted
+        .orderBy("o_orderstatus")) // materialize before the temp dir is deleted
     }
+  }
 
   /** Schema-evolution read, driver-checked: two parquet batches of the
     * SAME table written with different schemas — the later batch adds
@@ -186,7 +186,7 @@ object Lake {
     * the oracle can replay the union from the original rows. At 100 TB
     * the same read works because merged footers, not data rewrites,
     * reconcile the schemas — old files are never touched. */
-  def schemaEvolution(spark: SparkSession, dir: String): DataFrame =
+  def schemaEvolution(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-evolve") { tbl =>
       val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -198,15 +198,15 @@ object Lake {
         .select(col("o_orderkey"), col("o_orderstatus"), col("price_cents"),
           year(col("o_orderdate")).cast("long").as("o_year"))
         .write.mode("append").parquet(tbl)
-      spark.read.option("mergeSchema", "true").parquet(tbl)
+      ck.ckpt(spark.read.option("mergeSchema", "true").parquet(tbl)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           sum("price_cents").as("sum_cents"),
           count(col("o_year")).as("n_evolved"),
           coalesce(sum("o_year"), lit(0L)).as("sum_year"))
-        .orderBy("o_orderstatus")
-        .localCheckpoint() // materialize before the temp dir is deleted
+        .orderBy("o_orderstatus")) // materialize before the temp dir is deleted
     }
+  }
 
   /** Incremental aggregate maintenance, driver-checked: a materialized
     * aggregate (the pre-1996 "snapshot") merged with a new-data delta
@@ -304,7 +304,7 @@ object Lake {
     * delete costs one DV write + a broadcast-able anti-join side
     * instead of rewriting petabytes (exactly why the format feature
     * exists). */
-  def deletionVectors(spark: SparkSession, dir: String): DataFrame =
+  def deletionVectors(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-dv") { tmp =>
       val base = Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -323,15 +323,15 @@ object Lake {
           expr("bit_xor(row_id)").as("x_r"))
       val totals = base.agg(count(lit(1)).as("n_total"),
         sum(when(col("l_orderkey") % 13 === 2, 1L).otherwise(0L)).as("n_deleted"))
-      totals.crossJoin(visible).crossJoin(rewrite)
+      ck.ckpt(totals.crossJoin(visible).crossJoin(rewrite)
         .select(col("n_total"), col("n_deleted"),
           col("n_v").as("n_visible"),
           col("c_v").as("visible_cents"),
           col("x_v").as("visible_rowid_xor"),
           (col("n_v") === col("n_r") && col("c_v") === col("c_r") &&
-            col("x_v") === col("x_r")).as("dv_equals_rewrite"))
-        .localCheckpoint() // 1 row; must outlive the temp dir
+            col("x_v") === col("x_r")).as("dv_equals_rewrite"))) // 1 row; must outlive the temp dir
     }
+  }
 
   private val deletionVectorsSql: String =
     """WITH base AS (
@@ -452,7 +452,7 @@ object Lake {
     * partitioned_roundtrip convention); `PartitionPruningSpec` asserts
     * `dynamicpruningexpression` appears in the executed fact scan. The
     * oracle replays the same day selection + aggregate over raw events. */
-  def dppJoin(spark: SparkSession, dir: String): DataFrame =
+  def dppJoin(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-dpp") { tmp =>
       val ev = Tables.events(spark, dir).select(
         expr("unix_millis(ts) div 86400000").as("day"),
@@ -467,13 +467,13 @@ object Lake {
         .groupBy("day").agg(count(lit(1)).as("c"))
         .orderBy(desc("c"), col("day")).limit(3)
         .select(col("day").cast("int").as("day"))
-      fact.join(broadcast(dim), "day")
+      ck.ckpt(fact.join(broadcast(dim), "day")
         .groupBy("day")
         .agg(count(lit(1)).as("n"), sum("v_cents").as("sum_cents"))
         .select(col("day").cast("long").as("day"), col("n"), col("sum_cents"))
-        .orderBy("day")
-        .localCheckpoint()
+        .orderBy("day"))
     }
+  }
 
   private[graft] val dppSql: String =
     """WITH ev AS (
@@ -490,16 +490,16 @@ object Lake {
       |FROM ev JOIN dim USING (day)
       |GROUP BY day ORDER BY day""".stripMargin
 
-  def runtimeFilterJoin(spark: SparkSession, dir: String): DataFrame =
+  def runtimeFilterJoin(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withConfs(spark, runtimeFilterConfs) {
-      Tables.lineitem(spark, dir)
+      ck.ckpt(Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir).filter(col("o_orderpriority") === "1-URGENT"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"), sum(cents(col("l_extendedprice"))).as("sum_cents"))
-        .orderBy("l_returnflag")
-        .localCheckpoint()
+        .orderBy("l_returnflag"))
     }
+  }
 
   /** Z-order clustering benefit, driver-checked end to end: events
     * mapped to a 2-D grid (x = day index 0..29, y = value/16 bucket
@@ -553,22 +553,11 @@ object Lake {
     * localCheckpoint pins the id assignment so the count pass and the
     * tile pass see identical partitions. */
   private def tileByRange(df: DataFrame,
-      keys: Seq[org.apache.spark.sql.Column], buckets: Int): DataFrame =
-    tileByRangeHandle(df, keys, buckets)._1
-
-  /** [[tileByRange]] + the direct checkpoint handle of its pinned
-    * range-partitioned table, so multi-layout consumers
-    * ([[hilbertLayout]]'s three tilings) can [[Checkpoints.free]] each
-    * corpus-sized pin once its file-stats aggregate has materialized —
-    * otherwise the layouts' point-set copies stack up for the query
-    * lifetime (probe-observed: 1.15 GB at 32× for three layouts). */
-  private def tileByRangeHandle(df: DataFrame,
-      keys: Seq[org.apache.spark.sql.Column], buckets: Int): (DataFrame, DataFrame) = {
-    val parted = df
+      keys: Seq[org.apache.spark.sql.Column], buckets: Int): DataFrame = Checkpoints.scope { ck =>
+    val parted = ck.ckpt(df
       .repartitionByRange(RankPartitions, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint()
+      .withColumn("__mid", monotonically_increasing_id()))
     val withPid = parted
       .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
       .withColumn("__local", (col("__mid").bitwiseAND((1L << 33) - 1)) + 1)
@@ -578,10 +567,10 @@ object Lake {
     var acc = 0L
     val offsets: Map[Int, Long] =
       counts.map { case (pid, n) => val o = pid -> acc; acc += n; o }.toMap
-    (withPid
+    withPid
       .withColumn("__rank", element_at(typedLit(offsets), col("__pid")) + col("__local"))
       .withColumn("tile", ntileOfRank(col("__rank"), total, buckets))
-      .drop("__mid", "__pid", "__local", "__rank"), parted)
+      .drop("__mid", "__pid", "__local", "__rank")
   }
 
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
@@ -663,21 +652,18 @@ object Lake {
     val pz = pts
       .withColumn("z", graft.functions.LayoutFunctions.zorder(col("x"), col("y")))
       .withColumn("h", graft.functions.LayoutFunctions.hilbert(col("x"), col("y")))
-    // collapse each layout to its 16-row file-stats table and FREE its
-    // corpus-sized tiling pin before the next layout tiles — one pinned
-    // point-set at a time, not three (probe: 1.15 GB -> flat at 32x)
+    // collapse each layout to its 16-row file-stats table in its own
+    // scope, which frees the corpus-sized tiling pin before the next
+    // layout tiles — one pinned point-set at a time, not three (probe:
+    // 1.15 GB -> flat at 32x)
     val layoutStats = Seq(
       ("hilbert", Seq(col("h"), col("event_id"))),
       ("zorder", Seq(col("z"), col("event_id"))),
       ("linear", Seq(col("x"), col("y"), col("event_id")))).map { case (name, keys) =>
-      val (tiles, pin) = tileByRangeHandle(pz, keys, 16)
-      val stats = tiles.groupBy("tile")
+      Checkpoints.scope(ls => ls.ckpt(tileByRange(pz, keys, 16).groupBy("tile")
         .agg(min("x").as("min_x"), max("x").as("max_x"),
           min("y").as("min_y"), max("y").as("max_y"))
-        .withColumn("layout", lit(name))
-        .localCheckpoint() // 16 rows
-      Checkpoints.free(pin)
-      stats
+        .withColumn("layout", lit(name)))) // 16 rows
     }
     layoutStats.reduce(_.union(_))
       .groupBy("layout")
@@ -745,7 +731,7 @@ object Lake {
     * [[vacuumOrphans]]' machinery is what eventually reclaims expired
     * versions past retention. Oracle replays both versions from the
     * source rows. */
-  def timeTravel(spark: SparkSession, dir: String): DataFrame =
+  def timeTravel(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-tt") { tbl =>
       val orders = Tables.orders(spark, dir).select(
         col("o_orderkey"), col("o_orderstatus"),
@@ -767,10 +753,10 @@ object Lake {
           .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
           .select(lit(version).as("version"), col("o_orderstatus"),
             col("n"), col("sum_cents"))
-      readVersion(v1, 1L).union(readVersion(v2, 2L))
-        .orderBy("version", "o_orderstatus")
-        .localCheckpoint() // materialize before the temp dir is deleted
+      ck.ckpt(readVersion(v1, 1L).union(readVersion(v2, 2L))
+        .orderBy("version", "o_orderstatus")) // materialize before the temp dir is deleted
     }
+  }
 
   def entries: Seq[QueryDef] = Seq(
     QueryDef.sql("dpp_join", dppSql)(dppJoin),

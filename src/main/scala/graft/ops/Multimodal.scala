@@ -390,7 +390,7 @@ object Multimodal {
     * metadata without touching content, and a pushable
     * `pathGlobFilter`. At 100 TB the same plan reads the bucket
     * listing instead of a temp dir. */
-  def binaryFileIngest(spark: SparkSession, dir: String): DataFrame =
+  def binaryFileIngest(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     withTempDir("graft-binfiles") { tmp =>
       Tables.documents(spark, dir)
         .filter(col("doc_id") % IngestMod === 0 && col("doc_id") < IngestIdCap)
@@ -402,14 +402,14 @@ object Multimodal {
             r.getAs[Array[Byte]](1))
           ()
         }
-      spark.read.format("binaryFile").load(tmp)
+      ck.ckpt(spark.read.format("binaryFile").load(tmp)
         .select(
           regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
           col("length").as("n_bytes"),
           md5(col("content")).as("payload_md5"))
-        .orderBy("doc_id")
-        .localCheckpoint() // must outlive the temp dir
+        .orderBy("doc_id")) // must outlive the temp dir
     }
+  }
 
   private val binaryFileIngestSql: String =
     s"""SELECT doc_id,

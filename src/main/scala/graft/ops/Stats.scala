@@ -57,24 +57,11 @@ object Stats {
   /** The distributed two-sample cumulation behind [[pooledCum]], over
     * ANY (v, na, nb) cell table — also feeds [[rocAuc]], whose cells
     * come from per-doc scores instead of event values. */
-  private def cumulateCells(cells: DataFrame): (DataFrame, Long, Long) = {
-    val (cum, n, m, _) = cumulateCellsHandle(cells)
-    (cum, n, m)
-  }
-
-  /** [[cumulateCells]] + the direct checkpoint handle of its pinned
-    * range-partitioned cell table, so multi-cumulation consumers
-    * ([[spearmanCorr]]'s four rank scans) can [[Checkpoints.free]] the
-    * cell storage once their downstream aggregate has materialized —
-    * without this the per-column cell checkpoints (distinct-value-sized,
-    * which for a near-unique measure is corpus-sized) pile up for the
-    * session lifetime. */
-  private def cumulateCellsHandle(cells: DataFrame): (DataFrame, Long, Long, DataFrame) = {
-    val parted = cells
+  private def cumulateCells(cells: DataFrame): (DataFrame, Long, Long) = Checkpoints.scope { ck =>
+    val parted = ck.ckpt(cells
       .repartitionByRange(ScanPartitions, col("v"))
       .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // pin partition ids before they are used twice
+      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
     val ptots = parted.groupBy("pid")
       .agg(sum("na").as("ta"), sum("nb").as("tb"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
@@ -88,7 +75,7 @@ object Stats {
     val cum = parted
       .withColumn("ca", element_at(typedLit(offA), col("pid")) + sum("na").over(w))
       .withColumn("cb", element_at(typedLit(offB), col("pid")) + sum("nb").over(w))
-    (cum, n, m, parted)
+    (cum, n, m)
   }
 
   /** Loud BIGINT-width guard for a DECIMAL(38,0) statistic: in non-ANSI
@@ -207,16 +194,15 @@ object Stats {
     * (type, v, freq) cells via weighted exact percentile — per-distinct-
     * value aggregation state (the `equidepth_histogram` shape), not a
     * per-row sort. */
-  def robustOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
+  def robustOutliers(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(Tables.events(spark, dir)
       .select(col("event_type").as("t"), cents(col("value")).as("v"))
-      .groupBy("t", "v").agg(count(lit(1)).as("f"))
-      .localCheckpoint() // feeds the median pass and the deviation pass
+      .groupBy("t", "v").agg(count(lit(1)).as("f"))) // feeds the median pass and the deviation pass
     val med = cells.groupBy("t")
       .agg((expr("percentile(v, 0.5D, f)") * 2).cast("long").as("med2"))
-    val dev = cells.join(broadcast(med), "t")
-      .withColumn("d2", abs(lit(2L) * col("v") - col("med2")))
-      .localCheckpoint() // feeds the MAD pass and the outlier count
+    // feeds the MAD pass and the outlier count
+    val dev = ck.ckpt(cells.join(broadcast(med), "t")
+      .withColumn("d2", abs(lit(2L) * col("v") - col("med2"))))
     val mad = dev.groupBy("t")
       .agg((expr("percentile(d2, 0.5D, f)") * 2).cast("long").as("mad4"))
     dev.join(broadcast(mad), "t")
@@ -998,12 +984,11 @@ object Stats {
     * Scale shape: the only corpus-sized step is a TakeOrderedAndProject
     * top-65 cut (per-partition bounded heaps); everything after runs on
     * a CONSTANT 65-row frame — the vocab_coverage convention. */
-  def hillTailIndex(spark: SparkSession, dir: String): DataFrame = {
-    val top = Tables.orders(spark, dir)
+  def hillTailIndex(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val top = ck.ckpt(Tables.orders(spark, dir)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("v"))
       .orderBy(col("v").desc, col("o_orderkey"))
-      .limit(HillK + 1)
-      .localCheckpoint() // constant 65-row frame; feeds rank + threshold
+      .limit(HillK + 1)) // constant 65-row frame; feeds rank + threshold
     val w = Window.orderBy(col("v").desc, col("o_orderkey"))
     val ranked = top.withColumn("rn", row_number().over(w).cast("long"))
     val thr = ranked.filter(col("rn") === (HillK + 1).toLong)
@@ -1066,20 +1051,21 @@ object Stats {
     * one partial-aggregated pass; everything after is bin-set-sized.
     * The half split needs the calendar extent — one 1-row min/max
     * aggregate broadcast back (bounded driver-free metadata). */
-  def psiDrift(spark: SparkSession, dir: String): DataFrame = {
+  def psiDrift(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val ev = Tables.events(spark, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         expr(s"CAST(round(value * 100) AS BIGINT) div $PsiBin").as("bin"))
     val ext = ev.agg(min("day").as("lo"), max("day").as("hi"))
-    val cells = ev.crossJoin(broadcast(ext))
+    // bin-set-sized; feeds totals and terms
+    val cells = ck.ckpt(ev.crossJoin(broadcast(ext))
       .select(col("bin"), (col("day") * 2 < col("lo") + col("hi")).as("first_half"))
       .groupBy("bin")
       .agg(sum(when(col("first_half"), 1L).otherwise(0L)).as("na"),
-        sum(when(!col("first_half"), 1L).otherwise(0L)).as("nb"))
-      .localCheckpoint() // bin-set-sized; feeds totals and terms
+        sum(when(!col("first_half"), 1L).otherwise(0L)).as("nb")))
     val tot = cells.agg(sum("na").as("ta"), sum("nb").as("tb"),
       count(lit(1)).as("bcnt"))
-    val terms = cells.crossJoin(broadcast(tot))
+    // feeds the total and the per-bin output
+    val terms = ck.ckpt(cells.crossJoin(broadcast(tot))
       .select(col("bin"), col("na"), col("nb"), col("ta"), col("tb"), col("bcnt"),
         expr("CAST(((na + 1) * 1000000) div (ta + bcnt) AS BIGINT)").as("p_micros"),
         expr("CAST(((nb + 1) * 1000000) div (tb + bcnt) AS BIGINT)").as("q_micros"))
@@ -1087,8 +1073,7 @@ object Stats {
         expr("""(p_micros - q_micros) *
                |CAST(round(ln(CAST((CAST(na AS DECIMAL(38,0)) + 1) * (tb + bcnt) AS DOUBLE) /
                |              CAST((CAST(nb AS DECIMAL(38,0)) + 1) * (ta + bcnt) AS DOUBLE))
-               |     * 1000000) AS BIGINT)""".stripMargin).as("term_pico"))
-      .localCheckpoint() // feeds the total and the per-bin output
+               |     * 1000000) AS BIGINT)""".stripMargin).as("term_pico")))
     val total = terms.agg(sum("term_pico").as("psi_pico"))
     terms.crossJoin(broadcast(total))
       .select(col("bin"), col("na"), col("nb"), col("p_micros"), col("q_micros"),
@@ -1158,7 +1143,7 @@ object Stats {
     * assert the one-pass no-explode shape through what the served
     * path's checkpoint would truncate. */
   private[graft] def bootstrapCi(
-      spark: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+      spark: SparkSession, dir: String, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
     val ev = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), cents(col("value")).as("x"))
@@ -1182,7 +1167,7 @@ object Stats {
           expr("CAST((CAST(sum_cents AS DECIMAL(38,0)) * 1000000) div n AS BIGINT)"))
           .as("mean_micros"))
     val meansM = // 32 cells; feed the rank window and the output
-      if (materialize) means.localCheckpoint() else means
+      if (materialize) ck.ckpt(means) else means
     val w = Window.orderBy(col("mean_micros"), col("b"))
     val ranked = meansM.withColumn("rk", row_number().over(w))
     val lo = ranked.filter(col("rk") === 2).select(col("mean_micros").as("lo_micros"))
@@ -1238,11 +1223,11 @@ object Stats {
     * the quantile runs over (distinct score)-sized cells with a single
     * bounded cumulative window, and the audit is one conditional
     * aggregate — no row-level sort anywhere. */
-  def conformalFilter(spark: SparkSession, dir: String): DataFrame = {
+  def conformalFilter(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val score = TextAnalysis.lmBigramScore(spark, dir).select("doc_id", "avg_micros")
     val label = Curation.qualityClassifier(spark, dir).select("doc_id", "keep")
-    val joined = score.join(label, "doc_id")
-      .localCheckpoint() // feeds the calibration quantile and the test audit
+    // feeds the calibration quantile and the test audit
+    val joined = ck.ckpt(score.join(label, "doc_id"))
     val cal = joined.filter(col("doc_id") % 2 === 0 && col("keep"))
     val cells = cal.groupBy(col("avg_micros").as("v")).agg(count(lit(1)).as("f"))
     val nCal = cal.count() // 1-scalar driver metadata (kmeans convention)
@@ -1323,16 +1308,16 @@ object Stats {
     * shares with [[rocAuc]]; after the bin collapse EVERYTHING is
     * bounded by the fixed 21-bin grid (≤231 intervals, ≤4.6k minimax
     * terms) regardless of corpus size. */
-  def isotonicCalibrate(spark: SparkSession, dir: String): DataFrame = {
+  def isotonicCalibrate(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val score = TextAnalysis.lmBigramScore(spark, dir).select("doc_id", "avg_micros")
     val label = Curation.qualityClassifier(spark, dir).select("doc_id", "keep")
     val joined = score.join(label, "doc_id")
     val range = joined.agg(min("avg_micros").as("lo"), max("avg_micros").as("hi"))
-    val cells = joined.crossJoin(broadcast(range))
+    // bin-grid-sized; feeds intervals, minimax, and the output attach
+    val cells = ck.ckpt(joined.crossJoin(broadcast(range))
       .groupBy(expr(s"((avg_micros - lo) * $IsoBins) div (hi - lo + 1)").as("bucket"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("pos"))
-      .localCheckpoint() // bin-grid-sized; feeds intervals, minimax, and the output attach
+        sum(when(col("keep"), 1L).otherwise(0L)).as("pos")))
     val ivals = cells.select(col("bucket").as("j"))
       .crossJoin(cells.select(col("bucket").as("k")))
       .filter(col("j") <= col("k"))
@@ -1483,11 +1468,10 @@ object Stats {
     * (years of 100 TB stream ≈ 10³ days → ≤10⁶ pairs per type), never
     * stream-sized; the median selection runs on a type-partitioned
     * cumulative window over (type, slope, freq) cells. */
-  def theilsenTrend(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
+  def theilsenTrend(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val daily = ck.ckpt(Tables.events(spark, dir)
       .groupBy(col("event_type"), expr("unix_millis(ts) div 86400000").as("day"))
-      .agg(count(lit(1)).as("y"))
-      .localCheckpoint() // calendar-bounded; feeds both pair sides
+      .agg(count(lit(1)).as("y"))) // calendar-bounded; feeds both pair sides
     val pairs = daily.as("a")
       .join(daily.as("b"),
         col("a.event_type") === col("b.event_type") && col("a.day") < col("b.day"))
@@ -1549,11 +1533,10 @@ object Stats {
     * (type, cents, freq) cells on a type-partitioned cumulative window
     * — no interpolation, no global sort; bounds broadcast back and the
     * clamp + re-aggregate is one partial-aggregated pass over cells. */
-  def winsorize(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
+  def winsorize(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(Tables.events(spark, dir)
       .select(col("event_type").as("t"), cents(col("value")).as("v"))
-      .groupBy("t", "v").agg(count(lit(1)).as("f"))
-      .localCheckpoint() // feeds the bound selection and the clamp pass
+      .groupBy("t", "v").agg(count(lit(1)).as("f"))) // feeds the bound selection and the clamp pass
     val tot = cells.groupBy("t").agg(sum("f").as("n"))
     val w = Window.partitionBy("t").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1803,23 +1786,21 @@ object Stats {
     * Scale shape: the corpus collapses to |X|·|Y| cells in one partial-
     * aggregated pass; margins and N re-attach via broadcastable joins
     * on the ≤|X|+|Y|-row frames. */
-  def mutualInfo(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.lineitem(spark, dir)
+  def mutualInfo(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag").as("x"), col("l_linestatus").as("y"))
-      .agg(count(lit(1)).as("nxy"))
-      .localCheckpoint() // ≤|X|·|Y| cells; feeds margins, N, and the output
+      .agg(count(lit(1)).as("nxy"))) // ≤|X|·|Y| cells; feeds margins, N, and the output
     val mx = cells.groupBy("x").agg(sum("nxy").as("nx"))
     val my = cells.groupBy("y").agg(sum("nxy").as("ny"))
     val nT = cells.agg(sum("nxy").as("n"))
-    val terms = cells
+    val terms = ck.ckpt(cells
       .join(broadcast(mx), "x").join(broadcast(my), "y")
       .crossJoin(broadcast(nT))
       .select(col("x"), col("y"), col("nxy"), col("nx"), col("ny"), col("n"),
         expr("""CAST(round(ln(CAST(CAST(nxy AS DECIMAL(38,0)) * n AS DOUBLE) /
                |              CAST(CAST(nx AS DECIMAL(38,0)) * ny AS DOUBLE))
                |     * 1000000) AS BIGINT)""".stripMargin).as("ln_micros"))
-      .withColumn("term", col("nxy") * col("ln_micros"))
-      .localCheckpoint() // feeds the total and the per-cell output
+      .withColumn("term", col("nxy") * col("ln_micros"))) // feeds the total and the per-cell output
     val tot = terms.agg(expr("CAST(sum(term) div max(n) AS BIGINT)").as("mi_micros"))
     terms.crossJoin(broadcast(tot))
       .select(col("x"), col("y"), col("nxy"), col("nx"), col("ny"),
@@ -1840,16 +1821,16 @@ object Stats {
     * the cumulation is a LANG-partitioned window over cells (parallel
     * across slices, never a global order — the group_quantiles
     * convention), and everything after is slice-count-sized. */
-  def groupAuc(spark: SparkSession, dir: String): DataFrame = {
+  def groupAuc(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val score = TextAnalysis.lmBigramScore(spark, dir).select("doc_id", "avg_micros")
     val label = Curation.qualityClassifier(spark, dir).select("doc_id", "keep")
     val lang  = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-    val cells = score.join(label, "doc_id").join(lang, "doc_id")
+    // slice×distinct-score cells; feeds cum + totals
+    val cells = ck.ckpt(score.join(label, "doc_id").join(lang, "doc_id")
       .groupBy(col("lang"), col("avg_micros").as("v"))
       .agg(
         sum(when(col("keep"), 1L).otherwise(0L)).as("na"),
-        sum(when(!col("keep"), 1L).otherwise(0L)).as("nb"))
-      .localCheckpoint() // slice×distinct-score cells; feeds cum + totals
+        sum(when(!col("keep"), 1L).otherwise(0L)).as("nb")))
     val w = Window.partitionBy("lang").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val u2 = cells.withColumn("cb", sum("nb").over(w))
@@ -1915,13 +1896,13 @@ object Stats {
     * Scale shape: one partial-aggregated pass to per-lang (n, keeps);
     * overall and the max-gap are broadcast 1-row aggregates over the
     * lang-count-sized frame. */
-  def fairnessParity(spark: SparkSession, dir: String): DataFrame = {
-    val perLang = Curation.qualityClassifier(spark, dir).select("doc_id", "keep")
+  def fairnessParity(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    // lang-count-sized; feeds overall + gaps
+    val perLang = ck.ckpt(Curation.qualityClassifier(spark, dir).select("doc_id", "keep")
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"))
-      .localCheckpoint() // lang-count-sized; feeds overall + gaps
+        sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep")))
     val overall = perLang.agg(
       expr("CAST((sum(n_keep) * 1000000) div sum(n_docs) AS BIGINT)").as("overall_micros"))
     val gapped = perLang.crossJoin(broadcast(overall))
@@ -1976,11 +1957,10 @@ object Stats {
     * — V itself is an irrational sqrt, and x² is monotone, the
     * roc_auc/item_cf convention. Scale shape: one partial-aggregated
     * corpus pass to |X|·|Y| cells; everything after is cell-sized. */
-  def cramersV(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.lineitem(spark, dir)
+  def cramersV(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag").as("x"), col("l_linestatus").as("y"))
-      .agg(count(lit(1)).as("nxy"))
-      .localCheckpoint() // ≤|X|·|Y| cells; feeds margins, N, k, l, terms
+      .agg(count(lit(1)).as("nxy"))) // ≤|X|·|Y| cells; feeds margins, N, k, l, terms
     val mx = cells.groupBy("x").agg(sum("nxy").as("nx"))
     val my = cells.groupBy("y").agg(sum("nxy").as("ny"))
     val kl = cells.agg(sum("nxy").as("n"),
@@ -2037,20 +2017,21 @@ object Stats {
     * times the exact integral-micros share — cross-engine stable).
     * Scale shape: identical to PSI — one partial-aggregated corpus
     * pass to bin cells, everything after is bin-set-sized. */
-  def jsDivergence(spark: SparkSession, dir: String): DataFrame = {
+  def jsDivergence(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val ev = Tables.events(spark, dir)
       .select(expr("unix_millis(ts) div 86400000").as("day"),
         expr(s"CAST(round(value * 100) AS BIGINT) div $PsiBin").as("bin"))
     val ext = ev.agg(min("day").as("lo"), max("day").as("hi"))
-    val cells = ev.crossJoin(broadcast(ext))
+    // bin-set-sized; feeds totals and terms
+    val cells = ck.ckpt(ev.crossJoin(broadcast(ext))
       .select(col("bin"), (col("day") * 2 < col("lo") + col("hi")).as("first_half"))
       .groupBy("bin")
       .agg(sum(when(col("first_half"), 1L).otherwise(0L)).as("na"),
-        sum(when(!col("first_half"), 1L).otherwise(0L)).as("nb"))
-      .localCheckpoint() // bin-set-sized; feeds totals and terms
+        sum(when(!col("first_half"), 1L).otherwise(0L)).as("nb")))
     val tot = cells.agg(sum("na").as("ta"), sum("nb").as("tb"),
       count(lit(1)).as("bcnt"))
-    val terms = cells.crossJoin(broadcast(tot))
+    // feeds the total and the per-bin output
+    val terms = ck.ckpt(cells.crossJoin(broadcast(tot))
       .select(col("bin"), col("na"), col("nb"),
         expr("CAST(((na + 1) * 1000000) div (ta + bcnt) AS BIGINT)").as("p_micros"),
         expr("CAST(((nb + 1) * 1000000) div (tb + bcnt) AS BIGINT)").as("q_micros"),
@@ -2070,8 +2051,7 @@ object Stats {
         // DOUBLED term: no /2 anywhere, so there is no trunc-vs-floor
         // hazard on the (rounding-jitter) near-zero negatives — the
         // welch_t sign lesson applied by elimination. JS = js_2pico/2e12.
-        expr("p_micros * lnp_micros + q_micros * lnq_micros").as("term_2pico"))
-      .localCheckpoint() // feeds the total and the per-bin output
+        expr("p_micros * lnp_micros + q_micros * lnq_micros").as("term_2pico")))
     val total = terms.agg(sum("term_2pico").as("js_2pico"))
     terms.crossJoin(broadcast(total))
       .select(col("bin"), col("na"), col("nb"), col("p_micros"), col("q_micros"),
@@ -2152,11 +2132,12 @@ object Stats {
     * Scale shape: per-row score (the lm_bigram machinery) → 10-bin
     * cells with map-side partials; the extent is one broadcast 1-row
     * min/max. */
-  def calibrationEce(spark: SparkSession, dir: String): DataFrame = {
+  def calibrationEce(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val scored = TextAnalysis.lmBigramScore(spark, dir).select("doc_id", "avg_micros")
       .join(Curation.qualityClassifier(spark, dir).select("doc_id", "keep"), "doc_id")
     val ext = scored.agg(min("avg_micros").as("lo"), max("avg_micros").as("hi"))
-    val cells = scored.crossJoin(broadcast(ext))
+    // ≤10 cells; feeds the total and the output
+    val cells = ck.ckpt(scored.crossJoin(broadcast(ext))
       .select(expr("""CASE WHEN hi = lo THEN CAST(0 AS BIGINT)
                      |ELSE least(CAST(9 AS BIGINT),
                      |  (((avg_micros - lo) * 1000000) div (hi - lo)) div 100000) END"""
@@ -2174,8 +2155,7 @@ object Stats {
         expr("CAST((CAST(n_pos AS DECIMAL(38,0)) * 1000000) div n_b AS BIGINT)")
           .as("acc_micros"),
         col("n_pos"))
-      .withColumn("gap_micros", abs(col("conf_micros") - col("acc_micros")))
-      .localCheckpoint() // ≤10 cells; feeds the total and the output
+      .withColumn("gap_micros", abs(col("conf_micros") - col("acc_micros"))))
     val tot = cells.agg(
       expr("CAST(sum(n_b * gap_micros) div sum(n_b) AS BIGINT)").as("ece_micros"))
     cells.crossJoin(broadcast(tot))
@@ -2248,7 +2228,7 @@ object Stats {
     *
     * Scale shape: one scan → one 1-row aggregate; the pair explosion
     * runs on that single row. */
-  def corrMatrix(spark: SparkSession, dir: String): DataFrame = {
+  def corrMatrix(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val src = Tables.lineitem(spark, dir).select(
       cents(col("l_discount")).as("disc"), cents(col("l_extendedprice")).as("price"),
       cents(col("l_quantity")).as("qty"), cents(col("l_tax")).as("tax"))
@@ -2257,8 +2237,7 @@ object Stats {
         CorrCols.map(c => sum(col(c).cast("decimal(38,0)")).as(s"s_$c")) ++
         (for (x <- CorrCols; y <- CorrCols if x <= y)
           yield sum(col(x).cast("decimal(38,0)") * col(y)).as(s"ss_${x}_$y")))
-    val sums = src.agg(aggCols.head, aggCols.tail: _*)
-      .localCheckpoint() // 1 row; feeds all six pair rows
+    val sums = ck.ckpt(src.agg(aggCols.head, aggCols.tail: _*)) // 1 row; feeds all six pair rows
     val pairStructs = for (Seq(x, y) <- CorrCols.combinations(2).toSeq) yield
       s"""named_struct(
          |  'col_x', '$x', 'col_y', '$y',
@@ -2325,7 +2304,7 @@ object Stats {
     * convention — no square root, hash-exact.
     *
     * Scale shape (fused round 19 — was four independent
-    * [[cumulateCellsHandle]] passes, i.e. 4 corpus scans + 4 hash-agg
+    * [[cumulateCells]] passes, i.e. 4 corpus scans + 4 hash-agg
     * shuffles + 4 range-partition sorts): ONE shared sorted scan now
     * emits all four cumulations. The corpus unpivots to (col, v)
     * tagged values in a single codegen'd pass, partial-aggregates to
@@ -2341,7 +2320,7 @@ object Stats {
     * |cov|·10⁶ inside DECIMAL(38) to n ≈ 10⁷'⁵; beyond that a
     * production deployment coarsens ranks to rank-buckets (the
     * documented corr_matrix convention), noted not faked. */
-  def spearmanCorr(spark: SparkSession, dir: String): DataFrame = {
+  def spearmanCorr(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     // NO checkpoint on the projected base: it has two consumers (the
     // unpivot cell scan + the join base), each one cheap codegen'd
     // parquet re-scan — the scale-correct trade (scans fan out across
@@ -2356,11 +2335,10 @@ object Stats {
       .groupBy(col("cv.c").as("c"), col("cv.v").as("v"))
       .agg(count(lit(1)).as("na"))
     // ONE range partition on (c, v) + per-(pid, c) local cumulation
-    val parted = cells
+    val parted = ck.ckpt(cells
       .repartitionByRange(ScanPartitions, col("c"), col("v"))
       .sortWithinPartitions("c", "v")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint() // pin partition ids before they are used twice
+      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
     // Per-(pid, c) totals → exclusive running offsets, DISTRIBUTED
     // (round 22, VERDICT item 7 — guide §4/§5: no driver work in the
     // query path): the old `.collect()` of the parts×4 totals was a
@@ -2393,7 +2371,6 @@ object Stats {
         rankCells.filter(col("c") === c).select(col("v").as(c), col("r").as(s"r_$c")),
         Seq(c))
     }
-    val cellHandles = List(parted)
     // Moment sums in EXACT hi/lo long pairs, not per-row DECIMAL(38):
     // the 64× profile put ~40% of the query in 400M BigDecimal adds
     // (every partial sum leaves Decimal's compact range within ~150
@@ -2415,7 +2392,7 @@ object Stats {
           Seq(sum(shiftright(p, 31)).as(s"hh_${x}_$y"),
             sum(p.bitwiseAND(loMask)).as(s"ll_${x}_$y"))
         }).flatten)
-    val sums = ranked.agg(aggCols.head, aggCols.tail: _*)
+    val sums = ck.ckpt(ranked.agg(aggCols.head, aggCols.tail: _*)
       // long-envelope guard: products and hi/lo sums are exact to
       // n ≈ 1.5e9; past it, fail the job loudly (non-ANSI long math
       // would otherwise wrap silently — while the DuckDB oracle's
@@ -2424,9 +2401,7 @@ object Stats {
         when(col("n") > 1500000000L,
           raise_error(lit("spearman_corr exceeds the exact-long moment envelope " +
             "(n > 1.5e9): coarsen to rank buckets")))
-          .otherwise(col("n")).cast("long"))
-      .localCheckpoint() // 1 row; feeds all six pair rows
-    cellHandles.foreach(Checkpoints.free) // rank cells dead once sums is pinned
+          .otherwise(col("n")).cast("long"))) // 1 row; feeds all six pair rows
     def ssDec(x: String, y: String): String =
       s"(CAST(hh_${x}_$y AS DECIMAL(38,0)) * 2147483648 + ll_${x}_$y)"
     val pairStructs = for (Seq(x, y) <- CorrCols.combinations(2).toSeq) yield
@@ -2507,13 +2482,13 @@ object Stats {
     * CALENDAR-bounded — O(days²) regardless of corpus bytes (10⁴ days
     * of history is 5·10⁷ distributed pair evaluations, flat per-row
     * work); the corpus-sized input never self-joins. */
-  def kendallTau(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
+  def kendallTau(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    // day-count cells; feeds both pair sides
+    val daily = ck.ckpt(Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .groupBy(expr("unix_millis(ts) div 86400000").as("day"))
       .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-      .localCheckpoint() // day-count cells; feeds both pair sides
+        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y")))
     val pairs = daily.as("a").join(daily.as("b"), col("a.day") < col("b.day"))
       .select(((col("a.x") - col("b.x")) * (col("a.y") - col("b.y"))).as("prod"),
         (col("a.x") === col("b.x")).as("tiex"), (col("a.y") === col("b.y")).as("tiey"))
@@ -2632,18 +2607,18 @@ object Stats {
     * cells before anything quadratic in N is formed; the Brier sum and
     * the ten calibration-bin means are cells-sized partial aggregates
     * in DECIMAL(38); output is one row. */
-  def brierDecomposition(spark: SparkSession, dir: String): DataFrame = {
+  def brierDecomposition(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val scored = TextAnalysis.lmBigramScore(spark, dir).select("doc_id", "avg_micros")
       .join(Curation.qualityClassifier(spark, dir).select("doc_id", "keep"), "doc_id")
     val ext = scored.agg(min("avg_micros").as("lo"), max("avg_micros").as("hi"))
-    val cells = scored.crossJoin(broadcast(ext))
+    // distinct-score cells; feeds brier + bins
+    val cells = ck.ckpt(scored.crossJoin(broadcast(ext))
       .select(expr("""CASE WHEN hi = lo THEN CAST(0 AS BIGINT)
                      |ELSE ((avg_micros - lo) * 1000000) div (hi - lo) END""".stripMargin)
         .as("v"), col("keep"))
       .groupBy("v")
       .agg(sum(when(col("keep"), 1L).otherwise(0L)).as("na"),
-        sum(when(!col("keep"), 1L).otherwise(0L)).as("nb"))
-      .localCheckpoint() // distinct-score cells; feeds brier + bins
+        sum(when(!col("keep"), 1L).otherwise(0L)).as("nb")))
     val brier = cells.agg(
       sum(col("na") + col("nb")).as("n"), sum(col("na")).as("n_pos"),
       sum(col("na").cast("decimal(38,0)") * (lit(1000000L) - col("v")) * (lit(1000000L) - col("v"))
@@ -2902,7 +2877,7 @@ object Stats {
     * shuffle, keyed on user) → one 1-row pooled-moment aggregate +
     * one 2-row per-variant aggregate, broadcast-joined. No window, no
     * driver state beyond the scalar moments. */
-  def cupedAdjust(spark: SparkSession, dir: String): DataFrame = {
+  def cupedAdjust(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), expr("unix_millis(ts)").as("ms"),
         expr("CAST(round(value * 1000) AS BIGINT)").as("v"))
@@ -2912,7 +2887,8 @@ object Stats {
       .groupBy("user_id")
       .agg(sum(expr("CASE WHEN ms < mid_ms THEN v ELSE 0 END")).as("x"),
         sum(expr("CASE WHEN ms >= mid_ms THEN v ELSE 0 END")).as("y"))
-    val pooled = users.agg(
+    // 1 row; feeds both variant rows
+    val pooled = ck.ckpt(users.agg(
       count(lit(1)).as("n"),
       sum(col("x").cast("decimal(38,0)")).as("sx"),
       sum(col("y").cast("decimal(38,0)")).as("sy"),
@@ -2922,8 +2898,7 @@ object Stats {
       .select(col("n"), col("sx"),
         expr("CAST(CAST(n AS DECIMAL(38,0)) * sxx - sx * sx AS DECIMAL(38,0))").as("vxx"),
         expr("CAST(CAST(n AS DECIMAL(38,0)) * sxy - sx * sy AS DECIMAL(38,0))").as("vxy"),
-        expr("CAST(CAST(n AS DECIMAL(38,0)) * syy - sy * sy AS DECIMAL(38,0))").as("vyy"))
-      .localCheckpoint() // 1 row; feeds both variant rows
+        expr("CAST(CAST(n AS DECIMAL(38,0)) * syy - sy * sy AS DECIMAL(38,0))").as("vyy")))
     val byVariant = users
       .groupBy(expr("user_id % 2").as("variant"))
       .agg(count(lit(1)).as("n_users"),
@@ -3021,7 +2996,7 @@ object Stats {
     * (calendar-bounded, the kendall_tau convention), the pattern
     * explode is 65·O(days) rows, and each Tₚ is one partial-aggregated
     * groupBy over that bounded table — no window, no driver state. */
-  def permutationTest(spark: SparkSession, dir: String): DataFrame = {
+  def permutationTest(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val daily = Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .groupBy(expr("unix_millis(ts) div 86400000").as("day"))
@@ -3031,21 +3006,21 @@ object Stats {
         sum(when(col("event_type") === "purchase",
           expr("CAST(round(value * 1000) AS BIGINT)")).otherwise(0L)).as("pv"))
       .select(col("day"), (col("cv") - col("pv")).as("d"))
-    val flipped = daily
+    // PermP+1 rows; feeds the observed row and the output
+    val flipped = ck.ckpt(daily
       .select(col("day"), col("d"),
         explode(sequence(lit(0), lit(PermP))).as("p"))
       .select(col("p").cast("long").as("p"),
         when(col("p") === 0, col("d")).otherwise(
           when(expr("((((day % 999983) * 31 + p) % 999983) * 2654435761) % 1000000 < 500000"),
             col("d")).otherwise(-col("d"))).as("sd"))
-      .groupBy("p").agg(sum("sd").as("t_perm_millis"))
-      .localCheckpoint() // PermP+1 rows; feeds the observed row and the output
+      .groupBy("p").agg(sum("sd").as("t_perm_millis")))
     val obs = flipped.filter(col("p") === 0)
       .select(col("t_perm_millis").as("t_obs_millis"))
-    val withObs = flipped.crossJoin(broadcast(obs))
+    // PermP+1 rows; feeds the p-value and the output
+    val withObs = ck.ckpt(flipped.crossJoin(broadcast(obs))
       .withColumn("is_extreme",
-        col("p") > 0 && abs(col("t_perm_millis")) >= abs(col("t_obs_millis")))
-      .localCheckpoint() // PermP+1 rows; feeds the p-value and the output
+        col("p") > 0 && abs(col("t_perm_millis")) >= abs(col("t_obs_millis"))))
     val pv = withObs.agg(
       expr(s"CAST(((sum(CASE WHEN is_extreme THEN 1 ELSE 0 END) + 1) * 1000000) div ${PermP + 1} AS BIGINT)")
         .as("p_value_micros"))
@@ -3110,25 +3085,24 @@ object Stats {
     * Scale shape: the distinct on the unit key is the only data-sized
     * shuffle (partial-agg pushed); everything after lives on ≤3 split
     * cells + a broadcast 1-row total. */
-  def srmCheck(spark: SparkSession, dir: String): DataFrame = {
+  def srmCheck(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val units = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("k")).distinct()
       .select(
         when(col("k") % 10 < 8, "train")
           .when(col("k") % 10 === 8, "val")
           .otherwise("test").as("split"))
-    val cells = units.groupBy("split").agg(count(lit(1)).as("n_units"))
-      .withColumn("w", when(col("split") === "train", 8L).otherwise(1L))
-      .localCheckpoint() // ≤3 rows; feeds the total and the output
+    // ≤3 rows; feeds the total and the output
+    val cells = ck.ckpt(units.groupBy("split").agg(count(lit(1)).as("n_units"))
+      .withColumn("w", when(col("split") === "train", 8L).otherwise(1L)))
     val total = cells.agg(sum("n_units").as("n_total"))
-    val terms = cells.crossJoin(broadcast(total))
+    val terms = ck.ckpt(cells.crossJoin(broadcast(total))
       .select(col("split"), col("n_units"),
         (col("n_total") * col("w")).as("exp_x10"),
         expr("""CAST((CAST(10 * n_units - n_total * w AS DECIMAL(38,0))
                |      * (10 * n_units - n_total * w) * 1000000000000)
                |     div (CAST(10 AS DECIMAL(38,0)) * n_total * w) AS BIGINT)""".stripMargin)
-          .as("term_picos"))
-      .localCheckpoint() // ≤3 rows; feeds the χ² sum and the output
+          .as("term_picos"))) // ≤3 rows; feeds the χ² sum and the output
     val chi2 = terms.agg(sum("term_picos").as("chi2_picos"))
     terms.crossJoin(broadcast(chi2))
       .select(col("split"), col("n_units"), col("exp_x10"), col("term_picos"),
@@ -3176,18 +3150,18 @@ object Stats {
     * Scale shape: one events scan → 4-row aggregate → 1-row estimate
     * cross-joined back; no window, no per-user state (contrast
     * [[cupedAdjust]], which needs the per-user covariate pass). */
-  def diffInDiff(spark: SparkSession, dir: String): DataFrame = {
+  def diffInDiff(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), expr("unix_millis(ts)").as("ms"),
         expr("CAST(round(value * 1000) AS BIGINT)").as("v"))
     val bounds = ev.agg(min("ms").as("lo_ms"), max("ms").as("hi_ms"))
-    val cells = ev.crossJoin(broadcast(bounds))
+    // 4 rows; feeds both the estimate and the output
+    val cells = ck.ckpt(ev.crossJoin(broadcast(bounds))
       .select(expr("user_id % 2").as("treated"),
         expr("CAST(CASE WHEN ms >= lo_ms + (hi_ms - lo_ms) div 2 THEN 1 ELSE 0 END AS BIGINT)").as("post"),
         col("v"))
       .groupBy("treated", "post")
-      .agg(count(lit(1)).as("n"), sum("v").as("sum_millis"))
-      .localCheckpoint() // 4 rows; feeds both the estimate and the output
+      .agg(count(lit(1)).as("n"), sum("v").as("sum_millis")))
     val wide = cells.agg(
       sum(expr("CASE WHEN treated = 1 AND post = 1 THEN n ELSE 0 END")).as("n11"),
       sum(expr("CASE WHEN treated = 1 AND post = 0 THEN n ELSE 0 END")).as("n10"),

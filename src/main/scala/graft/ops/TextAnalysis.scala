@@ -147,14 +147,13 @@ object TextAnalysis {
     * segmentation, whose tie-breaks would be engine-specific). The
     * oracle replays the vocabulary in SQL and replaces the DP with an
     * exhaustive recursive-CTE path search — same max by definition. */
-  def unigramScore(spark: SparkSession, dir: String): DataFrame = {
+  def unigramScore(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val toksCol = filter(TextFunctions.tokens(col("text")), t => t =!= "")
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(toksCol).as("w"))
-    val words = toks
+    val words = ck.ckpt(toks
       .groupBy("w").agg(count(lit(1)).as("f"))
-      .filter(length(col("w")) <= UlmMaxWordLen)
-      .localCheckpoint() // vocabulary-sized; feeds piece counting + DP
+      .filter(length(col("w")) <= UlmMaxWordLen)) // vocabulary-sized; feeds piece counting + DP
     val cand = words
       .select(col("f"), explode(flatten(
         transform(sequence(lit(1), lit(UlmPieceMax)), k =>
@@ -224,18 +223,18 @@ object TextAnalysis {
     * length a single digit, so the oracle enumerates all paths
     * recursive-CTE-style (the unigram machinery) carrying a digit-
     * string key and keeps `max(key)` per word. */
-  def wordpieceEncode(spark: SparkSession, dir: String): DataFrame = {
+  def wordpieceEncode(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val toksCol = filter(TextFunctions.tokens(col("text")), t => t =!= "")
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(toksCol).as("w"))
-    // the trained tokenizer (word → piece count) is a memoized artifact
-    // — see [[memoTokenizer]]; piece-vocabulary training and the greedy
-    // segmentation replay ride the cold run only
-    val wp = memoTokenizer(spark, dir, "wordpiece_np") {
-      val words = toks
+    // the trained tokenizer (word → piece count) is an [[Artifacts]]
+    // memo; piece-vocabulary training and the greedy segmentation
+    // replay ride the cold run only
+    val wp = Artifacts.memo(spark, ("wordpiece_np", dir)) { ck =>
+      // vocabulary-sized; feeds piece counting + encode
+      val words = ck.ckpt(toks
         .groupBy("w").agg(count(lit(1)).as("f"))
-        .filter(length(col("w")) <= UlmMaxWordLen)
-        .localCheckpoint() // vocabulary-sized; feeds piece counting + encode
+        .filter(length(col("w")) <= UlmMaxWordLen))
       val startCand = words.select(col("f"), explode(
           transform(sequence(lit(1), least(lit(UlmPieceMax), length(col("w")))),
             k => col("w").substr(lit(1), k))).as("s"))
@@ -268,9 +267,7 @@ object TextAnalysis {
         }
         n
       }
-      val out = words.select(col("w"), greedy(col("w")).as("np")).localCheckpoint()
-      Checkpoints.free(words) // training intermediate — the artifact severed it
-      out
+      ck.ckpt(words.select(col("w"), greedy(col("w")).as("np")))
     }
     toks.join(broadcast(wp), "w")
       .groupBy("doc_id")
@@ -450,7 +447,7 @@ object TextAnalysis {
     * on term/doc with partial-aggregated rollups — the distributed
     * power-iteration shape (pagerank's algebra on a bipartite graph);
     * factor vectors are vocab-/corpus-sized, never cell-sized. */
-  def lsaTopic(spark: SparkSession, dir: String): DataFrame = {
+  def lsaTopic(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     // SPARK_GRAFT_LSA_DEBUG=1: per-phase wall times on stderr (cells
     // build vs each sweep) — the phase-profile diagnostic that splits
     // "the sweeps got slower" from "the cells checkpoint is evicting"
@@ -466,21 +463,19 @@ object TextAnalysis {
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
-    val cells = tf.join(dfT, "term").crossJoin(broadcast(n))
+    val cells = ck.ckpt(tf.join(dfT, "term").crossJoin(broadcast(n))
       .select(col("doc_id"), col("term"),
         (col("tf") * expr("CAST(round(ln(CAST(n AS DOUBLE) / df) * 1000000) AS BIGINT)"))
-          .as("a"))
+          .as("a")), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       // SERIALIZED: the cell table is pinned for all 12 half-steps and
       // is the whole memory story here (2.6 GB deserialized at 256×
       // grown, where the measured 64→256 excess was exactly the first-
       // sweep eviction churn of these blocks spilling to disk) —
       // compact bytes keep more of it resident and bound the transient
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // feeds every half-step
+       // feeds every half-step
     mark("cells checkpoint")
-    var v = cells.select(col("term")).distinct()
-      .select(col("term"), lit(1000000L).as("v"))
-      .localCheckpoint()
+    var v = ck.ckpt(cells.select(col("term")).distinct()
+      .select(col("term"), lit(1000000L).as("v")))
     // Round-22: checkpoint the PRE-normalization aggregates u0/v0, not
     // the normalized vectors. The r21 fully-lazy sweep relied on
     // ReuseExchange to dedupe u0's two plan arms (max arm + stream arm)
@@ -495,32 +490,31 @@ object TextAnalysis {
     // of the checkpoint.
     var v0Ckpt: DataFrame = null
     (1 to LsaIters).foreach { it =>
-      val u0 = cells.join(v, "term")
+      // doc-sized; feeds the max arm + the v half-step
+      val u0 = ck.ckpt(cells.join(v, "term")
         .groupBy("doc_id")
-        .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * v) div 1000000 AS DECIMAL(38,0))").as("u"))
-        .localCheckpoint() // doc-sized; feeds the max arm + the v half-step
+        .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * v) div 1000000 AS DECIMAL(38,0))").as("u")))
       val uMax = u0.agg(max("u").as("m"))
       val u = u0.crossJoin(broadcast(uMax))
         .select(col("doc_id"),
           expr("CAST((u * 1000000) div m AS BIGINT)").as("u"))
-      val v0 = cells.join(u, "doc_id")
+      // vocab-sized; feeds the max arm + next sweep
+      val v0 = ck.ckpt(cells.join(u, "doc_id")
         .groupBy("term")
-        .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * u) div 1000000 AS DECIMAL(38,0))").as("vv"))
-        .localCheckpoint() // vocab-sized; feeds the max arm + next sweep
+        .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * u) div 1000000 AS DECIMAL(38,0))").as("vv")))
       val vMax = v0.agg(max("vv").as("m"))
       val prev = v
       val prevV0 = v0Ckpt
       v = v0.crossJoin(broadcast(vMax))
         .select(col("term"), expr("CAST((vv * 1000000) div m AS BIGINT)").as("v"))
       v0Ckpt = v0
-      if (it == 1) Checkpoints.free(prev) // the seed-v checkpoint
-      if (prevV0 != null) Checkpoints.free(prevV0) // superseded sweep
-      Checkpoints.free(u0) // dead once v0 materialized
+      if (it == 1) ck.free(prev) // the seed-v checkpoint
+      if (prevV0 != null) ck.free(prevV0) // superseded sweep
+      ck.free(u0) // dead once v0 materialized
       mark(s"sweep $it")
     }
-    // the output is lazy over the final v0 checkpoint only; the cell
-    // table (the query's whole memory story) is dead from here on
-    Checkpoints.free(cells)
+    // the output is lazy over the final v0 checkpoint only; the scope
+    // frees the cell table (the query's whole memory story)
     v.orderBy(desc("v"), col("term"))
       .limit(20)
       .withColumn("rank", row_number().over(
@@ -895,17 +889,17 @@ object TextAnalysis {
     * len² a doc-keyed self-join would plan; everything downstream is
     * (vocab²-bounded) pair-cell aggregation with map-side partials
     * and broadcast margins re-attach. */
-  def coocPmi(spark: SparkSession, dir: String): DataFrame = {
+  def coocPmi(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val toksed = Tables.documents(spark, dir)
       .select(col("doc_id"),
         posexplode(filter(toks(col("text")), t => t =!= "")).as(Seq("pos", "w")))
     val left = toksed.select(col("doc_id"),
       explode(array(col("pos") + 1, col("pos") + 2)).as("pos"), col("w").as("w1"))
-    val pairs = left
+    // vocab²-bounded; feeds margins, total and output
+    val pairs = ck.ckpt(left
       .join(toksed.select(col("doc_id"), col("pos"), col("w").as("w2")),
         Seq("doc_id", "pos"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .localCheckpoint() // vocab²-bounded; feeds margins, total and output
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val tot = pairs.agg(sum("c12").as("tp"))
     val lm = pairs.groupBy("w1").agg(sum("c12").as("cl"))
     val rm = pairs.groupBy("w2").agg(sum("c12").as("cr"))
@@ -958,18 +952,17 @@ object TextAnalysis {
     * Scale shape: [[langId]] is a per-row codegen'd argmax; everything
     * after lives on the ≤|langs|² confusion cells (two ≤|langs|-row
     * margins + the diagonal, full-outer-joined). */
-  def classifierPrf(spark: SparkSession, dir: String): DataFrame = {
-    val cells = langId(spark, dir)
+  def classifierPrf(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(langId(spark, dir)
       .groupBy(col("labeled_lang"), col("predicted_lang"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // ≤|langs|² rows; feeds both margins + diagonal
+      .agg(count(lit(1)).as("n"))) // ≤|langs|² rows; feeds both margins + diagonal
     val labelM = cells.groupBy(col("labeled_lang").as("cls"))
       .agg(sum("n").as("label_n"))
     val predM = cells.groupBy(col("predicted_lang").as("cls"))
       .agg(sum("n").as("pred_n"))
     val diag = cells.filter(col("labeled_lang") === col("predicted_lang"))
       .select(col("labeled_lang").as("cls"), col("n").as("tp"))
-    val perClass = labelM.join(predM, Seq("cls"), "full_outer")
+    val perClass = ck.ckpt(labelM.join(predM, Seq("cls"), "full_outer")
       .join(diag, Seq("cls"), "left")
       .select(col("cls"),
         coalesce(col("label_n"), lit(0L)).as("label_n"),
@@ -984,8 +977,7 @@ object TextAnalysis {
           .as("recall_micros"),
         when(col("pred_n") + col("label_n") > 0,
           expr("CAST((CAST(2 * tp AS DECIMAL(38,0)) * 1000000) div (pred_n + label_n) AS BIGINT)"))
-          .as("f1_micros"))
-      .localCheckpoint() // ≤|langs| rows; feeds the macro row and the output
+          .as("f1_micros"))) // ≤|langs| rows; feeds the macro row and the output
     val macroRow = perClass.filter(col("f1_micros").isNotNull)
       .agg(count(lit(1)).as("nc"), sum("f1_micros").as("sf"))
       .select(lit("MACRO").as("cls"), lit(0L).as("label_n"), lit(0L).as("pred_n"),
@@ -1055,11 +1047,10 @@ object TextAnalysis {
     * the matrix collapse is a ≤|langs|² partial-aggregated groupBy and
     * the class totals re-attach via a broadcast-able equi-join on the
     * ≤|langs|-row margin. */
-  def langConfusion(spark: SparkSession, dir: String): DataFrame = {
-    val cells = langId(spark, dir)
+  def langConfusion(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(langId(spark, dir)
       .groupBy(col("labeled_lang"), col("predicted_lang"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // ≤|langs|² cells; feeds the margin and the output
+      .agg(count(lit(1)).as("n"))) // ≤|langs|² cells; feeds the margin and the output
     val margin = cells.groupBy("labeled_lang").agg(sum("n").as("class_n"))
     cells.join(broadcast(margin), "labeled_lang")
       .select(col("labeled_lang"), col("predicted_lang"), col("n"), col("class_n"),
@@ -1099,11 +1090,10 @@ object TextAnalysis {
     * Scale shape: one per-row codegen'd argmax pass collapses to
     * ≤|langs|² (labeled, predicted, n) cells with map-side partials;
     * everything after runs on that constant-size frame. */
-  def cohensKappa(spark: SparkSession, dir: String): DataFrame = {
-    val cells = langId(spark, dir)
+  def cohensKappa(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    val cells = ck.ckpt(langId(spark, dir)
       .groupBy(col("labeled_lang"), col("predicted_lang"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // ≤|langs|² cells; feeds margins, totals, agree
+      .agg(count(lit(1)).as("n"))) // ≤|langs|² cells; feeds margins, totals, agree
     val rowm = cells.groupBy(col("labeled_lang").as("cls")).agg(sum("n").as("ra"))
     val colm = cells.groupBy(col("predicted_lang").as("cls")).agg(sum("n").as("cp"))
     val chance = rowm.join(colm, Seq("cls"))
@@ -1210,14 +1200,14 @@ object TextAnalysis {
       .select(explode(TextFunctions.wordBigramsCol(col("text"))).as("b"))
       .groupBy("b").agg(count(lit(1)).as("cb"))
 
-  def bigramLift(spark: SparkSession, dir: String): DataFrame = {
+  def bigramLift(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs = Tables.documents(spark, dir).select("text")
     // vocabulary-sized; feeds the total + both join sides. Checkpoint,
-    // not cache: materialized once, owned by the ContextCleaner, never
-    // pinned in the CacheManager across the rest of a bench run
-    val uni = unigramCounts(docs).localCheckpoint()
+    // not cache: materialized once, freed with this scope, never pinned
+    // in the CacheManager across the rest of a bench run
+    val uni = ck.ckpt(unigramCounts(docs))
     // distinct-bigram-sized; feeds the total + the lift rows
-    val big = bigramCounts(docs).localCheckpoint()
+    val big = ck.ckpt(bigramCounts(docs))
     val nuT = uni.agg(sum("c").as("nu"))
     val nbT = big.agg(sum("cb").as("nb")) // total BEFORE the support filter
     big.filter(col("cb") >= 5)
@@ -1286,59 +1276,17 @@ object TextAnalysis {
     * re-running the three corpus passes (unigram, bigram, per-doc
     * bigram) from scratch. At production scale a scored corpus IS a
     * persisted artifact consumers read, not a recomputation — the
-    * quantizer-artifact argument (`Similarity.artifactCache`) applied
-    * to a doc-count-sized table, held as a localCheckpoint in the
-    * block manager (executor storage that distributes on a cluster;
-    * MEMORY_AND_DISK, spill-safe). The bench evicts it before each
-    * pass, so measured numbers include one full scoring. */
-  def lmBigramScore(spark: SparkSession, dir: String): DataFrame = {
-    lmScoreCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    lmScoreCache.getOrElseUpdate((spark, dir),
-      computeLmBigramScore(spark, dir).localCheckpoint())
-  }
+    * quantizer-artifact argument applied to a doc-count-sized table,
+    * held as a checkpoint in the block manager (executor storage that
+    * distributes on a cluster; MEMORY_AND_DISK, spill-safe). */
+  def lmBigramScore(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.memo(spark, ("lm_score", dir))(ck => ck.ckpt(computeLmBigramScore(spark, dir)))
 
-  private val lmScoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop the memoized LM score tables (bench-pass hygiene). Frees the
-    * backing checkpoint blocks too — dropping only the map reference
-    * stranded a doc-sized block set per eviction (round-21 ADVICE). */
-  def clearLmScoreCache(): Unit = {
-    lmScoreCache.values.foreach(Checkpoints.freeIfLive)
-    lmScoreCache.clear()
-  }
-
-  /** Memoized TOKENIZER artifacts per (session, dir, tag): the BPE
-    * per-word token counts ([[bpeEncode]]) and the wordpiece per-word
-    * piece counts ([[wordpieceEncode]]). In production a tokenizer is
-    * trained ONCE and serves every encode after — the trained table is
-    * a persisted artifact, exactly the quantizer-codebook argument
-    * (`Similarity.artifactCache`) for the text family. Both artifacts
-    * are vocabulary-sized localCheckpoints (block-manager storage that
-    * distributes on a cluster), so serving is scan + one vocab join.
-    * The bench evicts this cache before each measured pass (training
-    * stays in the headline number) and quantifies the split in
-    * `bench_detail.json`'s train_serve_split. */
-  private val tokenizerCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Drop the memoized tokenizer artifacts (bench-pass hygiene). Frees
-    * the backing checkpoint blocks too (round-21 ADVICE). */
-  def clearTokenizerCache(): Unit = {
-    tokenizerCache.values.foreach(Checkpoints.freeIfLive)
-    tokenizerCache.clear()
-  }
-
-  private def memoTokenizer(spark: SparkSession, dir: String, tag: String)(
-      compute: => DataFrame): DataFrame = {
-    tokenizerCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    tokenizerCache.getOrElseUpdate((spark, dir, tag), compute)
-  }
-
-  private def computeLmBigramScore(spark: SparkSession, dir: String): DataFrame = {
+  private def computeLmBigramScore(
+      spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs = Tables.documents(spark, dir)
     // vocabulary-sized; feeds V and the w1 join
-    val uni = unigramCounts(docs).localCheckpoint()
+    val uni = ck.ckpt(unigramCounts(docs))
     val vT = uni.agg(count(lit(1)).as("v"))
     val big = bigramCounts(docs)
     val docb = docs
@@ -1574,13 +1522,13 @@ object TextAnalysis {
     * occurrences collapse to (doc, trigram, k) BEFORE the model joins,
     * so the enrichment equi-joins carry distinct-per-doc grams; N rides
     * along as a broadcast 1-row aggregate. */
-  def stupidBackoff(spark: SparkSession, dir: String): DataFrame = {
+  def stupidBackoff(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs  = Tables.documents(spark, dir)
     val train = docs.filter(col("doc_id") % 2 === 0)
     val held  = docs.filter(col("doc_id") % 2 === 1)
-    val uni = unigramCounts(train).localCheckpoint() // feeds N + the w3 join
+    val uni = ck.ckpt(unigramCounts(train)) // feeds N + the w3 join
     val nT  = uni.agg(sum("c").as("n"))
-    val big = bigramCounts(train).localCheckpoint() // feeds prefix + suffix joins
+    val big = ck.ckpt(bigramCounts(train)) // feeds prefix + suffix joins
     val tri = train
       .select(explode(TextFunctions.wordTrigramsCol(col("text"))).as("g"))
       .groupBy("g").agg(count(lit(1)).as("cg"))
@@ -1701,11 +1649,11 @@ object TextAnalysis {
     * partial aggregation; held-doc occurrences collapse to (doc,
     * bigram, k) BEFORE the model equi-joins; B rides along as a
     * broadcast 1-row aggregate. */
-  def kneserNey(spark: SparkSession, dir: String): DataFrame = {
+  def kneserNey(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs  = Tables.documents(spark, dir)
     val train = docs.filter(col("doc_id") % 2 === 0)
     val held  = docs.filter(col("doc_id") % 2 === 1)
-    val big = bigramCounts(train).localCheckpoint() // feeds split + B + the g join
+    val big = ck.ckpt(bigramCounts(train)) // feeds split + B + the g join
     val bs = big.select(col("b"), col("cb"),
       substring_index(col("b"), " ", 1).as("w1"),
       substring_index(col("b"), " ", -1).as("w2"))
@@ -1840,18 +1788,19 @@ object TextAnalysis {
 
   /** Frequency-weighted adjacent-symbol-pair counts of a (s, f[, ...])
     * symbol table — vocabulary-sized input, distinct-pair-sized output. */
-  private def pairCounts(sym: DataFrame): DataFrame =
-    sym.select(explode(TextFunctions.symbolPairsCol(col("s"))).as("pair"), col("f"))
-      .groupBy("pair").agg(sum("f").as("n"))
-      .localCheckpoint() // distinct-pair-sized; feeds both the top-10 and the merge
+  private def pairCounts(sym: DataFrame): DataFrame = Checkpoints.scope { ck =>
+    // distinct-pair-sized; feeds both the top-10 and the merge
+    ck.ckpt(sym.select(explode(TextFunctions.symbolPairsCol(col("s"))).as("pair"), col("f"))
+      .groupBy("pair").agg(sum("f").as("n")))
+  }
 
-  def bpePairs(spark: SparkSession, dir: String): DataFrame = {
+  def bpePairs(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val words = Tables.documents(spark, dir)
       .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-    val sym0 = words
-      .select(regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("f"))
-      .localCheckpoint() // vocabulary-sized; root of the merge chain
+    // vocabulary-sized; root of the merge chain
+    val sym0 = ck.ckpt(words
+      .select(regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("f")))
 
     val p0   = pairCounts(sym0)
     val sym1 = applyMerge(sym0, p0)
@@ -1916,29 +1865,25 @@ object TextAnalysis {
     * the corpus. The (doc, word) join equi-joins on the word; post-merge
     * token count = number of '<' symbol openers, an exact length
     * difference identical in both engines. */
-  def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val docWords = Tables.documents(spark, dir)
+  def bpeEncode(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+    // feeds the vocabulary derivation AND the final join
+    val docWords = ck.ckpt(Tables.documents(spark, dir)
       .select(col("doc_id"),
         explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds the vocabulary derivation AND the final join
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("c")))
 
-    // the trained tokenizer (word → token count) is a memoized artifact
-    // — see [[memoTokenizer]]; training rides the cold run, every warm
-    // encode is corpus scan + vocab join only
-    val vocab = memoTokenizer(spark, dir, "bpe_vocab") {
+    // the trained tokenizer (word → token count) is an [[Artifacts]]
+    // memo; training rides the cold run, every warm encode is corpus
+    // scan + vocab join only
+    val vocab = Artifacts.memo(spark, ("bpe_vocab", dir)) { ck =>
       val words = docWords.groupBy("w").agg(sum("c").as("f"))
-      val sym0 = words
-        .select(col("w"), regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("f"))
-        .localCheckpoint()
+      val sym0 = ck.ckpt(words
+        .select(col("w"), regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("f")))
       val sym1 = applyMerge(sym0, pairCounts(sym0))
       val sym2 = applyMerge(sym1, pairCounts(sym1))
       val sym3 = applyMerge(sym2, pairCounts(sym2))
-      val out = sym3.select(col("w"),
-        (length(col("s")) - length(replace(col("s"), lit("<"), lit("")))).cast("long").as("toks"))
-        .localCheckpoint()
-      Checkpoints.free(sym0) // training intermediates — the artifact severed them
-      out
+      ck.ckpt(sym3.select(col("w"),
+        (length(col("s")) - length(replace(col("s"), lit("<"), lit("")))).cast("long").as("toks")))
     }
 
     // no broadcast hint: AQE broadcasts the vocabulary when it is small
@@ -2016,7 +1961,7 @@ object TextAnalysis {
     * round's job. Early-exits when no pair remains. Returns the
     * merge list (round, pair, n) and the final symbol table. */
   private[graft] def bpeTrainLoop(
-      sym0: DataFrame, rounds: Int): (Seq[(Int, String, Long)], DataFrame) = {
+      sym0: DataFrame, rounds: Int): (Seq[(Int, String, Long)], DataFrame) = Checkpoints.scope { ck =>
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var sym = sym0
     // the round superseded when `sym` was last rewritten; freeable only
@@ -2034,11 +1979,9 @@ object TextAnalysis {
         .groupBy("pair").agg(sum("f").as("n"))
         .orderBy(desc("n"), col("pair")).limit(1).collect()
       // that job materialized sym's checkpoint — the superseded round's
-      // vocabulary-sized blocks are dead now (Checkpoints.free; a plain
-      // unpersist is a no-op on checkpointed tables). Ownership rule:
-      // only rounds this loop created — never the caller's sym0, which
-      // callers may reuse (PlanSpec drives two loops off one table)
-      if ((prevSym ne null) && (prevSym ne sym0)) Checkpoints.free(prevSym)
+      // vocabulary-sized blocks are dead now (the caller's sym0 is not
+      // this scope's, so freeing it is a no-op)
+      if (prevSym ne null) ck.free(prevSym)
       prevSym = null
       if (top.isEmpty) exhausted = true
       else {
@@ -2050,13 +1993,12 @@ object TextAnalysis {
         // materialization rides the NEXT round's pair-count job instead
         // of paying a dedicated job per round (20 jobs, not 40)
         prevSym = sym
-        sym = sym.withColumn("s", replace(col("s"), lit(pat), lit(rep)))
-          .localCheckpoint(eager = false)
+        sym = ck.lazyCkpt(sym.withColumn("s", replace(col("s"), lit(pat), lit(rep))))
         r += 1
       }
     }
-    // NOT freeing the final prevSym: the returned sym's lazy checkpoint
-    // may still need it to materialize; both are ContextCleaner-owned
+    // the final prevSym stays: the returned sym's lazy checkpoint still
+    // reads it, so the scope keeps both
     (out.toSeq, sym)
   }
 
@@ -2067,14 +2009,14 @@ object TextAnalysis {
     * extraction + counting); every round after that is vocabulary-local,
     * so at 100 TB the merge budget prices in vocabulary passes, not
     * corpus passes. */
-  def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
+  def bpeTrain(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     import spark.implicits._
     val words = Tables.documents(spark, dir)
       .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-    val sym0 = words
-      .select(regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("f"))
-      .localCheckpoint() // vocabulary-sized root of the merge chain
+    // vocabulary-sized root of the merge chain
+    val sym0 = ck.ckpt(words
+      .select(regexp_replace(col("w"), "(.)", "<$1>").as("s"), col("f")))
     val (merges, _) = bpeTrainLoop(sym0, BpeTrainMerges)
     merges.toDF("round", "pair", "n_pair").orderBy("round")
   }
@@ -2129,10 +2071,10 @@ object TextAnalysis {
     * broadcast (the tfidf convention); shares divide in decimal(38)
     * integral micros (the bigram_lift convention — a 100 TB corpus
     * overflows cum·10⁶ in long). */
-  def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
+  def vocabCoverage(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val tokens = Tables.documents(spark, dir)
       .select(explode(filter(toks(col("text")), t => t =!= "")).as("token"))
-    val counts = tokens.groupBy("token").agg(count(lit(1)).as("n")).localCheckpoint()
+    val counts = ck.ckpt(tokens.groupBy("token").agg(count(lit(1)).as("n")))
     val tot = counts.agg(sum("n").as("tot"))
     val top = counts.orderBy(desc("n"), col("token")).limit(30)
     val w = org.apache.spark.sql.expressions.Window
@@ -2207,12 +2149,11 @@ object TextAnalysis {
     * final cut is a TakeOrdered top-100, never a vocabulary sort.
     * Postings emit as a comma-joined string (array hashing is
     * engine-ambiguous; strings are not). */
-  def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
+  def invertedIndex(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     import spark.implicits._
-    val td = Tables.documents(spark, dir)
+    val td = ck.ckpt(Tables.documents(spark, dir)
       .select(explode(filter(toks(col("text")), t => t =!= "")).as("term"), col("doc_id"))
-      .distinct()
-      .localCheckpoint() // feeds both the df count and the posting-list aggregate
+      .distinct()) // feeds both the df count and the posting-list aggregate
     val dfCounts = td.groupBy("term").agg(count(lit(1)).as("df"))
     val posts = td.as[TermDoc]
       .groupByKey(_.term)
@@ -2257,14 +2198,14 @@ object TextAnalysis {
     * docs; scoring is test-cells ⋈ model on token (both reduced
     * forms) then a ≤5-row-per-doc argmax window — no all-pairs, no
     * global window, no driver state. */
-  def naiveBayes(spark: SparkSession, dir: String): DataFrame = {
+  def naiveBayes(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val docs = Tables.documents(spark, dir)
     val tokens = docs
       .select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
-    val trainCells = tokens.filter(expr("doc_id % 2 = 0"))
-      .groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // reused by the model and both per-class totals
+    // reused by the model and both per-class totals
+    val trainCells = ck.ckpt(tokens.filter(expr("doc_id % 2 = 0"))
+      .groupBy("lang", "tok").agg(count(lit(1)).as("cnt")))
     val classTotals = trainCells.groupBy("lang").agg(sum("cnt").as("tok_c"))
     val vocabAndDocs = trainCells.agg(countDistinct("tok").as("v"))
       .crossJoin(docs.filter(expr("doc_id % 2 = 0"))

@@ -17,14 +17,12 @@ package object ops {
   object QueryDef {
     def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
       QueryDef(name, fn, Some(oracle))
-    def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-      QueryDef(name, fn, None)
   }
 
   /** Run `f` against a fresh local temp dir, deleting the tree
     * afterwards — shared by every operator that stages an intermediate
     * table on disk (Lake round-trips, sketch persistence). Results that
-    * must outlive the dir must `localCheckpoint()` before returning. */
+    * must outlive the dir must be checkpointed (`s.ckpt`) first. */
   private[graft] def withTempDir[A](prefix: String)(f: String => A): A = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
     try f(tmp)

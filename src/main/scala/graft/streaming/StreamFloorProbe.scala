@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (PlanDump/BenchSubset convention — not a driver surface):
+/** Dev probe (PlanDump convention — not a driver surface):
   * measures the Structured Streaming ENGINE STAGING FLOOR inside one
   * warm shared SparkSession, isolating the per-StreamingQuery fixed
   * cost (query start: checkpoint dir + offset log + commit log; one

@@ -2,6 +2,7 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -154,14 +155,14 @@ object Streams {
     * Scale: state is open-windows only, the staging is fixture
     * plumbing, and the drop rule is the same O(1) per-row filter the
     * engine applies at any volume. */
-  def runBoundedLateDrops(spark: SparkSession, dir: String): DataFrame =
+  def runBoundedLateDrops(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     graft.ops.withTempDir("graft-late") { tmp =>
-      val events = graft.tables.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .localCheckpoint() // three filtered writes + the carrier agg
+      // three filtered writes + the carrier agg
+      val events = ck.ckpt(graft.tables.Tables.events(spark, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value"))
       val onTime  = events.filter(col("event_id") % 5 =!= 0)
-      val carrier = onTime.orderBy(desc("ts"), desc("event_id")).limit(1)
-        .localCheckpoint() // 1 row; anti-joined against the A file
+      // 1 row; anti-joined against the A file
+      val carrier = ck.ckpt(onTime.orderBy(desc("ts"), desc("event_id")).limit(1))
       def stage(name: String, df: DataFrame, mtime: Long): Unit = {
         val d = s"$tmp/stage_$name"
         df.coalesce(1).write.parquet(d)
@@ -178,7 +179,7 @@ object Streams {
         col("event_id") === col("cid"), "left_anti"), 1000000L)
       stage("b_carrier", carrier, 2000000L)
       stage("c_late", events.filter(col("event_id") % 5 === 0), 3000000L)
-      graft.ops.Checkpoints.free(events)
+      ck.free(events)
       val src = spark.readStream
         .schema(spark.read.parquet(s"$tmp/src").schema)
         .option("maxFilesPerTrigger", 1)
@@ -187,6 +188,7 @@ object Streams {
         tumblingAgg(src.withWatermark("ts", "10 minutes")),
         OutputMode.Update(), Seq("ws_ms", "event_type", "n"))
     }
+  }
 
   /** Stream-static enrichment through the engine, driver-checked: each
     * micro-batch of the bounded events stream broadcast-joins the
@@ -205,8 +207,8 @@ object Streams {
 
   /** start → AvailableNow → await → snapshot the memory sink → drop the
     * temp view (the sink table would otherwise leak one driver-held
-    * table per run). The snapshot is a localCheckpoint: block-manager
-    * blocks the ContextCleaner reclaims, valid after the view is gone.
+    * table per run). The snapshot is a checkpoint, valid after the view
+    * is gone.
     *
     * `needsNoDataBatch`: stateful bounded runs get one extra NO-DATA
     * micro-batch after the data batch, whose only work is advancing the
@@ -228,7 +230,7 @@ object Streams {
   private def runBoundedRun(
       spark: SparkSession, prefix: String, out: DataFrame,
       mode: OutputMode, sortCols: Seq[String],
-      needsNoDataBatch: Boolean = false): BoundedRun = {
+      needsNoDataBatch: Boolean = false): BoundedRun = Checkpoints.scope { ck =>
     val name = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val w0 = out.writeStream.format("memory").queryName(name)
       .outputMode(mode)
@@ -277,10 +279,9 @@ object Streams {
       // the same total order in a single job — bounded-run results are
       // ≤ ~100k rows by construction, far under a partition's worth.
       val res = BoundedRun(
-        spark.table(name)
+        ck.ckpt(spark.table(name)
           .coalesce(1)
-          .sortWithinPartitions(sortCols.map(col): _*)
-          .localCheckpoint(),
+          .sortWithinPartitions(sortCols.map(col): _*)),
         metrics)
       if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
         System.err.println(f"[stream-debug] $prefix sink materialize=${(System.nanoTime() - t1) / 1e9}%.2f s")
@@ -754,7 +755,7 @@ object Streams {
     * the second run really RESUMED (its batch ids continue after
     * stage 1's) rather than started over. */
   def restartTumblingDetailed(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[Long], Seq[Long]) = {
+      : (DataFrame, Seq[Long], Seq[Long]) = Checkpoints.scope { ck =>
     val tmp = java.nio.file.Files.createTempDirectory("graft-restart").toString
     val (srcDir, outDir, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
     val events = graft.tables.Tables.events(spark, dir)
@@ -785,9 +786,8 @@ object Streams {
     try {
       val b1 = runStage(unix_millis(col("ts")) < cutoffMs)
       val b2 = runStage(unix_millis(col("ts")) >= cutoffMs)
-      val res = spark.read.parquet(outDir)
-        .orderBy("ws_ms", "event_type")
-        .localCheckpoint() // pin the 4-column result before the rm below
+      val res = ck.ckpt(spark.read.parquet(outDir)
+        .orderBy("ws_ms", "event_type")) // pin the 4-column result before the rm below
       (res, b1, b2)
     } finally {
       savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
@@ -907,7 +907,8 @@ object Streams {
 
   /** (result, number of micro-batch merges) — the count lets the spec
     * prove the run was a genuine multi-merge composition. */
-  private[graft] def foreachMergeRun(spark: SparkSession, dir: String): (DataFrame, Long) =
+  private[graft] def foreachMergeRun(
+      spark: SparkSession, dir: String): (DataFrame, Long) = Checkpoints.scope { ck =>
     graft.ops.withTempDir("graft-femerge") { tmp =>
       val srcDir   = s"$tmp/src"
       val tableDir = s"$tmp/table"
@@ -952,14 +953,14 @@ object Streams {
         q.awaitTermination()
         val finalVersion = version.get()
         require(finalVersion >= 0, "foreachBatch never fired")
-        val res = spark.read.parquet(s"$tableDir/v$finalVersion")
+        val res = ck.ckpt(spark.read.parquet(s"$tableDir/v$finalVersion")
           .select(col("user_id"), col("ms").as("last_ms"),
             col("event_id").as("last_event_id"), col("cents").as("last_value_cents"))
-          .orderBy("user_id")
-          .localCheckpoint() // must outlive the temp dir
+          .orderBy("user_id")) // must outlive the temp dir
         (res, finalVersion + 1L)
       } finally savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
     }
+  }
 
   /** Driver entry for the idempotent-sink run: the committed table
     * contents (see [[idempotentSinkRun]] for the fault-injection proof
@@ -996,7 +997,7 @@ object Streams {
     * write distributed parquet; only the marker touch is driver-side,
     * exactly like every production commit protocol. */
   private[graft] def idempotentSinkRun(
-      spark: SparkSession, dir: String): (DataFrame, Long, Seq[Long], Seq[Long]) =
+      spark: SparkSession, dir: String): (DataFrame, Long, Seq[Long], Seq[Long]) = Checkpoints.scope { ck =>
     graft.ops.withTempDir("graft-idemsink") { tmp =>
       val srcDir     = s"$tmp/src"
       val tableDir   = s"$tmp/table"
@@ -1082,12 +1083,12 @@ object Streams {
           try committedList.iterator().asScala
             .map(p => s"$tableDir/batch_${p.getFileName.toString.toLong}").toSeq.sorted
           finally committedList.close()
-        val res = spark.read.parquet(committed: _*)
-          .orderBy("event_id")
-          .localCheckpoint() // must outlive the temp dir
+        val res = ck.ckpt(spark.read.parquet(committed: _*)
+          .orderBy("event_id")) // must outlive the temp dir
         (res, replays.get(), b1, b2)
       } finally savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
     }
+  }
 
   final case class TwsAgg(n: Long, sumCents: Long, maxCents: Long, lastMs: Long, lastId: Long)
   final case class TwsOut(

@@ -537,12 +537,11 @@ class GraphSpec extends SparkSpec {
     // allowance = checkpoint blocks that legitimately BACK the returned
     // result (freed only once the result is GC'd): pagerank keeps final
     // ranks + deg, triangles keeps e + deg + oriented, the walks keep
-    // their final label/distance/edge table. Everything superseded —
-    // every prior round, dead edge/node prep — must be freed inline
-    // (Checkpoints.free; Dataset.unpersist is a no-op on checkpoints).
-    // pagerank/ppr allowance 2 (round 22, eager rounds restored): the
-    // result is backed by the final ranks + deg checkpoints; e/nodes
-    // and every superseded round free inline.
+    // their final label/distance/edge table. Everything else — every
+    // prior round, dead edge/node prep — must be freed by the operator's
+    // Checkpoints.scope (Dataset.unpersist is a no-op on checkpoints).
+    // pagerank/ppr allowance 2: the result is backed by the final ranks
+    // + deg checkpoints.
     val walks: Seq[(String, Int, () => Unit)] = Seq(
       ("pagerank", 2, () => { Graph.pageRankOn(e).collect(); () }),
       ("triangles", 3, () => { Graph.triangleCountOn(k4Pendant.toDF("u", "v")).collect(); () }),
@@ -562,46 +561,34 @@ class GraphSpec extends SparkSpec {
       ("assortativity", 1, () => { Graph.assortativityOn(e).collect(); () }),
       ("link_predict", 2, () => { Graph.linkPredictOn(k4Pendant.toDF("u", "v")).collect(); () }),
       ("scc", 1, () => { Graph.sccComponentsOn(e).collect(); () }))
+    // census by RDD id, not by count: the ContextCleaner may drop
+    // earlier suites' blocks at any moment, which only shrinks the set
     walks.foreach { case (name, allowance, run) =>
-      val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+      val idsBefore = persistentIds
       run()
       assert(cacheEmpty == before, s"$name left a CacheManager entry behind")
-      val rddsAfter = spark.sparkContext.getPersistentRDDs.size
-      assert(rddsAfter <= rddsBefore + allowance,
-        s"$name leaked round checkpoints: $rddsBefore persistent RDDs before, " +
-          s"$rddsAfter after (allowance $allowance for the result's own backing)")
+      val created = persistentIds -- idsBefore
+      assert(created.size <= allowance,
+        s"$name leaked round checkpoints: ${created.size} new persistent RDDs " +
+          s"(allowance $allowance for the result's own backing)")
     }
   }
 
+  private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("artifact-cache eviction frees its checkpoint blocks (freeIfLive, live branch)") {
-    // Round-22 (VERDICT r21 item 10): the clear*Cache evictions free
-    // their backing checkpoint blocks via Checkpoints.freeIfLive — pin
-    // it executably: an eviction must return the persistent-RDD census
-    // to its pre-build level, not merely drop the memo entry. (The
-    // stopped-session branch — freeIfLive must NO-OP instead of
-    // throwing — is not reachable here without killing the suite's
-    // shared context; the guard is a one-line isStopped check.)
-    import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val ck = Seq((1L, 2L), (3L, 4L)).toDF("a", "b").localCheckpoint()
-    assert(spark.sparkContext.getPersistentRDDs.size == before + 1)
-    graft.ops.Checkpoints.freeIfLive(ck)
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "freeIfLive did not drop the checkpoint's blocks on a live session")
-    // and through a real eviction path: the cluster-labels artifact cache
-    graft.ops.Dedup.clearLabelsCache() // reset whatever earlier suites built
-    val base = spark.sparkContext.getPersistentRDDs.size
+    // Artifacts.clearCache must free every checkpoint an artifact build
+    // left alive — the label table the memo holds AND the build's
+    // intermediates (the minhash band table, the propagation rounds) —
+    // not merely drop the memo entry
+    graft.ops.Artifacts.clearCache() // reset whatever earlier suites built
+    val base = persistentIds
     graft.ops.Dedup.clusterLabels(spark, sfDir).count()
-    val built = spark.sparkContext.getPersistentRDDs.size
-    assert(built > base, "clusterLabels should checkpoint its label table")
-    graft.ops.Dedup.clearLabelsCache()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after < built, "clearLabelsCache freed no checkpoint blocks")
-    // allowance 1: the minhash band checkpoint backs the (consumed)
-    // lazy pair frame and is ContextCleaner-owned — everything the
-    // cache itself pinned must be gone
-    assert(after <= base + 1,
-      s"clearLabelsCache left label checkpoint blocks behind ($base -> $after)")
+    val built = persistentIds -- base
+    assert(built.nonEmpty, "clusterLabels should checkpoint its label table")
+    graft.ops.Artifacts.clearCache()
+    assert((persistentIds & built).isEmpty,
+      s"clearCache left label checkpoint blocks behind: ${persistentIds & built}")
   }
 
   test("k_truss peel cascades on a hand graph: clique survives, spur triangles die") {

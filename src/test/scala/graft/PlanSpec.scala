@@ -754,7 +754,7 @@ class PlanSpec extends SparkSpec {
   test("round-22: partitionedCheckpoint joins exchange/sort-free on its key") {
     // The mechanism behind corenessOn / lpaLabelsOn / bfsDistTable /
     // the walk family / user_cf: an edge table checkpointed via
-    // Checkpoints.partitionedCheckpoint carries HashPartitioning(key)
+    // Checkpoints.Scope.partitioned carries HashPartitioning(key)
     // and the sort order through the LogicalRDD, so every per-round
     // join on that key plans with NO Exchange and NO Sort on the edge
     // arm. Round 22 found the round-21 inline shape (repartition +
@@ -767,10 +767,10 @@ class PlanSpec extends SparkSpec {
     // SortMergeJoin arm shape itself (the round-21 version of this test
     // silently passed through its BroadcastHashJoin escape hatch).
     import org.apache.spark.sql.functions._
-    val e = graft.ops.Checkpoints.partitionedCheckpoint(
-      spark.range(0, 3000000).select((col("id") % 500).as("src"), (col("id") % 400000).as("dst")),
-      Seq("dst"))
-    try {
+    graft.ops.Checkpoints.scope { s =>
+      val e = s.partitioned(
+        spark.range(0, 3000000).select((col("id") % 500).as("src"), (col("id") % 400000).as("dst")),
+        Seq("dst"))
       val labels = spark.range(0, 2000000).select(col("id").as("node"), col("id").as("c"))
       val round = e.select(col("dst").as("node"), col("src").as("v"))
         .join(labels, "node")
@@ -785,7 +785,7 @@ class PlanSpec extends SparkSpec {
         s"checkpointed partitioning/ordering did not survive — edge arm re-planned:\n$plan")
       // and the helper must restore AQE for everything planned after it
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
-        "partitionedCheckpoint leaked its AQE-off scope")
-    } finally graft.ops.Checkpoints.free(e)
+        "Scope.partitioned leaked its AQE-off flip")
+    }
   }
 }

@@ -2,7 +2,7 @@
 # Cold-JVM A/B bench (round-22 methodology fix, VERDICT r21 item 2).
 #
 # Round 21's optimization A/Bs were warm pairs in a long-lived JVM
-# (BenchSubset second-run numbers); six of its claimed wins reversed on
+# (second-run numbers in one warm JVM); six of its claimed wins reversed on
 # the driver, whose statistic is: FRESH JVM, untimed warmup pass, N
 # measured passes, per-query MIN. This wrapper reproduces that exact
 # statistic for a query subset: every invocation launches a new JVM via
