@@ -19,24 +19,23 @@ import org.apache.spark.storage.StorageLevel
   * it; left alone its blocks live until driver GC lets the
   * ContextCleaner find the RDD.
   *
-  * Ownership invariant:
-  *  - every checkpoint is taken inside a [[scope]] (`s.ckpt`,
-  *    `s.captured`, `s.partitioned`) and that scope owns it; nothing
-  *    else frees it. `s.free` frees a superseded round early, once its
-  *    successor has materialized;
-  *  - when the scope's body returns, the scope frees every checkpoint it
-  *    owns that the result does not read. "Reads" means the checkpoint's
-  *    RDD is reachable from a `LogicalRDD` in the result's analyzed plan
-  *    (subqueries included) through RDD dependencies, so a result never
-  *    loses a block it will scan, even through a lazy checkpoint.
-  *    Datasets nested in a tuple, case class or collection result count;
-  *    any other result reads none;
-  *  - the checkpoints a result reads pass to the enclosing scope on the
-  *    same thread (or to [[Scope.parallel]]'s scope on its workers),
-  *    which applies the same rule when it returns; with no enclosing
-  *    scope they are the caller's, and the ContextCleaner frees them once
-  *    the result is unreachable;
-  *  - when the body throws, the scope frees everything it owns;
+  * The rule: a checkpoint lives until the scope or round that took it
+  * returns a value that does not read it.
+  *  - checkpoints are taken only through a [[Scope]] (`s.ckpt`,
+  *    `s.lazyCkpt`, `s.captured`, `s.partitioned`), inside [[scope]] or
+  *    [[iterate]], which owns them;
+  *  - "reads" means the checkpoint's RDD is reachable from a
+  *    `LogicalRDD` in the value's analyzed plan (subqueries included)
+  *    through RDD dependencies, so a lazy checkpoint keeps what it has
+  *    not yet materialized from. Datasets nested in a tuple, case class,
+  *    option or collection count; any other value reads none;
+  *  - [[scope]] applies the rule when its body returns, [[iterate]]
+  *    after `init` and after every round as well;
+  *  - what the returned value reads passes to the enclosing scope on
+  *    the same thread (or to [[Scope.parallel]]'s scope on its
+  *    workers); with none, the caller holds it and the ContextCleaner
+  *    frees it once the value is unreachable;
+  *  - a body that throws frees everything its scope owns;
   *  - [[Artifacts]] runs its builds in a detached scope and holds what
   *    the artifact reads until `Artifacts.clearCache`.
   *
@@ -94,14 +93,6 @@ object Checkpoints {
         StorageLevel.MEMORY_AND_DISK)
     }
 
-    /** Frees a checkpoint this scope owns before the scope ends (a
-      * superseded round whose successor has materialized). No-op for
-      * anything else: a view over a checkpoint, or a checkpoint owned by
-      * another scope or by [[Artifacts]]. */
-    def free(ds: Dataset[_]): Unit =
-      rddOf(ds).flatMap(r => synchronized(owned.remove(r.id)))
-        .foreach(_.unpersist(blocking = false))
-
     /** Runs independent thunks on up to [[MaxParallel]] threads, inside
       * this scope, and returns their results in order. Waits until every
       * thunk has settled, before rethrowing the first failure, so the
@@ -133,26 +124,47 @@ object Checkpoints {
     private[Checkpoints] def adopt(rdds: Iterable[RDD[_]]): Unit =
       synchronized(rdds.foreach(r => owned(r.id) = r))
 
-    /** Frees every owned checkpoint whose id is not in `keep`; returns
-      * the kept ones. */
-    private[Checkpoints] def release(keep: Set[Int]): Seq[RDD[_]] = {
+    /** Frees every owned checkpoint `value` does not read; returns the
+      * ones it reads, which stay owned. */
+    private[Checkpoints] def keepRead(value: Any): Seq[RDD[_]] = {
+      val keep = readIds(value)
       val (kept, dead) = synchronized {
-        val all = owned.values.toSeq
-        owned.clear()
-        all.partition(r => keep(r.id))
+        val (k, d) = owned.values.toSeq.partition(r => keep(r.id))
+        d.foreach(r => owned.remove(r.id))
+        (k, d)
       }
       dead.foreach(_.unpersist(blocking = false))
       kept
     }
   }
 
-  /** Runs `body` in a new scope nested in the current one (see the
-    * ownership invariant above). */
+  /** Runs `body` in a new scope nested in the current one (see the rule
+    * above). */
   def scope[A](body: Scope => A): A = {
     val parent = Option(current.get)
     val (result, kept) = detached(body)
     parent.foreach(_.adopt(kept))
     result
+  }
+
+  /** A round loop as one scope: `init`, then `step` for rounds
+    * 1..`maxRounds` while `done` does not hold. The loop owns every
+    * checkpoint taken in `init` and `step`, nested scopes included, and
+    * frees each one the new state does not read after `init` and after
+    * every round; what the final state reads passes on as from [[scope]].
+    * `done` is not called once `maxRounds` is reached. Anything a later
+    * round reads must be reachable from the state or owned by an
+    * enclosing scope. */
+  def iterate[S](maxRounds: Int)(init: Scope => S)(done: S => Boolean)(
+      step: (Scope, S, Int) => S): S = scope { s =>
+    def roundEnd(state: S): S = { s.keepRead(state); state }
+    var state = roundEnd(init(s))
+    var round = 1
+    while (round <= maxRounds && !done(state)) {
+      state = roundEnd(step(s, state, round))
+      round += 1
+    }
+    state
   }
 
   /** Runs `body` in a new scope with no parent; returns the result and
@@ -163,9 +175,9 @@ object Checkpoints {
     current.set(s)
     val result =
       try body(s)
-      catch { case t: Throwable => s.release(Set.empty); throw t }
+      catch { case t: Throwable => s.keepRead(()); throw t } // () reads nothing
       finally current.set(outer)
-    (result, s.release(readIds(result)))
+    (result, s.keepRead(result))
   }
 
   /** Ids of every RDD `result` can read when it runs. */

@@ -856,45 +856,30 @@ object Dedup {
     * singletons are the caller's left-join concern. */
   private[graft] def ccOn(edges0: DataFrame, maxIters: Int = 20,
                           directHandle: Boolean = false): DataFrame = Checkpoints.scope { ck =>
-    // (round-21 note: a lazy-block variant of this loop — self-loop
-    // edges + geometric blocks of un-checkpointed rounds — was built
-    // and MEASURED SLOWER on both deep and shallow consumers (dbscan
-    // 3.8 → 4.9 s, entity_resolve 1.8 → 2.2 s at sf0.1): the eager
-    // per-round shape lets AQE broadcast the node-sized label table
-    // every round so the edge table never re-shuffles, which beats the
-    // saved barriers. Kept as the measured winner.)
+    // eager per-round checkpoints: AQE broadcasts the node-sized label
+    // table every round, so the edge table never re-shuffles
     val edges = ck.ckpt(edges0)
-    // init = identity fused with the first propagation round: rep0 =
-    // min(id, min neighbor). Star components centered on their min id —
-    // the dominant shape of a near-dup pair graph — converge right here,
-    // so the loop's first pass is already the convergence check.
-    var labels = ck.ckpt(edges
-      .groupBy("src")
-      .agg(least(col("src"), min(col("dst"))).as("rep"))
-      .select(col("src").as("id"), col("rep")))
-    var iter     = 0
-    var changed  = 1L
-    // the checkpoint HANDLE behind `labels` (from round 1 on, labels is
-    // a rename view Scope.free can't reach)
-    var labelsCkpt = labels
-    while (changed > 0 && iter < maxIters) {
+    // state: ((id, rep) labels, labels that changed last round)
+    val (labels, changed) = Checkpoints.iterate(maxIters) { s =>
+      // init = identity fused with the first propagation round: rep0 =
+      // min(id, min neighbor). Star components centered on their min id —
+      // the dominant shape of a near-dup pair graph — converge right here,
+      // so the loop's first pass is already the convergence check.
+      (s.ckpt(edges
+        .groupBy("src")
+        .agg(least(col("src"), min(col("dst"))).as("rep"))
+        .select(col("src").as("id"), col("rep"))), 1L)
+    }(_._2 == 0L) { case (s, (labels, _), _) =>
       // candidate labels from neighbors; keep the min of (own, neighbors').
-      // Checkpoint the round's join+groupBy ONCE; both the convergence
-      // count and the next labels read the materialized result (the
-      // count-then-eager-checkpoint pair used to evaluate it twice —
-      // the round-2 1.4× bench regression).
-      val next = ck.ckpt(edges
+      // The convergence count and the next labels both read the one
+      // round checkpoint.
+      val next = s.ckpt(edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(min("rep").as("nbr_rep"))
         .join(labels, "id")
         .select(col("id"), least(col("rep"), col("nbr_rep")).as("new_rep"), col("rep")))
-      changed = next.filter(col("new_rep") < col("rep")).count()
-      val prevCkpt = labelsCkpt
-      labels = next.select(col("id"), col("new_rep").as("rep"))
-      labelsCkpt = next
-      ck.free(prevCkpt) // next is materialized; old round is dead
-      iter += 1
+      (next.select(col("id"), col("new_rep").as("rep")), next.filter(col("new_rep") < col("rep")).count())
     }
     // a component with diameter > maxIters would get wrong representatives;
     // fail loudly rather than return a silently-partial clustering.

@@ -58,39 +58,26 @@ object Graph {
   def pageRankOn(edgesDf: DataFrame): DataFrame =
     pageRankOn(edgesDf, Iters, materialize = true)
 
-  /** The working body. `materialize = true` (the served path) eagerly
-    * `localCheckpoint`s every reused intermediate — the reduced edge /
-    * node / degree tables once, ranks per round — so (a) the logical
-    * plan stays O(1) per round and (b) NOTHING is registered with the
-    * CacheManager: the operator's scope frees every checkpoint its
-    * result does not read, where a `.cache()` would pin storage for the
-    * rest of a 180-query bench run (round-13 verdict #1).
-    * `materialize = false` keeps the whole pipeline lazy (no cache, no
-    * checkpoint) so plan specs can assert on the real join/aggregate
-    * shapes instead of truncated LogicalRDD leaves. */
+  /** The working body. `materialize = true` (the served path)
+    * checkpoints every reused intermediate — the reduced edge, node and
+    * degree tables once, the ranks every round — so the logical plan
+    * stays O(1) per round and nothing is registered with the
+    * CacheManager. `materialize = false` keeps the whole pipeline lazy
+    * so plan specs can assert on the real join/aggregate shapes instead
+    * of truncated LogicalRDD leaves. */
   private[graft] def pageRankOn(
       edgesDf: DataFrame, iters: Int, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
-    val e0 = edgesDf.filter(col("src") =!= col("dst")).distinct()
-    val e  = if (materialize) ck.ckpt(e0) else e0
-    val nodes0 = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-    val nodes  = if (materialize) ck.ckpt(nodes0) else nodes0
-    val n   = nodes.agg(count(lit(1)).as("n"))
+    def keep(s: Checkpoints.Scope, df: DataFrame) = if (materialize) s.ckpt(df) else df
+    val e     = keep(ck, edgesDf.filter(col("src") =!= col("dst")).distinct())
+    val nodes = keep(ck, e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
+    val n     = nodes.agg(count(lit(1)).as("n"))
     // deg and nodes feed every iteration plus the output join — reduce
     // them once instead of re-shuffling per iteration
-    val deg0 = e.groupBy("src").agg(count(lit(1)).as("d"))
-    val deg  = if (materialize) ck.ckpt(deg0) else deg0
-
-    // Round-22: rank rounds checkpoint EAGERLY again (the r20 shape).
-    // Round 21 made them a lazy single-consumer chain — faster in this
-    // repo's warm-pair A/Bs, but the driver's cold-JVM bench measured
-    // pagerank 0.90× and personalized_pagerank 0.53× (VERDICT r21 #1):
-    // the one-shot deep plan's analysis + AQE replan + janino codegen
-    // is charged per cold run, and at 3 rounds the saved barriers don't
-    // cover it. Superseded rank checkpoints are freed immediately.
-    val ranks0 = nodes.crossJoin(broadcast(n))
-      .select(col("node"), round(lit(1.0) / col("n"), 9).as("r"))
-    var ranks  = if (materialize) ck.ckpt(ranks0) else ranks0
-    for (_ <- 1 to iters) {
+    val deg   = keep(ck, e.groupBy("src").agg(count(lit(1)).as("d")))
+    // eager per-round rank checkpoints: a lazy chain re-pays analysis,
+    // AQE replan and codegen of the deep plan on every cold run
+    val ranks = Checkpoints.iterate(iters)(s => keep(s, nodes.crossJoin(broadcast(n))
+      .select(col("node"), round(lit(1.0) / col("n"), 9).as("r"))))(_ => false) { (s, ranks, _) =>
       val contribs = e
         .join(ranks.select(col("node").as("src"), col("r")), "src")
         .join(deg, "src")
@@ -98,17 +85,12 @@ object Graph {
           round((col("r") / col("d")) * 1e9).cast("long").as("cn"))
         .groupBy("node")
         .agg(sum("cn").as("sn"))
-      val next = nodes
+      keep(s, nodes
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(n))
         .select(col("node"),
           round(lit(0.15) / col("n") +
-            lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9).as("r"))
-      if (materialize) {
-        val prev = ranks
-        ranks = ck.ckpt(next)
-        ck.free(prev) // new ranks materialized; old round dead
-      } else ranks = next
+            lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9).as("r")))
     }
     ranks
       .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
@@ -170,7 +152,7 @@ object Graph {
     * the high-PPR tail; the same walk powers who-to-follow style
     * recommendation). Identical machinery and determinism contract as
     * [[pageRankOn]] — exact-nanos contribution sums, 9 dp re-rounding
-    * per round, per-round `localCheckpoint` + [[Checkpoints.Scope.free]] —
+    * per round, per-round `localCheckpoint` in [[Checkpoints.iterate]] —
     * with ONE change: the teleport term lands only on seeds (0.15/|S|
     * instead of 0.15/N), so mass injects at the seeds and decays
     * outward by 0.85 per hop. Nodes unreachable from the seed set stay
@@ -183,18 +165,15 @@ object Graph {
       .distinct())
     val nodes = ck.ckpt(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    val s   = nodes.filter(col("node") < PprSeedMax).agg(count(lit(1)).as("s"))
-    val deg = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
+    val seeds = nodes.filter(col("node") < PprSeedMax).agg(count(lit(1)).as("s"))
+    val deg   = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
     val teleport =
       when(col("node") < PprSeedMax, lit(0.15) / col("s")).otherwise(lit(0.0))
-    // Round-22: eager per-round rank checkpoints restored (the r20
-    // shape) — the driver's cold bench had the r21 lazy chain at 0.53×
-    // (VERDICT r21 #1); see the pageRankOn note.
-    var ranks = ck.ckpt(nodes.crossJoin(broadcast(s))
+    // eager per-round rank checkpoints, as in pageRankOn
+    val ranks = Checkpoints.iterate(iters)(s => s.ckpt(nodes.crossJoin(broadcast(seeds))
       .select(col("node"),
         when(col("node") < PprSeedMax, round(lit(1.0) / col("s"), 9))
-          .otherwise(lit(0.0)).as("r")))
-    for (_ <- 1 to iters) {
+          .otherwise(lit(0.0)).as("r"))))(_ => false) { (s, ranks, _) =>
       val contribs = e
         .join(ranks.select(col("node").as("src"), col("r")), "src")
         .join(deg, "src")
@@ -202,15 +181,13 @@ object Graph {
           round((col("r") / col("d")) * 1e9).cast("long").as("cn"))
         .groupBy("node")
         .agg(sum("cn").as("sn"))
-      val prev = ranks
-      ranks = ck.ckpt(nodes
+      s.ckpt(nodes
         .join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(s))
+        .crossJoin(broadcast(seeds))
         .select(col("node"),
           round(teleport +
             lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9)
             .as("r")))
-      ck.free(prev) // new ranks materialized; old round dead
     }
     ranks
       .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
@@ -460,8 +437,7 @@ object Graph {
     * O(m^1.5) bound, on an edge table that only ever SHRINKS — then a
     * partial-aggregated support count keyed on the edge. Per-round
     * eager `localCheckpoint` keeps the plan O(1) per round and the
-    * convergence early-exit free ([[kcoreOn]] convention); superseded
-    * rounds free their blocks. */
+    * convergence early-exit free ([[kcoreOn]] convention). */
   def kTruss(spark: SparkSession, dir: String): DataFrame =
     kTrussOn(trussEdges(spark, dir), KTrussK, KTrussRounds)
 
@@ -494,42 +470,24 @@ object Graph {
   /** Bounded k-truss peel over an arbitrary canonical u<v edge table —
     * split out so specs can drive it with a hand-checkable graph. */
   private[graft] def kTrussOn(
-      edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = Checkpoints.scope { ck =>
-    var e = ck.ckpt(edgesDf)
-    var round = 1
-    var lastSup: Option[DataFrame] = None
-    while (round <= rounds && lastSup.isEmpty) {
-      // round 22: materialize the degree-oriented view ONCE per round
-      // with its hash(src) layout captured — the wedge self-join's two
-      // arms otherwise each recompute the orientation subtree (deg agg
-      // + two joins) and re-exchange it (ReuseExchange across AQE
-      // stages is not guaranteed — the lsa_topic lesson); with the
-      // captured layout both arms read the one materialization
-      // exchange- and sort-free
-      val or = ck.partitioned(
-        orientedOn(e), Seq("src"), Seq("src", "dst"))
-      val sup = ck.ckpt(supportFromOriented(or, e))
-      ck.free(or) // sup is materialized; the oriented view is dead
-      // probe convergence on the support checkpoint FIRST (one cheap
-      // aggregate) — the converged round (the common case at sf0.1,
-      // where the peel fixes in one pass) used to also pay an
-      // edge-sized `kept` checkpoint it then threw away (round 21)
-      val keptCnt = sup.filter(col("s") >= k - 2).count()
-      if (keptCnt == e.count()) {
-        // fixpoint: NO edge died this round, so `sup` — computed on
-        // exactly this edge set — already IS the within-truss support
-        // the output ships; reusing it saves the full final wedge pass
-        // (measured ~half the sf0.1 cost, where the peel converges in
-        // one round)
-        lastSup = Some(sup)
-      } else {
-        val kept = ck.ckpt(sup.filter(col("s") >= k - 2)
-          .select(col("u"), col("v")))
-        ck.free(e)
-        ck.free(sup)
-        e = kept
+      edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = {
+    // state: the surviving edges, and their support once a round kills
+    // none (the fixpoint)
+    val (e, lastSup) = Checkpoints.iterate(rounds)(
+        s => (s.ckpt(edgesDf), Option.empty[DataFrame]))(_._2.isDefined) { case (s, (e, _), _) =>
+      // the degree-oriented view materializes once, hash(src) layout
+      // captured, so both wedge self-join arms read it exchange- and
+      // sort-free; it is dead once the support is materialized
+      val sup = Checkpoints.scope { t =>
+        t.ckpt(supportFromOriented(t.partitioned(orientedOn(e), Seq("src"), Seq("src", "dst")), e))
       }
-      round += 1
+      // probe convergence on the support checkpoint first: a converged
+      // round needs no edge-sized `kept` checkpoint
+      val keptCnt = sup.filter(col("s") >= k - 2).count()
+      // fixpoint: no edge died, so `sup` is already the within-truss
+      // support the output ships
+      if (keptCnt == e.count()) (e, Some(sup))
+      else (s.ckpt(sup.filter(col("s") >= k - 2).select(col("u"), col("v"))), None)
     }
     // bound-stopped only: support INSIDE the final edge set must be
     // recomputed (the last round's support was measured on the larger
@@ -638,29 +596,19 @@ object Graph {
   def bfsDistancesOn(edgesDf: DataFrame, source: Long, iters: Int): DataFrame =
     bfsDistTable(edgesDf, source, iters).orderBy("node")
 
-  /** [[bfsDistancesOn]] minus the final sort: returns the raw
-    * checkpointed distance table, so callers that only take an argmax
-    * over it ([[graphDiameterOn]]) can free it directly (free is a
-    * no-op through a Sort wrapper). */
+  /** [[bfsDistancesOn]] minus the final sort: the checkpointed
+    * distance table, for callers that only take an argmax over it
+    * ([[graphDiameterOn]]). */
   private[graft] def bfsDistTable(
       edgesDf: DataFrame, source: Long, iters: Int): DataFrame = Checkpoints.scope { ck =>
-    // PLAIN checkpoint (round 22). The round-21 repartition(src)+sort
-    // never captured its layout (LogicalRDD records UnknownPartitioning
-    // under AQE) — a pure upfront exchange+sort. And CAPTURING it
-    // (Scope.partitioned) cold-measured 0.83x here: the
-    // pinned layout locks every frontier join into SortMergeJoin, while
-    // with a plain checkpoint AQE broadcasts the tiny frontier and the
-    // edge arm never shuffles at all.
+    // plain checkpoint: a captured layout forces SMJ where AQE would
+    // broadcast the frontier
     val e = ck.ckpt(symmetrize(edgesDf))
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    // Round-21 (opt guide §1.2): only the FRONTIER checkpoints per
-    // round (it gates the loop, so it must materialize anyway); the
-    // dist table accumulates LAZILY as a union over the frontier
-    // checkpoints — the old per-round dist checkpoint was a second
-    // barrier job copying every settled node again each round. The
-    // final union materializes once here so callers keep a direct
-    // checkpoint handle (graphDiameterOn frees it).
+    // only the frontier checkpoints per round (it gates the loop); the
+    // dist table is a lazy union over the frontier checkpoints,
+    // materialized once at the end
     var frontier = ck.ckpt(Seq((source, 0L)).toDF("node", "dist"))
     var dist: DataFrame = frontier
     var t = 1
@@ -726,15 +674,16 @@ object Graph {
     graphDiameterOn(spark, rawEdges(spark, dir, 211L, 197L), BfsSource, BfsIters)
 
   private[graft] def graphDiameterOn(
-      spark: SparkSession, edgesDf: DataFrame, source: Long, iters: Int): DataFrame = Checkpoints.scope { ck =>
+      spark: SparkSession, edgesDf: DataFrame, source: Long, iters: Int): DataFrame = {
     import spark.implicits._
-    def far(bfs: DataFrame): (Long, Long) = {
-      val r = bfs.orderBy(col("dist").desc, col("node")).limit(1).collect()(0)
-      ck.free(bfs) // argmax collected; the distance table is dead
+    // one scope per sweep: its (node, ecc) result reads no checkpoint
+    def far(from: Long): (Long, Long) = Checkpoints.scope { _ =>
+      val r = bfsDistTable(edgesDf, from, iters)
+        .orderBy(col("dist").desc, col("node")).limit(1).collect()(0)
       (r.getLong(0), r.getLong(1))
     }
-    val (u, ecc1) = far(bfsDistTable(edgesDf, source, iters))
-    val (w, ecc2) = far(bfsDistTable(edgesDf, u, iters))
+    val (u, ecc1) = far(source)
+    val (w, ecc2) = far(u)
     Seq((1L, source, u, ecc1), (2L, u, w, ecc2))
       .toDF("sweep", "source", "far_node", "ecc")
       .orderBy("sweep")
@@ -844,8 +793,8 @@ object Graph {
     * δ(v) = Σ_{w: succ} σv/σw · (1 + δw), each per-edge term rounded
     * to exact integer NANOS before the order-insensitive long sum (the
     * pagerank convention — association-free, partition-layout-proof).
-    * Every level and every δ table is `localCheckpoint`ed and freed as
-    * soon as superseded ([[Checkpoints.Scope.free]]); per-round work is one
+    * Every level and every δ table is `localCheckpoint`ed and lives
+    * until the source's materialized δ union; per-round work is one
     * frontier-edge join, never a re-traversal of settled levels.
     * Output: node, accumulated dependency over the sampled sources in
     * nanos (sources' own rows excluded, unreached nodes absent). */
@@ -857,48 +806,42 @@ object Graph {
     val spark = edgesDf.sparkSession
     import spark.implicits._
     val e = ck.ckpt(symmetrize(edgesDf))
-    def deltasFor(s: Long): DataFrame = {
+    // one scope per source: `out` reads none of the level tables
+    def deltasFor(source: Long): DataFrame = Checkpoints.scope { ds =>
       // forward: levels.head is the deepest level, (node, sigma) each;
-      // the visited set accumulates LAZILY over the level checkpoints
-      // (round 21 — the bfsDistTable convention; a per-hop visited
-      // checkpoint was a second barrier job per hop)
-      var levels  = List(ck.ckpt(Seq((s, 1L)).toDF("node", "sigma")))
-      var visited = levels.head.select("node")
-      var h    = 1
-      var stop = false
-      while (h <= hops && !stop) {
-        val next = ck.ckpt(levels.head.join(e, col("node") === col("src"))
+      // the visited set is a lazy union over the level checkpoints
+      val (levels, _, _) = Checkpoints.iterate(hops) { s =>
+        val seed = s.ckpt(Seq((source, 1L)).toDF("node", "sigma"))
+        (List(seed), seed.select("node"), false)
+      }(_._3) { case (s, (levels, visited, _), _) =>
+        val next = s.ckpt(levels.head.join(e, col("node") === col("src"))
           .groupBy(col("dst")).agg(sum("sigma").as("sigma"))
           .select(col("dst").as("node"), col("sigma"))
           .join(visited, Seq("node"), "left_anti"))
-        if (next.isEmpty) { ck.free(next); stop = true }
-        else {
-          visited = visited.union(next.select("node"))
-          levels = next :: levels
-          h += 1
-        }
+        if (next.isEmpty) (levels, visited, true)
+        else (next :: levels, visited.union(next.select("node")), false)
       }
       // backward: deepest level has delta = 0 by the hop-bounded
       // definition; each shallower level joins ONLY the level below
       // (shortest-path successors sit at exactly dist+1)
-      var below = ck.ckpt(levels.head
-        .select(col("node"), col("sigma"), lit(0L).as("delta")))
-      var acc = List(below)
-      for (lvl <- levels.tail) {
+      val (_, acc) = Checkpoints.iterate(levels.size - 1) { s =>
+        val deepest = s.ckpt(levels.head
+          .select(col("node"), col("sigma"), lit(0L).as("delta")))
+        (deepest, List(deepest))
+      }(_ => false) { case (s, (below, acc), i) =>
+        val lvl = levels(i)
         val terms = lvl.as("v").join(e, col("v.node") === col("src"))
           .join(below.as("w"), col("dst") === col("w.node"))
           .select(col("v.node").as("node"),
             round(col("v.sigma").cast("double") / col("w.sigma")
               * (lit(1000000000L) + col("w.delta"))).cast("long").as("term"))
           .groupBy("node").agg(sum("term").as("d"))
-        below = ck.ckpt(lvl.join(terms, Seq("node"), "left")
+        val next = s.ckpt(lvl.join(terms, Seq("node"), "left")
           .select(col("node"), col("sigma"), coalesce(col("d"), lit(0L)).as("delta")))
-        acc = below :: acc
+        (next, next :: acc)
       }
-      val out = ck.ckpt(acc.map(_.select("node", "delta")).reduce(_ union _)
-        .filter(col("node") =!= s)) // materialize so the per-level tables can free
-      (acc ++ levels).foreach(ck.free)
-      out
+      ds.ckpt(acc.map(_.select("node", "delta")).reduce(_ union _)
+        .filter(col("node") =!= source))
     }
     // The sampled sources are INDEPENDENT Brandes sweeps (opt guide
     // §2.6: overlap independent jobs) — run them in parallel so one
@@ -1186,45 +1129,29 @@ object Graph {
     * exit free. Expects an e(src, dst, w) table with BOTH directions of
     * each undirected edge present. */
   def ssspOn(edgesDf: DataFrame, source: Long, iters: Int): DataFrame = Checkpoints.scope { ck =>
-    // Round 21 pre-partitioned+sorted this checkpoint on src (guide
-    // §2.4) to make the per-round frontier joins exchange-free; the
-    // driver's cold bench measured it 0.72× (VERDICT r21 #3): the
-    // upfront full shuffle+sort+materialization is paid once per run,
-    // while delta-relaxation converges in few rounds AND the per-round
-    // frontier is tiny (AQE broadcasts it), so the avoided edge-side
-    // exchanges never materialize anyway. Round 22: plain checkpoint.
+    // plain checkpoint: the per-round frontier is tiny and AQE
+    // broadcasts it, so a pre-partitioned edge table never pays back
     val e = ck.ckpt(edgesDf.select(col("src"), col("dst"), col("w")))
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    var dist     = ck.ckpt(Seq((source, 0L)).toDF("node", "dist"))
-    var frontier = dist
-    // the checkpoint HANDLE behind `frontier` (frontier itself is a
-    // rename view from round 1 on, which free can't reach)
-    var frontierCkpt = dist
-    var round = 1
-    while (round <= iters && !frontier.isEmpty) {
+    // state: (dist, frontier = the nodes whose distance improved last round)
+    val (dist, _) = Checkpoints.iterate(iters) { s =>
+      val seed = s.ckpt(Seq((source, 0L)).toDF("node", "dist"))
+      (seed, seed)
+    }(_._2.isEmpty) { case (s, (dist, frontier), _) =>
       // best offer per neighbor from the improved set (partial-aggregated
       // min, so ≤1 row per (partition, node) reaches the shuffle)
       val offers = frontier.join(e, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("d"))
         .groupBy("node").agg(min(col("d")).as("d"))
-      val improved = ck.ckpt(offers.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
+      val improved = s.ckpt(offers.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
         .filter(col("old").isNull || col("d") < col("old"))
         .select(col("node"), col("d")))
       val updated = dist.join(improved.withColumnRenamed("d", "nd"), Seq("node"), "left")
         .select(col("node"), coalesce(col("nd"), col("dist")).as("dist"))
       val added = improved.join(dist, Seq("node"), "left_anti")
         .select(col("node"), col("d").as("dist"))
-      val prevDist         = dist
-      val prevFrontierCkpt = frontierCkpt
-      dist = ck.ckpt(updated.union(added))
-      frontier = improved.withColumnRenamed("d", "dist")
-      frontierCkpt = improved
-      // the new dist and improved are materialized; the superseded
-      // node tables' blocks are dead (round 1 aliases both, free once)
-      if (prevFrontierCkpt ne prevDist) ck.free(prevFrontierCkpt)
-      ck.free(prevDist)
-      round += 1
+      (s.ckpt(updated.union(added)), improved.withColumnRenamed("d", "dist"))
     }
     dist.orderBy("node")
   }
@@ -1454,8 +1381,8 @@ object Graph {
     * the edge election, and the contraction runs min-label propagation
     * on the COMPONENT graph — one row per component, never per node or
     * edge; rounds are O(log n) because components at least halve.
-    * Per-round `localCheckpoint` + inline `Scope.free` of every
-    * superseded table (the [[ssspOn]] discipline).
+    * Per-round `localCheckpoint` in [[Checkpoints.iterate]] (the
+    * [[ssspOn]] discipline).
     *
     * The oracle replays Kruskal exactly (same total order, same unique
     * forest) as a one-edge-per-step recursive CTE — result-definition
@@ -1472,71 +1399,54 @@ object Graph {
     val und = ck.ckpt(sym.filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .withColumn("w", lit(1L) + (col("u") * 31L + col("v")) % 9L))
-    var comp = ck.ckpt(sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")))
-    var forest: DataFrame = null
-    var round = 1
-    val maxRounds = 16 // components at least halve per round; 2^16 ≫ any fixture
-    var done = false
-    while (round <= maxRounds && !done) {
-      val lab = ck.ckpt(und
+    // state: (node -> component label, forest so far, done); components
+    // at least halve per round, so 16 rounds cover any fixture
+    val (_, forest, _) = Checkpoints.iterate(16) { s =>
+      (s.ckpt(sym.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))), Option.empty[DataFrame], false)
+    }(_._3) { case (s, (comp, forest, _), _) =>
+      val lab = s.ckpt(und
         .join(comp.select(col("node").as("u"), col("label").as("cu")), "u")
         .join(comp.select(col("node").as("v"), col("label").as("cv")), "v")
         .filter(col("cu") =!= col("cv")))
-      if (lab.isEmpty) { done = true; ck.free(lab) }
+      if (lab.isEmpty) (comp, forest, true)
       else {
         // every component elects its min outgoing edge (total order)
         val cand = lab.select(col("cu").as("c"),
             struct(col("w"), col("u"), col("v")).as("k"))
           .union(lab.select(col("cv").as("c"),
             struct(col("w"), col("u"), col("v")).as("k")))
-        val chosen = ck.ckpt(cand.groupBy("c").agg(min("k").as("k"))
+        val chosen = s.ckpt(cand.groupBy("c").agg(min("k").as("k"))
           .select(col("k.u").as("u"), col("k.v").as("v"), col("k.w").as("w"))
           .distinct())
-        // the forest accumulates LAZILY (round-21, opt guide §1.2): it
-        // is only consumed by the final sort, so the ≤rounds-deep
-        // union+distinct chain over the per-round `chosen` checkpoints
-        // materializes once at the end — the chosen handles stay alive
-        // for that (component-sized, ≤1 edge per component)
-        val newForest = if (forest == null) chosen else forest.union(chosen)
         // contraction: min-label propagation on the component graph
         // (≤ one row per component) until fixpoint — exact merge, so
         // a stale label can never re-elect a cycle-closing edge
         val pb = chosen.join(lab, Seq("u", "v", "w"))
-        val pairs = ck.ckpt(pb.select(col("cu").as("a"), col("cv").as("b"))
+        val pairs = s.ckpt(pb.select(col("cu").as("a"), col("cv").as("b"))
           .union(pb.select(col("cv").as("a"), col("cu").as("b")))
           .distinct())
-        var lmH = ck.ckpt(comp.select(col("label")).distinct()
-          .select(col("label"), col("label").as("ml")))
-        var lm = lmH // (label, ml) view over the current direct handle
-        var changed = true
-        while (changed) {
-          // change detection rides the checkpoint itself (old ml kept
-          // as a column) — one barrier per iteration instead of a
-          // checkpoint job PLUS a join-shuffle emptiness job
+        val (lm, _) = Checkpoints.iterate(Int.MaxValue) { t =>
+          (t.ckpt(comp.select(col("label")).distinct()
+            .select(col("label"), col("label").as("ml"))), true)
+        }(!_._2) { case (t, (lm, _), _) =>
+          // change detection rides the checkpoint (old ml kept as a
+          // column): one barrier per iteration
           val nb = pairs.join(lm.select(col("label").as("b"), col("ml").as("mlb")), "b")
             .groupBy(col("a").as("label")).agg(min("mlb").as("nbml"))
-          val next = ck.ckpt(lm.join(nb, Seq("label"), "left")
+          val next = t.ckpt(lm.join(nb, Seq("label"), "left")
             .select(col("label"), col("ml").as("old"),
               least(col("ml"), coalesce(col("nbml"), col("ml"))).as("ml")))
-          changed = !next.filter(col("ml") =!= col("old")).isEmpty
-          ck.free(lmH)
-          lmH = next
-          lm = next.select(col("label"), col("ml"))
+          (next.select(col("label"), col("ml")), !next.filter(col("ml") =!= col("old")).isEmpty)
         }
-        val newComp = ck.ckpt(comp.join(lm, "label")
-          .select(col("node"), col("ml").as("label")))
-        ck.free(lmH)
-        ck.free(pairs)
-        ck.free(lab)
-        ck.free(comp)
-        forest = newForest
-        comp = newComp
+        // the forest is a lazy union over the per-round `chosen`
+        // checkpoints, materialized once by the final sort
+        (s.ckpt(comp.join(lm, "label").select(col("node"), col("ml").as("label"))),
+          Some(forest.fold(chosen)(_.union(chosen))), false)
       }
-      round += 1
     }
-    if (forest == null) und.limit(0).select("u", "v", "w")
-    else ck.ckpt(forest.distinct().select("u", "v", "w").orderBy("w", "u", "v"))
+    forest.fold(und.limit(0).select("u", "v", "w"))(f =>
+      ck.ckpt(f.distinct().select("u", "v", "w").orderBy("w", "u", "v")))
   }
 
   private val mstSql: String =
@@ -1683,26 +1593,17 @@ object Graph {
     * k-core runs; the edge table only ever shrinks. Per-round eager
     * `localCheckpoint` keeps the logical plan O(1) per round (the
     * [[ssspOn]] convention) and makes the convergence early-exit free. */
-  def kcoreOn(edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = Checkpoints.scope { ck =>
-    var e = ck.ckpt(symmetrize(edgesDf))
-    var round = 1
-    var converged = false
-    while (round <= rounds && !converged) {
-      val bad = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k)
-        .select(col("src")))
-      if (bad.isEmpty) converged = true
-      else {
-        val prev = e
-        e = ck.ckpt(e.join(bad, Seq("src"), "left_anti")
+  def kcoreOn(edgesDf: DataFrame, k: Int, rounds: Int): DataFrame = {
+    // state: (edges, converged)
+    val (e, _) = Checkpoints.iterate(rounds)(s => (s.ckpt(symmetrize(edgesDf)), false))(_._2) {
+      case (s, (e, _), _) =>
+        val bad = s.ckpt(e.groupBy("src").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") < k)
+          .select(col("src")))
+        if (bad.isEmpty) (e, true)
+        else (s.ckpt(e.join(bad, Seq("src"), "left_anti")
           .join(bad.withColumnRenamed("src", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")))
-        // the rewritten edge table is materialized; the superseded
-        // (edge-sized!) round and its deleted-node table are dead
-        ck.free(prev)
-      }
-      ck.free(bad)
-      round += 1
+          .select(col("src"), col("dst"))), false)
     }
     e.groupBy("src").agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
@@ -1765,42 +1666,27 @@ object Graph {
     * (symmetrized here) — split out so specs can drive it with a
     * hand-checkable graph. `iters = 0` returns plain degrees. */
   def corenessOn(edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
-    // Round-21 re-shape (opt guide §2.4/§1.2). (a — REVISED round 22)
-    // The edge table checkpoints plain: see the comment at the
-    // checkpoint below. (b) The h-index rounds are a SINGLE-CONSUMER
-    // chain (c_t feeds only c_{t+1}), so rounds run LAZY in BLOCKS of
-    // [[CorenessLazyBlock]] between checkpoints — one barrier per block
-    // instead of per round. Fully-lazy-to-the-end measured SLOWER
-    // (8.1 s vs 5.7 s at sf0.1): AQE re-optimizes the remaining plan
-    // after every materialized stage, so a 12-round single-job chain
-    // pays a replan quadratic in depth; short blocks keep the replan
-    // cost flat while still cutting 12 barrier jobs to 3. Storage
-    // hygiene: superseded block checkpoints freed inline as before.
-    // PLAIN checkpoint (round 22): the round-21 repartition(dst)+sort
-    // never captured its layout under AQE (pure upfront cost), and
-    // capturing it cold-measured 0.79x — it forces SortMergeJoin where
-    // AQE otherwise broadcasts the node-sized degree table
+    // plain checkpoint: a captured layout forces SMJ where AQE would
+    // broadcast the node-sized degree table
     val e = ck.ckpt(symmetrize(edgesDf))
     val adj = e.select(col("dst").as("node"), col("src").as("v"))
-    var c: DataFrame = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("c"))
-    var cH: DataFrame = null // direct handle of the last block checkpoint
-    for (r <- 1 to iters) {
-      val nb = adj.join(c, "node")
-        .select(col("v"), col("c").as("nc"))
-      val cells = nb.groupBy("v", "nc").agg(count(lit(1)).as("cnt"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("v").orderBy(desc("nc"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      c = cells
-        .withColumn("cum", sum("cnt").over(w))
-        .groupBy(col("v").as("node"))
-        .agg(max(least(col("nc"), col("cum"))).as("c"))
-      if (r % CorenessLazyBlock == 0 || r == iters) {
-        val prev = cH
-        cH = ck.ckpt(c)
-        c = cH
-        if (prev != null) ck.free(prev)
-      }
+    // the rounds are a single-consumer chain, run lazily in blocks of
+    // [[CorenessLazyBlock]] between checkpoints: one barrier per block
+    // keeps AQE's replan cost flat in the chain depth
+    val c = Checkpoints.iterate(iters)(
+        _ => e.groupBy(col("src").as("node")).agg(count(lit(1)).as("c")))(_ => false) {
+      (s, c, r) =>
+        val nb = adj.join(c, "node")
+          .select(col("v"), col("c").as("nc"))
+        val cells = nb.groupBy("v", "nc").agg(count(lit(1)).as("cnt"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("v").orderBy(desc("nc"))
+          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+        val next = cells
+          .withColumn("cum", sum("cnt").over(w))
+          .groupBy(col("v").as("node"))
+          .agg(max(least(col("nc"), col("cum"))).as("c"))
+        if (r % CorenessLazyBlock == 0 || r == iters) s.ckpt(next) else next
     }
     c.select(col("node"), col("c").as("coreness")).orderBy("node")
   }
@@ -1856,7 +1742,7 @@ object Graph {
     * so floor = truncate on both engines — and all sums are exact
     * longs with the products in DECIMAL(38,0)/HUGEINT. Same per-round
     * shuffle shape as pagerank (join on the node id, partial-agg sum),
-    * per-round `localCheckpoint` + [[Checkpoints.Scope.free]]. */
+    * per-round `localCheckpoint` in [[Checkpoints.iterate]]. */
   private[graft] def hitsOn(edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
     val e = ck.ckpt(edgesDf
       .filter(col("src") =!= col("dst"))
@@ -1873,19 +1759,17 @@ object Graph {
             |ELSE CAST((CAST(coalesce(raw, 0) AS DECIMAL(38,0)) * 1000000)
             |          div tot AS BIGINT) END""".stripMargin).as("s"))
     }
-    var hub  = ck.ckpt(nodes.select(col("node"), lit(1000000L).as("s")))
-    var auth = hub
-    for (i <- 1 to iters) {
-      val prevAuth = auth
-      auth = ck.ckpt(normalized(e
+    // state: (hub, auth)
+    val (hub, auth) = Checkpoints.iterate(iters) { s =>
+      val seed = s.ckpt(nodes.select(col("node"), lit(1000000L).as("s")))
+      (seed, seed)
+    }(_ => false) { case (s, (hub, _), _) =>
+      val auth = s.ckpt(normalized(e
         .join(hub.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node")).agg(sum("s").as("raw"))))
-      if (i > 1) ck.free(prevAuth) // round 1's "prev" is hub's alias
-      val prevHub = hub
-      hub = ck.ckpt(normalized(e
+      (s.ckpt(normalized(e
         .join(auth.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(sum("s").as("raw"))))
-      ck.free(prevHub)
+        .groupBy(col("src").as("node")).agg(sum("s").as("raw")))), auth)
     }
     ck.ckpt(hub.withColumnRenamed("s", "hub_micros")
       .join(auth.withColumnRenamed("s", "auth_micros"), "node")
@@ -2087,8 +1971,8 @@ object Graph {
     * Scale shape: every step is an equi-join on the node key against
     * the (src, dst) long-pair edge table plus a partial-aggregated min
     * — the sssp/lpa family shape, same reused hash partitioning every
-    * round. Per-round `localCheckpoint` + `Scope.free` keeps the
-    * plan and storage constant; the only driver state is loop-control
+    * round. Per-round `localCheckpoint` in [[Checkpoints.iterate]] keeps
+    * the plan and storage constant; the only driver state is loop-control
     * booleans/counts (bounded metadata). Output: node, scc_id (= min
     * node id in the component), scc_size. */
   def sccComponents(spark: SparkSession, dir: String): DataFrame =
@@ -2097,91 +1981,68 @@ object Graph {
   /** SCC over an arbitrary directed (src, dst) edge list — split out so
     * specs can drive it with hand-checkable graphs (incl. the
     * label-pair counterexample). */
-  private[graft] def sccComponentsOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { ck =>
+  private[graft] def sccComponentsOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { _ =>
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    var e = ck.ckpt(edgesDf.select(col("src"), col("dst")).distinct()
-      .filter(col("src") =!= col("dst")))
-    var done = ck.ckpt(Seq.empty[(Long, Long)].toDF("node", "scc_id"))
-    var active = ck.ckpt(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    while (!active.isEmpty) {
+    // `e` restricted to the nodes of `active`
+    def induced(e: DataFrame, active: DataFrame): DataFrame =
+      e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+        .join(active.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+        .select(col("src"), col("dst"))
+    // state: (edges, retired (node, scc_id), active nodes)
+    val (_, done, _) = Checkpoints.iterate(Int.MaxValue) { s =>
+      val e = s.ckpt(edgesDf.select(col("src"), col("dst")).distinct()
+        .filter(col("src") =!= col("dst")))
+      (e, s.ckpt(Seq.empty[(Long, Long)].toDF("node", "scc_id")),
+        s.ckpt(e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()))
+    }(_._3.isEmpty) { case (s, (e0, done0, active0), _) =>
       // ---- trim fixpoint: nodes missing an in- OR out-edge in the
       // induced subgraph are singleton SCCs
-      var trimming = true
-      while (trimming && !active.isEmpty) {
-        val keep = ck.ckpt(active
-          .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
-          .join(e.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi"))
-        val peel = active.join(keep, Seq("node"), "left_anti")
-          .select(col("node"), col("node").as("scc_id"))
-        val nPeel = peel.count()
-        if (nPeel == 0L) {
-          ck.free(keep)
-          trimming = false
-        } else {
-          val prevDone = done; val prevActive = active; val prevE = e
-          done = ck.ckpt(done.union(peel))
-          active = keep
-          e = ck.ckpt(e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-            .join(active.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")))
-          ck.free(prevDone); ck.free(prevActive); ck.free(prevE)
-        }
+      val (e, done, active, _) = Checkpoints.iterate(Int.MaxValue)(
+          _ => (e0, done0, active0, true))(st => !st._4 || st._3.isEmpty) {
+        case (t, (e, done, active, _), _) =>
+          val keep = t.ckpt(active
+            .join(e.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
+            .join(e.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi"))
+          val peel = active.join(keep, Seq("node"), "left_anti")
+            .select(col("node"), col("node").as("scc_id"))
+          if (peel.count() == 0L) (e, done, active, false)
+          else {
+            val nextDone = t.ckpt(done.union(peel))
+            (t.ckpt(induced(e, keep)), nextDone, keep, true)
+          }
       }
-      if (!active.isEmpty) {
-        // ---- forward min-label coloring to fixpoint. Change detection
-        // RIDES the round checkpoint (round 22, the mstForestOn inner-
-        // loop convention): the old color stays aboard as a column, so
-        // convergence is one cheap filter-count over the materialized
-        // checkpoint instead of a second join-shuffle job per
-        // iteration (node-sized exchange × 2, every round).
-        var colorsCkpt = ck.ckpt(active.select(col("node"), col("node").as("color")))
-        var colors = colorsCkpt // (node, color) view over the handle
-        var coloring = true
-        while (coloring) {
+      if (active.isEmpty) (e, done, active)
+      else {
+        // ---- forward min-label coloring to fixpoint; change detection
+        // rides the round checkpoint (the old color kept as a column)
+        val (colors, _) = Checkpoints.iterate(Int.MaxValue) { t =>
+          (t.ckpt(active.select(col("node"), col("node").as("color"))), true)
+        }(!_._2) { case (t, (colors, _), _) =>
           val offers = colors.join(e, col("node") === col("src"))
             .select(col("dst").as("node"), col("color").as("c2"))
             .groupBy("node").agg(min("c2").as("c2"))
-          val next = ck.ckpt(colors.join(offers, Seq("node"), "left")
+          val next = t.ckpt(colors.join(offers, Seq("node"), "left")
             .select(col("node"), col("color").as("old"),
               least(col("color"), coalesce(col("c2"), col("color"))).as("color")))
-          val changed = next.filter(col("color") < col("old")).count()
-          ck.free(colorsCkpt)
-          colorsCkpt = next
-          colors = next.select(col("node"), col("color"))
-          coloring = changed > 0L
+          (next.select(col("node"), col("color")), next.filter(col("color") < col("old")).count() > 0L)
         }
         // ---- backward sweep inside each color class from its root
-        var reached = ck.ckpt(colors.filter(col("node") === col("color")))
-        var frontier = reached
-        var sweeping = true
-        while (sweeping) {
+        val (reached, _, _) = Checkpoints.iterate(Int.MaxValue) { t =>
+          val roots = t.ckpt(colors.filter(col("node") === col("color")))
+          (roots, roots, true)
+        }(!_._3) { case (t, (reached, frontier, _), _) =>
           val preds = frontier.join(e, col("node") === col("dst"))
             .select(col("src").as("node"), col("color").as("fc")).distinct()
           val sameColor = preds.join(colors, Seq("node"))
             .filter(col("fc") === col("color")).select(col("node"), col("color"))
-          val fresh = ck.ckpt(sameColor.join(reached, Seq("node"), "left_anti"))
-          if (fresh.isEmpty) {
-            ck.free(fresh)
-            sweeping = false
-          } else {
-            val prevReached = reached; val prevFrontier = frontier
-            reached = ck.ckpt(reached.union(fresh))
-            frontier = fresh
-            ck.free(prevReached)
-            if (prevFrontier ne prevReached) ck.free(prevFrontier)
-          }
+          val fresh = t.ckpt(sameColor.join(reached, Seq("node"), "left_anti"))
+          if (fresh.isEmpty) (reached, frontier, false)
+          else (t.ckpt(reached.union(fresh)), fresh, true)
         }
-        if (frontier ne reached) ck.free(frontier)
-        val prevDone = done; val prevActive = active; val prevE = e
-        done = ck.ckpt(done.union(reached.select(col("node"), col("color").as("scc_id"))))
-        active = ck.ckpt(active.join(reached, Seq("node"), "left_anti"))
-        e = ck.ckpt(e.join(active.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(active.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")))
-        ck.free(reached); ck.free(colorsCkpt)
-        ck.free(prevDone); ck.free(prevActive); ck.free(prevE)
+        val nextDone = s.ckpt(done.union(reached.select(col("node"), col("color").as("scc_id"))))
+        val nextActive = s.ckpt(active.join(reached, Seq("node"), "left_anti"))
+        (s.ckpt(induced(e, nextActive)), nextDone, nextActive)
       }
     }
     val sizes = done.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))

@@ -474,24 +474,13 @@ object TextAnalysis {
       // compact bytes keep more of it resident and bound the transient
        // feeds every half-step
     mark("cells checkpoint")
-    var v = ck.ckpt(cells.select(col("term")).distinct()
-      .select(col("term"), lit(1000000L).as("v")))
-    // Round-22: checkpoint the PRE-normalization aggregates u0/v0, not
-    // the normalized vectors. The r21 fully-lazy sweep relied on
-    // ReuseExchange to dedupe u0's two plan arms (max arm + stream arm)
-    // — under AQE that reuse is not guaranteed across independently
-    // re-optimized stages, and the driver's cold bench measured the
-    // sweep 0.84× (VERDICT r21 #3: the cells⋈v join likely ran twice).
-    // The r20 shape (checkpoint the normalized u) still ran u0 twice
-    // INSIDE the one checkpoint job, because the uMax broadcast arm
-    // recomputes the aggregate. Checkpointing u0 itself makes each
-    // cells join run exactly once per sweep: the max arm and the
-    // normalized projection are both cheap doc-/vocab-sized lazy reads
-    // of the checkpoint.
-    var v0Ckpt: DataFrame = null
-    (1 to LsaIters).foreach { it =>
+    // each sweep checkpoints the PRE-normalization aggregates u0/v0, so
+    // each cells join runs exactly once: the max arm and the normalized
+    // projection are cheap lazy reads of the checkpoint
+    val v = Checkpoints.iterate(LsaIters)(s => s.ckpt(cells.select(col("term")).distinct()
+      .select(col("term"), lit(1000000L).as("v"))))(_ => false) { (s, v, it) =>
       // doc-sized; feeds the max arm + the v half-step
-      val u0 = ck.ckpt(cells.join(v, "term")
+      val u0 = s.ckpt(cells.join(v, "term")
         .groupBy("doc_id")
         .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * v) div 1000000 AS DECIMAL(38,0))").as("u")))
       val uMax = u0.agg(max("u").as("m"))
@@ -499,19 +488,13 @@ object TextAnalysis {
         .select(col("doc_id"),
           expr("CAST((u * 1000000) div m AS BIGINT)").as("u"))
       // vocab-sized; feeds the max arm + next sweep
-      val v0 = ck.ckpt(cells.join(u, "doc_id")
+      val v0 = s.ckpt(cells.join(u, "doc_id")
         .groupBy("term")
         .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * u) div 1000000 AS DECIMAL(38,0))").as("vv")))
       val vMax = v0.agg(max("vv").as("m"))
-      val prev = v
-      val prevV0 = v0Ckpt
-      v = v0.crossJoin(broadcast(vMax))
-        .select(col("term"), expr("CAST((vv * 1000000) div m AS BIGINT)").as("v"))
-      v0Ckpt = v0
-      if (it == 1) ck.free(prev) // the seed-v checkpoint
-      if (prevV0 != null) ck.free(prevV0) // superseded sweep
-      ck.free(u0) // dead once v0 materialized
       mark(s"sweep $it")
+      v0.crossJoin(broadcast(vMax))
+        .select(col("term"), expr("CAST((vv * 1000000) div m AS BIGINT)").as("v"))
     }
     // the output is lazy over the final v0 checkpoint only; the scope
     // frees the cell table (the query's whole memory story)
@@ -1961,45 +1944,28 @@ object TextAnalysis {
     * round's job. Early-exits when no pair remains. Returns the
     * merge list (round, pair, n) and the final symbol table. */
   private[graft] def bpeTrainLoop(
-      sym0: DataFrame, rounds: Int): (Seq[(Int, String, Long)], DataFrame) = Checkpoints.scope { ck =>
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    var sym = sym0
-    // the round superseded when `sym` was last rewritten; freeable only
-    // once the successor MATERIALIZES (the lazy checkpoint rides the
-    // next round's job), so the free sits after the collect below
-    var prevSym: DataFrame = null
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      // NOT pairCounts(): that helper localCheckpoints (it feeds two
-      // consumers in bpePairs); here the counts feed exactly one top-1
-      // collect, so materializing them would add a per-round job
+      sym0: DataFrame, rounds: Int): (Seq[(Int, String, Long)], DataFrame) = {
+    // state: (merges so far, symbol table, exhausted)
+    val (merges, sym, _) = Checkpoints.iterate(rounds)(
+        _ => (Vector.empty[(Int, String, Long)], sym0, false))(_._3) { case (s, (merges, sym, _), r) =>
+      // not pairCounts(): the counts feed one top-1 collect here, so
+      // checkpointing them would add a job per round
       val top = sym
         .select(explode(TextFunctions.symbolPairsCol(col("s"))).as("pair"), col("f"))
         .groupBy("pair").agg(sum("f").as("n"))
         .orderBy(desc("n"), col("pair")).limit(1).collect()
-      // that job materialized sym's checkpoint — the superseded round's
-      // vocabulary-sized blocks are dead now (the caller's sym0 is not
-      // this scope's, so freeing it is a no-op)
-      if (prevSym ne null) ck.free(prevSym)
-      prevSym = null
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) (merges, sym, true)
       else {
         val pair = top(0).getString(0)
-        out += ((r, pair, top(0).getLong(1)))
         val pat = "<" + pair.replace(" ", "><") + ">"
         val rep = "<" + pair.replace(" ", "") + ">"
-        // lazy checkpoint: plan truncates to LogicalRDD immediately, but
-        // materialization rides the NEXT round's pair-count job instead
-        // of paying a dedicated job per round (20 jobs, not 40)
-        prevSym = sym
-        sym = ck.lazyCkpt(sym.withColumn("s", replace(col("s"), lit(pat), lit(rep))))
-        r += 1
+        // lazy checkpoint: the plan truncates now, and the next round's
+        // pair-count job materializes it (one job a round, not two)
+        (merges :+ ((r, pair, top(0).getLong(1))),
+          s.lazyCkpt(sym.withColumn("s", replace(col("s"), lit(pat), lit(rep)))), false)
       }
     }
-    // the final prevSym stays: the returned sym's lazy checkpoint still
-    // reads it, so the scope keeps both
-    (out.toSeq, sym)
+    (merges, sym)
   }
 
   /** BPE TRAIN — the merges.txt artifact a tokenizer ships: the first

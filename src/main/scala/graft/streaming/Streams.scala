@@ -155,31 +155,33 @@ object Streams {
     * Scale: state is open-windows only, the staging is fixture
     * plumbing, and the drop rule is the same O(1) per-row filter the
     * engine applies at any volume. */
-  def runBoundedLateDrops(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+  def runBoundedLateDrops(spark: SparkSession, dir: String): DataFrame =
     graft.ops.withTempDir("graft-late") { tmp =>
-      // three filtered writes + the carrier agg
-      val events = ck.ckpt(graft.tables.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value"))
-      val onTime  = events.filter(col("event_id") % 5 =!= 0)
-      // 1 row; anti-joined against the A file
-      val carrier = ck.ckpt(onTime.orderBy(desc("ts"), desc("event_id")).limit(1))
-      def stage(name: String, df: DataFrame, mtime: Long): Unit = {
-        val d = s"$tmp/stage_$name"
-        df.coalesce(1).write.parquet(d)
-        val part = new java.io.File(d).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(s"$tmp/src/$name.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(mtime)
-        ()
+      // the staging scope returns nothing, so its checkpoints free on exit
+      Checkpoints.scope { st =>
+        // three filtered writes + the carrier agg
+        val events = st.ckpt(graft.tables.Tables.events(spark, dir)
+          .select("event_id", "ts", "user_id", "event_type", "value"))
+        val onTime  = events.filter(col("event_id") % 5 =!= 0)
+        // 1 row; anti-joined against the A file
+        val carrier = st.ckpt(onTime.orderBy(desc("ts"), desc("event_id")).limit(1))
+        def stage(name: String, df: DataFrame, mtime: Long): Unit = {
+          val d = s"$tmp/stage_$name"
+          df.coalesce(1).write.parquet(d)
+          val part = new java.io.File(d).listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          val dst = new java.io.File(s"$tmp/src/$name.parquet")
+          dst.getParentFile.mkdirs()
+          java.nio.file.Files.move(part.toPath, dst.toPath)
+          dst.setLastModified(mtime)
+          ()
+        }
+        stage("a_ontime", onTime.join(
+          carrier.select(col("event_id").as("cid")),
+          col("event_id") === col("cid"), "left_anti"), 1000000L)
+        stage("b_carrier", carrier, 2000000L)
+        stage("c_late", events.filter(col("event_id") % 5 === 0), 3000000L)
       }
-      stage("a_ontime", onTime.join(
-        carrier.select(col("event_id").as("cid")),
-        col("event_id") === col("cid"), "left_anti"), 1000000L)
-      stage("b_carrier", carrier, 2000000L)
-      stage("c_late", events.filter(col("event_id") % 5 === 0), 3000000L)
-      ck.free(events)
       val src = spark.readStream
         .schema(spark.read.parquet(s"$tmp/src").schema)
         .option("maxFilesPerTrigger", 1)
@@ -188,7 +190,6 @@ object Streams {
         tumblingAgg(src.withWatermark("ts", "10 minutes")),
         OutputMode.Update(), Seq("ws_ms", "event_type", "n"))
     }
-  }
 
   /** Stream-static enrichment through the engine, driver-checked: each
     * micro-batch of the bounded events stream broadcast-joins the

@@ -154,6 +154,105 @@ class CheckpointsSpec extends SparkSpec {
     assert(spark.conf.get(aqe) == "true", "a concurrent flip left AQE disabled")
   }
 
+  test("iterate frees a superseded round once its successor is in the state") {
+    val base  = persistentIds
+    val ids   = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val alive = scala.collection.mutable.ArrayBuffer.empty[Set[Int]]
+    val last = Checkpoints.iterate(4)(s => { val a = s.ckpt(table(10)); ids += rddId(a); a })(_ => false) {
+      (s, prev, r) =>
+        alive += ids.toSet & persistentIds
+        // a nested scope's result belongs to the loop like any other
+        val next =
+          if (r % 2 == 0) s.ckpt(prev.select((col("x") + 1).as("x")))
+          else Checkpoints.scope(t => t.ckpt(prev.select((col("x") + 1).as("x"))))
+        ids += rddId(next)
+        next
+    }
+    assert(alive.toSeq == ids.init.map(Set(_)).toSeq,
+      "each round should start with only its predecessor alive")
+    assert((persistentIds -- base) == Set(rddId(last)))
+    assert(last.agg(sum("x")).head().getLong(0) == 85L)
+  }
+
+  test("iterate keeps a lazy successor's predecessor until it materializes") {
+    val base = persistentIds
+    var seedId, lazyId = -1
+    var seedAliveInRound2 = false
+    val last = Checkpoints.iterate(2)(s => { val a = s.ckpt(table(10)); seedId = rddId(a); a })(_ => false) {
+      (s, prev, r) =>
+        if (r == 2) {
+          seedAliveInRound2 = persistentIds.contains(seedId)
+          assert(prev.count() == 10L) // materializes the lazy round
+        }
+        val next = s.lazyCkpt(prev.select((col("x") + 1).as("x")))
+        if (r == 1) lazyId = rddId(next)
+        next
+    }
+    assert(seedAliveInRound2, "the unmaterialized lazy round lost its input")
+    assert(!persistentIds.contains(seedId), "the seed outlived its materialized successor")
+    assert(persistentIds.contains(lazyId), "the final lazy round lost its input")
+    assert(last.agg(sum("x")).head().getLong(0) == 65L)
+    assert((persistentIds -- base) == Set(lazyId, rddId(last)))
+  }
+
+  test("iterate keeps every round a union-accumulating state reads") {
+    val base = persistentIds
+    val ids  = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val all = Checkpoints.iterate(3)(s => { val a = s.ckpt(table(3)); ids += rddId(a); a })(_ => false) {
+      (s, acc, r) =>
+        val round = s.ckpt(table(3).select((col("x") + r * 10).as("x")))
+        ids += rddId(round)
+        acc.union(round)
+    }
+    assert((persistentIds -- base) == ids.toSet)
+    assert(all.count() == 12L)
+  }
+
+  test("iterate owns what init takes: unread at once, superseded at round end") {
+    var deadId, seedId = -1
+    var deadInRound1, seedInRound1 = true
+    Checkpoints.scope { _ =>
+      Checkpoints.iterate(2) { s =>
+        deadId = rddId(s.ckpt(table(5)))
+        val seed = s.ckpt(table(6))
+        seedId = rddId(seed)
+        seed
+      }(_ => false) { (s, prev, r) =>
+        if (r == 1) { deadInRound1 = persistentIds.contains(deadId); seedInRound1 = persistentIds.contains(seedId) }
+        s.ckpt(prev.filter(col("x") > 0))
+      }
+      assert(!persistentIds.contains(seedId), "the superseded seed passed to the enclosing scope")
+      ()
+    }
+    assert(!deadInRound1, "init's unread checkpoint outlived init")
+    assert(seedInRound1, "the state's checkpoint was freed")
+  }
+
+  test("iterate with a throwing step leaves no loop-owned id") {
+    val base = persistentIds
+    val ex = intercept[IllegalStateException] {
+      Checkpoints.iterate(5)(s => s.ckpt(table(10)))(_ => false) { (s, prev, r) =>
+        val next = s.ckpt(prev.select((col("x") + 1).as("x")))
+        Checkpoints.scope(t => t.ckpt(next.filter(col("x") > 3)))
+        if (r == 2) throw new IllegalStateException("boom")
+        next
+      }
+    }
+    assert(ex.getMessage == "boom")
+    assert((persistentIds -- base).isEmpty, s"failed loop left ${persistentIds -- base}")
+  }
+
+  test("iterate checks the round bound before calling done") {
+    var calls = 0
+    val rounds = Checkpoints.iterate(3)(_ => 0)(_ => { calls += 1; false })((_, n, _) => n + 1)
+    assert(rounds == 3 && calls == 3, s"$rounds rounds, $calls done calls")
+    calls = 0
+    assert(Checkpoints.iterate(0)(_ => 0)(_ => { calls += 1; false })((_, n, _) => n + 1) == 0)
+    assert(calls == 0)
+    // done stops the loop before the round it rejects
+    assert(Checkpoints.iterate(10)(_ => 0)(_ >= 4)((_, n, _) => n + 1) == 4)
+  }
+
   test("Artifacts.memo: two threads on one key build once; clearCache frees the build") {
     Artifacts.clearCache()
     val base   = persistentIds
@@ -180,14 +279,17 @@ class CheckpointsSpec extends SparkSpec {
 
   test("no bare checkpoint, free, artifact cache or thread pool outside the owners") {
     val owners  = Set("Checkpoints.scala", "Artifacts.scala")
-    val banned  = Seq(".localCheckpoint(", "Checkpoints.free(", "TrieMap", "newFixedThreadPool")
+    val banned  = Seq(".localCheckpoint(", "Checkpoints.free(", "TrieMap", "newFixedThreadPool",
+      ".unpersist(", ".cache()", ".persist(")
+    def comment(line: String) = Seq("//", "*", "/*").exists(line.trim.startsWith)
     val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     val hits =
       try sources.iterator().asScala
         .filter(p => p.toString.endsWith(".scala") && !owners(p.getFileName.toString))
         .flatMap { p =>
           java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+            case (line, i) if !comment(line) && banned.exists(line.contains) =>
+              s"$p:${i + 1}: ${line.trim}"
           }
         }.toList
       finally sources.close()

@@ -576,6 +576,85 @@ class GraphSpec extends SparkSpec {
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** Peak count of persistent RDDs created since `run` started, sampled
+    * at every job start. A marker job after `run` proves the listener
+    * has seen every earlier job before the peak is read. */
+  private def peakNewPersistent(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc     = spark.sparkContext
+    val base   = persistentIds
+    val peak   = new java.util.concurrent.atomic.AtomicInteger(0)
+    val key    = "graft.peak.marker"
+    val marker = java.util.UUID.randomUUID().toString
+    val seen   = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit = {
+        peak.accumulateAndGet((persistentIds -- base).size, math.max)
+        if (Option(job.properties).exists(_.getProperty(key) == marker)) seen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      run
+      sc.setLocalProperty(key, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    peak.get
+  }
+
+  test("checkpoint storage stays flat while an iterative operator runs") {
+    // the scope census above only sees what an operator leaves behind;
+    // this pins what piles up DURING the walk. Every graph keeps
+    // changing for every round of the large bound, so an operator that
+    // kept its superseded rounds would peak higher there.
+    val path   = (1L to 24L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val dpath  = path.toDF("src", "dst")
+    val wpath  = undirected(path.map { case (a, b) => (a, b, 1L + a % 3) })
+    // triangular lattice 8x8: the 4-truss peel strips one layer a round
+    // for 8 rounds before it empties
+    def at(i: Long, j: Long) = i * 8 + j + 1
+    val lattice = (for {
+      i <- 0L until 8L; j <- 0L until 8L
+      (di, dj) <- Seq((0L, 1L), (1L, 0L), (1L, 1L)) if i + di < 8 && j + dj < 8
+    } yield (at(i, j), at(i + di, j + dj))).toDF("u", "v")
+    // a chain of 2-cycles: trim peels nothing, so the coloring and sweep
+    // rounds retire one cycle per outer round
+    def cycles(n: Long) = (1L to n).flatMap { c =>
+      val (a, b) = (2 * c - 1, 2 * c)
+      Seq((a, b), (b, a)) ++ (if (c < n) Seq((b, b + 1)) else Nil)
+    }.toDF("src", "dst")
+    def chain(n: Long) = {
+      val es = (1L until n).map(i => (i, i + 1))
+      (es ++ es.map(_.swap)).toDF("src", "dst")
+    }
+    // one 12-letter word: every round merges one more pair into it
+    val word = Seq(("<a><b><c><d><e><f><g><h><i><j><k><l>", 1L)).toDF("s", "f")
+    val ops: Seq[(String, Int, Int, Int => Unit)] = Seq(
+      ("pagerank", 2, 8, r => { Graph.pageRankOn(dpath, r, materialize = true).collect(); () }),
+      ("ppr", 2, 8, r => { Graph.pprOn(dpath, r).collect(); () }),
+      ("hits", 2, 8, r => { Graph.hitsOn(dpath, r).collect(); () }),
+      ("sssp", 2, 8, r => { Graph.ssspOn(wpath, 1L, r).collect(); () }),
+      ("kcore", 2, 8, r => { Graph.kcoreOn(dpath, 2, r).collect(); () }),
+      // past one lazy block at both bounds: a block checkpoint supersedes
+      // the last, so both runs hold two at once
+      ("coreness", 5, 12, r => { Graph.corenessOn(dpath, r).collect(); () }),
+      ("k_truss", 2, 8, r => { Graph.kTrussOn(lattice, 4, r).collect(); () }),
+      ("scc", 2, 6, n => { Graph.sccComponentsOn(cycles(n.toLong)).collect(); () }),
+      ("cc", 4, 16, n => { graft.ops.Dedup.ccOn(chain(n.toLong)).collect(); () }),
+      // lazy rounds: each keeps its predecessor only until it materializes
+      ("bpe", 2, 8, r => { graft.ops.TextAnalysis.bpeTrainLoop(word, r)._2.collect(); () }))
+    ops.foreach { case (name, small, large, run) =>
+      val low  = peakNewPersistent(run(small))
+      val high = peakNewPersistent(run(large))
+      assert(low > 0, s"$name: no checkpoint sampled")
+      assert(high <= low, s"$name: peak grew with rounds: $low at $small, $high at $large")
+    }
+  }
+
   test("artifact-cache eviction frees its checkpoint blocks (freeIfLive, live branch)") {
     // Artifacts.clearCache must free every checkpoint an artifact build
     // left alive — the label table the memo holds AND the build's
