@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The spec's second canonical client (`MapReduceEX.pdf` pp.3-4, O17):
   * wordcount over text files. Map: (path, line) → (word, 1) per word;
-  * Reduce: sum per word; output sorted by word (kernel guarantee §1.3).
+  * Reduce: sum per word, with sum as the map-side combiner; output
+  * sorted by word (kernel guarantee §1.3).
   *
   * Usage: WordCountMain <file-or-dir ...> — reads each path with the
   * text source (a directory reads all its files). Prints "word count"
@@ -20,7 +21,8 @@ object WordCountMain {
       .map(l => ("", l)) // k1 unused, like the reference's wordcount sketch
     MapReduce.run(lines)(
       map = (_, line) => line.split("\\s+").iterator.filter(_.nonEmpty).map(w => (w, 1L)))(
-      reduce = (word, ones) => Iterator.single((word, ones.sum)))
+      reduce = (word, counts) => Iterator.single((word, counts.sum)),
+      combine = Some(_ + _))
       .collect().toSeq
   }
 

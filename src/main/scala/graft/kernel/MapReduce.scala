@@ -1,6 +1,7 @@
 package graft.kernel
 
 import org.apache.spark.sql.{Dataset, Encoder}
+import scala.jdk.CollectionConverters._
 
 /** The faithful, generic MapReduce surface of the reference engine,
   * re-expressed on typed Datasets.
@@ -21,6 +22,16 @@ import org.apache.spark.sql.{Dataset, Encoder}
   *     shuffle-read order) — user reduce functions must not depend on it,
   *     exactly as in the reference.
   *
+  * Optional combiner (Dean & Ghemawat, OSDI 2004 §4.3; the reference has
+  * none): `combine` must be associative and commutative. With it, each
+  * map task folds its emitted pairs per k2 before the shuffle, so
+  * `reduce` sees combined partials — still once per distinct k2, but
+  * over fewer values, whose number depends on the partitioning. Only a
+  * `reduce` that folds its values with the same `combine` (sum, max, set
+  * union) returns the same output either way. The typed `groupByKey`
+  * has no map-side combine of its own; without `combine` every emitted
+  * pair is shuffled.
+  *
   * What the reference hand-builds — ExecMap/ExecReduce thread pools,
   * chunked work-stealing, per-thread emit buffers, the shuffler thread,
   * the gather step (`MapReduceFramework.cpp:317-374,409-467,476-519,
@@ -31,6 +42,14 @@ import org.apache.spark.sql.{Dataset, Encoder}
   */
 object MapReduce {
 
+  /** Distinct k2 a map task holds before it emits its partials and starts
+    * a fresh table. Invariant: a task's combine table never holds more
+    * entries than this, whatever its input; the output does not depend on
+    * it, because `reduce` merges partials of one key from any number of
+    * flushes and tasks.
+    */
+  private[graft] val CombineFlushEntries = 1 << 16
+
   /** `runMapReduceFramework` ≙ `run`; `Emit2`/`Emit3` ≙ the iterables
     * returned by `map`/`reduce`; `multiThreadLevel` ≙ parallelism of the
     * underlying stages.
@@ -38,11 +57,18 @@ object MapReduce {
   def run[K1, V1, K2, V2, K3, V3](
       input: Dataset[(K1, V1)])(
       map: (K1, V1) => IterableOnce[(K2, V2)])(
-      reduce: (K2, Iterator[V2]) => IterableOnce[(K3, V3)])(implicit
+      reduce: (K2, Iterator[V2]) => IterableOnce[(K3, V3)],
+      combine: Option[(V2, V2) => V2] = None)(implicit
       k2Enc: Encoder[K2],
       kv2Enc: Encoder[(K2, V2)],
       kv3Enc: Encoder[(K3, V3)]): Dataset[(K3, V3)] = {
-    val mapped  = input.flatMap { kv => map(kv._1, kv._2) }
+    val mapped = combine match {
+      case None    => input.flatMap { kv => map(kv._1, kv._2) }
+      case Some(c) =>
+        input.mapPartitions { rows =>
+          combineLocally(rows.flatMap(kv => map(kv._1, kv._2)), c)
+        }
+    }
     val reduced = mapped
       .groupByKey(_._1)
       .flatMapGroups { (k2: K2, pairs: Iterator[(K2, V2)]) =>
@@ -53,4 +79,26 @@ object MapReduce {
     // the reference's operator< composition for compound keys.
     reduced.orderBy("_1")
   }
+
+  /** In-mapper combining: folds `pairs` per key into a hash table and
+    * emits (k2, partial) whenever the table reaches
+    * [[CombineFlushEntries]] keys, and once more at the end. The table
+    * keys on JVM `equals`, which never joins two keys that Spark's
+    * grouping keeps apart; it may only join fewer (`Array` keys compare
+    * by identity, `0.0` and `-0.0` differ), and `reduce` merges those
+    * partials anyway.
+    */
+  private def combineLocally[K, V](pairs: Iterator[(K, V)], combine: (V, V) => V): Iterator[(K, V)] =
+    Iterator.unfold(pairs) { rest =>
+      Option.when(rest.hasNext) {
+        val acc = new java.util.HashMap[K, V]()
+        while (rest.hasNext && acc.size < CombineFlushEntries) {
+          val (k, v) = rest.next()
+          val prev   = acc.get(k)
+          // a stored null partial is still a partial
+          acc.put(k, if (prev == null && !acc.containsKey(k)) v else combine(prev, v))
+        }
+        (acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue)), rest)
+      }
+    }.flatten
 }

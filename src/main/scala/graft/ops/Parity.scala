@@ -57,7 +57,8 @@ object Parity {
       .orderBy("word")
 
   /** Wordcount through the typed kernel: Map = split+emit 1s, Reduce =
-    * sum — the PDF's exact dataflow, opaque-callback style.
+    * sum — the PDF's exact dataflow, opaque-callback style — with sum as
+    * the combiner, so each map task ships one partial count per word.
     */
   def wordcountKernel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -66,7 +67,8 @@ object Parity {
       .as[(Long, String)]
     MapReduce.run(docs)(
       map = (_, text) => text.split(" ").iterator.filter(_.nonEmpty).map(w => (w, 1L)))(
-      reduce = (word, ones) => Iterator.single((word, ones.sum)))
+      reduce = (word, counts) => Iterator.single((word, counts.sum)),
+      combine = Some(_ + _))
       .toDF("word", "cnt")
   }
 

@@ -183,7 +183,8 @@ object Streams {
         stage("c_late", events.filter(col("event_id") % 5 === 0), 3000000L)
       }
       val src = spark.readStream
-        .schema(spark.read.parquet(s"$tmp/src").schema)
+        // the staged files share one schema: read it off one footer
+        .schema(graft.tables.Tables.schemaOf(spark, s"$tmp/src/a_ontime.parquet"))
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$tmp/src")
       runBounded(spark, "stream_late_drops",

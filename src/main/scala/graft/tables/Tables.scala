@@ -1,7 +1,15 @@
 package graft.tables
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -14,6 +22,11 @@ import org.apache.spark.sql.functions._
   *    branches on the type Spark actually inferred and converts both to
   *    a proper TimestampType (micros) so downstream operators see one
   *    stable schema regardless of how the driver regenerated the files.
+  *
+  * Schemas come from the parquet footer, read on the driver with the
+  * session's converter flags ([[schemaOf]]): building a query's plan runs
+  * no Spark job. There is no schema memo, so a file rewritten in place is
+  * read with its new schema.
   *
   * Scale note: these are plain columnar parquet scans — filter pushdown
   * and column pruning reach the scan, and at cluster scale the same code
@@ -29,8 +42,34 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case other    => spark.read.parquet(path(dir, other))
+      case other    => read(spark, path(dir, other))
     }
+
+  /** Spark's schema for the parquet file at `p`, from its footer alone,
+    * by the rule Spark's inference applies to one footer: the Spark schema
+    * a Spark writer stored in the file's metadata, else the parquet schema
+    * converted with the session's flags (`nanosAsLong` among them). Unlike
+    * inference, it starts no job. A path that is not a single file (a
+    * directory tree, a glob, a missing path) falls back to inference.
+    */
+  def schemaOf(spark: SparkSession, p: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(p)
+    Try(path.getFileSystem(conf).getFileStatus(path)).toOption.filter(_.isFile) match {
+      case Some(file) =>
+        val meta = ParquetFooterReader
+          .readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS).getFileMetaData
+        Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+          .flatMap(json => Try(DataType.fromJson(json)).toOption)
+          .collect { case s: StructType => s }
+          .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+      case None => spark.read.parquet(p).schema
+    }
+  }
+
+  /** The parquet file at `p`, with its schema from [[schemaOf]]. */
+  private def read(spark: SparkSession, p: String): DataFrame =
+    spark.read.schema(schemaOf(spark, p)).parquet(p)
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
@@ -81,7 +120,7 @@ object Tables {
     // Harmless for micros fixtures; required so a TIMESTAMP(NANOS)
     // fixture surfaces as LongType instead of failing the scan.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(path(dir, "events")))
+    normalizeTs(read(spark, path(dir, "events")))
   }
 
   /** The streaming twin of [[events]]: same nanos conf, same schema
@@ -90,10 +129,9 @@ object Tables {
     * oracle's read contract. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path(dir, "events")).schema
     normalizeTs(
       spark.readStream
-        .schema(schema)
+        .schema(schemaOf(spark, path(dir, "events")))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
   }

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import graft.kernel.MapReduce
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -9,6 +13,8 @@ import org.scalacheck.rng.Seed
   *  2. output globally sorted ascending by k3
   *  3. bag multiplicity preserved (nothing deduplicates)
   *  4. Reduce runs exactly once per distinct k2
+  * and the combiner contract: a lawful (associative, commutative)
+  * `combine` leaves the output unchanged and shrinks the map-side shuffle.
   *
   * (scalatestplus isn't in the offline cache, so samples are drawn from
   * ScalaCheck generators with fixed seeds and asserted in plain suites.)
@@ -83,5 +89,111 @@ class KernelLawsSpec extends SparkSpec {
       map = (k, v) => Iterator.single((k, v)))(
       reduce = (k, vs) => vs.map(v => (k, v))).collect()
     assert(out.isEmpty)
+  }
+
+  // ---- combiner (in-mapper combining) ----
+
+  private def partitioned[T: Encoder: scala.reflect.ClassTag](xs: Seq[T], parts: Int): Dataset[T] =
+    spark.createDataset(spark.sparkContext.parallelize(xs, parts))
+
+  /** Runs `body` and returns the shuffle records written by the stages
+    * that read no shuffle (the kernel's map stage) and their task count. */
+  private def mapStageWrites(body: => Unit): (Long, Long) = {
+    val records = new AtomicLong()
+    val tasks   = new AtomicLong()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m.shuffleReadMetrics.recordsRead == 0 && m.shuffleWriteMetrics.recordsWritten > 0) {
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          tasks.addAndGet(e.stageInfo.numTasks.toLong)
+        }
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftbridge.SchedulerBridge.drainListeners(spark.sparkContext)
+      (records.get, tasks.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def sums(ds: Dataset[(String, Int)], combine: Option[(Long, Long) => Long]) =
+    MapReduce.run(ds)(
+      map = (k, v) => Iterator.single((k, v.toLong)))(
+      reduce = (k, vs) => Iterator.single((k, vs.sum)), combine = combine).collect().toList
+
+  test("a lawful combiner leaves the output unchanged (sum, max, set union; 1, 3, 7 partitions)") {
+    for (pairs <- samples(8); parts <- Seq(1, 3, 7)) {
+      val ds = partitioned(pairs, parts)
+      assert(sums(ds, Some(_ + _)) == sums(ds, None))
+
+      def maxes(combine: Option[(Int, Int) => Int]) = MapReduce.run(ds)(
+        map = (k, v) => Iterator.single((k, v)))(
+        reduce = (k, vs) => Iterator.single((k, vs.max)), combine = combine).collect().toList
+      assert(maxes(Some(math.max)) == maxes(None))
+
+      // a set as a sorted distinct Seq; union is associative and commutative
+      val union = (a: Seq[Int], b: Seq[Int]) => (a ++ b).distinct.sorted
+      def unions(combine: Option[(Seq[Int], Seq[Int]) => Seq[Int]]) = MapReduce.run(ds)(
+        map = (k, v) => List((k, Seq(v)), (k + k, Seq(v % 4))))(
+        reduce = (k, vs) => Iterator.single((k, vs.reduce(union))), combine = combine)
+        .collect().toList
+      assert(unions(Some(union)) == unions(None))
+    }
+  }
+
+  test("a combiner leaves compound-key and empty-input outputs unchanged") {
+    for (pairs <- samples(4); parts <- Seq(1, 3, 7)) {
+      val ds = partitioned(pairs, parts)
+      def run(combine: Option[(Long, Long) => Long]) = MapReduce.run(ds)(
+        map = (k, v) => Iterator.single(((k, v % 2), v.toLong)))(
+        reduce = (k, vs) => Iterator.single((k, vs.sum)), combine = combine).collect().toList
+      assert(run(Some(_ + _)) == run(None))
+    }
+    val empty = partitioned(Seq.empty[(String, Int)], 3)
+    assert(sums(empty, Some(_ + _)).isEmpty)
+  }
+
+  test("with a combiner, reduce still runs exactly once per distinct k2") {
+    for (pairs <- samples(4); parts <- Seq(1, 3, 7)) {
+      // one output row per reduce call, carrying the values it saw
+      val out = MapReduce.run(partitioned(pairs, parts))(
+        map = (k, _) => Iterator.single((k, 1L)))(
+        reduce = (k, vs) => Iterator.single((k, vs.sum)),
+        combine = Some(_ + _)).collect().toList
+      assert(out.map(_._1) == pairs.map(_._1).distinct.sorted)
+      assert(out == pairs.groupBy(_._1).view.mapValues(_.size.toLong).toList.sorted)
+    }
+  }
+
+  test("a partition with more distinct keys than the flush bound flushes and still agrees") {
+    val n     = MapReduce.CombineFlushEntries + 1000
+    val pairs = (0 until n).flatMap(i => Seq(i, i)) // every key twice in a row
+    val ds    = partitioned(pairs.map(i => (f"k$i%06d", 1)), 1)
+    var combined = List.empty[(String, Long)]
+    val (records, _) = mapStageWrites { combined = sums(ds, Some(_ + _)) }
+    assert(records > n, s"$records map-side records for $n keys: no flush happened")
+    assert(records < 2L * n)
+    assert(combined == sums(ds, None))
+    assert(combined.forall(_._2 == 2L) && combined.size == n)
+  }
+
+  test("shuffle records of the map stage: at most keys x tasks with a combiner, every pair without") {
+    val corpus = Seq.fill(40)("the quick brown fox jumps over the lazy dog the end")
+      .zipWithIndex.map { case (l, i) => (i.toLong, l) }
+    val emitted  = corpus.map(_._2.split(" ").length).sum.toLong
+    val distinct = corpus.flatMap(_._2.split(" ")).distinct.size.toLong
+    def wordcount(combine: Option[(Long, Long) => Long]): Unit = {
+      MapReduce.run(partitioned(corpus, 3))(
+        map = (_, line) => line.split(" ").iterator.map(w => (w, 1L)))(
+        reduce = (w, vs) => Iterator.single((w, vs.sum)), combine = combine).collect()
+      ()
+    }
+    val (withCombiner, tasks) = mapStageWrites(wordcount(Some(_ + _)))
+    assert(tasks == 3)
+    assert(withCombiner <= distinct * tasks)
+    assert(mapStageWrites(wordcount(None))._1 == emitted)
   }
 }
