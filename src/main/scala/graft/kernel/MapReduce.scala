@@ -1,5 +1,6 @@
 package graft.kernel
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{Dataset, Encoder}
 import scala.jdk.CollectionConverters._
 
@@ -11,8 +12,10 @@ import scala.jdk.CollectionConverters._
   *  1. grouping is by key *equivalence*, not identity
   *     (`MapReduceFramework.cpp:83-91` groups via `operator<` on
   *     dereferenced keys; case-class equality plays that role here);
-  *  2. Reduce runs exactly once per distinct k2 (`MapReduceEX.pdf` p.6
-  *     step 4) — `groupByKey.flatMapGroups` guarantees this;
+  *  2. Reduce runs exactly once per distinct k2 per action
+  *     (`MapReduceEX.pdf` p.6 step 4) — `groupByKey.flatMapGroups`
+  *     calls it once per group, and a lazy checkpoint of its output
+  *     keeps the sort's sampling job from calling it again;
   *  3. bag multiplicity is preserved end-to-end — nothing here
   *     deduplicates values or output pairs;
   *  4. final output is globally sorted ascending by k3
@@ -77,7 +80,10 @@ object MapReduce {
     // §1.3 pt 4: globally sorted ascending by k3. Tuple encoders expose
     // fields as _1/_2; sorting on a struct key is lexicographic, matching
     // the reference's operator< composition for compound keys.
-    reduced.orderBy("_1")
+    // §1.3 pt 2: the sort samples its input for range bounds in a job of
+    // its own, which would run `reduce` a second time; the lazy
+    // checkpoint is filled by that first job and read by the sort.
+    Checkpoints.scope(s => s.lazyCkpt(reduced).orderBy("_1"))
   }
 
   /** In-mapper combining: folds `pairs` per key into a hash table and

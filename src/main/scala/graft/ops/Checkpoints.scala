@@ -65,20 +65,13 @@ object Checkpoints {
       * materialization: under AQE the `LogicalRDD` records
       * `UnknownPartitioning` (it cannot see through
       * `AdaptiveSparkPlanExec`), and a repartition or sort before the
-      * checkpoint buys nothing downstream. The conf is session-global,
-      * so the flip and restore run under a lock on the session:
-      * concurrent callers cannot capture each other's "false" and leave
-      * AQE off. */
-    def captured(df: DataFrame, level: StorageLevel): DataFrame = {
-      val spark = df.sparkSession
-      val k     = "spark.sql.adaptive.enabled"
-      own(spark.synchronized {
-        val prev = spark.conf.get(k, "true")
-        spark.conf.set(k, "false")
-        try df.localCheckpoint(true, level)
-        finally spark.conf.set(k, prev)
+      * checkpoint buys nothing downstream. The conf is session-global;
+      * [[withConfs]]'s session lock keeps concurrent callers from
+      * capturing each other's "false" and leaving AQE off. */
+    def captured(df: DataFrame, level: StorageLevel): DataFrame =
+      own(withConfs(df.sparkSession, Seq("spark.sql.adaptive.enabled" -> "false")) {
+        df.localCheckpoint(true, level)
       })
-    }
 
     /** Checkpoint hash-partitioned on `partKeys` and sorted within
       * partitions on `sortKeys` (default: `partKeys`), with that layout

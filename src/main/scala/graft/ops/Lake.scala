@@ -419,16 +419,6 @@ object Lake {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  /** run `f` with the given SQL confs set, restoring prior values. */
-  def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(f: => A): A = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** Runtime-filter (bloom) join, driver-checked: a selective dim-side
     * filter (1-URGENT orders) is turned by Spark into a bloom filter
     * evaluated INSIDE the fact-side scan, so ~5/6 of lineitem rows die

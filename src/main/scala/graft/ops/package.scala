@@ -34,4 +34,23 @@ package object ops {
       finally walk.close() // the stream holds directory fds until closed
     }
   }
+
+  /** Runs `f` with the given SQL confs set on the session, then gives
+    * each key back its earlier value (or unsets it). Apart from
+    * `Tables`' TIMESTAMP(NANOS) branch, the one place under `src/main`
+    * that sets a session conf. The window holds a lock on the
+    * session, so two windows never interleave: neither can save the
+    * other's value as the one to restore, and a thread inside `f` sees
+    * its own confs. Code that runs on other threads of the same session
+    * meanwhile sees them too; keep `f` to the one call that must read
+    * them (a plan's execution, a stream's `start()`). */
+  private[graft] def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(f: => A): A =
+    spark.synchronized {
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
 }

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryProgress, Trigger}
 
 /** Structured Streaming formulations of the event operators: windowed
   * aggregation with watermarks (late-data policy), and custom stateful
@@ -19,6 +20,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale design: watermark + append mode bounds state (windows close and
   * evict); sessionization state is per-key and evicted on timeout — at
   * 1000 executors state lives in the state store, partitioned by key.
+  *
+  * Every bounded run starts in [[bounded]], the only `writeStream` call.
+  * Invariant: a streaming query snapshots the session's SQL conf when it
+  * starts. `start()` clones the session, every micro-batch plans from
+  * the clone, and the offset log records the shuffle-partition count and
+  * the state-store provider from it. So a run's confs (state partitions,
+  * provider, no-data batches) are set only around `start()`, and the
+  * shared session holds none of them while the query runs.
   */
 object Streams {
 
@@ -99,25 +108,14 @@ object Streams {
     * large stateful pipelines on. Output is provider-independent (same
     * oracle as `stream_session_window`); [[BoundedRun.stateCustomMetrics]]
     * carries the run's state-store custom metrics so StreamingSpec can
-    * assert RocksDB was genuinely active, not silently fallen back.
-    *
-    * The provider conf is set on the shared session and restored after
-    * the run — like `runBounded`'s own conf toggles, this assumes the
-    * harness's sequential execution (one bounded run at a time per
-    * session); concurrent callers would need per-run cloned sessions. */
+    * assert RocksDB was genuinely active, not silently fallen back. */
   def runBoundedSessionWindowRocks(spark: SparkSession, dir: String): DataFrame =
     sessionWindowRocksRun(spark, dir).result
 
-  private[graft] def sessionWindowRocksRun(spark: SparkSession, dir: String): BoundedRun = {
-    val key   = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runBoundedRun(spark, "stream_session_rocksdb",
+  private[graft] def sessionWindowRocksRun(spark: SparkSession, dir: String): BoundedRun =
+    runBoundedRun(spark, "stream_session_rocksdb",
       sessionWindowAgg(graft.tables.Tables.eventsStream(spark, dir)),
-      OutputMode.Complete(), Seq("user_id", "start_ms"))
-    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+      OutputMode.Complete(), Seq("user_id", "start_ms"), confs = Seq(RocksDb))
 
   /** A bounded streaming run's result plus the state-operator
     * custom-metric keys its execution surfaced — RocksDB runs show
@@ -207,10 +205,43 @@ object Streams {
       OutputMode.Append(), Seq("event_id"))
   }
 
-  /** start → AvailableNow → await → snapshot the memory sink → drop the
-    * temp view (the sink table would otherwise leak one driver-held
-    * table per run). The snapshot is a checkpoint, valid after the view
-    * is gone.
+  /** State-store partitions of every bounded run: a streaming query's
+    * shuffle-partition count is fixed at checkpoint creation and sets
+    * the number of state-store instances (a stream-stream join runs FOUR
+    * per partition); each instance pays per-batch fixed costs (provider
+    * init, delta commit, maintenance) regardless of how little state it
+    * holds. Production sizing is state volume / executor count — for
+    * these bounded verification runs state is ≤ ~100k rows, where 32
+    * partitions × 4 stores is pure fixed-cost overhead: measured at
+    * sf0.1, the interval join's data batch drops ~2× going 32 → 8
+    * partitions with identical output. 8 keeps real parallelism while
+    * right-sizing the store count. */
+  private val StatePartitions = 8
+
+  /** The state-store provider conf of the runs that need RocksDB. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The one bounded stream runner and the only `writeStream` call:
+    * `sink` picks the sink (memory, parquet under a checkpoint,
+    * `foreachBatch`), then the query starts with `Trigger.AvailableNow`
+    * and runs to completion. [[StatePartitions]] and `confs` are set
+    * only around `start()`: the query snapshots the session's SQL conf
+    * when it starts (see the object header), so it keeps them for its
+    * whole run while the session is back to its own values at once.
+    * Returns the terminated query, for its progress. */
+  private[graft] def bounded[T](out: Dataset[T], confs: Seq[(String, String)] = Nil)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val w = sink(out.writeStream.trigger(Trigger.AvailableNow()))
+    val q = graft.ops.withConfs(out.sparkSession,
+      ("spark.sql.shuffle.partitions" -> StatePartitions.toString) +: confs)(w.start())
+    q.awaitTermination()
+    q
+  }
+
+  /** [[bounded]] into a memory sink → snapshot the sink → drop the temp
+    * view (the sink table would otherwise leak one driver-held table per
+    * run). The snapshot is a checkpoint, valid after the view is gone.
     *
     * `needsNoDataBatch`: stateful bounded runs get one extra NO-DATA
     * micro-batch after the data batch, whose only work is advancing the
@@ -226,73 +257,35 @@ object Streams {
   private def runBounded(
       spark: SparkSession, prefix: String, out: DataFrame,
       mode: OutputMode, sortCols: Seq[String],
-      needsNoDataBatch: Boolean = false): DataFrame =
-    runBoundedRun(spark, prefix, out, mode, sortCols, needsNoDataBatch).result
+      needsNoDataBatch: Boolean = false, confs: Seq[(String, String)] = Nil): DataFrame =
+    runBoundedRun(spark, prefix, out, mode, sortCols, needsNoDataBatch, confs).result
 
   private def runBoundedRun(
       spark: SparkSession, prefix: String, out: DataFrame,
       mode: OutputMode, sortCols: Seq[String],
-      needsNoDataBatch: Boolean = false): BoundedRun = Checkpoints.scope { ck =>
+      needsNoDataBatch: Boolean = false,
+      confs: Seq[(String, String)] = Nil): BoundedRun = Checkpoints.scope { ck =>
     val name = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val w0 = out.writeStream.format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val ckptBase = sys.env.get("SPARK_GRAFT_STREAM_CKPT")
-    val w = ckptBase.fold(w0)(b => w0.option("checkpointLocation", s"$b/$name"))
-    val noDataKey   = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val savedNoData = spark.conf.getOption(noDataKey)
-    spark.conf.set(noDataKey, needsNoDataBatch.toString)
-    // State-partition sizing. A streaming query's shuffle-partition
-    // count is fixed at checkpoint creation and sets the number of
-    // state-store instances (a stream-stream join runs FOUR per
-    // partition); each instance pays per-batch fixed costs (provider
-    // init, delta commit, maintenance) regardless of how little state
-    // it holds. Production sizing is state volume / executor count —
-    // for these bounded verification runs state is ≤ ~100k rows, where
-    // 32 partitions × 4 stores is pure fixed-cost overhead: measured at
-    // sf0.1, the interval join's data batch drops ~2× going 32 → 8
-    // partitions with identical output. 8 keeps real parallelism while
-    // right-sizing the store count; override for experiments via env.
-    val partKey   = "spark.sql.shuffle.partitions"
-    val savedPart = spark.conf.getOption(partKey)
-    spark.conf.set(partKey, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
     // drop the sink view even when the query or snapshot fails —
     // otherwise every failed run strands a driver-held table
     try {
-      val t0 = System.nanoTime()
-      val q = w.start()
-      q.awaitTermination()
-      val t1 = System.nanoTime()
+      val q = bounded(out,
+        ("spark.sql.streaming.noDataMicroBatches.enabled" -> needsNoDataBatch.toString) +: confs)(
+        _.format("memory").queryName(name).outputMode(mode))
       val metrics = q.recentProgress.toSet
-        .flatMap((p: org.apache.spark.sql.streaming.StreamingQueryProgress) =>
+        .flatMap((p: StreamingQueryProgress) =>
           p.stateOperators.flatMap(_.customMetrics.keySet.asScala).toSet)
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-debug] $prefix batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs} eventTime=${p.eventTime}"))
-        val trig = q.recentProgress
-          .map(p => Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)).sum
-        System.err.println(f"[stream-debug] $prefix start+run=${(t1 - t0) / 1e9}%.2f s " +
-          f"(trigger total ${trig / 1e3}%.2f s, engine overhead ${(t1 - t0) / 1e9 - trig / 1e3}%.2f s)")
-      }
       // the memory sink's rows already sit on the driver; a global
       // orderBy would range-partition them (an extra sampling job)
       // only to gather right back. One partition + one sort pass gives
       // the same total order in a single job — bounded-run results are
       // ≤ ~100k rows by construction, far under a partition's worth.
-      val res = BoundedRun(
+      BoundedRun(
         ck.ckpt(spark.table(name)
           .coalesce(1)
           .sortWithinPartitions(sortCols.map(col): _*)),
         metrics)
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        System.err.println(f"[stream-debug] $prefix sink materialize=${(System.nanoTime() - t1) / 1e9}%.2f s")
-      res
-    } finally {
-      savedNoData.fold(spark.conf.unset(noDataKey))(spark.conf.set(noDataKey, _))
-      savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
-      spark.catalog.dropTempView(name)
-    }
+    } finally spark.catalog.dropTempView(name)
   }
 
   final case class EwmaOut(event_id: Long, user_id: Long, ms: Long, decayed: Long)
@@ -758,46 +751,31 @@ object Streams {
     * stage 1's) rather than started over. */
   def restartTumblingDetailed(spark: SparkSession, dir: String)
       : (DataFrame, Seq[Long], Seq[Long]) = Checkpoints.scope { ck =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-restart").toString
-    val (srcDir, outDir, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
-    val events = graft.tables.Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val Array(minMs, maxMs) = events
-      .agg(min(unix_millis(col("ts"))), max(unix_millis(col("ts"))))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val cutoffMs = (minMs + maxMs) / 2
+    graft.ops.withTempDir("graft-restart") { tmp =>
+      val (srcDir, outDir, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
+      val events = graft.tables.Tables.events(spark, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      val Array(minMs, maxMs) = events
+        .agg(min(unix_millis(col("ts"))), max(unix_millis(col("ts"))))
+        .head().toSeq.map(_.asInstanceOf[Long]).toArray
+      val cutoffMs = (minMs + maxMs) / 2
 
-    def runStage(stageFilter: org.apache.spark.sql.Column): Seq[Long] = {
-      events.filter(stageFilter).coalesce(2)
-        .write.mode("append").parquet(srcDir)
-      val src = spark.readStream.schema(events.schema).parquet(srcDir)
-      val q = tumblingCounts(src)
-        .writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.map(_.batchId).toSeq
-    }
+      def runStage(stageFilter: org.apache.spark.sql.Column): Seq[Long] = {
+        events.filter(stageFilter).coalesce(2)
+          .write.mode("append").parquet(srcDir)
+        val src = spark.readStream.schema(events.schema).parquet(srcDir)
+        bounded(tumblingCounts(src))(_.format("parquet")
+          .option("path", outDir)
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append()))
+          .recentProgress.map(_.batchId).toSeq
+      }
 
-    val partKey   = "spark.sql.shuffle.partitions"
-    val savedPart = spark.conf.getOption(partKey)
-    spark.conf.set(partKey, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    try {
       val b1 = runStage(unix_millis(col("ts")) < cutoffMs)
       val b2 = runStage(unix_millis(col("ts")) >= cutoffMs)
       val res = ck.ckpt(spark.read.parquet(outDir)
-        .orderBy("ws_ms", "event_type")) // pin the 4-column result before the rm below
+        .orderBy("ws_ms", "event_type")) // pin the 4-column result before the rm
       (res, b1, b2)
-    } finally {
-      savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
     }
   }
 
@@ -920,47 +898,39 @@ object Streams {
         events.filter(pmod(col("event_id"), lit(4L)) === b)
           .coalesce(1).write.mode("append").parquet(srcDir)
       }
-      val partKey   = "spark.sql.shuffle.partitions"
-      val savedPart = spark.conf.getOption(partKey)
-      spark.conf.set(partKey, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-      try {
-        def latestPerUser(df: DataFrame): DataFrame = df
-          .groupBy("user_id")
-          .agg(max(struct(col("ms"), col("event_id"), col("cents"))).as("s"))
-          .select(col("user_id"), col("s.ms").as("ms"),
-            col("s.event_id").as("event_id"), col("s.cents").as("cents"))
-        // written on the stream-execution thread (foreachBatch), read on
-        // the caller thread after awaitTermination(): AtomicLong gives
-        // explicit cross-thread visibility instead of leaning on
-        // StreamExecution's internal locking.
-        val version = new java.util.concurrent.atomic.AtomicLong(-1L)
-        val src = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        val q = src.writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-            val b = latestPerUser(batch.select(
-              col("user_id"), unix_millis(col("ts")).as("ms"), col("event_id"),
-              graft.functions.TextFunctions.cents(col("value")).as("cents")))
-            val v = version.get()
-            val merged =
-              if (v < 0) b
-              else latestPerUser(
-                spark.read.parquet(s"$tableDir/v$v").unionByName(b))
-            merged.write.mode("overwrite").parquet(s"$tableDir/v$id")
-            version.set(id)
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val finalVersion = version.get()
-        require(finalVersion >= 0, "foreachBatch never fired")
-        val res = ck.ckpt(spark.read.parquet(s"$tableDir/v$finalVersion")
-          .select(col("user_id"), col("ms").as("last_ms"),
-            col("event_id").as("last_event_id"), col("cents").as("last_value_cents"))
-          .orderBy("user_id")) // must outlive the temp dir
-        (res, finalVersion + 1L)
-      } finally savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
+      def latestPerUser(df: DataFrame): DataFrame = df
+        .groupBy("user_id")
+        .agg(max(struct(col("ms"), col("event_id"), col("cents"))).as("s"))
+        .select(col("user_id"), col("s.ms").as("ms"),
+          col("s.event_id").as("event_id"), col("s.cents").as("cents"))
+      // written on the stream-execution thread (foreachBatch), read on
+      // the caller thread after awaitTermination(): AtomicLong gives
+      // explicit cross-thread visibility instead of leaning on
+      // StreamExecution's internal locking.
+      val version = new java.util.concurrent.atomic.AtomicLong(-1L)
+      val src = spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1).parquet(srcDir)
+      bounded(src)(_
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
+          val b = latestPerUser(batch.select(
+            col("user_id"), unix_millis(col("ts")).as("ms"), col("event_id"),
+            graft.functions.TextFunctions.cents(col("value")).as("cents")))
+          val v = version.get()
+          val merged =
+            if (v < 0) b
+            else latestPerUser(
+              spark.read.parquet(s"$tableDir/v$v").unionByName(b))
+          merged.write.mode("overwrite").parquet(s"$tableDir/v$id")
+          version.set(id)
+        }
+        .option("checkpointLocation", s"$tmp/ckpt"))
+      val finalVersion = version.get()
+      require(finalVersion >= 0, "foreachBatch never fired")
+      val res = ck.ckpt(spark.read.parquet(s"$tableDir/v$finalVersion")
+        .select(col("user_id"), col("ms").as("last_ms"),
+          col("event_id").as("last_event_id"), col("cents").as("last_value_cents"))
+        .orderBy("user_id")) // must outlive the temp dir
+      (res, finalVersion + 1L)
     }
   }
 
@@ -1017,7 +987,7 @@ object Streams {
       def stage(): Unit = {
         val src = spark.readStream.schema(events.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        val q = src.writeStream
+        bounded(src)(_
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
             val marker = commitsDir.resolve(f"$id%020d")
             if (java.nio.file.Files.exists(marker)) {
@@ -1032,10 +1002,8 @@ object Streams {
               ()
             }
           }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .option("checkpointLocation", ckpt))
+        ()
       }
       // Batch-id evidence comes from the ENGINE's durable commit log
       // (`<ckpt>/commits/`, one numeric file per committed batch), not
@@ -1054,41 +1022,36 @@ object Streams {
         }
       }
 
-      val partKey   = "spark.sql.shuffle.partitions"
-      val savedPart = spark.conf.getOption(partKey)
-      spark.conf.set(partKey, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-      try {
-        addFiles(0 to 1)
-        stage()
-        val c1 = engineCommits()
-        val b1 = c1.toSeq.sorted
-        // FAULT INJECTION: drop the engine's commit record of the last
-        // stage-1 batch — the crashed-between-sink-write-and-engine-
-        // commit state the exactly-once protocol exists for
-        require(b1.nonEmpty, "stage 1 ran no batches")
-        java.nio.file.Files.delete(
-          java.nio.file.Paths.get(s"$ckpt/commits/${b1.max}"))
-        // local-FS detail: ChecksumFs writes a .crc sidecar next to the
-        // commit record; a real crash loses both, so drop it too (left
-        // behind it would collide with the engine's re-commit rename)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(s"$ckpt/commits/.${b1.max}.crc"))
-        val survivors = c1 - b1.max // commit records still on disk
-        addFiles(2 to 3)
-        stage() // re-executes batch b1.max, then the new files
-        // stage 2's ids = records the ENGINE (re-)wrote this stage:
-        // everything now committed minus what survived the injection —
-        // includes the re-committed b1.max iff the replay really ran
-        val b2 = (engineCommits() -- survivors).toSeq.sorted
-        val committedList = java.nio.file.Files.list(commitsDir)
-        val committed =
-          try committedList.iterator().asScala
-            .map(p => s"$tableDir/batch_${p.getFileName.toString.toLong}").toSeq.sorted
-          finally committedList.close()
-        val res = ck.ckpt(spark.read.parquet(committed: _*)
-          .orderBy("event_id")) // must outlive the temp dir
-        (res, replays.get(), b1, b2)
-      } finally savedPart.fold(spark.conf.unset(partKey))(spark.conf.set(partKey, _))
+      addFiles(0 to 1)
+      stage()
+      val c1 = engineCommits()
+      val b1 = c1.toSeq.sorted
+      // FAULT INJECTION: drop the engine's commit record of the last
+      // stage-1 batch — the crashed-between-sink-write-and-engine-
+      // commit state the exactly-once protocol exists for
+      require(b1.nonEmpty, "stage 1 ran no batches")
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(s"$ckpt/commits/${b1.max}"))
+      // local-FS detail: ChecksumFs writes a .crc sidecar next to the
+      // commit record; a real crash loses both, so drop it too (left
+      // behind it would collide with the engine's re-commit rename)
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$ckpt/commits/.${b1.max}.crc"))
+      val survivors = c1 - b1.max // commit records still on disk
+      addFiles(2 to 3)
+      stage() // re-executes batch b1.max, then the new files
+      // stage 2's ids = records the ENGINE (re-)wrote this stage:
+      // everything now committed minus what survived the injection —
+      // includes the re-committed b1.max iff the replay really ran
+      val b2 = (engineCommits() -- survivors).toSeq.sorted
+      val committedList = java.nio.file.Files.list(commitsDir)
+      val committed =
+        try committedList.iterator().asScala
+          .map(p => s"$tableDir/batch_${p.getFileName.toString.toLong}").toSeq.sorted
+        finally committedList.close()
+      val res = ck.ckpt(spark.read.parquet(committed: _*)
+        .orderBy("event_id")) // must outlive the temp dir
+      (res, replays.get(), b1, b2)
     }
   }
 
@@ -1206,68 +1169,56 @@ object Streams {
     * the oracle restricts to users with at least one odd-id event. */
   def runBoundedStateBootstrap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key   = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // "yesterday": batch-side per-user baseline over the even half
-      val baseline = graft.tables.Tables.events(spark, dir)
-        .filter(col("event_id") % 2 === 0)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, Double)]
-        .groupByKey(_._3)
-        .mapGroups { (uid, it) =>
-          val rows = it.toSeq.sortBy(r => (r._2.getTime, r._1))
-          var s = BootAgg(0L, 0L, Long.MinValue, Long.MinValue, 0L)
-          rows.foreach { r =>
-            val cents = java.math.BigDecimal.valueOf(r._4 * 100)
-              .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-            s = BootAgg(s.n + 1L, s.sumCents + cents, math.max(s.maxCents, cents),
-              r._2.getTime, r._1)
-          }
-          (uid, s)
+    // "yesterday": batch-side per-user baseline over the even half
+    val baseline = graft.tables.Tables.events(spark, dir)
+      .filter(col("event_id") % 2 === 0)
+      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
+      .as[(Long, java.sql.Timestamp, Long, Double)]
+      .groupByKey(_._3)
+      .mapGroups { (uid, it) =>
+        val rows = it.toSeq.sortBy(r => (r._2.getTime, r._1))
+        var s = BootAgg(0L, 0L, Long.MinValue, Long.MinValue, 0L)
+        rows.foreach { r =>
+          val cents = java.math.BigDecimal.valueOf(r._4 * 100)
+            .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+          s = BootAgg(s.n + 1L, s.sumCents + cents, math.max(s.maxCents, cents),
+            r._2.getTime, r._1)
         }
-      val initial = baseline.groupByKey(_._1).mapValues(_._2)
-      // "today": the odd half arrives as the stream
-      val ev = graft.tables.Tables.eventsStream(spark, dir)
-        .filter(col("event_id") % 2 === 1)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[Event]
-      val out = ev.groupByKey(_.user_id)
-        .transformWithState(new BootstrapProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append(),
-          initial)
-      runBounded(spark, "stream_state_bootstrap", out.toDF(),
-        OutputMode.Append(), Seq("user_id"))
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        (uid, s)
+      }
+    val initial = baseline.groupByKey(_._1).mapValues(_._2)
+    // "today": the odd half arrives as the stream
+    val ev = graft.tables.Tables.eventsStream(spark, dir)
+      .filter(col("event_id") % 2 === 1)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      .as[Event]
+    val out = ev.groupByKey(_.user_id)
+      .transformWithState(new BootstrapProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Append(),
+        initial)
+    runBounded(spark, "stream_state_bootstrap", out.toDF(),
+      OutputMode.Append(), Seq("user_id"), confs = Seq(RocksDb))
   }
 
   /** Per-user running aggregate through the NEW `transformWithState`
-    * API over the real engine (requires the RocksDB provider — the
-    * conf is toggled around the run exactly like
-    * [[runBoundedSessionWindowRocks]]). Oracle = the plain batch
-    * GROUP BY with a (ts, event_id)-ordered last-event selection. */
+    * API over the real engine (requires the RocksDB provider, which the
+    * run starts with, like [[runBoundedSessionWindowRocks]]). Oracle =
+    * the plain batch GROUP BY with a (ts, event_id)-ordered last-event
+    * selection. */
   def runBoundedTransformState(spark: SparkSession, dir: String): DataFrame =
     transformStateRun(spark, dir).result
 
   private[graft] def transformStateRun(spark: SparkSession, dir: String): BoundedRun = {
     import spark.implicits._
-    val key   = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ev = graft.tables.Tables.eventsStream(spark, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[Event]
-      val out = ev.groupByKey(_.user_id)
-        .transformWithState(new UserAggProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append())
-      runBoundedRun(spark, "stream_transform_state", out.toDF(),
-        OutputMode.Append(), Seq("user_id"))
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val ev = graft.tables.Tables.eventsStream(spark, dir)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      .as[Event]
+    val out = ev.groupByKey(_.user_id)
+      .transformWithState(new UserAggProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Append())
+    runBoundedRun(spark, "stream_transform_state", out.toDF(),
+      OutputMode.Append(), Seq("user_id"), confs = Seq(RocksDb))
   }
 }

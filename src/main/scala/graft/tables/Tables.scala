@@ -4,7 +4,9 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
@@ -52,18 +54,24 @@ object Tables {
     * inference, it starts no job. A path that is not a single file (a
     * directory tree, a glob, a missing path) falls back to inference.
     */
-  def schemaOf(spark: SparkSession, p: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new Path(p)
-    Try(path.getFileSystem(conf).getFileStatus(path)).toOption.filter(_.isFile) match {
-      case Some(file) =>
-        val meta = ParquetFooterReader
-          .readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS).getFileMetaData
+  def schemaOf(spark: SparkSession, p: String): StructType =
+    footer(spark, p) match {
+      case Some(meta) =>
         Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
           .flatMap(json => Try(DataType.fromJson(json)).toOption)
           .collect { case s: StructType => s }
           .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
       case None => spark.read.parquet(p).schema
+    }
+
+  /** The footer metadata of the parquet file at `p`, or None when `p` is
+    * not a single file. */
+  private def footer(spark: SparkSession, p: String): Option[FileMetaData] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(p)
+    Try(path.getFileSystem(conf).getFileStatus(path)).toOption.filter(_.isFile).map { file =>
+      ParquetFooterReader
+        .readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS).getFileMetaData
     }
   }
 
@@ -116,23 +124,35 @@ object Tables {
   /** `events` with `ts` normalized to TimestampType micros regardless of
     * the fixture's on-disk encoding (see [[normalizeTs]]).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    // Harmless for micros fixtures; required so a TIMESTAMP(NANOS)
-    // fixture surfaces as LongType instead of failing the scan.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(read(spark, path(dir, "events")))
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(spark.read.schema(eventsSchema(spark, dir)).parquet(path(dir, "events")))
 
-  /** The streaming twin of [[events]]: same nanos conf, same schema
+  /** The streaming twin of [[events]]: same nanos handling, same schema
     * branch, same micros conversion — one normalization definition so
     * the bounded-stream queries can never diverge from the batch
     * oracle's read contract. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(
       spark.readStream
-        .schema(schemaOf(spark, path(dir, "events")))
+        .schema(eventsSchema(spark, dir))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
+
+  /** The events schema. A `ts` stored as TIMESTAMP(NANOS) is readable
+    * only as a raw long, under `spark.sql.legacy.parquet.nanosAsLong`;
+    * Spark reads that flag from the session when a scan runs, not when
+    * it is planned, so for such a file it is set on the session and
+    * stays set. Micros files leave the session as it is. */
+  private def eventsSchema(spark: SparkSession, dir: String): StructType = {
+    val p = path(dir, "events")
+    val nanosTs = footer(spark, p).exists { meta =>
+      val s = meta.getSchema
+      s.containsField("ts") && (s.getType(s.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _                                 => false
+      })
+    }
+    if (nanosTs) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schemaOf(spark, p)
   }
 }

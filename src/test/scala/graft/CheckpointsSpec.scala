@@ -277,22 +277,39 @@ class CheckpointsSpec extends SparkSpec {
     assert((persistentIds -- base).isEmpty)
   }
 
+  /** (file name, "path:line: code") of every non-comment line under
+    * src/main that contains one of `patterns`. */
+  private def mainHits(patterns: Seq[String]): List[(String, String)] = {
+    def comment(line: String) = Seq("//", "*", "/*").exists(line.trim.startsWith)
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try sources.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if !comment(line) && patterns.exists(line.contains) =>
+            (p.getFileName.toString, s"$p:${i + 1}: ${line.trim}")
+        }
+      }.toList
+    finally sources.close()
+  }
+
   test("no bare checkpoint, free, artifact cache or thread pool outside the owners") {
     val owners  = Set("Checkpoints.scala", "Artifacts.scala")
     val banned  = Seq(".localCheckpoint(", "Checkpoints.free(", "TrieMap", "newFixedThreadPool",
       ".unpersist(", ".cache()", ".persist(")
-    def comment(line: String) = Seq("//", "*", "/*").exists(line.trim.startsWith)
-    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val hits =
-      try sources.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && !owners(p.getFileName.toString))
-        .flatMap { p =>
-          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (line, i) if !comment(line) && banned.exists(line.contains) =>
-              s"$p:${i + 1}: ${line.trim}"
-          }
-        }.toList
-      finally sources.close()
+    val hits = mainHits(banned).filterNot(h => owners(h._1)).map(_._2)
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("one writeStream site, one conf window and no stream env knob under src/main") {
+    val streams = mainHits(Seq(".writeStream"))
+    assert(streams.map(_._1) == List("Streams.scala"), streams.map(_._2).mkString("\n"))
+    // withConfs in the ops package object, and Tables' TIMESTAMP(NANOS) branch
+    val confs = mainHits(Seq("conf.set(", "conf.unset("))
+    val outside = confs.filterNot(h => Set("package.scala", "Tables.scala")(h._1))
+    assert(outside.isEmpty, outside.map(_._2).mkString("\n"))
+    assert(confs.count(_._1 == "Tables.scala") == 1, confs.map(_._2).mkString("\n"))
+    val knobs = mainHits(Seq("SPARK_GRAFT_STREAM_"))
+    assert(knobs.isEmpty, knobs.map(_._2).mkString("\n"))
   }
 }

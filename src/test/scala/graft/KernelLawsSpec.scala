@@ -52,6 +52,17 @@ class KernelLawsSpec extends SparkSpec {
     }
   }
 
+  test("reduce is called once per distinct k2 per action, the sort's sampling job included") {
+    val pairs = samples(1).head
+    val calls = spark.sparkContext.longAccumulator("reduce calls")
+    val out = MapReduce.run(partitioned(pairs, 3))(
+      map = (k, v) => Iterator.single((k, v)))(
+      reduce = (k, vs) => { calls.add(1L); Iterator.single((k, vs.size)) }).collect()
+    val keys = pairs.map(_._1).distinct.size
+    assert(out.length == keys)
+    assert(calls.value == keys.toLong, s"reduce ran ${calls.value} times for $keys keys")
+  }
+
   test("map fan-out: 0..n emissions per input flow through (flatMap law)") {
     for (pairs <- samples(8)) {
       val ds = spark.createDataset(pairs)
@@ -97,14 +108,18 @@ class KernelLawsSpec extends SparkSpec {
     spark.createDataset(spark.sparkContext.parallelize(xs, parts))
 
   /** Runs `body` and returns the shuffle records written by the stages
-    * that read no shuffle (the kernel's map stage) and their task count. */
+    * that read no shuffle and no checkpoint (the kernel's map stage; the
+    * sort's map stage reads the checkpoint of the reduce output) and
+    * their task count. */
   private def mapStageWrites(body: => Unit): (Long, Long) = {
     val records = new AtomicLong()
     val tasks   = new AtomicLong()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics
-        if (m.shuffleReadMetrics.recordsRead == 0 && m.shuffleWriteMetrics.recordsWritten > 0) {
+        val readsCheckpoint = e.stageInfo.rddInfos.exists(_.storageLevel.isValid)
+        if (m.shuffleReadMetrics.recordsRead == 0 && m.shuffleWriteMetrics.recordsWritten > 0 &&
+            !readsCheckpoint) {
           records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
           tasks.addAndGet(e.stageInfo.numTasks.toLong)
         }

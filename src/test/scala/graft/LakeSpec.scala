@@ -28,7 +28,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("runtime bloom filter is injected into the fact-side scan") {
-    Lake.withConfs(spark, Lake.runtimeFilterConfs) {
+    graft.ops.withConfs(spark, Lake.runtimeFilterConfs) {
       val plan = Tables.lineitem(spark, sfDir)
         .join(Tables.orders(spark, sfDir)
           .filter(col("o_orderpriority") === "1-URGENT"),

@@ -569,4 +569,63 @@ class StreamingSpec extends SparkSpec {
       }.toSeq.sortBy(_._1)
     assert(got == expect, "merged table diverged from the one-shot batch argmax")
   }
+
+  // ---- the bounded runner: confs only around start() ----
+
+  private def confUnchanged(what: String)(run: => Any): Unit = {
+    val before = spark.conf.getAll
+    run
+    assert(spark.conf.getAll == before, s"$what changed the session conf")
+  }
+
+  test("every bounded entry leaves the session conf as it found it, a throwing run included") {
+    confUnchanged("rocksdb session window")(Streams.sessionWindowRocksRun(spark, sfDir))
+    confUnchanged("late drops")(Streams.runBoundedLateDrops(spark, sfDir))
+    confUnchanged("restart")(Streams.restartTumblingDetailed(spark, sfDir))
+    confUnchanged("foreach merge")(Streams.foreachMergeRun(spark, sfDir))
+    confUnchanged("idempotent sink")(Streams.idempotentSinkRun(spark, sfDir))
+    confUnchanged("state bootstrap")(Streams.runBoundedStateBootstrap(spark, sfDir))
+    val noData = Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    // fails in start(): complete mode on a stream without an aggregation
+    confUnchanged("a run that fails to start") {
+      intercept[Exception](Streams.bounded(tables.Tables.eventsStream(spark, sfDir), noData)(
+        _.format("memory").queryName("bounded_bad_start").outputMode(OutputMode.Complete())))
+    }
+    // fails while it runs: the sink throws on the first batch
+    confUnchanged("a run that fails in a batch") {
+      graft.ops.withTempDir("graft-bounded-throw") { tmp =>
+        intercept[Exception](Streams.bounded(tables.Tables.eventsStream(spark, sfDir), noData)(_
+          .foreachBatch((_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            throw new IllegalStateException("sink failure"))
+          .option("checkpointLocation", s"$tmp/ckpt")))
+      }
+    }
+  }
+
+  test("each stateful bounded run plans its state on 8 shuffle partitions") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o =>
+          parts.add((String.valueOf(e.progress.name), o.numShufflePartitions.toInt)))
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") != "8", "the session default must differ")
+    spark.streams.addListener(listener)
+    try {
+      Streams.sessionWindowRun(spark, sfDir)
+      Streams.runBoundedIntervalJoin(spark, sfDir)
+      Streams.runBoundedSessionize(spark, sfDir)
+      Streams.transformStateRun(spark, sfDir)
+      org.apache.spark.graftbridge.SchedulerBridge.drainListeners(spark.sparkContext)
+    } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = parts.asScala.toList
+    Seq("stream_session_window", "stream_interval_join", "stream_sessionize", "stream_transform_state")
+      .foreach(q => assert(seen.exists(_._1.startsWith(q)), s"$q reported no state operator"))
+    assert(seen.forall(_._2 == 8), s"state partitions: $seen")
+  }
 }
