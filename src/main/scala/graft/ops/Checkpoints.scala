@@ -7,7 +7,12 @@ import scala.util.{Failure, Try}
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of checkpointed state.
@@ -61,28 +66,26 @@ object Checkpoints {
     def lazyCkpt[T](ds: Dataset[T]): Dataset[T] = own(ds.localCheckpoint(eager = false))
 
     /** Checkpoint that keeps the partitioning and ordering `df`'s plan
-      * already produces. It runs with AQE off for this one
-      * materialization: under AQE the `LogicalRDD` records
-      * `UnknownPartitioning` (it cannot see through
-      * `AdaptiveSparkPlanExec`), and a repartition or sort before the
-      * checkpoint buys nothing downstream. The conf is session-global;
-      * [[withConfs]]'s session lock keeps concurrent callers from
-      * capturing each other's "false" and leaving AQE off. */
+      * already produces, so a downstream join or window on those keys
+      * plans no Exchange or Sort on this side. The layout is read from
+      * the final physical plan that produced the checkpoint's RDD (see
+      * [[withLayout]]); a plain checkpoint records `UnknownPartitioning`
+      * under AQE, since `AdaptiveSparkPlanExec` reports none. AQE stays
+      * on, so each shuffle stage of `df`'s plan runs as its own Spark
+      * job (a query stage). */
     def captured(df: DataFrame, level: StorageLevel): DataFrame =
-      own(withConfs(df.sparkSession, Seq("spark.sql.adaptive.enabled" -> "false")) {
-        df.localCheckpoint(true, level)
-      })
+      own(withLayout(df.localCheckpoint(true, level), df.queryExecution.executedPlan))
 
-    /** Checkpoint hash-partitioned on `partKeys` and sorted within
+    /** Checkpoint hash-partitioned on `partKeys` into
+      * `spark.sql.shuffle.partitions` partitions and sorted within
       * partitions on `sortKeys` (default: `partKeys`), with that layout
-      * kept in the `LogicalRDD`, so every downstream equi-join on
-      * `partKeys` plans exchange- and sort-free on this side. The
-      * partition count is `spark.sql.shuffle.partitions`. */
+      * kept (see [[captured]]). The count is explicit because AQE
+      * coalesces a `repartition` without one. */
     def partitioned(df: DataFrame, partKeys: Seq[String],
                     sortKeys: Seq[String] = Nil): DataFrame = {
-      import org.apache.spark.sql.functions.col
+      val n  = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val sk = if (sortKeys.isEmpty) partKeys else sortKeys
-      captured(df.repartition(partKeys.map(col): _*).sortWithinPartitions(sk.map(col): _*),
+      captured(df.repartition(n, partKeys.map(col): _*).sortWithinPartitions(sk.map(col): _*),
         StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -189,6 +192,35 @@ object Checkpoints {
     case p: Product      => p.productIterator.flatMap(readIds).toSet
     case c: Iterable[_]  => c.flatMap(readIds).toSet
     case _               => Set.empty
+  }
+
+  /** `ckpt` with the partitioning and ordering of `plan`, the physical
+    * plan whose execution produced its RDD, recorded in its
+    * `LogicalRDD` (AQE's final plan when `plan` is adaptive). The
+    * layout's attributes map by position onto the checkpoint's output.
+    * The partitioning stays unknown when the plan is not final, when an
+    * attribute does not map, or when its partition count is not the
+    * RDD's; orderings keep their mapped prefix. */
+  private def withLayout(ckpt: DataFrame, plan: SparkPlan): DataFrame = {
+    val lr = ckpt.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val finalPlan = plan match {
+      case a: AdaptiveSparkPlanExec => if (a.isFinalPlan) Some(a.executedPlan) else None
+      case p                        => Some(p)
+    }
+    finalPlan.fold(ckpt) { p =>
+      val byPos = AttributeMap(p.output.zip(lr.output))
+      def mapped[E <: Expression](e: E): Option[E] =
+        if (!e.references.forall(byPos.contains)) None
+        else Some(e.transform { case a: Attribute => byPos(a) }.asInstanceOf[E])
+      val partitioning = p.outputPartitioning match {
+        case e: Expression with Partitioning if e.numPartitions == lr.rdd.getNumPartitions =>
+          mapped(e).getOrElse(UnknownPartitioning(0))
+        case _ => UnknownPartitioning(0)
+      }
+      val ordering = p.outputOrdering.map(mapped(_)).takeWhile(_.isDefined).flatten
+      DatasetBridge.ofRows(ckpt.sparkSession, lr.makeCopy(Array(lr.output, lr.rdd, partitioning,
+        ordering, Boolean.box(lr.isStreaming), lr.stream)))
+    }
   }
 
   private def rddOf(ds: Dataset[_]): Option[RDD[_]] = ds.queryExecution.logical match {

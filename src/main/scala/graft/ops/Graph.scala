@@ -55,29 +55,32 @@ object Graph {
     * specs can drive it with a hand-checkable graph. Normalizes to the
     * simple graph first (PageRank's domain): self-loops and duplicate
     * edges dropped in one distinct pass. */
-  def pageRankOn(edgesDf: DataFrame): DataFrame =
-    pageRankOn(edgesDf, Iters, materialize = true)
+  def pageRankOn(edgesDf: DataFrame): DataFrame = pageRankOn(edgesDf, Iters)
 
-  /** The working body. `materialize = true` (the served path)
-    * checkpoints every reused intermediate — the reduced edge, node and
-    * degree tables once, the ranks every round — so the logical plan
-    * stays O(1) per round and nothing is registered with the
-    * CacheManager. `materialize = false` keeps the whole pipeline lazy
-    * so plan specs can assert on the real join/aggregate shapes instead
-    * of truncated LogicalRDD leaves. */
-  private[graft] def pageRankOn(
-      edgesDf: DataFrame, iters: Int, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
-    def keep(s: Checkpoints.Scope, df: DataFrame) = if (materialize) s.ckpt(df) else df
-    val e     = keep(ck, edgesDf.filter(col("src") =!= col("dst")).distinct())
-    val nodes = keep(ck, e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
-    val n     = nodes.agg(count(lit(1)).as("n"))
+  private[graft] def pageRankOn(edgesDf: DataFrame, iters: Int): DataFrame =
+    rankWalk(edgesDf, iters, lit(true))
+
+  /** The rank walk of [[pageRankOn]] and [[pprOn]], `iters` rounds over
+    * the simple graph of `edgesDf`. The nodes `seeded` selects (all of
+    * them for PageRank) start at rank 1/|seeds| and share the teleport
+    * mass 0.15; the rest start at 0 and get no teleport. Contributions
+    * are summed as exact nanos and every round is re-rounded to 9 dp.
+    * Every reused intermediate is checkpointed — the reduced edge, node
+    * and degree tables once, the ranks every round — so the logical
+    * plan stays O(1) per round and nothing is registered with the
+    * CacheManager. */
+  private def rankWalk(edgesDf: DataFrame, iters: Int, seeded: Column): DataFrame = Checkpoints.scope { ck =>
+    val e     = ck.ckpt(edgesDf.filter(col("src") =!= col("dst")).distinct())
+    val nodes = ck.ckpt(e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
+    val n     = nodes.filter(seeded).agg(count(lit(1)).as("n")) // 1 row, broadcast
     // deg and nodes feed every iteration plus the output join — reduce
     // them once instead of re-shuffling per iteration
-    val deg   = keep(ck, e.groupBy("src").agg(count(lit(1)).as("d")))
+    val deg   = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
+    def onSeeds(v: Column) = when(seeded, v).otherwise(lit(0.0))
     // eager per-round rank checkpoints: a lazy chain re-pays analysis,
     // AQE replan and codegen of the deep plan on every cold run
-    val ranks = Checkpoints.iterate(iters)(s => keep(s, nodes.crossJoin(broadcast(n))
-      .select(col("node"), round(lit(1.0) / col("n"), 9).as("r"))))(_ => false) { (s, ranks, _) =>
+    val ranks = Checkpoints.iterate(iters)(s => s.ckpt(nodes.crossJoin(broadcast(n))
+      .select(col("node"), onSeeds(round(lit(1.0) / col("n"), 9)).as("r"))))(_ => false) { (s, ranks, _) =>
       val contribs = e
         .join(ranks.select(col("node").as("src"), col("r")), "src")
         .join(deg, "src")
@@ -85,11 +88,11 @@ object Graph {
           round((col("r") / col("d")) * 1e9).cast("long").as("cn"))
         .groupBy("node")
         .agg(sum("cn").as("sn"))
-      keep(s, nodes
+      s.ckpt(nodes
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(n))
         .select(col("node"),
-          round(lit(0.15) / col("n") +
+          round(onSeeds(lit(0.15) / col("n")) +
             lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9).as("r")))
     }
     ranks
@@ -150,50 +153,14 @@ object Graph {
     * the seed-EXPANSION primitive of web-corpus curation (rank every
     * page by random-walk proximity to a small trusted set, then keep
     * the high-PPR tail; the same walk powers who-to-follow style
-    * recommendation). Identical machinery and determinism contract as
-    * [[pageRankOn]] — exact-nanos contribution sums, 9 dp re-rounding
-    * per round, per-round `localCheckpoint` in [[Checkpoints.iterate]] —
-    * with ONE change: the teleport term lands only on seeds (0.15/|S|
-    * instead of 0.15/N), so mass injects at the seeds and decays
-    * outward by 0.85 per hop. Nodes unreachable from the seed set stay
-    * at EXACTLY 0.0 — the walk never visits them — which is the
-    * filtering property the curation use case reads. The 1-row seed
-    * count broadcasts like pagerank's N. */
-  private[graft] def pprOn(edgesDf: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
-    val e = ck.ckpt(edgesDf
-      .filter(col("src") =!= col("dst"))
-      .distinct())
-    val nodes = ck.ckpt(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val seeds = nodes.filter(col("node") < PprSeedMax).agg(count(lit(1)).as("s"))
-    val deg   = ck.ckpt(e.groupBy("src").agg(count(lit(1)).as("d")))
-    val teleport =
-      when(col("node") < PprSeedMax, lit(0.15) / col("s")).otherwise(lit(0.0))
-    // eager per-round rank checkpoints, as in pageRankOn
-    val ranks = Checkpoints.iterate(iters)(s => s.ckpt(nodes.crossJoin(broadcast(seeds))
-      .select(col("node"),
-        when(col("node") < PprSeedMax, round(lit(1.0) / col("s"), 9))
-          .otherwise(lit(0.0)).as("r"))))(_ => false) { (s, ranks, _) =>
-      val contribs = e
-        .join(ranks.select(col("node").as("src"), col("r")), "src")
-        .join(deg, "src")
-        .select(col("dst").as("node"),
-          round((col("r") / col("d")) * 1e9).cast("long").as("cn"))
-        .groupBy("node")
-        .agg(sum("cn").as("sn"))
-      s.ckpt(nodes
-        .join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(seeds))
-        .select(col("node"),
-          round(teleport +
-            lit(Damping) * (coalesce(col("sn"), lit(0L)).cast("double") / lit(1e9)), 9)
-            .as("r")))
-    }
-    ranks
-      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("d"), lit(0L)).as("out_deg"), col("r").as("rank"))
-      .orderBy("node")
-  }
+    * recommendation). [[pageRankOn]]'s walk with ONE change: the
+    * teleport term lands only on seeds (0.15/|S| instead of 0.15/N), so
+    * mass injects at the seeds and decays outward by 0.85 per hop. Nodes
+    * unreachable from the seed set stay at EXACTLY 0.0 — the walk never
+    * visits them — which is the filtering property the curation use
+    * case reads. */
+  private[graft] def pprOn(edgesDf: DataFrame, iters: Int): DataFrame =
+    rankWalk(edgesDf, iters, col("node") < PprSeedMax)
 
   private val pprSql: String = {
     val base =
@@ -288,39 +255,30 @@ object Graph {
     triangleCountOn(triEdges(spark, dir))
 
   /** Triangle counting over an arbitrary canonical (u<v) edge table —
-    * split out so specs can drive it with a hand-checkable graph. */
-  def triangleCountOn(edgesDf: DataFrame): DataFrame =
-    triangleCountOn(edgesDf, materialize = true)
-
-  /** The working body — same `materialize` contract as [[pageRankOn]]:
-    * the served path `localCheckpoint`s the thrice-consumed edge table
-    * and the reused degree / oriented tables (eagerly materialized,
-    * scope-owned, never CacheManager-pinned — round-13 verdict #1);
-    * plan specs pass `false` for the fully-lazy join shapes. The wedge
-    * join and close stay lazy on both paths — they are
-    * single-consumption and MUST stream (the wedge set is the O(m^1.5)
-    * bulk that never deserves materializing). */
-  private[graft] def triangleCountOn(
-      edgesDf: DataFrame, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
-    val e = if (materialize) ck.ckpt(edgesDf) else edgesDf
+    * split out so specs can drive it with a hand-checkable graph. The
+    * thrice-consumed edge table and the reused degree / oriented tables
+    * are checkpointed (scope-owned, never CacheManager-pinned). The
+    * wedge join and close stay lazy — they are single-consumption and
+    * MUST stream (the wedge set is the O(m^1.5) bulk that never deserves
+    * materializing). */
+  def triangleCountOn(edgesDf: DataFrame): DataFrame = Checkpoints.scope { ck =>
+    val e = ck.ckpt(edgesDf)
     // deg and the oriented edge list each feed ≥2 downstream joins
     // (both wedge sides, the close, the output) — materialize the
     // reduced (long, long) tables once instead of re-running their
     // shuffles per consumer. MEMORY_AND_DISK, so at cluster scale this
     // is the standard spill-safe reuse of an O(m) intermediate.
-    val deg0 = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val deg  = if (materialize) ck.ckpt(deg0) else deg0
+    val deg = ck.ckpt(e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg")))
 
     // orient each edge from the lower-(deg, id) endpoint to the higher
     val ej = e
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
     val uFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val or0 = ej.select(
+    val or = ck.ckpt(ej.select(
       when(uFirst, col("u")).otherwise(col("v")).as("src"),
-      when(uFirst, col("v")).otherwise(col("u")).as("dst"))
-    val or  = if (materialize) ck.ckpt(or0) else or0
+      when(uFirst, col("v")).otherwise(col("u")).as("dst")))
 
     // wedges at a common center; a.dst < b.dst by id makes the pair
     // canonical, so the close probes the u<v edge set directly
@@ -475,9 +433,7 @@ object Graph {
     // none (the fixpoint)
     val (e, lastSup) = Checkpoints.iterate(rounds)(
         s => (s.ckpt(edgesDf), Option.empty[DataFrame]))(_._2.isDefined) { case (s, (e, _), _) =>
-      // the degree-oriented view materializes once, hash(src) layout
-      // captured, so both wedge self-join arms read it exchange- and
-      // sort-free; it is dead once the support is materialized
+      // hash(src)-partitioned: both wedge self-join arms read it exchange- and sort-free
       val sup = Checkpoints.scope { t =>
         t.ckpt(supportFromOriented(t.partitioned(orientedOn(e), Seq("src"), Seq("src", "dst")), e))
       }
@@ -1903,12 +1859,7 @@ object Graph {
       .filter(col("deg") <= LpDegCap && col("deg") >= 2)
       .select(col("c"), col("nbr"),
         round(lit(1000000.0) / log(col("deg"))).cast("long").as("aa_term")),
-      ser) // both wedge arms read it; the AQE-off capture (round 22) is
-           // what actually carries hash(c, parts) + the window's c-sort
-           // into the LogicalRDD — the wedge self-join below then plans
-           // with no Exchange and no Sort on either arm (a plain
-           // checkpoint records UnknownPartitioning under AQE and both
-           // arms re-shuffled+re-sorted, the round-22 central finding)
+      ser) // keeps hash(c, parts) and the c-sort: no Exchange or Sort on either wedge arm
     val wedges = adjW.as("a")
       .join(adjW.as("b"), col("a.c") === col("b.c") && col("a.nbr") < col("b.nbr"))
       .select(col("a.nbr").as("x"), col("b.nbr").as("y"), col("a.aa_term").as("t"))

@@ -1335,12 +1335,7 @@ object Relational {
       .select(col("o_custkey").as("user"), col("l_partkey").as("item"))
       .distinct()) // feeds the item margin, the prune, both pair sides
     val icnt = baskets.groupBy("item").agg(count(lit(1)).as("ni"))
-    // pre-partitioned+sorted on item: both arms of the pair self-join
-    // below read this checkpoint exchange- and sort-free (round 22 —
-    // the coreness/walk-family §2.4 pattern, built through the AQE-off
-    // helper that actually captures the layout; an inline repartition+
-    // sort+checkpoint under AQE captures UnknownPartitioning and both
-    // arms re-shuffle anyway)
+    // hash(item)-partitioned: both pair self-join arms read it exchange- and sort-free
     val kept = ck.partitioned(
       baskets.join(broadcast(icnt.filter(col("ni") <= UcfPopCap).select("item")), Seq("item")),
       Seq("item")) // pruned matrix; feeds the user margin + both sides
@@ -1562,21 +1557,13 @@ object Relational {
     * dictionary cubed; the corpus-sized tables only ever see the
     * distinct-reduce and the semi-join. Support shares are exact
     * integral micros (the bigram_lift rational convention). */
-  def frequentItemsets(spark: SparkSession, dir: String): DataFrame =
-    frequentItemsets(spark, dir, materialize = true)
-
-  /** `materialize = false` keeps the pipeline lazy so `PlanSpec` can
-    * assert the Apriori semi-join shape (checkpoints truncate the
-    * logical plan — the pageRankOn convention). */
-  private[graft] def frequentItemsets(
-      spark: SparkSession, dir: String, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
+  def frequentItemsets(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val dim = Tables.part(spark, dir).select(col("p_partkey").as("l_partkey"), col("p_brand"))
     // feeds the total, the singles pass, and the pruned triple join
-    val baskets0 = Tables.lineitem(spark, dir)
+    val baskets = ck.ckpt(Tables.lineitem(spark, dir)
       .join(broadcast(dim), "l_partkey")
       .select(col("l_orderkey").as("okey"), col("p_brand").as("b"))
-      .distinct()
-    val baskets = if (materialize) ck.ckpt(baskets0) else baskets0
+      .distinct())
     val nT = baskets.select("okey").distinct().agg(count(lit(1)).as("n"))
     val freq1 = baskets.groupBy("b").agg(count(lit(1)).as("cs"))
       .filter(col("cs") >= FiMinSup)

@@ -1136,14 +1136,7 @@ object Stats {
     * statistics over the B=32 resample means (a CONSTANT 32-cell set;
     * the vocab_coverage window convention). Means are exact integral
     * micros of cents. */
-  def bootstrapCi(spark: SparkSession, dir: String): DataFrame =
-    bootstrapCi(spark, dir, materialize = true)
-
-  /** `materialize = false` keeps the pipeline lazy so `PlanSpec` can
-    * assert the one-pass no-explode shape through what the served
-    * path's checkpoint would truncate. */
-  private[graft] def bootstrapCi(
-      spark: SparkSession, dir: String, materialize: Boolean): DataFrame = Checkpoints.scope { ck =>
+  def bootstrapCi(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val ev = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), cents(col("value")).as("x"))
@@ -1158,21 +1151,19 @@ object Stats {
       Seq(sum(m).as(s"n_$b"), sum(m * col("x")).as(s"s_$b"))
     }
     val one = ev.agg(aggs.head, aggs.tail: _*)
-    val means = one
+    val means = ck.ckpt(one // 32 cells; feed the rank window and the output
       .select(expr("stack(" + BootB + ", " +
         (0 until BootB).map(b => s"CAST($b AS BIGINT), n_$b, s_$b").mkString(", ") +
         ") AS (b, n, sum_cents)"))
       .select(col("b"), col("n"), col("sum_cents"),
         when(col("n") > 0,
           expr("CAST((CAST(sum_cents AS DECIMAL(38,0)) * 1000000) div n AS BIGINT)"))
-          .as("mean_micros"))
-    val meansM = // 32 cells; feed the rank window and the output
-      if (materialize) ck.ckpt(means) else means
+          .as("mean_micros")))
     val w = Window.orderBy(col("mean_micros"), col("b"))
-    val ranked = meansM.withColumn("rk", row_number().over(w))
+    val ranked = means.withColumn("rk", row_number().over(w))
     val lo = ranked.filter(col("rk") === 2).select(col("mean_micros").as("lo_micros"))
     val hi = ranked.filter(col("rk") === BootB - 1).select(col("mean_micros").as("hi_micros"))
-    meansM.crossJoin(broadcast(lo)).crossJoin(broadcast(hi)).orderBy("b")
+    means.crossJoin(broadcast(lo)).crossJoin(broadcast(hi)).orderBy("b")
   }
 
   private val bootstrapSql: String = {

@@ -38,7 +38,9 @@ package object ops {
   /** Runs `f` with the given SQL confs set on the session, then gives
     * each key back its earlier value (or unsets it). Apart from
     * `Tables`' TIMESTAMP(NANOS) branch, the one place under `src/main`
-    * that sets a session conf. The window holds a lock on the
+    * that sets a session conf; its two callers are the stream runner
+    * `Streams.bounded` (around `start()`) and `Lake.runtimeFilterJoin`
+    * (around one plan's execution). The window holds a lock on the
     * session, so two windows never interleave: neither can save the
     * other's value as the one to restore, and a thread inside `f` sees
     * its own confs. Code that runs on other threads of the same session

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.ops.{Artifacts, Checkpoints}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -134,24 +135,51 @@ class CheckpointsSpec extends SparkSpec {
     assert((persistentIds -- base).isEmpty)
   }
 
-  test("Scope.captured: concurrent callers keep AQE on and both capture their layout") {
+  test("Scope.captured keeps AQE on for a concurrent reader, records each layout") {
     val aqe = "spark.sql.adaptive.enabled"
     assert(spark.conf.get(aqe) == "true")
     val captured = new AtomicInteger(0)
-    val errors = concurrently(2) { _ =>
-      (1 to 15).foreach { _ =>
-        Checkpoints.scope { s =>
-          val c = s.captured(table(200).repartition(4, col("x")), StorageLevel.MEMORY_AND_DISK)
-          c.queryExecution.logical.asInstanceOf[LogicalRDD].outputPartitioning match {
-            case _: HashPartitioning => captured.incrementAndGet()
-            case p => throw new AssertionError(s"layout not captured: $p")
+    val done     = new AtomicBoolean(false)
+    val reads    = new AtomicInteger(0)
+    val offReads = new AtomicInteger(0)
+    val errors = concurrently(2) {
+      case 0 =>
+        try (1 to 15).foreach { _ =>
+          Checkpoints.scope { s =>
+            val c = s.captured(table(200).repartition(4, col("x")), StorageLevel.MEMORY_AND_DISK)
+            c.queryExecution.logical.asInstanceOf[LogicalRDD].outputPartitioning match {
+              case _: HashPartitioning => captured.incrementAndGet()
+              case p => throw new AssertionError(s"layout not captured: $p")
+            }
           }
+        } finally done.set(true)
+      case _ =>
+        while (!done.get) {
+          reads.incrementAndGet()
+          if (spark.conf.get(aqe) != "true") offReads.incrementAndGet()
         }
-      }
     }
     assert(errors.isEmpty, errors.mkString("; "))
-    assert(captured.get == 30)
-    assert(spark.conf.get(aqe) == "true", "a concurrent flip left AQE disabled")
+    assert(captured.get == 15)
+    assert(reads.get > 0)
+    assert(offReads.get == 0, s"${offReads.get} of ${reads.get} reads saw AQE off during a capture")
+  }
+
+  test("Scope.partitioned records HashPartitioning(keys, n); every row sits there") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Checkpoints.scope { s =>
+      val p = s.partitioned(spark.range(0, 1000).select((col("id") % 37).as("k"), col("id").as("v")),
+        Seq("k"))
+      p.queryExecution.logical.asInstanceOf[LogicalRDD].outputPartitioning match {
+        case HashPartitioning(Seq(k: Attribute), m) =>
+          assert(k.name == "k" && m == n, s"recorded hash($k, $m), not hash(k, $n)")
+        case other => fail(s"layout not recorded: $other")
+      }
+      // AQE would coalesce these 1000 rows to one partition without the explicit count
+      assert(p.rdd.getNumPartitions == n)
+      assert(p.filter(spark_partition_id() =!= pmod(hash(col("k")), lit(n))).count() == 0L,
+        "rows outside their pmod(hash(k), n) partition")
+    }
   }
 
   test("iterate frees a superseded round once its successor is in the state") {
@@ -311,5 +339,14 @@ class CheckpointsSpec extends SparkSpec {
     assert(confs.count(_._1 == "Tables.scala") == 1, confs.map(_._2).mkString("\n"))
     val knobs = mainHits(Seq("SPARK_GRAFT_STREAM_"))
     assert(knobs.isEmpty, knobs.map(_._2).mkString("\n"))
+    val windows = mainHits(Seq("withConfs(")).filterNot(_._1 == "package.scala")
+    assert(windows.map(_._1).sorted == List("Lake.scala", "Streams.scala"), windows.map(_._2).mkString("\n"))
+    // AQE is set only where a main builds its session
+    val aqe = mainHits(Seq("adaptive.enabled"))
+      .filterNot(h => Set("Bench.scala", "ScaleProbe.scala", "PlanDump.scala")(h._1) && h._2.contains(".config("))
+    assert(aqe.isEmpty, aqe.map(_._2).mkString("\n"))
+    // one served body per operator: no plan-spec-only fork
+    val forks = mainHits(Seq("materialize: Boolean"))
+    assert(forks.isEmpty, forks.map(_._2).mkString("\n"))
   }
 }

@@ -269,8 +269,8 @@ class GraphSpec extends SparkSpec {
     // plan must be a constant-size tree over LogicalRDD leaves,
     // independent of round count.
     val e = chain.select("src", "dst")
-    val g2 = planLines(Graph.pageRankOn(e, 2, materialize = true))
-    val g8 = planLines(Graph.pageRankOn(e, 8, materialize = true))
+    val g2 = planLines(Graph.pageRankOn(e, 2))
+    val g8 = planLines(Graph.pageRankOn(e, 8))
     assert(g8 <= g2 + 2,
       s"pagerank plan must not grow with rounds: $g2 -> $g8")
   }
@@ -634,7 +634,7 @@ class GraphSpec extends SparkSpec {
     // one 12-letter word: every round merges one more pair into it
     val word = Seq(("<a><b><c><d><e><f><g><h><i><j><k><l>", 1L)).toDF("s", "f")
     val ops: Seq[(String, Int, Int, Int => Unit)] = Seq(
-      ("pagerank", 2, 8, r => { Graph.pageRankOn(dpath, r, materialize = true).collect(); () }),
+      ("pagerank", 2, 8, r => { Graph.pageRankOn(dpath, r).collect(); () }),
       ("ppr", 2, 8, r => { Graph.pprOn(dpath, r).collect(); () }),
       ("hits", 2, 8, r => { Graph.hitsOn(dpath, r).collect(); () }),
       ("sssp", 2, 8, r => { Graph.ssspOn(wpath, 1L, r).collect(); () }),

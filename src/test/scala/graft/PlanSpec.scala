@@ -13,6 +13,14 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
 
+  /** The physical plans (AQE's final plans, formatted) of every action
+    * `body` ran. */
+  private def physicalPlans(body: => Any): Seq[String] = {
+    val ps = servedPlans(body).map(_.explainString(org.apache.spark.sql.execution.FormattedMode))
+    assert(ps.nonEmpty, "no action ran")
+    ps
+  }
+
   test("search_contains pushes Contains into the parquet scan and prunes columns") {
     val p = planOf("search_contains")
     assert(p.contains("StringContains(p_name,id)"), "filter not pushed to scan")
@@ -239,14 +247,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pagerank never plans a cartesian product and partial-aggregates contributions") {
-    // served path checkpoints per round (truncated LogicalRDD leaves),
-    // so assert on the fully-lazy pipeline, where the round shapes are
-    // visible
-    val p = graft.ops.Graph.pageRankOn(graft.ops.Graph.edges(spark, sfDir),
-        iters = 2, materialize = false)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(!p.contains("CartesianProduct"), "the 1-row N join must broadcast")
-    assert(p.contains("partial_sum"), "contribution sum lost map-side combine")
+    val ps = physicalPlans(graft.ops.Graph.pageRankOn(graft.ops.Graph.edges(spark, sfDir), 2).collect())
+    assert(ps.forall(!_.contains("CartesianProduct")), "the 1-row N join must broadcast")
+    assert(ps.exists(_.contains("partial_sum")), "contribution sum lost map-side combine")
   }
 
   test("bm25_search plans TakeOrderedAndProject over a broadcast 1-row stats join") {
@@ -273,13 +276,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("triangle_count never plans a cartesian product") {
-    // lazy pipeline (the served path truncates its reused tables to
-    // LogicalRDD leaves; the wedge/close joins are visible either way,
-    // but the lazy form pins the whole tree)
-    val p = graft.ops.Graph.triangleCountOn(graft.ops.Graph.triEdges(spark, sfDir),
-        materialize = false)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(!p.contains("CartesianProduct"),
+    val ps = physicalPlans(graft.ops.Graph.triangleCountOn(graft.ops.Graph.triEdges(spark, sfDir)).collect())
+    assert(ps.exists(_.contains("Join")), "no join among the served plans")
+    assert(ps.forall(!_.contains("CartesianProduct")),
       "wedge formation and closing must be key joins")
   }
 
@@ -497,11 +496,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bootstrap_ci rides one corpus pass: no row replication, one aggregate pair") {
-    // lazy variant: the served path's 32-cell checkpoint truncates the
-    // plan above the corpus scan (pageRankOn convention)
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, LogicalPlan}
-    val df = graft.ops.Stats.bootstrapCi(spark, sfDir, materialize = false)
-    val lp = df.queryExecution.optimizedPlan
+    val lps = servedPlans(graft.ops.Stats.bootstrapCi(spark, sfDir).collect())
+      .map(_.optimizedPlan)
     // the Poisson bootstrap's whole point: 32 resamples WITHOUT a 32x
     // row explode. `stack` does plan a Generate, but it must sit ABOVE
     // an aggregate (unpivoting the ONE 64-column row) — a Generate
@@ -513,27 +510,26 @@ class PlanSpec extends SparkSpec {
         org.apache.spark.sql.execution.datasources.LogicalRelation]
       case other => other.children.exists(scanWithoutAgg)
     }
-    val bad = lp.collect { case g: Generate if scanWithoutAgg(g.child) => g }
+    val bad = lps.flatMap(_.collect { case g: Generate if scanWithoutAgg(g.child) => g })
     assert(bad.isEmpty, s"Generate over un-aggregated corpus rows:\n${bad.mkString("\n")}")
-    assert(lp.collect { case g: Generate => g }.nonEmpty, "stack unpivot missing entirely")
-    val aggs = lp.collect { case a: Aggregate => a }
-    assert(aggs.nonEmpty, "no aggregate planned over the events scan")
+    assert(lps.exists(_.collect { case g: Generate => g }.nonEmpty), "stack unpivot missing entirely")
+    assert(lps.exists(_.collect { case a: Aggregate => a }.nonEmpty),
+      "no aggregate planned over the events scan")
   }
 
   test("frequent_itemsets prunes via the Apriori semi-join and honors the support property") {
-    // lazy variant: the served path's checkpoints truncate the plan, so
-    // pin the shape on the un-materialized pipeline (pageRankOn convention)
-    val p = graft.ops.Relational.frequentItemsets(spark, sfDir, materialize = false)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val ps = physicalPlans {
+      rows = graft.ops.Relational.frequentItemsets(spark, sfDir).collect()
+    }
     // level-1 pruning must plan as a broadcast SEMI join, triple
     // generation as okey equi-joins (never cartesian), final cut bounded
-    assert(p.contains("LeftSemi"), "frequent-singles Apriori pruning not planned as semi-join")
-    assert(!p.contains("CartesianProduct"), "triple generation must ride the okey equi-join")
-    assert(p.contains("TakeOrderedAndProject"), "top-50 cut planned as a global sort")
+    assert(ps.exists(_.contains("LeftSemi")), "frequent-singles Apriori pruning not planned as semi-join")
+    assert(ps.forall(!_.contains("CartesianProduct")), "triple generation must ride the okey equi-join")
+    assert(ps.exists(_.contains("TakeOrderedAndProject")), "top-50 cut planned as a global sort")
 
     // Apriori property (semantic): a triple's support never exceeds the
     // support of any contained pair — checked against a driver replay
-    val rows = graft.ops.Relational.frequentItemsets(spark, sfDir).collect()
     assert(rows.nonEmpty)
     val baskets = graft.tables.Tables.lineitem(spark, sfDir)
       .join(graft.tables.Tables.part(spark, sfDir),
@@ -752,20 +748,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("round-22: partitionedCheckpoint joins exchange/sort-free on its key") {
-    // The mechanism behind corenessOn / lpaLabelsOn / bfsDistTable /
-    // the walk family / user_cf: an edge table checkpointed via
-    // Checkpoints.Scope.partitioned carries HashPartitioning(key)
-    // and the sort order through the LogicalRDD, so every per-round
-    // join on that key plans with NO Exchange and NO Sort on the edge
-    // arm. Round 22 found the round-21 inline shape (repartition +
-    // sortWithinPartitions + localCheckpoint under AQE) captured
-    // UnknownPartitioning — the shuffle+sort was paid with zero
-    // downstream benefit; the helper builds the checkpoint in a brief
-    // AQE-off scope, which is the only way LogicalRDD.fromDataset sees
-    // the physical partitioning. The label side here is large enough
-    // that the join cannot fall back to a broadcast, so this pins the
-    // SortMergeJoin arm shape itself (the round-21 version of this test
-    // silently passed through its BroadcastHashJoin escape hatch).
+    // a Scope.partitioned checkpoint keeps HashPartitioning(key) and its
+    // sort order, so a join on that key plans no Exchange or Sort on its arm;
+    // the label side is too large to broadcast, so this pins the SMJ arm itself
     import org.apache.spark.sql.functions._
     graft.ops.Checkpoints.scope { s =>
       val e = s.partitioned(
@@ -783,9 +768,39 @@ class PlanSpec extends SparkSpec {
         .takeWhile(!_.contains("ExistingRDD")).toSeq
       assert(!arm.exists(l => l.contains("Exchange") || l.trim.startsWith("+- Sort")),
         s"checkpointed partitioning/ordering did not survive — edge arm re-planned:\n$plan")
-      // and the helper must restore AQE for everything planned after it
-      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
-        "Scope.partitioned leaked its AQE-off flip")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true", "AQE was switched off")
     }
+  }
+
+  test("link_predict's wedge and user_cf's pair self-joins read their checkpoints unshuffled") {
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other                    => other.children.flatMap(nodes)
+    })
+    // an arm is unshuffled when it reaches the checkpoint scan with no
+    // Exchange, query stage or Sort on the way
+    def unshuffled(p: SparkPlan): Boolean = p match {
+      case _: RDDScanExec                                => true
+      case _: Exchange | _: QueryStageExec | _: SortExec => false
+      case other => other.children.nonEmpty && other.children.forall(unshuffled)
+    }
+    def scanned(p: SparkPlan) = nodes(p).collect { case r: RDDScanExec => r.rdd.id }.toSet
+    def selfJoins(qes: Seq[QueryExecution]) = qes.flatMap(qe => nodes(qe.executedPlan)).collect {
+      case j: SortMergeJoinExec
+          if j.children.forall(unshuffled) && scanned(j.left) == scanned(j.right) => j
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // no broadcast fallback: the SMJ arms are what is pinned
+    try Seq("link_predict", "user_cf").foreach { name =>
+      val qes = servedPlans(SparkEntry.queries(name)(spark, sfDir).collect())
+      assert(selfJoins(qes).nonEmpty, s"$name: no sort-merge join reads its checkpoint " +
+        s"without an Exchange or Sort:\n${qes.map(_.executedPlan).mkString("\n")}")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -169,16 +169,46 @@ class ScaleSpec extends SparkSpec {
       val ev = graft.tables.Tables.events(spark, dir)
       assert(ev.count() == k * graft.tables.Tables.events(spark, sfDir).count())
       assert(ev.select("event_id").distinct().count() == ev.count())
-    } finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).toArray
-            .map(_.asInstanceOf[java.nio.file.Path]).foreach(rm)
-        java.nio.file.Files.deleteIfExists(p)
-        ()
+    } finally rm(java.nio.file.Paths.get(tmp))
+  }
+
+  private def rm(p: java.nio.file.Path): Unit = {
+    if (java.nio.file.Files.isDirectory(p))
+      java.nio.file.Files.list(p).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).foreach(rm)
+    java.nio.file.Files.deleteIfExists(p)
+    ()
+  }
+
+  test("perfbench/gen.py's replica rule equals ScaleProbe.replica, row for row") {
+    // the benchmark synthesizes its grown inputs in Python; both sides must
+    // keep the same rule (id offsets, Caesar/reverse/scramble tiers, rotation
+    // and sign-flip tiers) or benchmark figures stop matching probe figures
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "documents", "embeddings", "events", "orders", "lineitem")
+    val rs  = Seq(1, 26, 27, 64, 65, 255)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_replica_rule")
+    try {
+      // -B: importing gen.py must leave no bytecode cache under perfbench/
+      val script =
+        s"""import sys
+           |sys.path.insert(0, "perfbench")
+           |import gen, pyarrow.parquet as pq
+           |for name in ${tables.map(t => s"'$t'").mkString("[", ", ", "]")}:
+           |    base = pq.read_table("$sfDir/%s.parquet" % name)
+           |    for r in ${rs.mkString("[", ", ", "]")}:
+           |        pq.write_table(gen.replica(name, base, r), "$tmp/%s_%d.parquet" % (name, r))
+           |""".stripMargin
+      val py  = new ProcessBuilder("python3", "-B", "-c", script).redirectErrorStream(true).start()
+      val log = scala.io.Source.fromInputStream(py.getInputStream).mkString
+      assert(py.waitFor() == 0, log)
+      for (name <- tables; r <- rs) {
+        val want = ScaleProbe.replica(name, spark.read.parquet(s"$sfDir/$name.parquet"), r)
+        val got  = spark.read.parquet(s"$tmp/${name}_$r.parquet").select(want.columns.head, want.columns.tail: _*)
+        assert(got.exceptAll(want).union(want.exceptAll(got)).isEmpty,
+          s"$name replica $r: gen.py and ScaleProbe rows differ")
       }
-      rm(java.nio.file.Paths.get(tmp))
-    }
+    } finally rm(tmp)
   }
 
   test("curation_pipeline and media_dedup shuffle hash-sized rows, never text/media bytes") {

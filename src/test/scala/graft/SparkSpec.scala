@@ -1,12 +1,34 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.SchedulerBridge
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` and returns the QueryExecution of every action that
+    * succeeded meanwhile (eager checkpoints included), in completion
+    * order: the plans a served operator actually ran. */
+  def servedPlans(body: => Any): Seq[QueryExecution] = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = { seen.add(qe); () }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; SchedulerBridge.drainListeners(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
 }
 
 object SparkSpec {
