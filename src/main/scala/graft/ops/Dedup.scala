@@ -859,40 +859,26 @@ object Dedup {
     // eager per-round checkpoints: AQE broadcasts the node-sized label
     // table every round, so the edge table never re-shuffles
     val edges = ck.ckpt(edges0)
-    // state: ((id, rep) labels, labels that changed last round)
-    val (labels, changed) = Checkpoints.iterate(maxIters) { s =>
-      // init = identity fused with the first propagation round: rep0 =
-      // min(id, min neighbor). Star components centered on their min id —
-      // the dominant shape of a near-dup pair graph — converge right here,
-      // so the loop's first pass is already the convergence check.
-      (s.ckpt(edges
-        .groupBy("src")
-        .agg(least(col("src"), min(col("dst"))).as("rep"))
-        .select(col("src").as("id"), col("rep"))), 1L)
-    }(_._2 == 0L) { case (s, (labels, _), _) =>
-      // candidate labels from neighbors; keep the min of (own, neighbors').
-      // The convergence count and the next labels both read the one
-      // round checkpoint.
-      val next = s.ckpt(edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("rep").as("nbr_rep"))
-        .join(labels, "id")
-        .select(col("id"), least(col("rep"), col("nbr_rep")).as("new_rep"), col("rep")))
-      (next.select(col("id"), col("new_rep").as("rep")), next.filter(col("new_rep") < col("rep")).count())
-    }
+    // init = identity fused with the first propagation round: rep0 =
+    // min(id, min neighbor). Star components centered on their min id —
+    // the dominant shape of a near-dup pair graph — converge right here,
+    // so the loop's first pass is already the convergence check.
+    val (labels, changing) = Graph.minLabels(edges, edges
+      .groupBy("src")
+      .agg(least(col("src"), min(col("dst"))).as("label"))
+      .select(col("src").as("node"), col("label")), maxIters)
     // a component with diameter > maxIters would get wrong representatives;
     // fail loudly rather than return a silently-partial clustering.
-    if (changed > 0)
+    if (changing)
       throw new IllegalStateException(
         s"clusterLabels: label propagation did not converge in $maxIters rounds " +
-          s"($changed labels still changing) — raise maxIters for deeper components")
-    // directHandle (the memoized clusterLabels path) pays ONE extra
-    // node-sized checkpoint so the artifact holds a compact (id, rep)
-    // table, not the wider round table; single-use lazy consumers
-    // (dbscan, entity_resolve) keep the barrier-free view (cold A/B: the
-    // unconditional extra barrier cost entity_resolve ~8% for nothing)
-    if (directHandle) ck.ckpt(labels) else labels
+          s"(${labels.filter(col("label") < col("old")).count()} labels still changing)" +
+          " — raise maxIters for deeper components")
+    val reps = labels.select(col("node").as("id"), col("label").as("rep"))
+    // directHandle (the memoized clusterLabels path) checkpoints the
+    // compact (id, rep) table the artifact holds; single-use lazy
+    // consumers (dbscan, entity_resolve) read the round checkpoint
+    if (directHandle) ck.ckpt(reps) else reps
   }
 
   /** Per-CLUSTER keep-best — the composition real dedup pipelines run

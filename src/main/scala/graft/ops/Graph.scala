@@ -101,24 +101,29 @@ object Graph {
       .orderBy("node")
   }
 
-  /** `nodes`/`nn`/`deg`/`r0` prep + `r1..r{Iters}` chained PageRank CTE
-    * rounds over a caller-supplied `edges` CTE — shared by the pagerank
-    * oracle and `textrank_keywords` (whose node keys are WORDS, not
-    * ids: the iteration arithmetic never touches the key type, only
-    * joins on it). Replays [[pageRankOn]]'s exact-nanos contribution
-    * sums and 9dp per-round re-round. */
-  private[ops] val pageRankIterCtes: String = {
+  /** `nodes`/`nn`/`deg`/`r0` prep + `r1..r{Iters}` chained CTE rounds of
+    * [[rankWalk]] over a caller-supplied `edges` CTE — shared by the
+    * pagerank and personalized_pagerank oracles and `textrank_keywords`
+    * (whose node keys are WORDS, not ids: the iteration arithmetic never
+    * touches the key type, only joins on it). `seeded` is the SQL
+    * predicate over `node` that picks the seeds (`TRUE` for PageRank).
+    * Replays the exact-nanos contribution sums and 9dp per-round
+    * re-round. */
+  private[ops] def pageRankIterCtes(seeded: String): String = {
     val prep =
-      """nodes AS (
-        |  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-        |), nn AS (SELECT count(*) AS n FROM nodes),
+      s"""nodes AS (
+        |  SELECT node, $seeded AS seed FROM (SELECT src AS node FROM edges UNION SELECT dst FROM edges)
+        |), nn AS (SELECT count(*) AS n FROM nodes WHERE seed),
         |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-        |r0 AS (SELECT node, round(1.0 / nn.n, 9) AS r FROM nodes, nn)""".stripMargin
+        |r0 AS (
+        |  SELECT node, CASE WHEN seed THEN round(1.0 / nn.n, 9) ELSE CAST(0 AS DOUBLE) END AS r
+        |  FROM nodes, nn)""".stripMargin
     val iters = (1 to Iters).map { i =>
       val prev = s"r${i - 1}"
       s"""r$i AS (
          |  SELECT x.node,
-         |    round(0.15 / nn.n + 0.85 * (coalesce(c.sn, 0) / 1000000000.0), 9) AS r
+         |    round(CASE WHEN x.seed THEN 0.15 / nn.n ELSE CAST(0 AS DOUBLE) END
+         |          + 0.85 * (coalesce(c.sn, 0) / 1000000000.0), 9) AS r
          |  FROM nodes x CROSS JOIN nn LEFT JOIN (
          |    SELECT e.dst AS node,
          |           sum(CAST(round((p.r / deg.d) * 1000000000.0) AS BIGINT)) AS sn
@@ -132,12 +137,14 @@ object Graph {
   /** name of the final PageRank round CTE in [[pageRankIterCtes]]. */
   private[ops] val pageRankFinalCte: String = s"r$Iters"
 
-  private val pageRankSql: String =
+  /** The oracle of [[rankWalk]] over the order graph, seeds picked by
+    * the SQL predicate `seeded` over `node`. */
+  private def rankWalkSql(seeded: String): String =
     s"""WITH edges AS (
        |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst
        |  FROM orders WHERE (o_custkey % 211) <> (o_orderkey % 197)
        |),
-       |$pageRankIterCtes
+       |${pageRankIterCtes(seeded)}
        |SELECT f.node, CAST(coalesce(deg.d, 0) AS BIGINT) AS out_deg, f.r AS rank
        |FROM $pageRankFinalCte f LEFT JOIN deg ON f.node = deg.src
        |ORDER BY f.node""".stripMargin
@@ -161,40 +168,6 @@ object Graph {
     * case reads. */
   private[graft] def pprOn(edgesDf: DataFrame, iters: Int): DataFrame =
     rankWalk(edgesDf, iters, col("node") < PprSeedMax)
-
-  private val pprSql: String = {
-    val base =
-      s"""WITH edges AS (
-         |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst
-         |  FROM orders WHERE (o_custkey % 211) <> (o_orderkey % 197)
-         |), nodes AS (
-         |  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-         |), ss AS (SELECT count(*) AS s FROM nodes WHERE node < $PprSeedMax),
-         |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-         |r0 AS (
-         |  SELECT node, CASE WHEN node < $PprSeedMax THEN round(1.0 / ss.s, 9)
-         |               ELSE CAST(0 AS DOUBLE) END AS r
-         |  FROM nodes, ss)""".stripMargin
-    val iters = (1 to Iters).map { i =>
-      val prev = s"r${i - 1}"
-      s"""r$i AS (
-         |  SELECT x.node,
-         |    round(CASE WHEN x.node < $PprSeedMax THEN 0.15 / ss.s
-         |               ELSE CAST(0 AS DOUBLE) END
-         |          + 0.85 * (coalesce(c.sn, 0) / 1000000000.0), 9) AS r
-         |  FROM nodes x CROSS JOIN ss LEFT JOIN (
-         |    SELECT e.dst AS node,
-         |           sum(CAST(round((p.r / deg.d) * 1000000000.0) AS BIGINT)) AS sn
-         |    FROM edges e JOIN $prev p ON e.src = p.node
-         |    JOIN deg ON e.src = deg.src GROUP BY e.dst
-         |  ) c ON x.node = c.node)""".stripMargin
-    }.mkString(",\n")
-    s"""$base,
-       |$iters
-       |SELECT f.node, CAST(coalesce(deg.d, 0) AS BIGINT) AS out_deg, f.r AS rank
-       |FROM r$Iters f LEFT JOIN deg ON f.node = deg.src
-       |ORDER BY f.node""".stripMargin
-  }
 
   /** node-space modulus for the triangle graph: larger than PageRank's
     * so the graph stays sparse (avg degree ~6 at sf0.01) instead of
@@ -268,17 +241,8 @@ object Graph {
     // reduced (long, long) tables once instead of re-running their
     // shuffles per consumer. MEMORY_AND_DISK, so at cluster scale this
     // is the standard spill-safe reuse of an O(m) intermediate.
-    val deg = ck.ckpt(e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg")))
-
-    // orient each edge from the lower-(deg, id) endpoint to the higher
-    val ej = e
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-    val uFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val or = ck.ckpt(ej.select(
-      when(uFirst, col("u")).otherwise(col("v")).as("src"),
-      when(uFirst, col("v")).otherwise(col("u")).as("dst")))
+    val deg = ck.ckpt(degreesOf(e))
+    val or = ck.ckpt(orientedOn(e, deg))
 
     // wedges at a common center; a.dst < b.dst by id makes the pair
     // canonical, so the close probes the u<v edge set directly
@@ -338,12 +302,17 @@ object Graph {
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
 
-  /** Degree-oriented (src → dst points low-degree → high) edge view of
-    * a canonical u<v edge table — the wedge-generation input shared by
-    * [[edgeSupportOn]]'s lazy and checkpointed shapes. */
-  private def orientedOn(e: DataFrame): DataFrame = {
-    val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+  /** (node, deg) of a canonical u<v edge table. */
+  private def degreesOf(e: DataFrame): DataFrame =
+    e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
+
+  /** Degree-oriented (src → dst points from the lower-(deg, id)
+    * endpoint to the higher) edge view of a canonical u<v edge table,
+    * given its [[degreesOf]] table — the wedge-generation input of
+    * [[triangleCountOn]] and [[edgeSupportOn]]'s lazy and checkpointed
+    * shapes. */
+  private def orientedOn(e: DataFrame, deg: DataFrame): DataFrame = {
     val ej = e
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
@@ -376,7 +345,7 @@ object Graph {
     * single-shot shape (the orientation subtree plans once per
     * self-join arm; fine when the caller runs it once). */
   private def edgeSupportOn(e: DataFrame): DataFrame =
-    supportFromOriented(orientedOn(e), e)
+    supportFromOriented(orientedOn(e, degreesOf(e)), e)
 
   /** k-truss decomposition at k = [[KTrussK]] (Cohen 2008) — the
     * triangle-cohesion community core [[kcoreDecompose]]'s pure degree
@@ -435,7 +404,8 @@ object Graph {
         s => (s.ckpt(edgesDf), Option.empty[DataFrame]))(_._2.isDefined) { case (s, (e, _), _) =>
       // hash(src)-partitioned: both wedge self-join arms read it exchange- and sort-free
       val sup = Checkpoints.scope { t =>
-        t.ckpt(supportFromOriented(t.partitioned(orientedOn(e), Seq("src"), Seq("src", "dst")), e))
+        val or = t.partitioned(orientedOn(e, degreesOf(e)), Seq("src"), Seq("src", "dst"))
+        t.ckpt(supportFromOriented(or, e))
       }
       // probe convergence on the support checkpoint first: a converged
       // round needs no edge-sized `kept` checkpoint
@@ -532,6 +502,26 @@ object Graph {
       .union(edgesDf.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
 
+  /** Min-label propagation to a fixpoint: each round, every node of
+    * `init` (node, label) takes the least of its own label and the labels
+    * its in-neighbours along `edges` (src, dst) send. One checkpoint per
+    * round, (node, label, old) with `old` the label the round started
+    * from, so the change test reads the checkpoint. Stops after a round
+    * that changes nothing or after `maxRounds` rounds; returns the last
+    * checkpoint and whether its round still changed a label. */
+  private[graft] def minLabels(
+      edges: DataFrame, init: DataFrame, maxRounds: Int): (DataFrame, Boolean) =
+    Checkpoints.iterate(maxRounds)(
+        s => (s.ckpt(init.select(col("node"), col("label"), col("label").as("old"))), true))(!_._2) {
+      case (s, (labels, _), _) =>
+        val offers = edges.join(labels.select(col("node").as("src"), col("label").as("offer")), "src")
+          .groupBy(col("dst").as("node")).agg(min("offer").as("offer"))
+        // least skips nulls: a node no edge reaches keeps its label
+        val next = s.ckpt(labels.join(offers, Seq("node"), "left")
+          .select(col("node"), least(col("label"), col("offer")).as("label"), col("label").as("old")))
+        (next, !next.filter(col("label") < col("old")).isEmpty)
+    }
+
   /** Single-source BFS distances (≤ [[BfsIters]] hops) over the
     * undirected form of the PageRank graph. */
   def bfsDistances(spark: SparkSession, dir: String): DataFrame =
@@ -545,10 +535,8 @@ object Graph {
     * node's edges every round; frontiers touch each edge O(1) times
     * total. The oracle mirrors the RESULT (min hop count) as chained
     * min-union CTEs, not the algorithm. Distances are exact longs.
-    * The per-round FRONTIER `localCheckpoint` truncates lineage and
-    * gates the early exit; the dist table is a lazy union over those
-    * checkpoints (round 21 — a second per-round barrier bought
-    * nothing). Empty frontier → early exit. */
+    * Only the frontier is checkpointed per round; an empty frontier
+    * ends the walk. */
   def bfsDistancesOn(edgesDf: DataFrame, source: Long, iters: Int): DataFrame =
     bfsDistTable(edgesDf, source, iters).orderBy("node")
 
@@ -562,33 +550,36 @@ object Graph {
     val e = ck.ckpt(symmetrize(edgesDf))
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    // only the frontier checkpoints per round (it gates the loop); the
-    // dist table is a lazy union over the frontier checkpoints,
-    // materialized once at the end
-    var frontier = ck.ckpt(Seq((source, 0L)).toDF("node", "dist"))
-    var dist: DataFrame = frontier
-    var t = 1
-    while (t <= iters && !frontier.isEmpty) {
+    // state: (frontier, dist = a lazy union over the frontier checkpoints)
+    val (_, dist) = Checkpoints.iterate(iters) { s =>
+      val seed = s.ckpt(Seq((source, 0L)).toDF("node", "dist"))
+      (seed, seed)
+    }(_._1.isEmpty) { case (s, (frontier, dist), t) =>
       val expand = frontier.join(e.select(col("src").as("node"), col("dst")), "node")
         .select(col("dst").as("node"), lit(t.toLong).as("dist"))
         .distinct()
-      frontier = ck.ckpt(expand.join(dist, Seq("node"), "left_anti"))
-      dist = dist.union(frontier)
-      t += 1
+      val next = s.ckpt(expand.join(dist, Seq("node"), "left_anti"))
+      (next, dist.union(next))
     }
     ck.ckpt(dist)
   }
 
-  /** `e0`/`e` CTEs of the shared order-derived undirected graph —
-    * every chained-CTE oracle in this family replays the same edge
-    * contract ([[symmetrize]] over [[rawEdges]] 211/197). */
-  private val edgeCtesSql: String =
-    """e0 AS (
-      |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst FROM orders
-      |  WHERE (o_custkey % 211) <> (o_orderkey % 197)
-      |), e AS (
-      |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-      |)""".stripMargin
+  /** `e0`/`e` CTEs of an order-derived undirected graph — every
+    * chained-CTE oracle in this family replays the same edge contract
+    * ([[symmetrize]] over [[rawEdges]] with moduli `mod1`/`mod2`). */
+  private def symEdgeCtesSql(mod1: Long, mod2: Long): String =
+    s"""e0 AS (
+       |  SELECT DISTINCT (o_custkey % $mod1) AS src, (o_orderkey % $mod2) AS dst FROM orders
+       |  WHERE (o_custkey % $mod1) <> (o_orderkey % $mod2)
+       |), e AS (
+       |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
+       |)""".stripMargin
+
+  /** [[symEdgeCtesSql]] of the PageRank graph. */
+  private val edgeCtesSql: String = symEdgeCtesSql(211L, 197L)
+
+  /** [[symEdgeCtesSql]] of the sparse [[TriMod]] graph. */
+  private val triEdgeCtesSql: String = symEdgeCtesSql(TriMod.toLong, TriMod.toLong)
 
   /** Chained min-union BFS CTE block `d{tag}0..d{tag}{BfsIters}` over
     * the `e` edge CTE, seeded by the SQL expression `seed` — shared by
@@ -836,24 +827,22 @@ object Graph {
     randomWalksOn(rawEdges(spark, dir, 211L, 197L), WalkSteps)
 
   def randomWalksOn(edgesDf: DataFrame, steps: Int): DataFrame = Checkpoints.scope { ck =>
-    // PLAIN checkpoint (round 22): the round-21 pre-partitioning never
-    // captured its layout under AQE (pure upfront cost), and capturing
-    // it cold-measured 0.80x — it forces SortMergeJoin where AQE
-    // otherwise broadcasts the per-step frontier (see bfsDistTable)
+    // plain checkpoint: a captured layout forces SMJ where AQE would
+    // broadcast the per-step frontier
     val e = ck.ckpt(symmetrize(edgesDf))
-    var cur = ck.ckpt(e.select(col("src").as("start")).distinct()
-      .select(col("start"), col("start").as("node")))
-    // every step's frame feeds the final union, so the checkpoints
-    // live until the result materializes (unlike bfs/sssp, whose
-    // superseded rounds really are dead mid-walk)
-    var out    = cur.select(col("start"), lit(0L).as("step"), col("node"))
-    for (t <- 1 to steps) {
-      cur = ck.ckpt(cur.join(e, col("node") === col("src"))
+    // state: (walker positions, the walk so far); every step's
+    // checkpoint feeds the final union, so all live until the sort
+    val (_, out) = Checkpoints.iterate(steps) { s =>
+      val cur = s.ckpt(e.select(col("src").as("start")).distinct()
+        .select(col("start"), col("start").as("node")))
+      (cur, cur.select(col("start"), lit(0L).as("step"), col("node")))
+    }(_ => false) { case (s, (cur, out), t) =>
+      val next = s.ckpt(cur.join(e, col("node") === col("src"))
         .select(col("start"),
           struct(walkHash(col("node"), col("dst"), t).as("h"), col("dst").as("n")).as("hn"))
         .groupBy("start").agg(min("hn").as("hn"))
         .select(col("start"), col("hn.n").as("node")))
-      out = out.union(cur.select(col("start"), lit(t.toLong).as("step"), col("node")))
+      (next, out.union(next.select(col("start"), lit(t.toLong).as("step"), col("node"))))
     }
     ck.ckpt(out.orderBy("start", "step"))
   }
@@ -889,26 +878,28 @@ object Graph {
     node2vecWalksOn(rawEdges(spark, dir, 211L, 197L), WalkSteps)
 
   def node2vecWalksOn(edgesDf: DataFrame, steps: Int): DataFrame = Checkpoints.scope { ck =>
-    // PLAIN checkpoint (round 22): the round-21 repartition(src)+sort
-    // never captured its layout under AQE (pure upfront cost), and
-    // capturing it cold-measured 0.70x — it forces SortMergeJoin where
-    // AQE otherwise broadcasts the frontier (see bfsDistTable)
+    // plain checkpoint: a captured layout forces SMJ where AQE would
+    // broadcast the frontier
     val e = ck.ckpt(symmetrize(edgesDf))
-    val starts = e.select(col("src").as("start")).distinct()
-    var out = starts.select(col("start"), lit(0L).as("step"), col("start").as("node"))
-    // step 1 has no previous node: uniform hash argmin (randomWalks)
-    var cur = ck.ckpt(starts.select(col("start"), col("start").as("node"))
-      .join(e, col("node") === col("src"))
-      .select(col("start"),
-        struct(walkHash(col("node"), col("dst"), 1).as("h"), col("dst").as("n")).as("hn"))
-      .groupBy("start").agg(min("hn").as("hn"))
-      .select(col("start"), col("start").as("prev"), col("hn.n").as("node")))
-    out = out.union(cur.select(col("start"), lit(1L).as("step"), col("node")))
-    for (t <- 2 to steps) {
+    val near = e.select(col("src").as("prev"), col("dst").as("x"), lit(1).as("isn"))
+    // state: (walkers as (start, prev, node), the walk so far); every
+    // step's checkpoint feeds the final union, so all live until the sort
+    val (_, out) = Checkpoints.iterate(steps - 1) { s =>
+      val starts = e.select(col("src").as("start")).distinct()
+      // step 1 has no previous node: uniform hash argmin (randomWalks)
+      val cur = s.ckpt(starts.select(col("start"), col("start").as("node"))
+        .join(e, col("node") === col("src"))
+        .select(col("start"),
+          struct(walkHash(col("node"), col("dst"), 1).as("h"), col("dst").as("n")).as("hn"))
+        .groupBy("start").agg(min("hn").as("hn"))
+        .select(col("start"), col("start").as("prev"), col("hn.n").as("node")))
+      (cur, starts.select(col("start"), lit(0L).as("step"), col("start").as("node"))
+        .union(cur.select(col("start"), lit(1L).as("step"), col("node"))))
+    }(_ => false) { case (s, (cur, out), r) =>
+      val t = r + 1
       val cand = cur.join(e, col("node") === col("src"))
         .select(col("start"), col("prev"), col("node"), col("dst").as("x"))
-      val near = e.select(col("src").as("prev"), col("dst").as("x"), lit(1).as("isn"))
-      cur = ck.ckpt(cand.join(near, Seq("prev", "x"), "left")
+      val next = s.ckpt(cand.join(near, Seq("prev", "x"), "left")
         .withColumn("m",
           when(col("x") === col("prev"), lit(N2vP))
             .when(col("isn").isNotNull, lit(1L))
@@ -919,7 +910,7 @@ object Graph {
         .groupBy("start")
         .agg(min("hn").as("hn"), min("node").as("prev")) // node is per-walker unique
         .select(col("start"), col("prev"), col("hn.n").as("node")))
-      out = out.union(cur.select(col("start"), lit(t.toLong).as("step"), col("node")))
+      (next, out.union(next.select(col("start"), lit(t.toLong).as("step"), col("node"))))
     }
     ck.ckpt(out.orderBy("start", "step"))
   }
@@ -944,12 +935,8 @@ object Graph {
 
   private val node2vecSql: String = {
     val base =
-      s"""WITH e0 AS (
-         |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst FROM orders
-         |  WHERE (o_custkey % 211) <> (o_orderkey % 197)
-         |), e AS (
-         |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-         |), w0 AS (SELECT DISTINCT src AS start, src AS node FROM e),
+      s"""WITH $edgeCtesSql,
+         |w0 AS (SELECT DISTINCT src AS start, src AS node FROM e),
          |w1 AS (
          |  SELECT start, start AS prev, node FROM (
          |    SELECT w.start, e.dst AS node,
@@ -981,12 +968,8 @@ object Graph {
 
   private val walksSql: String = {
     val base =
-      s"""WITH e0 AS (
-         |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst FROM orders
-         |  WHERE (o_custkey % 211) <> (o_orderkey % 197)
-         |), e AS (
-         |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-         |), w0 AS (SELECT DISTINCT src AS start, src AS node FROM e)""".stripMargin
+      s"""WITH $edgeCtesSql,
+         |w0 AS (SELECT DISTINCT src AS start, src AS node FROM e)""".stripMargin
     val steps = (1 to WalkSteps).map { t =>
       s"""w$t AS (
          |  SELECT start, node FROM (
@@ -1005,13 +988,6 @@ object Graph {
   }
 
   private val betweennessSql: String = {
-    val base =
-      s"""WITH e0 AS (
-         |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst FROM orders
-         |  WHERE (o_custkey % 211) <> (o_orderkey % 197)
-         |), e AS (
-         |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-         |)""".stripMargin
     val perSource = BcSources.map { s =>
       val fwd = (1 to BcHops).map { h =>
         s"""f${s}_$h AS (
@@ -1045,7 +1021,7 @@ object Graph {
       (0 to BcHops).map(lvl =>
         s"SELECT node, delta FROM b${s}_$lvl WHERE node <> $s")
     }.mkString(" UNION ALL ")
-    s"""$base,
+    s"""WITH $edgeCtesSql,
        |$perSource
        |SELECT node, CAST(SUM(delta) AS BIGINT) AS bc_nanos FROM (
        |  $unions
@@ -1114,19 +1090,15 @@ object Graph {
 
   private val ssspSql: String = {
     val base =
-      s"""WITH e0 AS (
-         |  SELECT DISTINCT (o_custkey % 211) AS src, (o_orderkey % 197) AS dst FROM orders
-         |  WHERE (o_custkey % 211) <> (o_orderkey % 197)
-         |), eu AS (
-         |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0
-         |), e AS (
-         |  SELECT src, dst, 1 + (LEAST(src, dst) * 31 + GREATEST(src, dst)) % 9 AS w FROM eu
+      s"""WITH $edgeCtesSql,
+         |ew AS (
+         |  SELECT src, dst, 1 + (LEAST(src, dst) * 31 + GREATEST(src, dst)) % 9 AS w FROM e
          |), d0 AS (SELECT CAST($BfsSource AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist)""".stripMargin
     val steps = (1 to BfsIters).map { i =>
       val prev = s"d${i - 1}"
       s"""d$i AS (SELECT node, min(dist) AS dist FROM (
          |  SELECT node, dist FROM $prev
-         |  UNION ALL SELECT e.dst AS node, $prev.dist + e.w FROM $prev JOIN e ON $prev.node = e.src)
+         |  UNION ALL SELECT ew.dst AS node, $prev.dist + ew.w FROM $prev JOIN ew ON $prev.node = ew.src)
          |  GROUP BY node)""".stripMargin
     }.mkString(",\n")
     s"$base,\n$steps\nSELECT node, dist FROM d$BfsIters ORDER BY node"
@@ -1157,15 +1129,9 @@ object Graph {
     * map-side partial agg, then one lexicographic max(struct(count,
     * −label)) per node, which IS the deterministic argmax (highest
     * count, then lowest label) in a single shuffle with partial
-    * aggregation. Only (long, long[, long]) tuples ever ship.
-    *
-    * Round-21 re-shape (opt guide §1.2/§2.4): the rounds form a
-    * SINGLE-CONSUMER chain (labels_t feeds only round t+1), so they
-    * stay LAZY and the whole fixed-round chain materializes in ONE job
-    * at the final checkpoint — the plan is O(iters) nodes analyzed
-    * once, nothing re-evaluates. The edge table checkpoints
-    * PRE-PARTITIONED AND SORTED on src (the propagation join key), so
-    * every round's join plans exchange/sort-free on the edge arm. */
+    * aggregation. Only (long, long[, long]) tuples ever ship. The
+    * rounds stay lazy: labels_t feeds only round t+1, so the whole chain
+    * materializes in one job at the final checkpoint. */
   def lpaCommunitiesOn(edgesDf: DataFrame, iters: Int): DataFrame = {
     val labels = lpaLabelsOn(symmetrize(edgesDf), iters)
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("community_size"))
@@ -1178,16 +1144,13 @@ object Graph {
     * final (node, label) table as a DIRECT checkpoint handle, which
     * passes to the caller's scope. */
   private[graft] def lpaLabelsOn(sym: DataFrame, iters: Int): DataFrame = Checkpoints.scope { ck =>
-    // PLAIN checkpoint (round 22): the round-21 pre-partitioning never
-    // captured its layout under AQE (pure upfront cost), and capturing
-    // it cold-measured 0.76x — it forces SortMergeJoin where AQE
-    // otherwise broadcasts the node-sized label table (see bfsDistTable)
+    // plain checkpoint: a captured layout forces SMJ where AQE would
+    // broadcast the node-sized label table
     val e = ck.ckpt(sym)
     val adj = e.select(col("src").as("node"), col("dst"))
-    var labels: DataFrame = e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to iters) {
-      labels = adj.join(labels, "node")
+    val labels = Checkpoints.iterate(iters)(_ => e.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label")))(_ => false) { (_, labels, _) =>
+      adj.join(labels, "node")
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst").as("node"))
         .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl"))).as("m"))
@@ -1204,12 +1167,8 @@ object Graph {
     * graph_modularity oracle, which scores the same labels. */
   private val lpaChainCtes: String = {
     val base =
-      s"""WITH raw AS (
-         |  SELECT (o_custkey % $TriMod) AS src, (o_orderkey % $TriMod) AS dst FROM orders
-         |  WHERE (o_custkey % $TriMod) <> (o_orderkey % $TriMod)
-         |), e AS (
-         |  SELECT src, dst FROM raw UNION SELECT dst, src FROM raw
-         |), l0 AS (SELECT DISTINCT src AS node, src AS label FROM e)""".stripMargin
+      s"""WITH $triEdgeCtesSql,
+         |l0 AS (SELECT DISTINCT src AS node, src AS label FROM e)""".stripMargin
     val steps = (1 to LpaIters).map { i =>
       val prev = s"l${i - 1}"
       s"""c$i AS (
@@ -1379,25 +1338,15 @@ object Graph {
         // (≤ one row per component) until fixpoint — exact merge, so
         // a stale label can never re-elect a cycle-closing edge
         val pb = chosen.join(lab, Seq("u", "v", "w"))
-        val pairs = s.ckpt(pb.select(col("cu").as("a"), col("cv").as("b"))
-          .union(pb.select(col("cv").as("a"), col("cu").as("b")))
+        val pairs = s.ckpt(pb.select(col("cu").as("src"), col("cv").as("dst"))
+          .union(pb.select(col("cv").as("src"), col("cu").as("dst")))
           .distinct())
-        val (lm, _) = Checkpoints.iterate(Int.MaxValue) { t =>
-          (t.ckpt(comp.select(col("label")).distinct()
-            .select(col("label"), col("label").as("ml"))), true)
-        }(!_._2) { case (t, (lm, _), _) =>
-          // change detection rides the checkpoint (old ml kept as a
-          // column): one barrier per iteration
-          val nb = pairs.join(lm.select(col("label").as("b"), col("ml").as("mlb")), "b")
-            .groupBy(col("a").as("label")).agg(min("mlb").as("nbml"))
-          val next = t.ckpt(lm.join(nb, Seq("label"), "left")
-            .select(col("label"), col("ml").as("old"),
-              least(col("ml"), coalesce(col("nbml"), col("ml"))).as("ml")))
-          (next.select(col("label"), col("ml")), !next.filter(col("ml") =!= col("old")).isEmpty)
-        }
+        val (lm, _) = minLabels(pairs, comp.select(col("label").as("node")).distinct()
+          .select(col("node"), col("node").as("label")), Int.MaxValue)
         // the forest is a lazy union over the per-round `chosen`
         // checkpoints, materialized once by the final sort
-        (s.ckpt(comp.join(lm, "label").select(col("node"), col("ml").as("label"))),
+        (s.ckpt(comp.join(lm.select(col("node").as("label"), col("label").as("ml")), "label")
+          .select(col("node"), col("ml").as("label"))),
           Some(forest.fold(chosen)(_.union(chosen))), false)
       }
     }
@@ -1567,15 +1516,8 @@ object Graph {
   }
 
   private val kcoreSql: String = {
-    val base =
-      s"""WITH raw AS (
-         |  SELECT (o_custkey % $TriMod) AS src, (o_orderkey % $TriMod) AS dst FROM orders
-         |  WHERE (o_custkey % $TriMod) <> (o_orderkey % $TriMod)
-         |), e0 AS (
-         |  SELECT src, dst FROM raw UNION SELECT dst, src FROM raw
-         |)""".stripMargin
     val steps = (1 to KcoreRounds).map { i =>
-      val prev = s"e${i - 1}"
+      val prev = if (i == 1) "e" else s"e${i - 1}"
       s"""b$i AS (
          |  SELECT src AS node FROM $prev GROUP BY src HAVING count(*) < $KcoreK
          |), e$i AS (
@@ -1583,7 +1525,7 @@ object Graph {
          |  WHERE src NOT IN (SELECT node FROM b$i) AND dst NOT IN (SELECT node FROM b$i)
          |)""".stripMargin
     }.mkString(",\n")
-    s"""$base,
+    s"""WITH $triEdgeCtesSql,
        |$steps
        |SELECT src AS node, CAST(count(*) AS BIGINT) AS core_deg
        |FROM e$KcoreRounds GROUP BY src ORDER BY node""".stripMargin
@@ -1657,12 +1599,8 @@ object Graph {
     * explicit ROWS frame. */
   private val corenessSql: String = {
     val base =
-      s"""WITH raw AS (
-         |  SELECT (o_custkey % $TriMod) AS src, (o_orderkey % $TriMod) AS dst FROM orders
-         |  WHERE (o_custkey % $TriMod) <> (o_orderkey % $TriMod)
-         |), e AS (
-         |  SELECT src, dst FROM raw UNION SELECT dst, src FROM raw
-         |), c0 AS (SELECT src AS node, count(*) AS c FROM e GROUP BY src)""".stripMargin
+      s"""WITH $triEdgeCtesSql,
+         |c0 AS (SELECT src AS node, count(*) AS c FROM e GROUP BY src)""".stripMargin
     val steps = (1 to CorenessIters).map { i =>
       val prev = s"c${i - 1}"
       s"""c$i AS (
@@ -1781,13 +1719,8 @@ object Graph {
   private val LpDegCap = 64
   private val LpTopN   = 50
   /** adjacency rows per task for [[linkPredictOn]]'s volume-scaled
-    * stages (each row fans out ≤ (LpDegCap−1)/2 wedge pairs).
-    * Env-overridable for probe experiments only (the r19 conf-override
-    * discipline that separated sizing from shape). */
-  private val LpAdjRowsPerTask = sys.env.get("SPARK_GRAFT_LP_ROWS_PER_TASK")
-    .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-    .filter(_ > 0L) // 0/negatives would divide-by-zero deep in the sizing (r21 ADVICE)
-    .getOrElse(250000L)
+    * stages (each row fans out ≤ (LpDegCap−1)/2 wedge pairs). */
+  private val LpAdjRowsPerTask = 250000L
 
   def linkPredict(spark: SparkSession, dir: String): DataFrame =
     linkPredictOn(triEdges(spark, dir))
@@ -1965,19 +1898,9 @@ object Graph {
       }
       if (active.isEmpty) (e, done, active)
       else {
-        // ---- forward min-label coloring to fixpoint; change detection
-        // rides the round checkpoint (the old color kept as a column)
-        val (colors, _) = Checkpoints.iterate(Int.MaxValue) { t =>
-          (t.ckpt(active.select(col("node"), col("node").as("color"))), true)
-        }(!_._2) { case (t, (colors, _), _) =>
-          val offers = colors.join(e, col("node") === col("src"))
-            .select(col("dst").as("node"), col("color").as("c2"))
-            .groupBy("node").agg(min("c2").as("c2"))
-          val next = t.ckpt(colors.join(offers, Seq("node"), "left")
-            .select(col("node"), col("color").as("old"),
-              least(col("color"), coalesce(col("c2"), col("color"))).as("color")))
-          (next.select(col("node"), col("color")), next.filter(col("color") < col("old")).count() > 0L)
-        }
+        // ---- forward min-label coloring to fixpoint
+        val (fwd, _) = minLabels(e, active.select(col("node"), col("node").as("label")), Int.MaxValue)
+        val colors = fwd.select(col("node"), col("label").as("color"))
         // ---- backward sweep inside each color class from its root
         val (reached, _, _) = Checkpoints.iterate(Int.MaxValue) { t =>
           val roots = t.ckpt(colors.filter(col("node") === col("color")))
@@ -2026,7 +1949,7 @@ object Graph {
       |FROM scc s JOIN sz z USING (scc_id) ORDER BY s.node""".stripMargin
 
   val entries: Seq[QueryDef] = Seq(
-    QueryDef.sql("pagerank", pageRankSql)(pageRank),
+    QueryDef.sql("pagerank", rankWalkSql("TRUE"))(pageRank),
     QueryDef.sql("triangle_count", triangleSql)(triangleCount),
     QueryDef.sql("bfs_distances", bfsSql)(bfsDistances),
     QueryDef.sql("betweenness_sampled", betweennessSql)(betweenness),
@@ -2038,7 +1961,7 @@ object Graph {
     QueryDef.sql("k_truss", kTrussSql)(kTruss),
     QueryDef.sql("coreness", corenessSql)(coreness),
     QueryDef.sql("link_predict", linkPredictSql)(linkPredict),
-    QueryDef.sql("personalized_pagerank", pprSql)(personalizedPagerank),
+    QueryDef.sql("personalized_pagerank", rankWalkSql(s"node < $PprSeedMax"))(personalizedPagerank),
     QueryDef.sql("hits_scores", hitsSql)(hitsScores),
     QueryDef.sql("graph_modularity", modularitySql)(graphModularity),
     QueryDef.sql("louvain_move", louvainSql)(louvainMove),

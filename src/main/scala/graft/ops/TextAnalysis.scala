@@ -448,37 +448,24 @@ object TextAnalysis {
     * power-iteration shape (pagerank's algebra on a bipartite graph);
     * factor vectors are vocab-/corpus-sized, never cell-sized. */
   def lsaTopic(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
-    // SPARK_GRAFT_LSA_DEBUG=1: per-phase wall times on stderr (cells
-    // build vs each sweep) — the phase-profile diagnostic that splits
-    // "the sweeps got slower" from "the cells checkpoint is evicting"
-    val debug = sys.env.get("SPARK_GRAFT_LSA_DEBUG").contains("1")
-    var t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (debug) {
-      System.err.println(f"[lsa] $phase: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val tf = docs.select(col("doc_id"),
         explode(filter(toks(col("text")), t => t =!= "")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
+    // the cell table feeds every half-step and is pinned for all of
+    // them, so it checkpoints SERIALIZED: compact bytes keep more of it
+    // resident (2.6 GB deserialized at 256× grown)
     val cells = ck.ckpt(tf.join(dfT, "term").crossJoin(broadcast(n))
       .select(col("doc_id"), col("term"),
         (col("tf") * expr("CAST(round(ln(CAST(n AS DOUBLE) / df) * 1000000) AS BIGINT)"))
           .as("a")), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      // SERIALIZED: the cell table is pinned for all 12 half-steps and
-      // is the whole memory story here (2.6 GB deserialized at 256×
-      // grown, where the measured 64→256 excess was exactly the first-
-      // sweep eviction churn of these blocks spilling to disk) —
-      // compact bytes keep more of it resident and bound the transient
-       // feeds every half-step
-    mark("cells checkpoint")
     // each sweep checkpoints the PRE-normalization aggregates u0/v0, so
     // each cells join runs exactly once: the max arm and the normalized
     // projection are cheap lazy reads of the checkpoint
     val v = Checkpoints.iterate(LsaIters)(s => s.ckpt(cells.select(col("term")).distinct()
-      .select(col("term"), lit(1000000L).as("v"))))(_ => false) { (s, v, it) =>
+      .select(col("term"), lit(1000000L).as("v"))))(_ => false) { (s, v, _) =>
       // doc-sized; feeds the max arm + the v half-step
       val u0 = s.ckpt(cells.join(v, "term")
         .groupBy("doc_id")
@@ -492,7 +479,6 @@ object TextAnalysis {
         .groupBy("term")
         .agg(expr("CAST(sum(CAST(a AS DECIMAL(38,0)) * u) div 1000000 AS DECIMAL(38,0))").as("vv")))
       val vMax = v0.agg(max("vv").as("m"))
-      mark(s"sweep $it")
       v0.crossJoin(broadcast(vMax))
         .select(col("term"), expr("CAST((vv * 1000000) div m AS BIGINT)").as("v"))
     }
@@ -1446,7 +1432,7 @@ object TextAnalysis {
        |    SELECT src, dst FROM p0 UNION ALL SELECT dst, src FROM p0)
        |  WHERE src <> dst
        |),
-       |${Graph.pageRankIterCtes}
+       |${Graph.pageRankIterCtes("TRUE")}
        |SELECT f.node AS term, CAST(coalesce(deg.d, 0) AS BIGINT) AS out_deg, f.r AS rank
        |FROM ${Graph.pageRankFinalCte} f LEFT JOIN deg ON f.node = deg.src
        |ORDER BY rank DESC, term LIMIT 20""".stripMargin

@@ -348,5 +348,13 @@ class CheckpointsSpec extends SparkSpec {
     // one served body per operator: no plan-spec-only fork
     val forks = mainHits(Seq("materialize: Boolean"))
     assert(forks.isEmpty, forks.map(_._2).mkString("\n"))
+    // graph round state lives in Checkpoints.iterate, not in loop vars
+    val vars = mainHits(Seq("var ")).filter(_._1 == "Graph.scala")
+    assert(vars.isEmpty, vars.map(_._2).mkString("\n"))
+    // environment reads only where a main starts
+    val mains = Set("Bench.scala", "Verify.scala", "ScaleProbe.scala", "SearchMain.scala",
+      "WordCountMain.scala")
+    val env = mainHits(Seq("sys.env")).filterNot(h => mains(h._1))
+    assert(env.isEmpty, env.map(_._2).mkString("\n"))
   }
 }

@@ -110,6 +110,18 @@ class DedupSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("ccOn fails loudly, and frees its rounds, when a component outlives maxIters") {
+    import spark.implicits._
+    // a 30-node chain needs 28 rounds past the fused first one; 5 leave
+    // the far end's representative wrong, which must throw, not return
+    val chain = (1L until 30L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistent
+    val err = intercept[IllegalStateException](Dedup.ccOn(chain, maxIters = 5))
+    assert(err.getMessage.contains("maxIters"), err.getMessage)
+    assert((persistent -- before).isEmpty, "the failed loop left checkpoints behind")
+  }
+
   test("entity_resolve: transitive chains resolve together; canonical is the cluster min") {
     import spark.implicits._
     // string-typed CC: chain "cold anvil" ~ "bold anvil" ~ "old anvil"

@@ -552,6 +552,7 @@ class GraphSpec extends SparkSpec {
       ("coreness", 1, () => { Graph.corenessOn(e, 3).collect(); () }),
       ("betweenness", 1, () => { Graph.betweennessOn(e, Seq(1L), 3).collect(); () }),
       ("walks", 1, () => { Graph.randomWalksOn(e, 3).collect(); () }),
+      ("node2vec", 1, () => { Graph.node2vecWalksOn(e, 3).collect(); () }),
       ("ppr", 2, () => { Graph.pprOn(e, 3).collect(); () }),
       ("hits", 1, () => { Graph.hitsOn(e, 2).collect(); () }),
       ("modularity", 1, () => { Graph.modularityOn(e, 2).collect(); () }),
@@ -576,34 +577,66 @@ class GraphSpec extends SparkSpec {
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Peak count of persistent RDDs created since `run` started, sampled
-    * at every job start. A marker job after `run` proves the listener
-    * has seen every earlier job before the peak is read. */
-  private def peakNewPersistent(run: => Unit): Int = {
+  /** `run`'s result, and the persistent RDDs created since it started,
+    * sampled at every job start. A marker job after `run` proves the
+    * listener has seen every earlier job before the samples are read. */
+  private def newPersistentSamples[A](run: => A): (A, Seq[Set[Int]]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc     = spark.sparkContext
-    val base   = persistentIds
-    val peak   = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key    = "graft.peak.marker"
-    val marker = java.util.UUID.randomUUID().toString
-    val seen   = new java.util.concurrent.CountDownLatch(1)
+    val sc      = spark.sparkContext
+    val base    = persistentIds
+    val samples = new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
+    val key     = "graft.peak.marker"
+    val marker  = java.util.UUID.randomUUID().toString
+    val seen    = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(job: SparkListenerJobStart): Unit = {
-        peak.accumulateAndGet((persistentIds -- base).size, math.max)
+        samples.add(persistentIds -- base)
         if (Option(job.properties).exists(_.getProperty(key) == marker)) seen.countDown()
       }
     }
     sc.addSparkListener(listener)
     try {
-      run
+      val result = run
       sc.setLocalProperty(key, marker)
       sc.parallelize(Seq(1), 1).count()
       assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      (result, samples.toArray(Array.empty[Set[Int]]).toSeq)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)
     }
-    peak.get
+  }
+
+  /** Peak count of persistent RDDs created since `run` started. */
+  private def peakNewPersistent(run: => Unit): Int =
+    newPersistentSamples(run)._2.map(_.size).max
+
+  test("minLabels: forward min propagation on a directed path, bounded and to fixpoint") {
+    val path  = (1L to 5L).map(k => (k, k + 1)) // 1 -> 2 -> ... -> 6
+    val ident = (1L to 6L).map(k => (k, k)).toDF("node", "label")
+    // (node -> (label, old), still changing, checkpoints taken = init + one per round)
+    def run(edges: Seq[(Long, Long)], maxRounds: Int): (Map[Long, (Long, Long)], Boolean, Int) = {
+      val ((labels, changing), samples) = newPersistentSamples {
+        val (labels, changing) = Graph.minLabels(edges.toDF("src", "dst"), ident, maxRounds)
+        (labels.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap, changing)
+      }
+      (labels, changing, samples.flatten.toSet.size)
+    }
+    // round r moves label 1 one hop further: node k reads max(1, k - r),
+    // and started round r from max(1, k - r + 1)
+    val (three, changing3, ckpts3) = run(path, 3)
+    assert(three == (1L to 6L).map(k => k -> ((math.max(1L, k - 3), math.max(1L, k - 2)))).toMap, three)
+    assert(changing3, "round 3 still moved labels")
+    assert(ckpts3 == 4, s"$ckpts3 checkpoints for 3 rounds")
+    val (all, changingAll, _) = run(path, Int.MaxValue)
+    assert(all.values.forall(_ == ((1L, 1L))), all)
+    assert(!changingAll)
+    // reversed, every offer exceeds its receiver's label: the first
+    // round changes nothing and ends the loop
+    val (rev, changingRev, ckptsRev) = run(path.map(_.swap), Int.MaxValue)
+    assert(rev == (1L to 6L).map(k => k -> ((k, k))).toMap, rev)
+    assert(!changingRev)
+    assert(ckptsRev == 2, s"$ckptsRev checkpoints: the loop ran past round 1")
   }
 
   test("checkpoint storage stays flat while an iterative operator runs") {
