@@ -31,11 +31,6 @@ object Curation {
 
   private def toks(c: Column): Column = filter(split(c, " "), t => t =!= "")
 
-  /** partitions for the mixture-sample range-partitioned rank scan
-    * (the Stats.pooledCum convention: matches session parallelism;
-    * correctness is offset-exact for any value). */
-  private val ScanPartitions = 32
-
   // ---------------------------------------------------------------- PII
 
   private val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -615,24 +610,6 @@ object Curation {
     floors.map { case (l, f) => (l, if (bump(l)) f + 1 else f) }
   }
 
-  /** Domain-mixture sampling: draw an exact-proportion sample — quota_l
-    * docs of each lang, quotas the largest-remainder apportionment of
-    * S = 45% of the corpus over [[MixtureWeights]] — so the output mix
-    * hits the target EXACTLY (stratified_sample's per-row coin flips
-    * only hit it in expectation). Membership is the quota_l smallest
-    * rows per lang by the deterministic key (h, doc_id) with
-    * h = ((doc_id mod 1000003)·2654435761) mod 1000003 — a pure,
-    * overflow-safe row function ([[knuthBucket]]), so the sample is
-    * reproducible under any partitioning at any doc_id range.
-    *
-    * Scale shape: counts/quotas are k-row driver work. Per-lang ranks
-    * come from the range-partitioned prefix-scan idiom (Stats.pooledCum):
-    * repartitionByRange on (lang, h, doc_id) balances rows across
-    * partitions REGARDLESS of lang skew — a lang-partitioned global
-    * window would funnel the dominant domain (en here, ~40%; real
-    * corpora are worse) through one task. Windows run per (pid, lang)
-    * within a partition; cross-partition offsets are a collected
-    * (pid, lang) count table — parts×k rows — broadcast back. */
   /** Batch size of [[trainShuffle]]'s emitted training order. */
   private val ShuffleBatch = 64L
 
@@ -642,31 +619,15 @@ object Curation {
     * global sort): every doc gets the portable Knuth hash key
     * ([[knuthBucket]] — pure row function, reproducible under any
     * partitioning; change the salt to get the next epoch), the global
-    * position in (h, doc_id) order comes from the range-partition +
-    * per-partition-offset idiom ([[mixtureSample]]'s prefix scan — the
-    * local rank windows run PER RANGE PARTITION in parallel, the only
-    * driver state is one count per partition, and no coarse-key window
-    * ever serializes the corpus), and positions group into fixed-size
-    * training batches. Hash order is a uniform permutation for
+    * position in (h, doc_id) order is a [[PrefixScan]] row count (no
+    * task holds more than one range partition), and positions group
+    * into fixed-size training batches. Hash order is a uniform permutation for
     * training purposes while staying resumable: batch k is the same
     * rows on every rerun, so a crashed epoch restarts mid-stream. */
-  def trainShuffle(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
+  def trainShuffle(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), knuthBucket(col("doc_id"), 1000003L).as("h"))
-    val parted = ck.ckpt(docs
-      .repartitionByRange(ScanPartitions, col("h"), col("doc_id"))
-      .sortWithinPartitions("h", "doc_id")
-      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
-    val offs = parted.groupBy("pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offMap: Map[Int, Long] =
-      offs.map { case (pid, n) => val o = pid -> acc; acc += n; o }.toMap
-    val w = Window.partitionBy("pid").orderBy("h", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted
-      .withColumn("rk_local", count(lit(1)).over(w))
-      .withColumn("pos", element_at(typedLit(offMap), col("pid")) + col("rk_local"))
+    PrefixScan(docs, Nil, Seq(col("h"), col("doc_id")), "pos" -> lit(1L)).rows
       .select(col("doc_id"), col("h"), col("pos"),
         expr(s"(pos - 1) div $ShuffleBatch").as("batch_id"))
       .orderBy("pos")
@@ -683,13 +644,25 @@ object Curation {
        |SELECT doc_id, h, pos, (pos - 1) // $ShuffleBatch AS batch_id
        |FROM r ORDER BY pos""".stripMargin
 
+  /** Domain-mixture sampling: draw an exact-proportion sample — quota_l
+    * docs of each lang, quotas the largest-remainder apportionment of
+    * S = 45% of the corpus over [[MixtureWeights]] — so the output mix
+    * hits the target EXACTLY (stratified_sample's per-row coin flips
+    * only hit it in expectation). Membership is the quota_l smallest
+    * rows per lang by the deterministic key (h, doc_id) with
+    * h = ((doc_id mod 1000003)·2654435761) mod 1000003 — a pure,
+    * overflow-safe row function ([[knuthBucket]]), so the sample is
+    * reproducible under any partitioning at any doc_id range.
+    *
+    * Scale shape: per-lang ranks and counts come from one
+    * [[PrefixScan]] grouped by lang, so no task holds a whole language
+    * however skewed the mix; quotas are k-row driver work. */
   def mixtureSample(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         knuthBucket(col("doc_id"), 1000003L).as("h"))
-
-    val counts = docs.groupBy("lang").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val scan   = PrefixScan(docs, Seq("lang"), Seq(col("h"), col("doc_id")), "rank" -> lit(1L))
+    val counts = scan.totals.map { case (Seq(l), Seq(n)) => l.asInstanceOf[String] -> n }
     val total  = counts.values.sum
     val s      = total * MixturePct / 100L
     val quotas = largestRemainder(s, MixtureWeights)
@@ -697,39 +670,10 @@ object Curation {
       require(q <= counts.getOrElse(l, 0L),
         s"mixture_sample: quota $q for lang $l exceeds available ${counts.getOrElse(l, 0L)}")
     }
-
-    perLangRank(docs)
+    scan.rows
       .filter(col("rank") <= element_at(typedLit(quotas.toMap), col("lang")))
       .select(col("doc_id"), col("lang"), col("rank"))
       .orderBy("lang", "rank")
-  }
-
-  /** Per-language rank of (doc_id, lang, h) rows in (h, doc_id) order —
-    * the range-partition + per-partition-offset prefix-scan idiom: the
-    * local rank windows run per (pid, lang) in parallel, the only
-    * driver state is one count per (partition, lang), and no coarse
-    * per-lang window ever serializes a dominant language into one task.
-    * Shared by [[mixtureSample]] (quota cut) and [[epochMixture]]
-    * (repetition threshold). */
-  private def perLangRank(docs: DataFrame): DataFrame = Checkpoints.scope { ck =>
-    val spark = docs.sparkSession
-    val parted = ck.ckpt(docs
-      .repartitionByRange(ScanPartitions, col("lang"), col("h"), col("doc_id"))
-      .sortWithinPartitions("lang", "h", "doc_id")
-      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
-    val offs = parted.groupBy("pid", "lang").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      .groupBy(_._2).toSeq.flatMap { case (lang, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, n) => val o = (pid, lang, acc); acc += n; o }
-      }
-    val offDf = spark.createDataFrame(offs).toDF("pid", "lang", "off")
-    val w = Window.partitionBy("pid", "lang").orderBy("h", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted
-      .withColumn("rk_local", count(lit(1)).over(w))
-      .join(broadcast(offDf), Seq("pid", "lang"))
-      .withColumn("rank", col("off") + col("rk_local"))
   }
 
   /** Balanced multi-epoch mixture — the UPSAMPLING complement of
@@ -743,20 +687,19 @@ object Curation {
     * language repeats 1×; a 10×-rarer one ~10×. Output is the emitted
     * training stream (doc_id, lang, copy).
     *
-    * Scale shape: reps need each doc's per-language RANK, which comes
-    * from the shared [[perLangRank]] prefix scan (no per-lang window);
-    * T and the per-language avail counts are an O(langs) broadcast;
-    * the explode is map-side. */
+    * Scale shape: each doc's per-language rank and the per-language
+    * counts come from one [[PrefixScan]] grouped by lang; T and the
+    * counts are an O(langs) broadcast; the explode is map-side. */
   def epochMixture(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         knuthBucket(col("doc_id"), 1000003L).as("h"))
-    val avail = docs.groupBy("lang").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val scan  = PrefixScan(docs, Seq("lang"), Seq(col("h"), col("doc_id")), "rank" -> lit(1L))
+    val avail = scan.totals.map { case (Seq(l), Seq(n)) => l.asInstanceOf[String] -> n }
     val t = avail.values.max
     val base  = avail.map { case (l, a) => l -> t / a }
     val extra = avail.map { case (l, a) => l -> t % a }
-    perLangRank(docs)
+    scan.rows
       .withColumn("reps",
         element_at(typedLit(base), col("lang")) +
           when(col("rank") <= element_at(typedLit(extra), col("lang")), 1L).otherwise(0L))
@@ -1561,11 +1504,7 @@ object Curation {
     private def less(a: (Long, Long), b: (Long, Long)): Boolean =
       a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
     private def insert(items: List[(Long, Long)], v: (Long, Long)): List[(Long, Long)] =
-      if (items.sizeIs >= k && !less(v, items.last)) items
-      else {
-        val (front, back) = items.span(less(_, v))
-        (front ::: v :: back).take(k)
-      }
+      TopK.insertBounded(items, v, k)(less)
     override def zero: MinKBuf = MinKBuf(Nil)
     override def reduce(b: MinKBuf, v: SrcKey): MinKBuf = {
       b.items = insert(b.items, (v.h, v.doc_id)); b

@@ -491,14 +491,21 @@ object Lake {
     }
   }
 
+  /** `df` plus its ntile(buckets) `tile` in the total order of the unique `keys`. */
+  private def tileByRange(df: DataFrame,
+      keys: Seq[org.apache.spark.sql.Column], buckets: Int): DataFrame = {
+    val scan = PrefixScan(df, Nil, keys, "__rank" -> lit(1L))
+    scan.rows.withColumn("tile", PrefixScan.ntileOfRank(col("__rank"), scan.total(0), buckets))
+      .drop("__rank")
+  }
+
   /** Z-order clustering benefit, driver-checked end to end: events
     * mapped to a 2-D grid (x = day index 0..29, y = value/16 bucket
     * 0..30 — equal bit widths, so the interleave gives genuine 2-D
     * locality), laid out two ways into 16 equal-count "files" (an
-    * ntile-equivalent split computed by distributed rank — range
-    * repartition + per-partition offsets, see `tileByRange` — the
-    * deterministic model of `repartitionByRange(16, sortKey)` + one
-    * file per partition, with no global window anywhere in the plan),
+    * ntile-equivalent split of a [[PrefixScan]] rank, see
+    * `tileByRange` — the deterministic model of a 16-way range write,
+    * one file per partition, with no global window in the plan),
     * then probed with a box filter on each dimension using FILE-LEVEL
     * min/max stats, exactly the pruning parquet footers give a real
     * scan. Output: files touched per (layout × probe). The linear
@@ -508,61 +515,6 @@ object Lake {
     * space-filling-curve clustering at 100 TB, and here it is hash-
     * checked against the oracle recomputing the identical Morton codes
     * in SQL (`LayoutFunctions.zorderSql`). */
-  /** Partition count for the distributed-rank tiling; matches the
-    * session shuffle parallelism locally, and at cluster scale would be
-    * sized like any range-write (target bytes per output partition). */
-  private val RankPartitions = 32
-
-  /** ntile(buckets) computed from a 1-based global rank over n rows —
-    * the SQL-standard split (first n%buckets buckets get one extra
-    * row), so it matches DuckDB's/Spark's ntile exactly without any
-    * window. All inputs stay < 2^53, so the double division is exact. */
-  private def ntileOfRank(rank: org.apache.spark.sql.Column, n: Long,
-      buckets: Int): org.apache.spark.sql.Column = {
-    val q   = n / buckets
-    val rem = n % buckets
-    if (q == 0) rank
-    else {
-      val cut = rem * (q + 1) // rows 1..cut fall in the q+1-sized buckets
-      when(rank <= cut, floor((rank - 1) / lit(q + 1)).cast("long") + 1)
-        .otherwise(lit(rem) + floor((rank - lit(cut) - 1) / lit(q)).cast("long") + 1)
-    }
-  }
-
-  /** Assign each row its ntile(buckets) tile in the total order of
-    * `keys` (which must be unique) WITHOUT a global window: the
-    * distributed-rank shape. Range-repartition on the keys, sort within
-    * partitions, and let `monotonically_increasing_id` hand back
-    * (partitionId << 33 | localIndex) — pid order IS key order under
-    * range partitioning, so global rank = per-partition start offset +
-    * local index. The offsets come from a 1-row-per-partition count
-    * aggregate (the only driver-side data), broadcast back as a map
-    * literal. Two passes over the data, zero single-task stages, and no
-    * shuffle beyond the range exchange itself — which is exactly the
-    * write-side movement a real clustered-layout job performs. The
-    * localCheckpoint pins the id assignment so the count pass and the
-    * tile pass see identical partitions. */
-  private def tileByRange(df: DataFrame,
-      keys: Seq[org.apache.spark.sql.Column], buckets: Int): DataFrame = Checkpoints.scope { ck =>
-    val parted = ck.ckpt(df
-      .repartitionByRange(RankPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__mid", monotonically_increasing_id()))
-    val withPid = parted
-      .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
-      .withColumn("__local", (col("__mid").bitwiseAND((1L << 33) - 1)) + 1)
-    val counts = withPid.groupBy("__pid").agg(count(lit(1)).as("__n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    var acc = 0L
-    val offsets: Map[Int, Long] =
-      counts.map { case (pid, n) => val o = pid -> acc; acc += n; o }.toMap
-    withPid
-      .withColumn("__rank", element_at(typedLit(offsets), col("__pid")) + col("__local"))
-      .withColumn("tile", ntileOfRank(col("__rank"), total, buckets))
-      .drop("__mid", "__pid", "__local", "__rank")
-  }
-
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
     val pts = Tables.events(spark, dir).select(
       col("event_id"),

@@ -1863,23 +1863,9 @@ object Relational {
     * Output: the (r_q, f_q, m_q) segment census with customer counts
     * and total spend.
     *
-    * Scale shape (re-shaped round 19 — the r18 verdict flagged the
-    * previous three global `ntile(5)` windows as the suite's one
-    * shipped scale-killer: `WindowExec: No Partition Defined` funnels
-    * the full customer census through ONE task, three times): orders
-    * partial-aggregate to one row per customer (the only corpus-sized
-    * shuffle), then each metric's quintile comes from the house
-    * range-partitioned prefix-scan rank (`train_shuffle` /
-    * `Stats.pooledCum` idiom) — `repartitionByRange` on (metric,
-    * custkey) balances rows across [[RfmRankParts]] partitions, local
-    * rank windows run PER PARTITION in parallel, cross-partition
-    * offsets are a collected parts-row count table broadcast back, and
-    * the global rank maps to the bucket through the exact `ntile`
-    * boundary formula (first N mod 5 buckets get ⌈N/5⌉ rows). Output
-    * is bit-identical to the window form (same total order, same
-    * boundaries) with no single-partition WindowExec anywhere — pinned
-    * in `PlanSpec`. The three rank passes and the custkey re-join are
-    * all parallel shuffles of the per-customer table. */
+    * Scale shape: orders partial-aggregate to one row per customer;
+    * each quintile is [[PrefixScan.ntileOfRank]] of a [[PrefixScan]]
+    * rank, so no window ever funnels the census through one task. */
   def rfmSegments(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val o = Tables.orders(spark, dir).select(col("o_custkey"),
       datediff(col("o_orderdate").cast("date"),
@@ -1892,33 +1878,9 @@ object Relational {
       .agg((max("asof_day") - max("oday")).as("recency_days"),
         count(lit(1)).as("frequency"), sum("pc").as("monetary_cents")))
 
-    // Exact ntile(5) bucket from a 1-based global rank over n rows:
-    // q = n/5 base size, the first r = n%5 buckets take q+1 rows.
-    def ntileOfRank(rk: Column, n: Long): Column = {
-      val q = n / 5L; val r = n % 5L
-      val qq = math.max(q, 1L) // divisor unused when n<5 (first branch)
-      when(rk <= lit(r * (q + 1L)), (rk - 1L) / lit(q + 1L) + 1L)
-        .otherwise(lit(r) + (rk - 1L - lit(r * (q + 1L))) / lit(qq) + 1L)
-        .cast("long")
-    }
-
-    // Range-partitioned prefix-scan global rank (train_shuffle idiom):
-    // per-partition local window + collected per-partition offsets.
     def quintile(ord: Seq[Column], outCol: String, keep: Seq[String]): DataFrame = {
-      val parted = ck.ckpt(perCust
-        .repartitionByRange(RfmRankParts, ord: _*)
-        .sortWithinPartitions(ord: _*)
-        .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
-      val offs = parted.groupBy("pid").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val offMap: Map[Int, Long] =
-        offs.map { case (pid, n) => val off = pid -> acc; acc += n; off }.toMap
-      val w = Window.partitionBy("pid").orderBy(ord: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      parted
-        .withColumn("rk", element_at(typedLit(offMap), col("pid")) + count(lit(1)).over(w))
-        .withColumn(outCol, ntileOfRank(col("rk"), acc))
+      val scan = PrefixScan(perCust, Nil, ord, "rk" -> lit(1L))
+      scan.rows.withColumn(outCol, PrefixScan.ntileOfRank(col("rk"), scan.total(0), 5))
         .select((keep :+ outCol).map(col): _*)
     }
     val r = quintile(Seq(col("recency_days").asc, col("o_custkey").asc),
@@ -1932,10 +1894,6 @@ object Relational {
       .agg(count(lit(1)).as("n_customers"), sum("monetary_cents").as("segment_cents"))
       .orderBy("r_q", "f_q", "m_q")
   }
-
-  /** Rank-pass partition count for [[rfmSegments]] — matches the house
-    * ScanPartitions (32) used by the other prefix-scan ranks. */
-  private val RfmRankParts = 32
 
   private val rfmSql: String =
     """WITH o AS (

@@ -62,11 +62,7 @@ object Similarity {
       a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
 
     private def insert(items: List[(Double, Long)], v: (Double, Long)): List[(Double, Long)] =
-      if (items.sizeIs >= k && !better(v, items.last)) items
-      else {
-        val (front, back) = items.span(better(_, v))
-        (front ::: v :: back).take(k)
-      }
+      TopK.insertBounded(items, v, k)(better)
 
     override def zero: SimBuf = SimBuf(Nil)
     override def reduce(b: SimBuf, v: SimPair): SimBuf = {

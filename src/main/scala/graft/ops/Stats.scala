@@ -22,28 +22,18 @@ import org.apache.spark.sql.functions._
   * Scale posture: everything aggregates to reduced forms before any
   * shuffle — (value, count) cells for KS and the medians, (key, count)
   * sizes for the skew profile. No global-order window is ever applied
-  * to raw rows: the KS prefix sum runs per-range-partition with
-  * driver-broadcast partition offsets (the `tileByRange` pattern that
-  * de-scale-killed `zorder_layout`), so the widest sequential state is
-  * one partition of *distinct* values, never the event table.
+  * to raw rows: the KS prefix sum is a [[PrefixScan]], so the widest
+  * sequential state is one range partition of *distinct* values, never
+  * the event table.
   */
 object Stats {
 
   private def cents(c: Column): Column = graft.functions.TextFunctions.cents(c)
 
-  /** partitions for the KS range-partitioned prefix scan (32 matches
-    * the session shuffle parallelism; correctness is offset-exact for
-    * any value). */
-  private val ScanPartitions = 32
-
   /** Pooled two-sample ECDF scan shared by `ks_test` and
     * `mann_whitney`: click/purchase values reduced to (v, na, nb)
-    * cells — per-DISTINCT-value state — then cumulated with
-    * per-range-partition window sums plus driver-computed partition
-    * offsets (RangePartitioner assigns ascending key ranges to
-    * ascending partition ids, so a partition's offset is the sum of
-    * earlier partitions' totals). Returns the cells with inclusive
-    * cumulative counts `ca`/`cb` and the two sample sizes. */
+    * cells — per-DISTINCT-value state — then cumulated by
+    * [[cumulateCells]]. */
   private def pooledCum(spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
     val ev = Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -54,28 +44,11 @@ object Stats {
     cumulateCells(cells)
   }
 
-  /** The distributed two-sample cumulation behind [[pooledCum]], over
-    * ANY (v, na, nb) cell table — also feeds [[rocAuc]], whose cells
-    * come from per-doc scores instead of event values. */
-  private def cumulateCells(cells: DataFrame): (DataFrame, Long, Long) = Checkpoints.scope { ck =>
-    val parted = ck.ckpt(cells
-      .repartitionByRange(ScanPartitions, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
-    val ptots = parted.groupBy("pid")
-      .agg(sum("na").as("ta"), sum("nb").as("tb"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val n = ptots.map(_._2).sum // total click rows
-    val m = ptots.map(_._3).sum // total purchase rows
-    var (accA, accB) = (0L, 0L)
-    val offA = ptots.map { case (p, a, _) => val o = p -> accA; accA += a; o }.toMap
-    val offB = ptots.map { case (p, _, b) => val o = p -> accB; accB += b; o }.toMap
-    val w = Window.partitionBy("pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = parted
-      .withColumn("ca", element_at(typedLit(offA), col("pid")) + sum("na").over(w))
-      .withColumn("cb", element_at(typedLit(offB), col("pid")) + sum("nb").over(w))
-    (cum, n, m)
+  /** Any (v, na, nb) cell table with inclusive cumulative counts `ca`/`cb`
+    * in v order, and the two sample sizes Σna and Σnb. */
+  private def cumulateCells(cells: DataFrame): (DataFrame, Long, Long) = {
+    val scan = PrefixScan(cells, Nil, Seq(col("v")), "ca" -> col("na"), "cb" -> col("nb"))
+    (scan.rows, scan.total(0), scan.total(1))
   }
 
   /** Loud BIGINT-width guard for a DECIMAL(38,0) statistic: in non-ANSI
@@ -2294,20 +2267,11 @@ object Stats {
     * signed rho² in picos via the [[corrMatrix]] two-floor-division
     * convention — no square root, hash-exact.
     *
-    * Scale shape (fused round 19 — was four independent
-    * [[cumulateCells]] passes, i.e. 4 corpus scans + 4 hash-agg
-    * shuffles + 4 range-partition sorts): ONE shared sorted scan now
-    * emits all four cumulations. The corpus unpivots to (col, v)
-    * tagged values in a single codegen'd pass, partial-aggregates to
-    * per-(col, DISTINCT-value) cells, range-partitions ONCE on
-    * (col, v) — ascending ranges to ascending pids, so a (pid, col)
-    * cell's offset is the sum of earlier partitions' per-col totals, a
-    * collected parts×4-row table — and the local cumulation window
-    * runs per (pid, col), never a global order (the `mixtureSample`
-    * per-(pid, lang) precedent). Ranks then re-attach by value
-    * equi-join (the 3 small-domain columns broadcast under AQE; price
-    * is the one cells≈corpus join) and one partial-aggregated pass
-    * forms every Σr/Σr²/Σrᵢrⱼ in DECIMAL(38). Doubled ranks ≤ 2n keep
+    * Scale shape: the corpus unpivots to (col, v) values in one pass
+    * and partial-aggregates to per-(col, DISTINCT-value) cells; ONE
+    * [[PrefixScan]] grouped by col cumulates all four columns. Ranks
+    * re-attach by value equi-join and one partial-aggregated pass forms
+    * every Σr/Σr²/Σrᵢrⱼ in DECIMAL(38). Doubled ranks ≤ 2n keep
     * |cov|·10⁶ inside DECIMAL(38) to n ≈ 10⁷'⁵; beyond that a
     * production deployment coarsens ranks to rank-buckets (the
     * documented corr_matrix convention), noted not faked. */
@@ -2325,38 +2289,9 @@ object Stats {
         struct(lit(c).as("c"), col(c).as("v"))): _*)).as("cv"))
       .groupBy(col("cv.c").as("c"), col("cv.v").as("v"))
       .agg(count(lit(1)).as("na"))
-    // ONE range partition on (c, v) + per-(pid, c) local cumulation
-    val parted = ck.ckpt(cells
-      .repartitionByRange(ScanPartitions, col("c"), col("v"))
-      .sortWithinPartitions("c", "v")
-      .withColumn("pid", spark_partition_id())) // pin partition ids before they are used twice
-    // Per-(pid, c) totals → exclusive running offsets, DISTRIBUTED
-    // (round 22, VERDICT item 7 — guide §4/§5: no driver work in the
-    // query path): the old `.collect()` of the parts×4 totals was a
-    // full extra job barrier (checkpoint scan + agg + driver
-    // round-trip) on every cold run, re-shipped as a typedLit map
-    // lookup. The offsets are a parts×4-row frame, so they ride a
-    // broadcast join inside the SAME job instead; each consumer's
-    // `c === X` filter propagates through the equi-join condition into
-    // this arm too, so each of the four rank passes still aggregates
-    // only its own column's cells.
-    val offs = parted.groupBy("pid", "c").agg(sum("na").as("ta"))
-      .withColumn("off", coalesce(sum("ta").over(
-        Window.partitionBy("c").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid").as("opid"), col("c").as("oc"), col("off"))
-    val w = Window.partitionBy("pid", "c").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // NOT checkpointed: each join-back filters on the window PARTITION
-    // key c, which Catalyst pushes below the Window — so each of the
-    // four consumers cumulates ONLY its own column's cells straight off
-    // the pinned `parted` checkpoint (total window work = four
-    // per-column passes, with zero extra materialization)
-    val rankCells = parted
-      .join(broadcast(offs), col("pid") === col("opid") && col("c") === col("oc"))
-      .withColumn("ca", col("off") + sum("na").over(w))
-      .select(col("c"), col("v"),
-        (lit(2L) * col("ca") - col("na") + 1L).as("r"))
+    // doubled average rank per (c, v) cell
+    val rankCells = PrefixScan(cells, Seq("c"), Seq(col("v")), "ca" -> col("na")).rows
+      .select(col("c"), col("v"), (lit(2L) * col("ca") - col("na") + 1L).as("r"))
     val ranked = CorrCols.foldLeft(src) { (df, c) =>
       df.join(
         rankCells.filter(col("c") === c).select(col("v").as(c), col("r").as(s"r_$c")),

@@ -2071,11 +2071,7 @@ object TextAnalysis {
   class PostingsAgg(k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[TermDoc, PostBuf, Seq[Long]] {
     private def insert(items: List[Long], v: Long): List[Long] =
-      if (items.sizeIs >= k && v >= items.last) items
-      else {
-        val (front, back) = items.span(_ < v)
-        (front ::: v :: back).take(k)
-      }
+      TopK.insertBounded(items, v, k)(_ < _)
     override def zero: PostBuf = PostBuf(Nil)
     override def reduce(b: PostBuf, v: TermDoc): PostBuf = {
       b.items = insert(b.items, v.doc_id); b

@@ -13,6 +13,16 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
+  /** `v` inserted into the best-first list `items`, capped at `k`
+    * elements. The common case, `v` no better than a full list's last,
+    * is one comparison and no copy. */
+  def insertBounded[A](items: List[A], v: A, k: Int)(better: (A, A) => Boolean): List[A] =
+    if (items.sizeIs >= k && !better(v, items.last)) items
+    else {
+      val (front, back) = items.span(better(_, v))
+      (front ::: v :: back).take(k)
+    }
+
   final case class Keyed(o_orderpriority: String, o_orderkey: Long, o_totalprice: Double)
   final case class TopBuf(var items: List[(Double, Long)])
 
@@ -24,13 +34,8 @@ object TopK {
     private def better(a: (Double, Long), b: (Double, Long)): Boolean =
       a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
 
-    /** ordered insert into a best-first list capped at k. */
     private def insert(items: List[(Double, Long)], v: (Double, Long)): List[(Double, Long)] =
-      if (items.sizeIs >= k && !better(v, items.last)) items
-      else {
-        val (front, back) = items.span(better(_, v))
-        (front ::: v :: back).take(k)
-      }
+      insertBounded(items, v, k)(better)
 
     override def zero: TopBuf = TopBuf(Nil)
     override def reduce(b: TopBuf, v: Keyed): TopBuf = {

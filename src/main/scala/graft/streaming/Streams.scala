@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import graft.ops.Checkpoints
+import graft.ops.{Checkpoints, TopK}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
@@ -480,19 +480,13 @@ object Streams {
     import events.sparkSession.implicits._
     def better(a: (Long, Long), b: (Long, Long)): Boolean =
       a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-    def insert(items: List[(Long, Long)], v: (Long, Long)): List[(Long, Long)] =
-      if (items.sizeIs >= k && !better(v, items.last)) items
-      else {
-        val (hi, lo) = items.span(better(_, v))
-        (hi ::: v :: lo).take(k)
-      }
     def update(key: String, batch: Iterator[Event],
         state: GroupState[TopkState]): Iterator[TopkOut] = {
       var items = state.getOption.map(_.items).getOrElse(Nil)
       batch.foreach { e =>
         val c = java.math.BigDecimal.valueOf(e.value * 100)
           .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        items = insert(items, (c, e.event_id))
+        items = TopK.insertBounded(items, (c, e.event_id), k)(better)
       }
       state.update(TopkState(items))
       items.iterator.zipWithIndex.map { case ((c, id), i) =>

@@ -356,5 +356,12 @@ class CheckpointsSpec extends SparkSpec {
       "WordCountMain.scala")
     val env = mainHits(Seq("sys.env")).filterNot(h => mains(h._1))
     assert(env.isEmpty, env.map(_._2).mkString("\n"))
+    // one prefix scan and one bounded top-k insert
+    val ranges = mainHits(Seq("repartitionByRange"))
+    assert(ranges.map(_._1).distinct == List("PrefixScan.scala"), ranges.map(_._2).mkString("\n"))
+    val pids = mainHits(Seq("monotonically_increasing_id", "spark_partition_id"))
+    assert(pids.isEmpty, pids.map(_._2).mkString("\n"))
+    val inserts = mainHits(Seq("::: v ::"))
+    assert(inserts.map(_._1) == List("TopK.scala"), inserts.map(_._2).mkString("\n"))
   }
 }

@@ -591,9 +591,11 @@ class PlanSpec extends SparkSpec {
     ar.collect()
     assert(!ar.queryExecution.executedPlan.toString.contains("CartesianProduct"),
       "ann_refine planned a cartesian")
-    // train_shuffle / anomaly_mad / volume_trend: every window is
-    // key-partitioned (pid / event_type) — no global-order window
-    for (q <- Seq("train_shuffle", "anomaly_mad", "volume_trend")) {
+    // train_shuffle ranks by prefix scan: no window at all
+    assertScanShape("train_shuffle", SparkEntry.queries("train_shuffle")(spark, sfDir))
+    // anomaly_mad / volume_trend: every window is key-partitioned
+    // (event_type) — no global-order window
+    for (q <- Seq("anomaly_mad", "volume_trend")) {
       val qe = SparkEntry.queries(q)(spark, sfDir).queryExecution
       val windows = qe.optimizedPlan.collect { case w: LWindow => w }
       assert(windows.nonEmpty, s"$q: expected window functions")
@@ -716,19 +718,22 @@ class PlanSpec extends SparkSpec {
       "dup_span_report top-K must be TakeOrdered")
   }
 
-  test("rfm_segments: every window is pid-partitioned — no global ntile funnel") {
-    // the r18 verdict's one flagged scale-killer: three partitionBy-less
-    // ntile(5) windows serialized the customer census through one task.
-    // The re-shaped query ranks via the range-partitioned prefix scan:
-    // every surviving Window must carry the pid partition key.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val qe = SparkEntry.queries("rfm_segments")(spark, sfDir).queryExecution
-    val windows = qe.optimizedPlan.collect { case w: LWindow => w }
-    assert(windows.nonEmpty, "expected the pid-keyed local-rank windows")
-    windows.foreach(w => assert(w.partitionSpec.nonEmpty,
-      s"global window funnels the customer census through one task: $w"))
-    assert(!qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+  test("rfm_segments plans no window and no partition-id exchange") {
+    // three partitionBy-less ntile(5) windows would serialize the
+    // customer census through one task; the quintiles rank by prefix scan
+    val df = SparkEntry.queries("rfm_segments")(spark, sfDir)
+    assertScanShape("rfm_segments", df)
+    assert(!df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
       .contains("CartesianProduct"), "rfm_segments planned a cartesian")
+  }
+
+  test("prefix-scan queries plan no window and no partition-id exchange") {
+    // lift_deciles keeps its ≤10-row decile window
+    val scans = Seq("ks_test", "mann_whitney", "roc_auc", "pr_auc", "spearman_corr",
+      "train_shuffle", "mixture_sample", "epoch_mixture", "rfm_segments",
+      "zorder_layout", "hilbert_layout")
+    for (q <- scans) assertScanShape(q, SparkEntry.queries(q)(spark, sfDir))
+    assertScanShape("lift_deciles", SparkEntry.queries("lift_deciles")(spark, sfDir), windows = true)
   }
 
   test("round-18 novelty/weights: 8-byte gram keys only, no cartesian, text out of shuffles") {

@@ -5,7 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.SchedulerBridge
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,6 +30,18 @@ trait SparkSpec extends AnyFunSuite {
     try { body; SchedulerBridge.drainListeners(spark.sparkContext) }
     finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq
+  }
+
+  /** The prefix-scan plan shape (`graft.ops.PrefixScan`): no exchange
+    * keyed on a partition id and, unless `windows`, no Window node at
+    * all, so neither a local-rank window nor a global one. */
+  def assertScanShape(name: String, df: DataFrame, windows: Boolean = false): Unit = {
+    val qe = df.queryExecution
+    val ws = qe.optimizedPlan.collect { case w: LWindow => w }
+    assert(windows || ws.isEmpty, s"$name: expected a window-free plan, found: ${ws.mkString("\n")}")
+    val pidExchanges = qe.explainString(FormattedMode).linesIterator
+      .filter(l => "hashpartitioning\\([^)]*pid#".r.findFirstIn(l).isDefined).toSeq
+    assert(pidExchanges.isEmpty, s"$name: exchange on a partition id: ${pidExchanges.mkString("\n")}")
   }
 }
 

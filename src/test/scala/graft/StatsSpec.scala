@@ -234,12 +234,7 @@ class StatsSpec extends SparkSpec {
   }
 
   test("ks_test plans no global (partitionBy-less) window") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val windows = Stats.ksTest(spark, sfDir).queryExecution.optimizedPlan
-      .collect { case w: LWindow => w }
-    assert(windows.nonEmpty, "expected the per-partition cumulative windows")
-    windows.foreach(w => assert(w.partitionSpec.nonEmpty,
-      s"global window funnels the ECDF scan through one task: $w"))
+    assertScanShape("ks_test", Stats.ksTest(spark, sfDir))
   }
 
   test("robust_outliers matches the driver-side median/MAD definition at sf0.001") {
