@@ -205,18 +205,9 @@ object Streams {
       OutputMode.Append(), Seq("event_id"))
   }
 
-  /** State-store partitions of every bounded run: a streaming query's
-    * shuffle-partition count is fixed at checkpoint creation and sets
-    * the number of state-store instances (a stream-stream join runs FOUR
-    * per partition); each instance pays per-batch fixed costs (provider
-    * init, delta commit, maintenance) regardless of how little state it
-    * holds. Production sizing is state volume / executor count — for
-    * these bounded verification runs state is ≤ ~100k rows, where 32
-    * partitions × 4 stores is pure fixed-cost overhead: measured at
-    * sf0.1, the interval join's data batch drops ~2× going 32 → 8
-    * partitions with identical output. 8 keeps real parallelism while
-    * right-sizing the store count. */
-  private val StatePartitions = 8
+  /** State-store partitions of every bounded run: at most one wave of state-store tasks. */
+  private def statePartitions(spark: SparkSession): Int =
+    math.min(8, spark.sparkContext.defaultParallelism)
 
   /** The state-store provider conf of the runs that need RocksDB. */
   private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
@@ -225,16 +216,19 @@ object Streams {
   /** The one bounded stream runner and the only `writeStream` call:
     * `sink` picks the sink (memory, parquet under a checkpoint,
     * `foreachBatch`), then the query starts with `Trigger.AvailableNow`
-    * and runs to completion. [[StatePartitions]] and `confs` are set
-    * only around `start()`: the query snapshots the session's SQL conf
-    * when it starts (see the object header), so it keeps them for its
-    * whole run while the session is back to its own values at once.
-    * Returns the terminated query, for its progress. */
+    * and runs to completion. The state partitions ([[statePartitions]]),
+    * the checkpoint file manager ([[LocalCheckpointFileManager]]) and
+    * `confs` are set only around `start()`: the query snapshots the
+    * session's SQL conf when it starts (see the object header), so it
+    * keeps them for its whole run while the session is back to its own
+    * values at once. Returns the terminated query, for its progress. */
   private[graft] def bounded[T](out: Dataset[T], confs: Seq[(String, String)] = Nil)(
       sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
     val w = sink(out.writeStream.trigger(Trigger.AvailableNow()))
     val q = graft.ops.withConfs(out.sparkSession,
-      ("spark.sql.shuffle.partitions" -> StatePartitions.toString) +: confs)(w.start())
+      Seq("spark.sql.shuffle.partitions" -> statePartitions(out.sparkSession).toString,
+        "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFileManager].getName)
+        ++ confs)(w.start())
     q.awaitTermination()
     q
   }

@@ -363,5 +363,10 @@ class CheckpointsSpec extends SparkSpec {
     assert(pids.isEmpty, pids.map(_._2).mkString("\n"))
     val inserts = mainHits(Seq("::: v ::"))
     assert(inserts.map(_._1) == List("TopK.scala"), inserts.map(_._2).mkString("\n"))
+    // one checkpoint file manager, set in the bounded runner's window
+    val managers = mainHits(Seq("checkpointFileManagerClass"))
+    assert(managers.map(_._1) == List("Streams.scala"), managers.map(_._2).mkString("\n"))
+    val rawFs = mainHits(Seq("extends RawLocalFileSystem"))
+    assert(rawFs.map(_._1) == List("LocalCheckpointFiles.scala"), rawFs.map(_._2).mkString("\n"))
   }
 }

@@ -602,7 +602,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("each stateful bounded run plans its state on 8 shuffle partitions") {
+  test("each stateful bounded run plans its state on min(8, slots) shuffle partitions") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     val parts = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
@@ -613,19 +613,60 @@ class StreamingSpec extends SparkSpec {
         e.progress.stateOperators.foreach(o =>
           parts.add((String.valueOf(e.progress.name), o.numShufflePartitions.toInt)))
     }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") != "8", "the session default must differ")
-    spark.streams.addListener(listener)
-    try {
-      Streams.sessionWindowRun(spark, sfDir)
-      Streams.runBoundedIntervalJoin(spark, sfDir)
-      Streams.runBoundedSessionize(spark, sfDir)
-      Streams.transformStateRun(spark, sfDir)
-      org.apache.spark.graftbridge.SchedulerBridge.drainListeners(spark.sparkContext)
-    } finally spark.streams.removeListener(listener)
+    val want = math.min(8, spark.sparkContext.defaultParallelism)
+    // a session default that differs, so the runs cannot inherit the count
+    graft.ops.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> (want + 3).toString)) {
+      spark.streams.addListener(listener)
+      try {
+        Streams.sessionWindowRun(spark, sfDir)
+        Streams.runBoundedIntervalJoin(spark, sfDir)
+        Streams.runBoundedSessionize(spark, sfDir)
+        Streams.transformStateRun(spark, sfDir)
+        org.apache.spark.graftbridge.SchedulerBridge.drainListeners(spark.sparkContext)
+      } finally spark.streams.removeListener(listener)
+    }
     import scala.jdk.CollectionConverters._
     val seen = parts.asScala.toList
     Seq("stream_session_window", "stream_interval_join", "stream_sessionize", "stream_transform_state")
       .foreach(q => assert(seen.exists(_._1.startsWith(q)), s"$q reported no state operator"))
-    assert(seen.forall(_._2 == 8), s"state partitions: $seen")
+    assert(seen.forall(_._2 == want), s"state partitions (want $want): $seen")
+  }
+
+  test("bounded checkpoints keep their .crc files, permission bits and corruption check") {
+    import java.nio.file.{Files, Path => JPath}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    graft.ops.withTempDir("graft-ckpt-integrity") { tmp =>
+      val ckpt = s"$tmp/ckpt"
+      // a recoverable sink, one data batch, so offsets/0 is the latest offset
+      def run(): Unit = {
+        Streams.bounded(Streams.tumblingCounts(tables.Tables.eventsStream(spark, sfDir)),
+          Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(_
+          .format("parquet").outputMode(OutputMode.Append())
+          .option("path", s"$tmp/out").option("checkpointLocation", ckpt))
+        ()
+      }
+      run()
+      val root = java.nio.file.Paths.get(ckpt)
+      val logs: Seq[JPath] = Seq("offsets", "commits", "metadata").map(root.resolve) ++
+        Files.list(root.resolve("state")).iterator.asScala.map(_.resolve("_metadata"))
+      val files = logs.flatMap(p => Files.walk(p).iterator.asScala.toList)
+        .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.endsWith(".crc"))
+      def perms(f: JPath) = PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+      assert(files.exists(_.startsWith(root.resolve("state"))), s"no state metadata: $files")
+      files.foreach { f =>
+        val crc = f.resolveSibling(s".${f.getFileName}.crc")
+        assert(Files.isRegularFile(crc), s"$f has no .crc sibling")
+        assert(perms(f) == "rw-r--r--" && perms(crc) == "rw-r--r--",
+          s"$f: ${perms(f)}, crc: ${perms(crc)}")
+      }
+      // a mid-file flip may still parse: the .crc check on read is what fails the restart
+      val offsets0 = root.resolve("offsets").resolve("0")
+      val bytes = Files.readAllBytes(offsets0)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
+      Files.write(offsets0, bytes)
+      intercept[StreamingQueryException](run())
+    }
   }
 }
