@@ -37,16 +37,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def esc(s: String): String = s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
-
     def runOnce(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
       try {
@@ -137,7 +127,7 @@ object Bench {
     }
 
     val ok = perQuery.collect { case (n, Right(t)) => n -> t }
-    val fj = failures.map { case (n, m) => "\"" + esc(n) + "\":\"" + esc(m) + "\"" }
+    val fj = failures.map { case (n, m) => Verify.q(n) + ":" + Verify.q(m) }
       .mkString("{", ",", "}")
     val total = perQuery.collect { case (_, Right(t)) => t }.sum
 

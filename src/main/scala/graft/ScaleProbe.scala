@@ -178,26 +178,18 @@ object ScaleProbe {
       if (t == "events") {
         val tmp = s"$dir/_tmp_events"
         scaled.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp)).toArray
-          .map(_.asInstanceOf[java.nio.file.Path])
+        val part = graft.ops.listDir(java.nio.file.Paths.get(tmp))
           .find(_.getFileName.toString.endsWith(".parquet"))
           .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp"))
         java.nio.file.Files.move(part, java.nio.file.Paths.get(s"$dir/events.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        deleteRecursively(java.nio.file.Paths.get(tmp))
+        graft.ops.deleteTree(java.nio.file.Paths.get(tmp))
       } else {
         scaled.write.mode("overwrite").parquet(s"$dir/$t.parquet")
       }
     }
     java.nio.file.Files.write(marker, Array.emptyByteArray)
     dir
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p))
-      java.nio.file.Files.list(p).toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .foreach(deleteRecursively)
-    java.nio.file.Files.deleteIfExists(p)
   }
 
   private def heapUsedMb(): Long = {

@@ -25,12 +25,6 @@ object Verify {
     case c => c.toString
   } + "\""
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
   /** Writes each query's result to `outDir/<name>` parquet; returns the
     * name→error map for the ones that threw (empty = all green). A
     * failed query also DELETES any pre-existing `outDir/<name>` dir: a
@@ -51,7 +45,7 @@ object Verify {
           val msg = (e.getClass.getSimpleName + ": " +
             Option(e.getMessage).getOrElse("")).take(500)
           System.err.println(s"[verify] $name failed: $msg")
-          deleteRecursively(new java.io.File(s"$outDir/$name"))
+          graft.ops.deleteTree(Paths.get(s"$outDir/$name"))
           Some(name -> msg)
       }
     }.toMap

@@ -710,9 +710,17 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 object TextFunctions {
 
   /** money-to-exact-integer-cents. Correctness-critical invariant of the
-    * whole oracle scheme (double sums are order-dependent; cents sums
-    * are not) — ALL query modules must use this one definition. */
+    * whole oracle scheme (double sums are order-dependent in the last
+    * ULPs; cents sums are not) — ALL query modules must use this one
+    * definition, or its JVM form below. */
   def cents(c: Column): Column = round(c * 100).cast(LongType)
+
+  /** [[cents]] on the JVM, for code that rounds one value at a time
+    * (the per-event stream folds): `BigDecimal.valueOf` (the shortest
+    * decimal of the double) rounded HALF_UP is exactly what Spark's
+    * `round` computes, so both forms give the same long. */
+  def cents(v: Double): Long =
+    java.math.BigDecimal.valueOf(v * 100).setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
   /** whitespace tokens (single-space split, reference-style; empties kept
     * out by the caller when needed). */

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.TextFunctions.cents
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   * engine/timezone-proof); money-like `value` sums as exact cents.
   */
 object Events {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    graft.functions.TextFunctions.cents(c)
 
   /** JSON scalar extraction (`props` is a JSON string column). Parsed
     * ONCE with `from_json`; both output columns project from the single

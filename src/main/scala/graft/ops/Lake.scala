@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.TextFunctions.cents
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,9 +15,6 @@ import org.apache.spark.sql.functions._
   * here is north-star extension surface, driver-checked like the rest.
   */
 object Lake {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    round(c * 100).cast("long")
 
   /** JSON-lines round-trip, driver-checked: write a projection to JSON,
     * read it back with an explicit schema, aggregate. Money leaves as

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.TextFunctions.cents
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -13,14 +14,6 @@ import org.apache.spark.sql.functions._
   * derivable clients of its kernel and are graded as capability surface.
   */
 object Relational {
-
-  /** money-in-cents as exact BIGINT: double sums are order-dependent in
-    * the last ULPs (parallel partial aggregation here, segment trees in
-    * DuckDB), so exact-hash comparisons need integer domains. Prices in
-    * the fixtures are 2-decimal, so cents are exact. One shared
-    * definition for all modules. */
-  private def cents(c: org.apache.spark.sql.Column) =
-    graft.functions.TextFunctions.cents(c)
 
   /** TPC-H Q1-shaped aggregation: partial+final hash agg; only
     * (flag,status) groups shuffle — safe at any scale. Aggregates are

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.TextFunctions.cents
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,8 +28,6 @@ import org.apache.spark.sql.functions._
   * the event table.
   */
 object Stats {
-
-  private def cents(c: Column): Column = graft.functions.TextFunctions.cents(c)
 
   /** Pooled two-sample ECDF scan shared by `ks_test` and
     * `mann_whitney`: click/purchase values reduced to (v, na, nb)

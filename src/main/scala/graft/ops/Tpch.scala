@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.TextFunctions.cents
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,8 +21,6 @@ import org.apache.spark.sql.functions._
   * scan as a pushed predicate.
   */
 object Tpch {
-
-  private def cents(c: Column) = graft.functions.TextFunctions.cents(c)
 
   private def ts(s: String) = lit(java.sql.Timestamp.valueOf(s))
 

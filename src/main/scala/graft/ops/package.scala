@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 package object ops {
@@ -24,15 +28,27 @@ package object ops {
     * table on disk (Lake round-trips, sketch persistence). Results that
     * must outlive the dir must be checkpointed (`s.ckpt`) first. */
   private[graft] def withTempDir[A](prefix: String)(f: String => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    try f(tmp)
-    finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close() // the stream holds directory fds until closed
+    val tmp = Files.createTempDirectory(prefix)
+    try f(tmp.toString)
+    finally deleteTree(tmp)
+  }
+
+  /** Deletes `root` and everything under it; a missing `root` is a
+    * no-op. Symbolic links are deleted, never followed. The one
+    * recursive delete under `src/main`: like [[listDir]], it closes its
+    * directory stream, which holds directory fds until closed. */
+  private[graft] def deleteTree(root: Path): Unit =
+    if (Files.exists(root, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
     }
+
+  /** The entries of directory `dir`, its stream closed. */
+  private[graft] def listDir(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toList
+    finally s.close()
   }
 
   /** Runs `f` with the given SQL confs set on the session, then gives

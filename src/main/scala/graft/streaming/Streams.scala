@@ -2,8 +2,9 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
+import graft.functions.TextFunctions.cents
 import graft.ops.{Checkpoints, TopK}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, StreamingQueryProgress, Trigger}
@@ -47,7 +48,7 @@ object Streams {
     events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(graft.functions.TextFunctions.cents(col("value"))).as("sum_value_cents"))
+        sum(cents(col("value"))).as("sum_value_cents"))
       .select(unix_millis(col("w.start")).as("ws_ms"), col("event_type"),
         col("n"), col("sum_value_cents"))
 
@@ -69,7 +70,7 @@ object Streams {
   def runBoundedTumbling(spark: SparkSession, dir: String): DataFrame =
     runBounded(spark, "stream_tumbling",
       tumblingCounts(graft.tables.Tables.eventsStream(spark, dir)),
-      OutputMode.Complete(), Seq("ws_ms", "event_type"))
+      OutputMode.Complete(), Seq("ws_ms", "event_type")).result
 
   /** The session-window aggregation core, shared by the batch query
     * (`Events.sessionWindow`) and the streaming run below — one
@@ -79,7 +80,7 @@ object Streams {
     events
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
-        sum(graft.functions.TextFunctions.cents(col("value"))).as("sum_value_cents"))
+        sum(cents(col("value"))).as("sum_value_cents"))
       .select(col("user_id"), unix_millis(col("w.start")).as("start_ms"),
         unix_millis(col("w.end")).as("end_ms"), col("n_events"), col("sum_value_cents"))
 
@@ -93,7 +94,7 @@ object Streams {
   /** [[runBoundedSessionWindow]] with the run's state-store metrics —
     * specs assert the default provider (not RocksDB) served it. */
   private[graft] def sessionWindowRun(spark: SparkSession, dir: String): BoundedRun =
-    runBoundedRun(spark, "stream_session_window",
+    runBounded(spark, "stream_session_window",
       sessionWindowAgg(graft.tables.Tables.eventsStream(spark, dir)),
       OutputMode.Complete(), Seq("user_id", "start_ms"))
 
@@ -113,7 +114,7 @@ object Streams {
     sessionWindowRocksRun(spark, dir).result
 
   private[graft] def sessionWindowRocksRun(spark: SparkSession, dir: String): BoundedRun =
-    runBoundedRun(spark, "stream_session_rocksdb",
+    runBounded(spark, "stream_session_rocksdb",
       sessionWindowAgg(graft.tables.Tables.eventsStream(spark, dir)),
       OutputMode.Complete(), Seq("user_id", "start_ms"), confs = Seq(RocksDb))
 
@@ -187,7 +188,7 @@ object Streams {
         .parquet(s"$tmp/src")
       runBounded(spark, "stream_late_drops",
         tumblingAgg(src.withWatermark("ts", "10 minutes")),
-        OutputMode.Update(), Seq("ws_ms", "event_type", "n"))
+        OutputMode.Update(), Seq("ws_ms", "event_type", "n")).result
     }
 
   /** Stream-static enrichment through the engine, driver-checked: each
@@ -202,7 +203,7 @@ object Streams {
       enrich(graft.tables.Tables.eventsStream(spark, dir)
         .select("event_id", "user_id"), dim)
         .select("event_id", "user_id", "segment"),
-      OutputMode.Append(), Seq("event_id"))
+      OutputMode.Append(), Seq("event_id")).result
   }
 
   /** State-store partitions of every bounded run: at most one wave of state-store tasks. */
@@ -251,12 +252,6 @@ object Streams {
   private def runBounded(
       spark: SparkSession, prefix: String, out: DataFrame,
       mode: OutputMode, sortCols: Seq[String],
-      needsNoDataBatch: Boolean = false, confs: Seq[(String, String)] = Nil): DataFrame =
-    runBoundedRun(spark, prefix, out, mode, sortCols, needsNoDataBatch, confs).result
-
-  private def runBoundedRun(
-      spark: SparkSession, prefix: String, out: DataFrame,
-      mode: OutputMode, sortCols: Seq[String],
       needsNoDataBatch: Boolean = false,
       confs: Seq[(String, String)] = Nil): BoundedRun = Checkpoints.scope { ck =>
     val name = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -282,6 +277,48 @@ object Streams {
     } finally spark.catalog.dropTempView(name)
   }
 
+  /** `events`' five event columns as a typed [[Event]] dataset — the
+    * input of every typed stream operator, and of the bootstrap's batch
+    * baseline. */
+  private def typedEvents(events: DataFrame): Dataset[Event] = {
+    import events.sparkSession.implicits._
+    events.select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+  }
+
+  /** The ordered per-key fold behind the six per-key stream operators —
+    * the streaming form of the reference's Reduce, one user callback per
+    * key. Per micro-batch, each key's events are sorted by
+    * (ts, event_id), then folded from the key's stored state (or `zero`
+    * for a new key): `step(key, state, event)` gives the next state and
+    * at most one emitted row. After the fold the state is stored and
+    * `batchRows(key, state)` may emit rows once per batch (top-k's
+    * refreshed ranking).
+    *
+    * In-order contract: the sort covers one micro-batch only, and no
+    * step revises an earlier one, so a key's event that arrives in a
+    * later micro-batch than a successor in event time is folded out of
+    * order. That is the right trade for per-key-ordered transports (CDC
+    * logs, a key-partitioned queue); feeds with cross-batch reordering
+    * need a watermark-buffered variant, deliberately not this fold,
+    * whose point is constant per-key state. */
+  private def foldByKey[K: Encoder, S: Encoder, O: Encoder](
+      events: Dataset[Event], key: Event => K, zero: S)(
+      step: (K, S, Event) => (S, Option[O]),
+      batchRows: (K, S) => Iterator[O] = (_: K, _: S) => Iterator.empty): Dataset[O] = {
+    def update(k: K, batch: Iterator[Event], state: GroupState[S]): Iterator[O] = {
+      var s = state.getOption.getOrElse(zero)
+      val out = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).flatMap { e =>
+        val (next, row) = step(k, s, e)
+        s = next
+        row
+      }
+      state.update(s)
+      out.iterator ++ batchRows(k, s)
+    }
+    events.groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
+  }
+
   final case class EwmaOut(event_id: Long, user_id: Long, ms: Long, decayed: Long)
   final case class EwmaState(recent: List[Long])
 
@@ -296,50 +333,28 @@ object Streams {
     * decision is exactly the batch recursion, so the bounded run shares
     * the batch query's recursive-CTE oracle row-for-row. On an
     * unbounded production stream this replaces the batch job's daily
-    * re-sort with one O(1) update per event — UNDER AN EXPLICIT
-    * IN-ORDER-ARRIVAL CONTRACT: events are sorted by (ts, event_id)
-    * only WITHIN each micro-batch, and the last-kept recursion is not
-    * revisable, so a per-user event arriving in a later micro-batch
-    * than a successor it precedes in event time is debounced against
-    * the wrong last-kept anchor (the batch recursion would re-decide
-    * the kept set; this operator cannot). That is the right trade for
-    * per-key-ordered transports (CDC logs, a key-partitioned queue);
-    * feeds with cross-batch reordering need a watermark-buffered
-    * variant that holds events until the watermark closes their order
-    * window — deliberately not this operator, whose whole point is the
-    * two-long state floor. */
+    * re-sort with one O(1) update per event, under [[foldByKey]]'s
+    * in-order contract: the last-kept recursion is not revisable (the
+    * batch recursion would re-decide the kept set; this operator
+    * cannot). */
   def debounceStream(events: Dataset[Event]): Dataset[DebounceOut] = {
     import events.sparkSession.implicits._
     val D = graft.ops.Events.DebounceMs
-    def update(userId: Long, batch: Iterator[Event],
-        state: GroupState[DebounceState]): Iterator[DebounceOut] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var (last, seq) = state.getOption
-        .map(s => (s.lastKept, s.seq)).getOrElse((Long.MinValue, 0L))
-      val out = sorted.flatMap { e =>
-        val ms = e.ts.getTime
-        if (seq == 0L || ms - last >= D) {
-          last = ms; seq += 1L
-          Some(DebounceOut(userId, e.event_id, ms, seq))
-        } else None
-      }
-      state.update(DebounceState(last, seq))
-      out.iterator
+    foldByKey(events, _.user_id, DebounceState(Long.MinValue, 0L)) { (userId, st, e) =>
+      val ms = e.ts.getTime
+      if (st.seq == 0L || ms - st.lastKept >= D) {
+        val next = DebounceState(ms, st.seq + 1L)
+        (next, Some(DebounceOut(userId, e.event_id, ms, next.seq)))
+      } else (st, None)
     }
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
   }
 
   /** [[debounceStream]] through the real engine over the bounded
     * fixture — oracle = the batch debounce recursive CTE. */
-  def runBoundedDebounce(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    runBounded(spark, "stream_debounce", debounceStream(ev).toDF(),
-      OutputMode.Append(), Seq("user_id", "keep_seq"))
-  }
+  def runBoundedDebounce(spark: SparkSession, dir: String): DataFrame =
+    runBounded(spark, "stream_debounce",
+      debounceStream(typedEvents(graft.tables.Tables.eventsStream(spark, dir))).toDF(),
+      OutputMode.Append(), Seq("user_id", "keep_seq")).result
 
   /** Streaming twin of `Events.ewmaSmooth` — the per-key ORDERED
     * stateful map that windowed aggregation can't express: each user
@@ -348,32 +363,17 @@ object Streams {
     * Σₖ cents·2^(15−k). State is O(16 longs) per user — bounded by
     * construction, no watermark needed for eviction correctness on the
     * bounded verification runs (a production run would add a state TTL).
-    * Cents are rounded with the exact `BigDecimal.valueOf` HALF_UP rule
-    * Spark's `round` applies, so stream and batch produce identical
-    * longs. Deterministic here because the bounded single-file source
-    * yields one micro-batch, sorted per user by the (ms, event_id)
-    * total order inside the update function — the same order the batch
-    * window uses. */
+    * Cents round with the JVM form of `TextFunctions.cents`, so stream
+    * and batch produce identical longs, and [[foldByKey]] folds in the
+    * (ms, event_id) order the batch window uses. */
   def ewmaStream(events: Dataset[Event]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
     val W = 16
-    def update(userId: Long, batch: Iterator[Event],
-        state: GroupState[EwmaState]): Iterator[EwmaOut] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var recent = state.getOption.map(_.recent).getOrElse(Nil) // most-recent first
-      val out = sorted.map { e =>
-        val c = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        recent = (c :: recent).take(W)
-        val dec = recent.iterator.zipWithIndex
-          .map { case (v, k) => v << (W - 1 - k) }.sum
-        EwmaOut(e.event_id, userId, e.ts.getTime, dec)
-      }
-      state.update(EwmaState(recent))
-      out.iterator
+    foldByKey(events, _.user_id, EwmaState(Nil)) { (userId, st, e) =>
+      val recent = (cents(e.value) :: st.recent).take(W) // most-recent first
+      val dec = recent.iterator.zipWithIndex.map { case (v, k) => v << (W - 1 - k) }.sum
+      (EwmaState(recent), Some(EwmaOut(e.event_id, userId, e.ts.getTime, dec)))
     }
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
   }
 
   final case class RateCapOut(user_id: Long, day: Long, rn: Long, event_id: Long, ms: Long)
@@ -386,37 +386,24 @@ object Streams {
     * day key stops growing state the moment its cap fills, and
     * production would add an event-time timeout to retire closed days
     * (bounded verification runs don't need eviction). In-order contract
-    * as [[debounceStream]]: per-key event-time order across
-    * micro-batches (an admitted event is not revocable). Shares the
+    * of [[foldByKey]] (an admitted event is not revocable). Shares the
     * batch query's oracle row-for-row. */
   def rateCapStream(events: Dataset[Event]): Dataset[RateCapOut] = {
     import events.sparkSession.implicits._
     val cap = graft.ops.Events.RateCap
-    def update(key: (Long, Long), batch: Iterator[Event],
-        state: GroupState[RateCapState]): Iterator[RateCapOut] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var kept = state.getOption.map(_.kept).getOrElse(0L)
-      val out = sorted.flatMap { e =>
-        if (kept < cap) {
-          kept += 1L
-          Some(RateCapOut(key._1, key._2, kept, e.event_id, e.ts.getTime))
-        } else None
-      }
-      state.update(RateCapState(kept))
-      out.iterator
+    foldByKey(events, e => (e.user_id, e.ts.getTime / 86400000L), RateCapState(0L)) {
+      case ((userId, day), st, e) =>
+        if (st.kept < cap) {
+          val next = RateCapState(st.kept + 1L)
+          (next, Some(RateCapOut(userId, day, next.kept, e.event_id, e.ts.getTime)))
+        } else (st, None)
     }
-    events.groupByKey(e => (e.user_id, e.ts.getTime / 86400000L))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
   }
 
-  def runBoundedRateCap(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    runBounded(spark, "stream_rate_cap", rateCapStream(ev).toDF(),
-      OutputMode.Append(), Seq("user_id", "day", "rn"))
-  }
+  def runBoundedRateCap(spark: SparkSession, dir: String): DataFrame =
+    runBounded(spark, "stream_rate_cap",
+      rateCapStream(typedEvents(graft.tables.Tables.eventsStream(spark, dir))).toDF(),
+      OutputMode.Append(), Seq("user_id", "day", "rn")).result
 
   final case class ChangelogOut(user_id: Long, rn: Long, event_id: Long, ms: Long, level: Long)
   final case class ChangelogState(prev: Long, hasPrev: Boolean, kept: Long)
@@ -424,39 +411,24 @@ object Streams {
   /** Stateful streaming twin of [[graft.ops.Events.changelogCompact]]:
     * the CDC level-change squash enforced AT ARRIVAL — state is
     * (last level, kept ordinal) per user, O(2 longs)/key forever; a
-    * reading equal to the stored value emits nothing and touches no
-    * state. In-order contract as [[debounceStream]] (an emitted change
-    * is not revocable). Shares the batch query's oracle row-for-row. */
+    * reading equal to the stored value emits nothing and changes no
+    * state. In-order contract of [[foldByKey]] (an emitted change is
+    * not revocable). Shares the batch query's oracle row-for-row. */
   def changelogStream(events: Dataset[Event]): Dataset[ChangelogOut] = {
     import events.sparkSession.implicits._
-    def update(userId: Long, batch: Iterator[Event],
-        state: GroupState[ChangelogState]): Iterator[ChangelogOut] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var st = state.getOption.getOrElse(ChangelogState(0L, hasPrev = false, 0L))
-      val out = sorted.flatMap { e =>
-        val cents = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        val level = Math.floorDiv(cents, graft.ops.Events.ChangelogQuantum)
-        if (!st.hasPrev || level != st.prev) {
-          st = ChangelogState(level, hasPrev = true, st.kept + 1L)
-          Some(ChangelogOut(userId, st.kept, e.event_id, e.ts.getTime, level))
-        } else None
-      }
-      state.update(st)
-      out.iterator
+    foldByKey(events, _.user_id, ChangelogState(0L, hasPrev = false, 0L)) { (userId, st, e) =>
+      val level = Math.floorDiv(cents(e.value), graft.ops.Events.ChangelogQuantum)
+      if (!st.hasPrev || level != st.prev) {
+        val next = ChangelogState(level, hasPrev = true, st.kept + 1L)
+        (next, Some(ChangelogOut(userId, next.kept, e.event_id, e.ts.getTime, level)))
+      } else (st, None)
     }
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
   }
 
-  def runBoundedChangelog(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    runBounded(spark, "stream_changelog", changelogStream(ev).toDF(),
-      OutputMode.Append(), Seq("user_id", "rn"))
-  }
+  def runBoundedChangelog(spark: SparkSession, dir: String): DataFrame =
+    runBounded(spark, "stream_changelog",
+      changelogStream(typedEvents(graft.tables.Tables.eventsStream(spark, dir))).toDF(),
+      OutputMode.Append(), Seq("user_id", "rn")).result
 
   final case class TopkOut(event_type: String, rn: Long, event_id: Long, cents: Long)
   final case class TopkState(items: List[(Long, Long)])
@@ -464,45 +436,27 @@ object Streams {
   /** Stateful streaming top-k: per event type the state store carries
     * the current k best (cents desc, event_id asc) events — the
     * bounded-heap discipline of [[graft.ops.TopK.TopKAgg]] moved into
-    * `flatMapGroupsWithState`, O(k) state per key forever. Each batch
-    * folds its events into the heap and emits the refreshed ranking
-    * (per-batch replacement; on the bounded single-micro-batch
-    * verification runs that is exactly the final batch top-k, so the
-    * window row_number SQL gates it). Cents round with the same
-    * BigDecimal HALF_UP rule as [[ewmaStream]]. */
+    * [[foldByKey]], O(k) state per key forever. Each batch folds its
+    * events into the heap and emits the refreshed ranking (per-batch
+    * replacement; on the bounded single-micro-batch verification runs
+    * that is exactly the final batch top-k, so the window row_number
+    * SQL gates it). */
   def topkStream(events: Dataset[Event], k: Int): Dataset[TopkOut] = {
     import events.sparkSession.implicits._
     def better(a: (Long, Long), b: (Long, Long)): Boolean =
       a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-    def update(key: String, batch: Iterator[Event],
-        state: GroupState[TopkState]): Iterator[TopkOut] = {
-      var items = state.getOption.map(_.items).getOrElse(Nil)
-      batch.foreach { e =>
-        val c = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        items = TopK.insertBounded(items, (c, e.event_id), k)(better)
-      }
-      state.update(TopkState(items))
-      items.iterator.zipWithIndex.map { case ((c, id), i) =>
-        TopkOut(key, i + 1L, id, c)
-      }
-    }
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
+    foldByKey(events, _.event_type, TopkState(Nil))(
+      (_, st, e) =>
+        (TopkState(TopK.insertBounded(st.items, (cents(e.value), e.event_id), k)(better)), None),
+      (et, st) =>
+        st.items.iterator.zipWithIndex.map { case ((c, id), i) => TopkOut(et, i + 1L, id, c) })
   }
 
-  def runBoundedTopk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    runBounded(spark, "stream_topk", topkStream(ev, 3).toDF(),
-      OutputMode.Append(), Seq("event_type", "rn"))
-  }
+  def runBoundedTopk(spark: SparkSession, dir: String): DataFrame =
+    runBounded(spark, "stream_topk",
+      topkStream(typedEvents(graft.tables.Tables.eventsStream(spark, dir)), 3).toDF(),
+      OutputMode.Append(), Seq("event_type", "rn")).result
 
-  /** [[ewmaStream]] through the real engine over the bounded fixture —
-    * oracle = the batch lag-chain SQL, which the stream must match
-    * row-for-row. */
   final case class DayCell(day: Long, n: Long)
   final case class AnomalyState(ring: List[DayCell], curDay: Long, curN: Long)
   final case class AnomalyOut(event_type: String, day: Long, n: Long,
@@ -518,9 +472,8 @@ object Streams {
     * exactly the batch result MINUS each type's final observed day,
     * which never closes inside the stream — the oracle applies that
     * same predicate, so stream and batch semantics stay provably
-    * aligned rather than approximately similar. In-order contract as
-    * [[debounceStream]]: per-key event-time order across micro-batches
-    * (day closure is not revisable). */
+    * aligned rather than approximately similar. In-order contract of
+    * [[foldByKey]] (day closure is not revisable). */
   def anomalyStream(events: Dataset[Event]): Dataset[AnomalyOut] = {
     import events.sparkSession.implicits._
     def med2Of(xs: Seq[Long]): Long = {
@@ -537,47 +490,29 @@ object Streams {
         Some(AnomalyOut(et, day, n, ring.size.toLong, m2, mad4,
           math.abs(4 * n - 2 * m2) > 5 * mad4))
       }
-    def update(et: String, batch: Iterator[Event],
-        state: GroupState[AnomalyState]): Iterator[AnomalyOut] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var st = state.getOption.getOrElse(AnomalyState(Nil, Long.MinValue, 0L))
-      val out = scala.collection.mutable.ListBuffer.empty[AnomalyOut]
-      sorted.foreach { e =>
-        val day = e.ts.getTime / 86400000L
-        if (st.curDay == Long.MinValue) st = AnomalyState(Nil, day, 1L)
-        else if (day == st.curDay) st = st.copy(curN = st.curN + 1)
-        else {
-          verdict(et, st.ring, st.curDay, st.curN).foreach(out += _)
-          st = AnomalyState(
-            (st.ring :+ DayCell(st.curDay, st.curN)).takeRight(28), day, 1L)
-        }
-      }
-      state.update(st)
-      out.iterator
+    foldByKey(events, _.event_type, AnomalyState(Nil, Long.MinValue, 0L)) { (et, st, e) =>
+      val day = e.ts.getTime / 86400000L
+      if (st.curDay == Long.MinValue) (AnomalyState(Nil, day, 1L), None)
+      else if (day == st.curDay) (st.copy(curN = st.curN + 1), None)
+      else (AnomalyState((st.ring :+ DayCell(st.curDay, st.curN)).takeRight(28), day, 1L),
+        verdict(et, st.ring, st.curDay, st.curN))
     }
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
   }
 
   /** [[anomalyStream]] through the real engine over the bounded fixture
     * — oracle = the batch anomaly_mad SQL minus each type's final day. */
-  def runBoundedAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    runBounded(spark, "stream_anomaly", anomalyStream(ev).toDF(),
-      OutputMode.Append(), Seq("event_type", "day"))
-  }
+  def runBoundedAnomaly(spark: SparkSession, dir: String): DataFrame =
+    runBounded(spark, "stream_anomaly",
+      anomalyStream(typedEvents(graft.tables.Tables.eventsStream(spark, dir))).toDF(),
+      OutputMode.Append(), Seq("event_type", "day")).result
 
-  def runBoundedEwma(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    runBounded(spark, "stream_ewma", ewmaStream(ev).toDF(),
-      OutputMode.Append(), Seq("user_id", "ms", "event_id"))
-  }
+  /** [[ewmaStream]] through the real engine over the bounded fixture —
+    * oracle = the batch lag-chain SQL, which the stream must match
+    * row-for-row. */
+  def runBoundedEwma(spark: SparkSession, dir: String): DataFrame =
+    runBounded(spark, "stream_ewma",
+      ewmaStream(typedEvents(graft.tables.Tables.eventsStream(spark, dir))).toDF(),
+      OutputMode.Append(), Seq("user_id", "ms", "event_id")).result
 
   /** Streaming exact dedup through the real engine, driver-checkable:
     * `dropDuplicates` keeps the first-SEEN row per key, which depends
@@ -591,7 +526,7 @@ object Streams {
       graft.tables.Tables.eventsStream(spark, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type"),
-      OutputMode.Append(), Seq("user_id", "event_type"))
+      OutputMode.Append(), Seq("user_id", "event_type")).result
 
   /** Stream-static enrichment join: each micro-batch joins against a
     * static dimension (broadcast per batch — no stream state). The
@@ -663,7 +598,7 @@ object Streams {
     val res = runBounded(spark, "stream_left_join",
       clickConversion(clicks, purchases),
       OutputMode.Append(), Seq("click_id", "purchase_id"),
-      needsNoDataBatch = true)
+      needsNoDataBatch = true).result
     // global watermark = min over the two streams' (max event time − delay)
     val ev = graft.tables.Tables.events(spark, dir)
     val wmMs = ev.agg(
@@ -691,7 +626,7 @@ object Streams {
       .filter(col("event_type") === "purchase")
     runBounded(spark, "stream_interval_join",
       purchaseAttribution(clicks, purchases),
-      OutputMode.Append(), Seq("purchase_id", "click_id"))
+      OutputMode.Append(), Seq("purchase_id", "click_id")).result
   }
 
   /** The custom stateful operator through the real engine,
@@ -708,12 +643,9 @@ object Streams {
     * here, the oracle in its WHERE clause — same contract
     * (end = last + gap) as the session_window oracle. */
   def runBoundedSessionize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
+    val ev = typedEvents(graft.tables.Tables.eventsStream(spark, dir))
     val res = runBounded(spark, "stream_sessionize", sessionize(spark, ev).toDF(),
-      OutputMode.Append(), Seq("user_id", "start_ms"), needsNoDataBatch = true)
+      OutputMode.Append(), Seq("user_id", "start_ms"), needsNoDataBatch = true).result
     val finalWmMs = graft.tables.Tables.events(spark, dir)
       .agg(max(unix_millis(col("ts")))).head().getLong(0) - 10L * 60 * 1000
     res.filter(col("end_ms") < finalWmMs)
@@ -902,7 +834,7 @@ object Streams {
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
           val b = latestPerUser(batch.select(
             col("user_id"), unix_millis(col("ts")).as("ms"), col("event_id"),
-            graft.functions.TextFunctions.cents(col("value")).as("cents")))
+            cents(col("value")).as("cents")))
           val v = version.get()
           val merged =
             if (v < 0) b
@@ -984,7 +916,7 @@ object Streams {
             } else {
               batch.select(col("event_id"), unix_millis(col("ts")).as("ms"),
                   col("user_id"),
-                  graft.functions.TextFunctions.cents(col("value")).as("cents"))
+                  cents(col("value")).as("cents"))
                 .write.mode("overwrite").parquet(s"$tableDir/batch_$id") // WRITE
               java.nio.file.Files.write(marker, Array.emptyByteArray)    // PUBLISH
               ()
@@ -1002,12 +934,8 @@ object Streams {
       def engineCommits(): Set[Long] = {
         val d = java.nio.file.Paths.get(s"$ckpt/commits")
         if (!java.nio.file.Files.isDirectory(d)) Set.empty
-        else {
-          val s = java.nio.file.Files.list(d)
-          try s.iterator().asScala.map(_.getFileName.toString)
-            .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).toSet
-          finally s.close()
-        }
+        else graft.ops.listDir(d).map(_.getFileName.toString)
+          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).toSet
       }
 
       addFiles(0 to 1)
@@ -1032,65 +960,68 @@ object Streams {
       // everything now committed minus what survived the injection —
       // includes the re-committed b1.max iff the replay really ran
       val b2 = (engineCommits() -- survivors).toSeq.sorted
-      val committedList = java.nio.file.Files.list(commitsDir)
-      val committed =
-        try committedList.iterator().asScala
-          .map(p => s"$tableDir/batch_${p.getFileName.toString.toLong}").toSeq.sorted
-        finally committedList.close()
+      val committed = graft.ops.listDir(commitsDir)
+        .map(p => s"$tableDir/batch_${p.getFileName.toString.toLong}").sorted
       val res = ck.ckpt(spark.read.parquet(committed: _*)
         .orderBy("event_id")) // must outlive the temp dir
       (res, replays.get(), b1, b2)
     }
   }
 
-  final case class TwsAgg(n: Long, sumCents: Long, maxCents: Long, lastMs: Long, lastId: Long)
+  /** The per-user running aggregate of the two `transformWithState`
+    * queries: event count, cents sum and max, and the last event by
+    * max (ms, event_id). The max rule makes `add` order-free, so a
+    * baseline folded in any order and the stream rows folded on top of
+    * it give the one-shot batch aggregate. */
+  final case class UserAgg(n: Long, sumCents: Long, maxCents: Long, lastMs: Long, lastId: Long) {
+    def add(e: Event): UserAgg = {
+      val (c, ms) = (cents(e.value), e.ts.getTime)
+      val isLater = ms > lastMs || (ms == lastMs && e.event_id > lastId)
+      UserAgg(n + 1L, sumCents + c, math.max(maxCents, c),
+        if (isLater) ms else lastMs, if (isLater) e.event_id else lastId)
+    }
+  }
+  private val NoUserAgg = UserAgg(0L, 0L, Long.MinValue, Long.MinValue, 0L)
+
   final case class TwsOut(
       user_id: Long, n_events: Long, sum_cents: Long, max_cents: Long,
       last_event_id: Long, n_recent: Long)
 
-  /** [[transformWithStateStream]]'s processor: the Spark 4
+  /** [[runBoundedTransformState]]'s processor: the Spark 4
     * `StatefulProcessor` API (the arbitrary-state surface superseding
     * `flatMapGroupsWithState`), exercised with its distinguishing
     * feature — MULTIPLE NAMED state variables per key, each its own
     * column family in the store: a `ValueState` carrying the running
-    * per-user aggregate and a `ListState` ring of the most recent
-    * event ids (capped at [[TwsRecentCap]] — a production dedup/replay
-    * buffer shape; `ListState.put` rewrites the capped window, so
-    * state stays O(1) per key forever). Emits one row per key per
-    * batch with the post-batch aggregate — on the bounded single-batch
-    * fixture that is exactly the batch GROUP BY the oracle states. */
+    * [[UserAgg]] and a `ListState` ring of the most recent event ids
+    * (capped at [[TwsRecentCap]] — a production dedup/replay buffer
+    * shape; `ListState.put` rewrites the capped window, so state stays
+    * O(1) per key forever). Emits one row per key per batch with the
+    * post-batch aggregate — on the bounded single-batch fixture that is
+    * exactly the batch GROUP BY the oracle states. */
   private val TwsRecentCap = 3
 
   private class UserAggProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, TwsOut] {
     import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, TimerValues, ValueState, ListState}
-    import org.apache.spark.sql.{Encoder, Encoders}
-    @transient private var agg: ValueState[TwsAgg]  = _
+    import org.apache.spark.sql.Encoders
+    @transient private var agg: ValueState[UserAgg] = _
     @transient private var recent: ListState[Long]  = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      agg = getHandle.getValueState[TwsAgg](
-        "agg", Encoders.product[TwsAgg], TTLConfig.NONE)
+      agg = getHandle.getValueState[UserAgg](
+        "agg", Encoders.product[UserAgg], TTLConfig.NONE)
       recent = getHandle.getListState[Long](
         "recent", Encoders.scalaLong.asInstanceOf[Encoder[Long]], TTLConfig.NONE)
     }
     override def handleInputRows(
         key: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[TwsOut] = {
-      // per-key (ts, id) total order inside the batch — the same
-      // in-order-arrival contract every stateful op here documents
+      // the recent-id ring is ordered: per-key (ts, id) total order
+      // inside the batch, the in-order contract of [[foldByKey]]
       val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
       if (sorted.isEmpty) return Iterator.empty
-      var s = if (agg.exists()) agg.get()
-              else TwsAgg(0L, 0L, Long.MinValue, Long.MinValue, 0L)
-      var ring = recent.get().toList
-      sorted.foreach { e =>
-        val cents = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        val ms = e.ts.getTime
-        s = TwsAgg(s.n + 1L, s.sumCents + cents, math.max(s.maxCents, cents),
-          ms, e.event_id)
-        ring = (e.event_id :: ring).take(TwsRecentCap)
-      }
+      val s = sorted.foldLeft(if (agg.exists()) agg.get() else NoUserAgg)(_ add _)
+      val ring = sorted.foldLeft(recent.get().toList)((r, e) =>
+        (e.event_id :: r).take(TwsRecentCap))
       agg.update(s)
       recent.clear()
       recent.put(ring.toArray)
@@ -1098,7 +1029,6 @@ object Streams {
     }
   }
 
-  final case class BootAgg(n: Long, sumCents: Long, maxCents: Long, lastMs: Long, lastId: Long)
   final case class BootOut(
       user_id: Long, n_events: Long, sum_cents: Long, max_cents: Long, last_event_id: Long)
 
@@ -1111,35 +1041,23 @@ object Streams {
     * the beginning of time). */
   private class BootstrapProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, Event, BootOut, BootAgg] {
+        Long, Event, BootOut, UserAgg] {
     import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, TimerValues, ValueState}
     import org.apache.spark.sql.Encoders
-    @transient private var agg: ValueState[BootAgg] = _
+    @transient private var agg: ValueState[UserAgg] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      agg = getHandle.getValueState[BootAgg](
-        "agg", Encoders.product[BootAgg], TTLConfig.NONE)
+      agg = getHandle.getValueState[UserAgg](
+        "agg", Encoders.product[UserAgg], TTLConfig.NONE)
     }
     override def handleInitialState(
-        key: Long, initialState: BootAgg,
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Unit =
+        key: Long, initialState: UserAgg, timerValues: TimerValues): Unit =
       agg.update(initialState)
     override def handleInputRows(
-        key: Long, rows: Iterator[Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[BootOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      if (sorted.isEmpty) return Iterator.empty
-      var s = if (agg.exists()) agg.get()
-              else BootAgg(0L, 0L, Long.MinValue, Long.MinValue, 0L)
-      sorted.foreach { e =>
-        val cents = java.math.BigDecimal.valueOf(e.value * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        val ms = e.ts.getTime
-        // last = max by (ts, id) across BOTH halves: the baseline's
-        // last survives unless a stream row genuinely supersedes it
-        val isLater = ms > s.lastMs || (ms == s.lastMs && e.event_id > s.lastId)
-        s = BootAgg(s.n + 1L, s.sumCents + cents, math.max(s.maxCents, cents),
-          if (isLater) ms else s.lastMs, if (isLater) e.event_id else s.lastId)
-      }
+        key: Long, rows: Iterator[Event], timerValues: TimerValues): Iterator[BootOut] = {
+      if (!rows.hasNext) return Iterator.empty
+      // last = max by (ts, id) across BOTH halves: the baseline's last
+      // survives unless a stream row genuinely supersedes it
+      val s = rows.foldLeft(if (agg.exists()) agg.get() else NoUserAgg)(_ add _)
       agg.update(s)
       Iterator.single(BootOut(key, s.n, s.sumCents, s.maxCents, s.lastId))
     }
@@ -1158,35 +1076,21 @@ object Streams {
   def runBoundedStateBootstrap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // "yesterday": batch-side per-user baseline over the even half
-    val baseline = graft.tables.Tables.events(spark, dir)
-      .filter(col("event_id") % 2 === 0)
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._3)
-      .mapGroups { (uid, it) =>
-        val rows = it.toSeq.sortBy(r => (r._2.getTime, r._1))
-        var s = BootAgg(0L, 0L, Long.MinValue, Long.MinValue, 0L)
-        rows.foreach { r =>
-          val cents = java.math.BigDecimal.valueOf(r._4 * 100)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-          s = BootAgg(s.n + 1L, s.sumCents + cents, math.max(s.maxCents, cents),
-            r._2.getTime, r._1)
-        }
-        (uid, s)
-      }
-    val initial = baseline.groupByKey(_._1).mapValues(_._2)
+    val initial = typedEvents(graft.tables.Tables.events(spark, dir)
+        .filter(col("event_id") % 2 === 0))
+      .groupByKey(_.user_id)
+      .mapGroups((uid, it) => (uid, it.foldLeft(NoUserAgg)(_ add _)))
+      .groupByKey(_._1).mapValues(_._2)
     // "today": the odd half arrives as the stream
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .filter(col("event_id") % 2 === 1)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    val out = ev.groupByKey(_.user_id)
+    val out = typedEvents(graft.tables.Tables.eventsStream(spark, dir)
+        .filter(col("event_id") % 2 === 1))
+      .groupByKey(_.user_id)
       .transformWithState(new BootstrapProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append(),
         initial)
     runBounded(spark, "stream_state_bootstrap", out.toDF(),
-      OutputMode.Append(), Seq("user_id"), confs = Seq(RocksDb))
+      OutputMode.Append(), Seq("user_id"), confs = Seq(RocksDb)).result
   }
 
   /** Per-user running aggregate through the NEW `transformWithState`
@@ -1199,14 +1103,12 @@ object Streams {
 
   private[graft] def transformStateRun(spark: SparkSession, dir: String): BoundedRun = {
     import spark.implicits._
-    val ev = graft.tables.Tables.eventsStream(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    val out = ev.groupByKey(_.user_id)
+    val out = typedEvents(graft.tables.Tables.eventsStream(spark, dir))
+      .groupByKey(_.user_id)
       .transformWithState(new UserAggProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
-    runBoundedRun(spark, "stream_transform_state", out.toDF(),
+    runBounded(spark, "stream_transform_state", out.toDF(),
       OutputMode.Append(), Seq("user_id"), confs = Seq(RocksDb))
   }
 }

@@ -368,5 +368,16 @@ class CheckpointsSpec extends SparkSpec {
     assert(managers.map(_._1) == List("Streams.scala"), managers.map(_._2).mkString("\n"))
     val rawFs = mainHits(Seq("extends RawLocalFileSystem"))
     assert(rawFs.map(_._1) == List("LocalCheckpointFiles.scala"), rawFs.map(_._2).mkString("\n"))
+    // one per-key stream fold (plus sessionize's timeouts), one typed event read
+    val folds = mainHits(Seq(".flatMapGroupsWithState("))
+    assert(folds.map(_._1) == List("Streams.scala", "Streams.scala"), folds.map(_._2).mkString("\n"))
+    val typed = mainHits(Seq(".as[Event]"))
+    assert(typed.size == 1, typed.map(_._2).mkString("\n"))
+    // one cents rule, in its Column and JVM forms
+    val cents = mainHits(Seq("HALF_UP).longValue", "def cents"))
+    assert(cents.map(_._1).distinct == List("TextFunctions.scala"), cents.map(_._2).mkString("\n"))
+    // one recursive delete and one directory listing, both closing their streams
+    val trees = mainHits(Seq("def deleteRecursively", "Files.list(", "Files.walk("))
+    assert(trees.map(_._1).distinct == List("package.scala"), trees.map(_._2).mkString("\n"))
   }
 }

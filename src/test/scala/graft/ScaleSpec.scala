@@ -169,15 +169,7 @@ class ScaleSpec extends SparkSpec {
       val ev = graft.tables.Tables.events(spark, dir)
       assert(ev.count() == k * graft.tables.Tables.events(spark, sfDir).count())
       assert(ev.select("event_id").distinct().count() == ev.count())
-    } finally rm(java.nio.file.Paths.get(tmp))
-  }
-
-  private def rm(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p))
-      java.nio.file.Files.list(p).toArray
-        .map(_.asInstanceOf[java.nio.file.Path]).foreach(rm)
-    java.nio.file.Files.deleteIfExists(p)
-    ()
+    } finally graft.ops.deleteTree(java.nio.file.Paths.get(tmp))
   }
 
   test("perfbench/gen.py's replica rule equals ScaleProbe.replica, row for row") {
@@ -208,7 +200,7 @@ class ScaleSpec extends SparkSpec {
         assert(got.exceptAll(want).union(want.exceptAll(got)).isEmpty,
           s"$name replica $r: gen.py and ScaleProbe rows differ")
       }
-    } finally rm(tmp)
+    } finally graft.ops.deleteTree(tmp)
   }
 
   test("curation_pipeline and media_dedup shuffle hash-sized rows, never text/media bytes") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.Streams
 import graft.streaming.Streams.{Event, SessionOut}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -475,6 +476,40 @@ class StreamingSpec extends SparkSpec {
       assert(got == Seq((1L, 1L, 0L), (2L, 4L, 2L), (3L, 7L, 0L)),
         s"changelog emitted $got")
     } finally { query.stop(); spark.catalog.dropTempView("changelog_out"); () }
+  }
+
+  test("each per-key fold sorts its batch by (ts, event_id): a reversed batch emits the same rows") {
+    implicit val sqlCtx = spark.sqlContext
+    val hour = 3600000L
+    // one user and one type over 11 days: 3-5 events a day (over the rate
+    // cap, spaced for debounce, enough closed days for anomaly verdicts),
+    // levels that change and repeat, and two events on day 2 sharing a ts
+    val hours = (0L until 11L).flatMap(d =>
+      Seq(1L, 4L, 10L, 11L, 12L).take(3 + (d % 3).toInt).map(d * 24 + _)) :+ (2L * 24 + 4L)
+    val values = Seq(10.0, 60.0, 60.0, 120.0, 10.0)
+    val events = hours.sorted.zipWithIndex.map { case (h, i) =>
+      Event(i + 1L, new java.sql.Timestamp(h * hour), 7L, "click", values(i % 5))
+    }
+    def emitted(fold: Dataset[Event] => Dataset[_], batch: Seq[Event]): Seq[String] = {
+      val input = MemoryStream[Event]
+      val name  = "fold_order_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val query = fold(input.toDS()).toDF()
+        .writeStream.format("memory").queryName(name).outputMode(OutputMode.Append).start()
+      try {
+        input.addData(batch: _*)
+        query.processAllAvailable()
+        spark.table(name).collect().map(_.toString).toSeq.sorted
+      } finally { query.stop(); spark.catalog.dropTempView(name); () }
+    }
+    val folds = Seq[(String, Dataset[Event] => Dataset[_])](
+      "debounce" -> Streams.debounceStream, "ewma" -> Streams.ewmaStream,
+      "rate_cap" -> Streams.rateCapStream, "changelog" -> Streams.changelogStream,
+      "anomaly" -> Streams.anomalyStream, "topk" -> (Streams.topkStream(_, 2)))
+    folds.foreach { case (name, fold) =>
+      val inOrder = emitted(fold, events)
+      assert(inOrder.nonEmpty, s"$name emitted nothing")
+      assert(emitted(fold, events.reverse) == inOrder, s"$name: the reversed batch changed the rows")
+    }
   }
 
   test("transformWithState runs on rocksdb and matches the batch aggregate") {

@@ -54,6 +54,13 @@ class VerifySpec extends SparkSpec {
     assert(Files.readString(Paths.get(s"$tmp/errors.json")) == "{}")
   }
 
+  test("Verify.q escapes quotes, backslashes and control chars as the bench failure map did") {
+    val raw = "a\"b\\c\nd\te" + 1.toChar + "f"
+    // the bench line's own escaper gave these pieces; q adds the quotes
+    val escaped = Seq("a", "\\\"", "b", "\\\\", "c", "\\n", "d", "\\t", "e", "\\" + "u0001", "f")
+    assert(Verify.q(raw) == "\"" + escaped.mkString + "\"")
+  }
+
   test("manifest.json lists the attempted names — the fail-closed contract") {
     // check.py walks manifest ∪ result dirs and FAILS any attempted name
     // with no dir, so an erred (dir-deleted) or never-reached query can
