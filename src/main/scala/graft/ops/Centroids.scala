@@ -80,6 +80,17 @@ object Centroids {
   val KmeansK     = 8
   private val Dim = 64
 
+  /** 1-based position of `emb`'s nearest row of the literal centroid
+    * matrix `m` (codegen'd `NearestCentroidIdx`, lowest row on ties) —
+    * ready for `element_at`. */
+  private[ops] def nearestPos(emb: Column, m: Column): Column =
+    graft.functions.VectorFunctions.nearestCentroidIdx(emb, m) + 1
+
+  /** the id (from `ids`, parallel to the rows of `m`) of `emb`'s nearest
+    * centroid — the k-means cluster, the IVF list, the super-centroid. */
+  private[ops] def nearestId(emb: Column, ids: Column, m: Column): Column =
+    element_at(ids, nearestPos(emb, m))
+
   /** assignment against a literal centroid matrix: zero shuffle, one
     * codegen'd nearest-centroid scan per row. Past codegen-literal
     * comfort (k·dim ≳ 10⁶) the same matrix would ship as a broadcast
@@ -88,42 +99,47 @@ object Centroids {
       base: DataFrame, cents: Seq[(Long, Seq[Double])]): DataFrame = {
     val ids = typedLit(cents.map(_._1))
     val m   = typedLit(cents.map(_._2))
-    val idx = graft.functions.VectorFunctions.nearestCentroidIdx(col("embedding"), m)
+    val pos = nearestPos(col("embedding"), m)
     base
-      .withColumn("cluster", element_at(ids, idx + 1))
+      .withColumn("cluster", element_at(ids, pos))
       .withColumn("sqd",
-        graft.functions.VectorFunctions.sqDist(col("embedding"), element_at(m, idx + 1)))
+        graft.functions.VectorFunctions.sqDist(col("embedding"), element_at(m, pos)))
   }
 
   /** seeds: first k vectors by id, floats widened exactly to double. */
-  private[graft] def seedCents(base: DataFrame, k: Int): Seq[(Long, Seq[Double])] =
+  private[graft] def seedCents(base: DataFrame, k: Long): Seq[(Long, Seq[Double])] =
     base.filter(col("vec_id") < k)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))
       .sortBy(_._1).toSeq
 
-  /** one Lloyd update: per-(cluster, dim) 6dp-rounded avg, collected
-    * back to the driver (k×dim rows — bounded, like annIvf's quantizer). */
-  private[ops] def lloydUpdate(assigned: DataFrame): Seq[(Long, Seq[Double])] =
+  /** the Lloyd update's cells: per-(cluster, dim) 6dp-rounded avg of an
+    * assignment — k·dim rows, partial-aggregated map-side. */
+  private def cellMeans(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy("cluster", "dim").agg(round(avg(col("v").cast("double")), 6).as("av"))
+
+  /** one Lloyd update: [[cellMeans]] collected back to the driver (k×dim
+    * rows — bounded, like annIvf's quantizer). */
+  private[ops] def lloydUpdate(assigned: DataFrame): Seq[(Long, Seq[Double])] =
+    cellMeans(assigned)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).view
       .mapValues(_.sortBy(_._2).map(_._3).toSeq)
       .toSeq.sortBy(_._1)
 
-  /** The seeds → assign → update → assign core of [[kmeansEmbed]],
-    * factored over an arbitrary (vec_id, embedding) corpus so the
-    * semantic-dedup composition (`Dedup.semanticDedup`) can cluster its
-    * own corpus with the identical algorithm and determinism contract.
-    * `k` defaults to the fixed [[KmeansK]] of `kmeans_embed`; callers
-    * that must stay sub-quadratic at any corpus size (semantic dedup)
-    * pass a size-derived k instead. Returns
+  /** the [[KmeansK]] centroids after one Lloyd round: seeds → assign →
+    * update. */
+  private def lloydCents(base: DataFrame): Seq[(Long, Seq[Double])] =
+    lloydUpdate(assignWith(base, seedCents(base, KmeansK)))
+
+  /** The seeds → assign → update → assign core of [[kmeansEmbed]] over
+    * a (vec_id, embedding) corpus with the fixed [[KmeansK]]. Returns
     * (vec_id, embedding, cluster, sqd). */
-  private[ops] def kmeansAssign(base: DataFrame, k: Int = KmeansK): DataFrame =
-    assignWith(base, lloydUpdate(assignWith(base, seedCents(base, k))))
+  private[ops] def kmeansAssign(base: DataFrame): DataFrame =
+    assignWith(base, lloydCents(base))
 
   /** Two-level (IVF-coarse) variant of [[kmeansAssign]] for callers whose
     * k scales with the corpus (semantic dedup's k = ⌈n/B⌉): the ONLY
@@ -143,8 +159,8 @@ object Centroids {
     * lexicographic min (sqd, cluster) candidate. Rows only probe supers
     * that own ≥1 centroid (the bounded `present` set), so the inner
     * join can never drop a row. The Lloyd update is the same
-    * per-(cluster, dim) 6dp-rounded avg as the flat path but never
-    * leaves the cluster-key shuffle — centroids are re-assembled with
+    * [[cellMeans]] as the flat path but never leaves the cluster-key
+    * shuffle — centroids are re-assembled with
     * sort_array(collect_list), not collected.
     *
     * Determinism contract (same as flat): strict-< / lowest-id ties on
@@ -160,14 +176,8 @@ object Centroids {
     val s = math.max(1L, math.ceil(math.sqrt(k.toDouble)).toLong)
 
     // the one collected literal: s×dim super-centroids, O(√k·dim)
-    val superSeeds: Seq[(Long, Seq[Double])] = base.filter(col("vec_id") < s)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))
-      .sortBy(_._1).toSeq
+    val superSeeds = seedCents(base, s)
 
-    def superOfFloat(emb: Column, among: Seq[(Long, Seq[Double])]): Column =
-      element_at(typedLit(among.map(_._1)),
-        graft.functions.VectorFunctions.nearestCentroidIdx(emb, typedLit(among.map(_._2))) + 1)
     def superOfDouble(c: Column): Column =
       element_at(typedLit(superSeeds.map(_._1)),
         graft.functions.VectorFunctions.nearestCentroidIdxD(c, typedLit(superSeeds.map(_._2))) + 1)
@@ -177,7 +187,8 @@ object Centroids {
       val present = cents.select("super").distinct().collect().map(_.getLong(0)).toSet
       val among   = superSeeds.filter(p => present.contains(p._1))
       base
-        .withColumn("super", superOfFloat(col("embedding"), among))
+        .withColumn("super",
+          nearestId(col("embedding"), typedLit(among.map(_._1)), typedLit(among.map(_._2))))
         .join(cents, "super")
         .select(col("vec_id"), col("embedding"),
           struct(
@@ -195,9 +206,7 @@ object Centroids {
         transform(col("embedding"), x => x.cast("double")).as("c"))
       .withColumn("super", superOfDouble(col("c"))))
     val a0 = assign(cents0)
-    val cents1 = ck.ckpt(a0
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy("cluster", "dim").agg(round(avg(col("v").cast("double")), 6).as("av"))
+    val cents1 = ck.ckpt(cellMeans(a0)
       .groupBy("cluster")
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("av")))),
         e => e.getField("av")).as("c"))
@@ -205,17 +214,28 @@ object Centroids {
     assign(cents1)
   }
 
+  /** The cluster count k = ⌈n/b⌉ (at least 1) that keeps ~b rows per
+    * cluster at any corpus size n. Long: past n ≈ 2.7e11 rows k passes
+    * 2³¹. */
+  private[ops] def clustersFor(n: Long, b: Long): Long = math.max(1L, (n + b - 1) / b)
+
+  /** `corpus` (vec_id, embedding) checkpointed, sized by one count to
+    * k = `size`(n) clusters and clustered by [[kmeansAssignTwoLevel]];
+    * returns the checkpointed (vec_id, embedding, cluster) — the
+    * in-cluster equi-join input of the corpus-scaled kNN graph and of
+    * semantic dedup ([[clustersFor]] with b = 50 and b = 125). */
+  private[ops] def clusteredCorpus(ck: Checkpoints.Scope, corpus: DataFrame,
+                                   size: Long => Long): DataFrame = {
+    val base = ck.ckpt(corpus) // feeds the sizing count and the quantizer's passes
+    val k = size(base.count())
+    ck.ckpt(kmeansAssignTwoLevel(base, k).select(col("vec_id"), col("embedding"), col("cluster")))
+  }
+
   /** SQL CTEs of the [[kmeansAssignTwoLevel]] pipeline over source
     * relation `src` (no leading WITH) — a1 is the final
     * (vec_id, embedding, cluster, sqd) assignment. `kExpr` is any SQL
     * scalar; s = ⌈√k⌉ is derived inside. */
   private[ops] def kmeansIvfCtes(src: String, kExpr: String): String = {
-    // float-row → double-centroid distance (same fold as kmeansCtes)
-    def sqFD(e: String, c: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d ->
-         |    (CAST($e.embedding[d] AS DOUBLE) - $c[d]) * (CAST($e.embedding[d] AS DOUBLE) - $c[d]))),
-         |  (a, v) -> a + v)""".stripMargin
     // double-centroid → double-super distance
     def sqDD(c: String, u: String): String =
       s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -230,14 +250,14 @@ object Centroids {
          |  FROM ($inner) t CROSS JOIN sup u) x WHERE rn = 1""".stripMargin
     def assign(cents: String): String =
       s"""SELECT vec_id, embedding, cluster, sqd FROM (
-         |  SELECT r.vec_id, r.embedding, c.cluster, ${sqFD("r", "c.c")} AS sqd,
+         |  SELECT r.vec_id, r.embedding, c.cluster, ${sqFdSql("r", "c.c")} AS sqd,
          |         row_number() OVER (PARTITION BY r.vec_id
-         |           ORDER BY ${sqFD("r", "c.c")} ASC, c.cluster ASC) AS rn
+         |           ORDER BY ${sqFdSql("r", "c.c")} ASC, c.cluster ASC) AS rn
          |  FROM (
          |    SELECT vec_id, embedding, super FROM (
          |      SELECT e.vec_id, e.embedding, u.super,
          |             row_number() OVER (PARTITION BY e.vec_id
-         |               ORDER BY ${sqFD("e", "u.sc")} ASC, u.super ASC) AS rn2
+         |               ORDER BY ${sqFdSql("e", "u.sc")} ASC, u.super ASC) AS rn2
          |      FROM $src e CROSS JOIN (
          |        SELECT super, sc FROM sup
          |        WHERE super IN (SELECT DISTINCT super FROM $cents)) u) y
@@ -251,16 +271,11 @@ object Centroids {
        |  WHERE vec_id < greatest(CAST(1 AS BIGINT), CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT))
        |),
        |cents0 AS (
-       |  ${superOfCents(s"""SELECT vec_id AS cluster,
-           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c
-           FROM $src, kk WHERE vec_id < k""")}
+       |  ${superOfCents(seedsSql(s"$src, kk", "k"))}
        |),
        |a0 AS (${assign("cents0")}),
        |cents1 AS (
-       |  ${superOfCents(s"""SELECT cluster, list(avg_val ORDER BY d) AS c FROM (
-           SELECT cluster, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
-           FROM a0, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-           GROUP BY cluster, d) q GROUP BY cluster""")}
+       |  ${superOfCents(meansSql("cluster", "a0", "q"))}
        |),
        |a1 AS (${assign("cents1")})""".stripMargin
   }
@@ -272,37 +287,53 @@ object Centroids {
         sum(round(col("sqd") * 1e6).cast("long")).as("inertia_micros"))
       .orderBy("cluster")
 
-  /** The kmeans seed/assign/update/assign pipeline as SQL CTEs over
-    * source relation `src` (no leading WITH) — a1 is the final
-    * (vec_id, embedding, cluster, sqd) assignment. Shared with the
-    * semantic-dedup oracle, which clusters its own corpus CTE and
-    * passes a size-derived seed-count expression as `kExpr` (any SQL
-    * scalar; defaults to the fixed [[KmeansK]]). */
-  private[ops] def kmeansCtes(src: String, kExpr: String = KmeansK.toString): String = {
-    val sq =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d ->
-         |    (CAST(e.embedding[d] AS DOUBLE) - c.c[d]) * (CAST(e.embedding[d] AS DOUBLE) - c.c[d]))),
-         |  (a, v) -> a + v)""".stripMargin
-    def assign(cents: String): String =
-      s"""SELECT vec_id, embedding, cluster, sqd FROM (
-         |  SELECT e.vec_id, e.embedding, c.cluster, $sq AS sqd,
-         |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY $sq ASC, c.cluster ASC) AS rn
-         |  FROM $src e CROSS JOIN $cents c) t
-         |WHERE rn = 1""".stripMargin
-    s"""cents0 AS (
-       |  SELECT vec_id AS cluster, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c
-       |  FROM $src WHERE vec_id < ($kExpr)
-       |), a0 AS (${assign("cents0")}),
-       |cents1 AS (
-       |  SELECT cluster, list(avg_val ORDER BY d) AS c FROM (
-       |    SELECT cluster, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
-       |    FROM a0, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-       |    GROUP BY cluster, d) t
-       |  GROUP BY cluster
-       |), a1 AS (${assign("cents1")})""".stripMargin
+  /** squared L2 in SQL from float row `e`'s embedding to the double
+    * list `c` — the index-ordered fold of `SqDistFD`, bit for bit. */
+  private[ops] def sqFdSql(e: String, c: String): String =
+    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |  list_transform(generate_series(1, $Dim), d ->
+       |    (CAST($e.embedding[d] AS DOUBLE) - $c[d]) * (CAST($e.embedding[d] AS DOUBLE) - $c[d]))),
+       |  (a, v) -> a + v)""".stripMargin
+
+  /** SQL seed centroids (cluster, c): the rows of `src` with
+    * vec_id < `bound`, widened to double ([[seedCents]]). */
+  private def seedsSql(src: String, bound: String): String =
+    s"""SELECT vec_id AS cluster, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c
+       |  FROM $src WHERE vec_id < $bound""".stripMargin
+
+  /** SQL centroids (key, c) of `src`: the 6dp-rounded avg per (key, dim)
+    * as a dim-ordered list — the Lloyd update ([[cellMeans]]) and the
+    * per-label IVF centroids. */
+  private[ops] def meansSql(key: String, src: String, alias: String = "t"): String =
+    s"""SELECT $key, list(avg_val ORDER BY d) AS c FROM (
+       |    SELECT $key, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
+       |    FROM $src, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
+       |    GROUP BY $key, d) $alias
+       |  GROUP BY $key""".stripMargin
+
+  /** SQL nearest-centroid assignment ([[assignWith]]) of every `src` row
+    * against `cents` (cluster, c): (vec_id, embedding, cluster, sqd),
+    * lowest cluster on ties. */
+  private def assignSql(src: String, cents: String): String = {
+    val sq = sqFdSql("e", "c.c")
+    s"""SELECT vec_id, embedding, cluster, sqd FROM (
+       |  SELECT e.vec_id, e.embedding, c.cluster, $sq AS sqd,
+       |         row_number() OVER (PARTITION BY e.vec_id
+       |           ORDER BY $sq ASC, c.cluster ASC) AS rn
+       |  FROM $src e CROSS JOIN $cents c) t
+       |WHERE rn = 1""".stripMargin
   }
+
+  /** The kmeans seed/assign/update/assign pipeline ([[kmeansAssign]]) as
+    * SQL CTEs over source relation `src` (no leading WITH) — a1 is the
+    * final (vec_id, embedding, cluster, sqd) assignment. */
+  private[ops] def kmeansCtes(src: String): String =
+    s"""cents0 AS (
+       |  ${seedsSql(src, s"($KmeansK)")}
+       |), a0 AS (${assignSql(src, "cents0")}),
+       |cents1 AS (
+       |  ${meansSql("cluster", "a0")}
+       |), a1 AS (${assignSql(src, "cents1")})""".stripMargin
 
   private val kmeansSql: String =
     s"""WITH ${kmeansCtes("embeddings")}
@@ -340,28 +371,12 @@ object Centroids {
   }
 
   private val kmeansTrainSql: String = {
-    val sq =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d ->
-         |    (CAST(e.embedding[d] AS DOUBLE) - c.c[d]) * (CAST(e.embedding[d] AS DOUBLE) - c.c[d]))),
-         |  (a, v) -> a + v)""".stripMargin
-    def assign(cents: String): String =
-      s"""SELECT vec_id, embedding, cluster, sqd FROM (
-         |  SELECT e.vec_id, e.embedding, c.cluster, $sq AS sqd,
-         |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY $sq ASC, c.cluster ASC) AS rn
-         |  FROM embeddings e CROSS JOIN $cents c) t
-         |WHERE rn = 1""".stripMargin
     // a_{r} is the round-(r+1) assignment; MATERIALIZED (the bpe_train
     // lesson): plain CTEs would inline the chain exponentially
     val chain = (1 until KmeansRounds).map { r =>
       s"""cents$r AS MATERIALIZED (
-         |  SELECT cluster, list(avg_val ORDER BY d) AS c FROM (
-         |    SELECT cluster, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
-         |    FROM a${r - 1}, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-         |    GROUP BY cluster, d) t
-         |  GROUP BY cluster
-         |), a$r AS MATERIALIZED (${assign(s"cents$r")})""".stripMargin
+         |  ${meansSql("cluster", s"a${r - 1}")}
+         |), a$r AS MATERIALIZED (${assignSql("embeddings", s"cents$r")})""".stripMargin
     }.mkString(",\n")
     val selects = (0 until KmeansRounds).map { r =>
       s"""SELECT CAST(${r + 1} AS BIGINT) AS round,
@@ -369,9 +384,8 @@ object Centroids {
          |FROM a$r""".stripMargin
     }.mkString(" UNION ALL ")
     s"""WITH cents0 AS (
-       |  SELECT vec_id AS cluster, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c
-       |  FROM embeddings WHERE vec_id < $KmeansK
-       |), a0 AS MATERIALIZED (${assign("cents0")}),
+       |  ${seedsSql("embeddings", s"$KmeansK")}
+       |), a0 AS MATERIALIZED (${assignSql("embeddings", "cents0")}),
        |$chain
        |$selects ORDER BY round""".stripMargin
   }
@@ -399,20 +413,19 @@ object Centroids {
   def silhouetteSimplified(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions
     val base  = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val cents = lloydUpdate(assignWith(base, seedCents(base, KmeansK)))
+    val cents = lloydCents(base)
     val ids   = typedLit(cents.map(_._1))
     val m     = typedLit(cents.map(_._2))
     val k     = cents.length
-    val idx   = graft.functions.VectorFunctions.nearestCentroidIdx(col("embedding"), m)
     val dists = transform(sequence(lit(1), lit(k)), c =>
       sqrt(VectorFunctions.sqDist(col("embedding"), element_at(m, c))))
     val perPoint = base
-      .withColumn("idx", idx)
-      .withColumn("cluster", element_at(ids, col("idx") + 1))
+      .withColumn("pos", nearestPos(col("embedding"), m))
+      .withColumn("cluster", element_at(ids, col("pos")))
       .withColumn("dists", dists)
-      .withColumn("a", element_at(col("dists"), col("idx") + 1))
+      .withColumn("a", element_at(col("dists"), col("pos")))
       .withColumn("b", array_min(transform(sequence(lit(1), lit(k)), c =>
-        when(c === col("idx") + 1, lit(Double.MaxValue))
+        when(c === col("pos"), lit(Double.MaxValue))
           .otherwise(element_at(col("dists"), c)))))
       .withColumn("sm",
         when(greatest(col("a"), col("b")) > 0,
@@ -427,14 +440,9 @@ object Centroids {
   }
 
   private val silhouetteSql: String = {
-    val sq =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d ->
-         |    (CAST(e.embedding[d] AS DOUBLE) - c.c[d]) * (CAST(e.embedding[d] AS DOUBLE) - c.c[d]))),
-         |  (a, v) -> a + v)""".stripMargin
+    val sq = sqFdSql("e", "c.c")
     s"""WITH cents0 AS (
-       |  SELECT vec_id AS cluster, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c
-       |  FROM embeddings WHERE vec_id < $KmeansK
+       |  ${seedsSql("embeddings", s"$KmeansK")}
        |), a0 AS (
        |  SELECT vec_id, embedding, cluster FROM (
        |    SELECT e.vec_id, e.embedding, c.cluster,
@@ -443,11 +451,7 @@ object Centroids {
        |    FROM embeddings e CROSS JOIN cents0 c) t
        |  WHERE rn = 1
        |), cents1 AS MATERIALIZED (
-       |  SELECT cluster, list(avg_val ORDER BY d) AS c FROM (
-       |    SELECT cluster, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
-       |    FROM a0, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-       |    GROUP BY cluster, d) t
-       |  GROUP BY cluster
+       |  ${meansSql("cluster", "a0")}
        |), pd AS MATERIALIZED (
        |  SELECT e.vec_id, c.cluster, $sq AS sqd, sqrt($sq) AS d
        |  FROM embeddings e CROSS JOIN cents1 c

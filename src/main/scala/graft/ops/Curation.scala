@@ -1492,33 +1492,15 @@ object Curation {
   private[graft] val SourceCap = 15
 
   final case class SrcKey(source: String, h: Long, doc_id: Long)
-  final case class MinKBuf(var items: List[(Long, Long)])
 
   /** Keeps the k lexicographically-smallest (h, doc_id) keys per group —
-    * the min-k twin of TopK.TopKAgg: partial buffers never exceed k
-    * entries, merge is a bounded fold, and the finished value is just
-    * the k-th smallest key (the cap threshold), or (MaxValue, MaxValue)
-    * when the group has fewer than k rows (= keep everything). */
-  class MinKKeysAgg(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[SrcKey, MinKBuf, (Long, Long)] {
-    private def less(a: (Long, Long), b: (Long, Long)): Boolean =
-      a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
-    private def insert(items: List[(Long, Long)], v: (Long, Long)): List[(Long, Long)] =
-      TopK.insertBounded(items, v, k)(less)
-    override def zero: MinKBuf = MinKBuf(Nil)
-    override def reduce(b: MinKBuf, v: SrcKey): MinKBuf = {
-      b.items = insert(b.items, (v.h, v.doc_id)); b
-    }
-    override def merge(a: MinKBuf, b: MinKBuf): MinKBuf = {
-      a.items = b.items.foldLeft(a.items)(insert); a
-    }
-    override def finish(b: MinKBuf): (Long, Long) =
-      if (b.items.sizeIs < k) (Long.MaxValue, Long.MaxValue) else b.items.last
-    override def bufferEncoder: org.apache.spark.sql.Encoder[MinKBuf] =
-      org.apache.spark.sql.Encoders.product[MinKBuf]
-    override def outputEncoder: org.apache.spark.sql.Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.product[(Long, Long)]
-  }
+    * the min-k twin of TopK.TopKAgg; the finished value is just the k-th
+    * smallest key (the cap threshold), or (MaxValue, MaxValue) when the
+    * group has fewer than k rows (= keep everything). */
+  class MinKKeysAgg(k: Int) extends TopK.BoundedAgg[SrcKey, (Long, Long), (Long, Long)](k,
+    v => (v.h, v.doc_id),
+    items => if (items.sizeIs < k) (Long.MaxValue, Long.MaxValue) else items.last)(
+    (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
 
   /** Per-source document cap — the over-represented-domain limiter every
     * web-corpus mixture applies (cap docs per domain at N so one crawl

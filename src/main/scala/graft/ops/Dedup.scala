@@ -706,10 +706,7 @@ object Dedup {
       base.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))))
       // feeds the bucket explode and both candidate re-attach joins
     val buckets = corpus.select(
-      col("vec_id"),
-      posexplode(array((0 until NeardupTables).map(t =>
-        Similarity.bucketCode(col("embedding"),
-          NeardupPlaneBase + t * Similarity.NumPlanes)): _*)).as(Seq("t", "code")))
+      col("vec_id"), Similarity.lshCodes(col("embedding"), NeardupPlaneBase, NeardupTables))
     val candidates = buckets.as("l")
       .join(buckets.as("r"),
         col("l.t") === col("r.t") && col("l.code") === col("r.code") &&
@@ -1952,12 +1949,11 @@ object Dedup {
     * Long (not Int): k = ⌈n/B⌉ passes 2³¹ around n ≈ 2.7e11 rows, well
     * inside the advertised corpus range — an Int here would wrap
     * silently. */
-  private[graft] def semanticK(n: Long): Long =
-    math.max(1L, (n + SemanticClusterB - 1) / SemanticClusterB)
+  private[graft] def semanticK(n: Long): Long = Centroids.clustersFor(n, SemanticClusterB)
 
   /** SemDeDup-shape semantic dedup (Abbas et al. 2023): k-means the
-    * corpus (`Centroids.kmeansAssign` — the identical seeds → assign →
-    * update → assign pipeline `kmeans_embed` verifies, with a
+    * corpus (`Centroids.kmeansAssignTwoLevel` — `kmeans_embed`'s seeds →
+    * assign → update → assign pipeline on a two-level quantizer, with a
     * size-derived k = ⌈n/B⌉), then prune, per cluster, every vector
     * that has ANY lower-id in-cluster neighbor at cosine ≥ threshold —
     * including neighbors that are themselves pruned, so chains prune
@@ -1966,10 +1962,9 @@ object Dedup {
     * both engines implement it identically.
     *
     * The fixtures have no natural semantic near-dups, so the corpus is
-    * each vector plus a deterministically perturbed copy (id + 1,000,000;
-    * dimension d scaled by 1 + ((d % 5) − 2)/100 — float-rounded
-    * identically on both engines), giving near-but-UNEQUAL pairs at
-    * cos ≈ 0.9998 that exact/LSH-exact dedup would miss. One copy lands
+    * `Similarity.perturbedCorpus`: each vector plus a perturbed copy
+    * (id + 1,000,000), near-but-UNEQUAL pairs at cos ≈ 0.9998 that
+    * exact/LSH-exact dedup would miss. One copy lands
     * across a cluster boundary and survives — the documented
     * cluster-local recall limit of the SemDeDup design, pinned in
     * DedupSpec.
@@ -1986,19 +1981,8 @@ object Dedup {
     * bounded driver-side action; the prune set shuffles only distinct
     * vec_ids. */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val perturbed = base.select(
-      (col("vec_id") + 1000000L).as("vec_id"),
-      transform(col("embedding"), (x, i) =>
-        (x.cast("double") *
-          (lit(1.0) + ((i % 5) - 2).cast("double") / lit(100.0))).cast("float"))
-        .as("embedding"))
-    val corpus = ck.ckpt(base.union(perturbed))
-      // feeds the sizing count and the two kmeansAssign passes
-    val assigned = ck.ckpt(Centroids.kmeansAssignTwoLevel(corpus, semanticK(corpus.count()))
-      .select(col("vec_id"), col("embedding"), col("cluster")))
-      // feeds both sides of the pair join plus the final verdict join —
-      // and kmeansAssign's two driver-side passes already scanned it
+    // feeds both sides of the pair join plus the final verdict join
+    val assigned = Centroids.clusteredCorpus(ck, Similarity.perturbedCorpus(spark, dir), semanticK)
     val dupIds = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("b.vec_id") < col("a.vec_id"))
@@ -2013,16 +1997,7 @@ object Dedup {
   }
 
   private val semanticDedupSql: String =
-    s"""WITH corpus AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 1000000,
-       |    list_transform(generate_series(1, 64), d ->
-       |      CAST(CAST(embedding[d] AS DOUBLE) *
-       |        (CAST(1 AS DOUBLE) + CAST((d - 1) % 5 - 2 AS DOUBLE) / CAST(100 AS DOUBLE))
-       |        AS FLOAT))
-       |  FROM embeddings
-       |), ${Centroids.kmeansIvfCtes("corpus",
+    s"""WITH ${Similarity.perturbedCorpusSql}, ${Centroids.kmeansIvfCtes("corpus",
             s"SELECT CAST(ceil(count(*) / $SemanticClusterB.0) AS BIGINT) FROM corpus")},
        |dups AS (
        |  SELECT DISTINCT a.vec_id FROM a1 a JOIN a1 b

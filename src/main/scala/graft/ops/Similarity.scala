@@ -2,8 +2,7 @@ package graft.ops
 
 import graft.functions.VectorFunctions
 import graft.tables.Tables
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the embedding column.
@@ -51,34 +50,13 @@ object Similarity {
 
   final case class SimPair(query_id: Long, neighbor_id: Long, sim: Double)
   final case class Neighbor(neighbor_id: Long, sim: Double)
-  final case class SimBuf(var items: List[(Double, Long)])
 
   /** bounded top-k of (sim desc, neighbor_id asc) per query — partial
     * buffers never exceed K elements, so the map-side combine reduces
     * each partition's contribution to ≤K rows per query before the
-    * shuffle (same Aggregator shape as ops.TopK.TopKAgg). */
-  class TopNeighborsAgg(k: Int) extends Aggregator[SimPair, SimBuf, Seq[Neighbor]] {
-    private def better(a: (Double, Long), b: (Double, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-    private def insert(items: List[(Double, Long)], v: (Double, Long)): List[(Double, Long)] =
-      TopK.insertBounded(items, v, k)(better)
-
-    override def zero: SimBuf = SimBuf(Nil)
-    override def reduce(b: SimBuf, v: SimPair): SimBuf = {
-      b.items = insert(b.items, (v.sim, v.neighbor_id))
-      b
-    }
-    override def merge(a: SimBuf, b: SimBuf): SimBuf = {
-      a.items = b.items.foldLeft(a.items)(insert)
-      a
-    }
-    override def finish(b: SimBuf): Seq[Neighbor] =
-      b.items.map { case (s, id) => Neighbor(id, s) }
-    override def bufferEncoder: Encoder[SimBuf] = Encoders.product[SimBuf]
-    override def outputEncoder: Encoder[Seq[Neighbor]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Neighbor]]()
-  }
+    * shuffle. */
+  class TopNeighborsAgg(k: Int) extends TopK.BoundedAgg[SimPair, (Double, Long), Seq[Neighbor]](k,
+    p => (p.sim, p.neighbor_id), _.map { case (s, id) => Neighbor(id, s) })(TopK.scoreDescIdAsc)
 
   /** (query_id, neighbor_id, sim) pairs → per-query top-K with dense
     * rank, ordered (sim desc, neighbor_id). Output identical to the
@@ -95,24 +73,57 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** the shared SQL tail: rank pairs per query, keep top K. */
-  private def rankSql(pairsCte: String): String =
+  /** the query rows: the first [[NumQueries]] vectors by id */
+  private val IsQuery: Column = col("vec_id") < NumQueries
+
+  /** the query set of `from`: its `isQuery` rows as (query_id, qv,
+    * `qcols`…) — qv is the raw query embedding. */
+  private def querySet(from: DataFrame, qcols: Seq[Column] = Nil,
+                       isQuery: Column = IsQuery): DataFrame =
+    from.filter(isQuery)
+      .select(Seq(col("vec_id").as("query_id"), col("embedding").as("qv")) ++ qcols: _*)
+
+  /** exact cosine of the query `qv` and the corpus `embedding` */
+  private val cosine: Column = VectorFunctions.cosine(col("qv"), col("embedding"))
+
+  /** a pair score as the served `sim`: rounded to 6dp, so engine ULP
+    * differences cannot flip ranks. */
+  private def sim(score: Column = cosine): Column = round(score, 6).as("sim")
+
+  /** The scored probe join every ANN query runs: the [[querySet]] of
+    * `corpus` (plus `qcols`) is the broadcast side, joined to `corpus`
+    * on the candidate key `on` (empty: every pair); self pairs
+    * (query_id = vec_id) and pairs failing `extra` are dropped, and
+    * each pair is scored by `score` → (query_id, neighbor_id, sim). The
+    * query set is NumQueries rows, so the join is a map over the corpus
+    * scan at any corpus size. */
+  private def probePairs(corpus: DataFrame, qcols: Seq[Column] = Nil, on: Seq[String] = Nil,
+                         extra: Option[Column] = None, score: Column = cosine): DataFrame =
+    corpus.join(broadcast(querySet(corpus, qcols)), on)
+      .filter(extra.foldLeft(col("query_id") =!= col("vec_id"))(_ && _))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), sim(score))
+
+  /** exact cosine of candidate (query_id, neighbor_id) pairs over the
+    * (vec_id, embedding) corpus `base`: embeddings re-attach to the
+    * candidates only, the query set broadcast. */
+  private def exactPairs(cands: DataFrame, base: DataFrame, isQuery: Column = IsQuery): DataFrame =
+    cands
+      .join(base.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
+      .join(broadcast(querySet(base, isQuery = isQuery)), "query_id")
+      .select(col("query_id"), col("neighbor_id"), sim())
+
+  /** the shared SQL tail: rank pairs per query by `score` in `order`
+    * (sims DESC, distances ASC), ties to the lower id; keep top K. */
+  private def rankSql(pairsCte: String, score: String = "sim", order: String = "DESC"): String =
     s"""ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
+       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY $score $order, neighbor_id) AS rank
        |  FROM $pairsCte
        |)
-       |SELECT query_id, neighbor_id, rank, sim FROM ranked
+       |SELECT query_id, neighbor_id, rank, $score FROM ranked
        |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin
 
-  def annBruteforce(spark: SparkSession, dir: String): DataFrame = {
-    val base    = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val pairs = base.join(broadcast(queries), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
-    rankedTopK(spark, pairs)
-  }
+  def annBruteforce(spark: SparkSession, dir: String): DataFrame =
+    rankedTopK(spark, probePairs(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))))
 
   /** deterministic pseudo-random unit-ish hyperplanes: weight(p, d) from
     * a splitmix-style integer mix — identical across runs and nodes. */
@@ -161,13 +172,7 @@ object Similarity {
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
       .withColumn("bucket", bucketCode(col("embedding")))
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("bucket"))
-    val pairs = base.join(broadcast(queries), Seq("bucket"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
-    rankedTopK(spark, pairs)
+    rankedTopK(spark, probePairs(base, Seq(col("bucket")), Seq("bucket")))
   }
 
   /** tables of [[annLshMulti]] — the recall dial of multi-table LSH: a
@@ -176,6 +181,13 @@ object Similarity {
     * (SimilaritySpec pins the envelope on planted pairs AND the served
     * path below). */
   val LshTables = 6
+
+  /** `tables` independent bucket codes of `emb` (plane families
+    * `planeBase` + t·NumPlanes), exploded to one (t, code) row per
+    * table — the multi-table LSH key, all map-side codegen'd. */
+  private[ops] def lshCodes(emb: Column, planeBase: Int, tables: Int): Column =
+    posexplode(array((0 until tables).map(t => bucketCode(emb, planeBase + t * NumPlanes)): _*))
+      .as(Seq("t", "code"))
 
   /** Multi-table sign-LSH ANN — the SERVED form of the recall envelope
     * ([[annLsh]] keeps the single-table shape): each vector gets
@@ -191,27 +203,18 @@ object Similarity {
     val spark = corpus.sparkSession
     val base = ck.ckpt(corpus.select(col("vec_id"), col("embedding")))
       // feeds the bucket explode and both candidate re-attach joins
-    val buckets = base.select(
-      col("vec_id"),
-      posexplode(array((0 until LshTables).map(t =>
-        bucketCode(col("embedding"), t * NumPlanes)): _*)).as(Seq("t", "code")))
+    val buckets = base.select(col("vec_id"), lshCodes(col("embedding"), 0, LshTables))
     val qb = buckets.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("t"), col("code"))
     val cands = buckets.join(broadcast(qb), Seq("t", "code"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
       .distinct()
-    val pairs = cands
-      .join(base.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
-      .join(broadcast(base.filter(isQuery)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
-    rankedTopK(spark, pairs)
+    rankedTopK(spark, exactPairs(cands, base, isQuery))
   }
 
   def annLshMulti(spark: SparkSession, dir: String): DataFrame =
-    annLshMultiOn(Tables.embeddings(spark, dir), col("vec_id") < NumQueries)
+    annLshMultiOn(Tables.embeddings(spark, dir), IsQuery)
 
   /** lists each query probes — ≥2 so boundary vectors (nearest centroid
     * ≠ their neighbor's centroid) stay reachable; nprobe=1 has a recall
@@ -247,36 +250,34 @@ object Similarity {
         .sortBy(_._1)
     }
 
-  /** Coarse IVF centroids (k = 10 label groups) as plan literals:
-    * k×dim doubles, sorted by label so first-wins tie-breaking = the
-    * oracle's ORDER BY dist,label. Returns (list labels, centroid
-    * matrix). */
-  private def ivfCentroidLits(spark: SparkSession, dir: String): (Column, Column) = {
+  /** The coarse IVF quantizer as plan literals: list ids (labels) and
+    * their k×dim centroid matrix, sorted by label so first-wins
+    * tie-breaking = the oracle's ORDER BY dist, label. */
+  private final case class Ivf(labels: Column, matrix: Column) {
+    /** the one list a vector lives in: its nearest centroid's label */
+    def list(emb: Column): Column = Centroids.nearestId(emb, labels, matrix)
+    /** the `nprobe` nearest lists, exploded to one `ivf_list` row each
+      * (the transform lambda is interpreted but runs only on query
+      * rows; the corpus-side [[list]] stays fully codegen'd) */
+    def probes(emb: Column, nprobe: Int = NProbe): Column =
+      explode(transform(VectorFunctions.topCentroidIdxs(emb, matrix, nprobe),
+        i => element_at(labels, i + 1))).as("ivf_list")
+  }
+
+  /** the IVF quantizer of `dir`: k = 10 label-group centroids */
+  private def ivfQuantizer(spark: SparkSession, dir: String): Ivf = {
     val cents = centroidRows(spark, dir)
     // nearestCentroidIdx returns -1 on an empty matrix, which 1-based
     // element_at would reject at runtime — fail at plan time instead
-    require(cents.nonEmpty, "ivfCentroidLits: centroid table is empty")
-    (typedLit(cents.map(_._1).toSeq), typedLit(cents.map(_._2.toSeq).toSeq))
+    require(cents.nonEmpty, "ivfQuantizer: centroid table is empty")
+    Ivf(typedLit(cents.map(_._1).toSeq), typedLit(cents.map(_._2.toSeq).toSeq))
   }
 
   def annIvfProbe(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val (labelsLit, matrixLit) = ivfCentroidLits(spark, dir)
-    val listed = base.withColumn("ivf_list",
-      element_at(labelsLit, VectorFunctions.nearestCentroidIdx(col("embedding"), matrixLit) + 1))
-    // query side: explode to the nprobe nearest lists (the transform
-    // lambda is interpreted but runs only on the NumQueries query rows;
-    // the corpus-side assignment above stays fully codegen'd)
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        explode(transform(
-          VectorFunctions.topCentroidIdxs(col("embedding"), matrixLit, nprobe),
-          i => element_at(labelsLit, i + 1))).as("ivf_list"))
-    val pairs = listed.join(broadcast(queries), Seq("ivf_list"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
-    rankedTopK(spark, pairs)
+    val ivf = ivfQuantizer(spark, dir)
+    val listed = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+      .withColumn("ivf_list", ivf.list(col("embedding")))
+    rankedTopK(spark, probePairs(listed, Seq(ivf.probes(col("embedding"), nprobe)), Seq("ivf_list")))
   }
 
   /** SQ8 scalar-quantized ANN — the vector-COMPRESSION scale path (the
@@ -306,13 +307,11 @@ object Similarity {
     val hiLit = typedLit(bounds.map(_._3).toSeq)
     val coded = base.withColumn("code",
       VectorFunctions.quantize8(col("embedding"), loLit, hiLit))
-    val queries = coded.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("code").as("qcode"))
-    // sim = −qdist: exact in double (qdist ≤ 64·255² ≪ 2^53), so the
-    // shared (sim desc, id asc) heap ranks by (qdist asc, id asc)
-    val pairs = coded.join(broadcast(queries), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (-VectorFunctions.sqDistInt(col("qcode"), col("code"))).cast("double").as("sim"))
+    // sim = −qdist: exact in double (qdist ≤ 64·255² ≪ 2^53, and the 6dp
+    // rounding leaves an integer as is), so the shared (sim desc, id
+    // asc) heap ranks by (qdist asc, id asc)
+    val pairs = probePairs(coded, Seq(col("code").as("qcode")),
+      score = (-VectorFunctions.sqDistInt(col("qcode"), col("code"))).cast("double"))
     rankedTopK(spark, pairs)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         (-col("sim")).cast("long").as("qdist"))
@@ -379,14 +378,10 @@ object Similarity {
     val init: Array[Array[Array[Double]]] = Array.tabulate(PqM) { s =>
       train.map(_._2.slice(s * PqSubDim, (s + 1) * PqSubDim).map(_.toDouble))
     }
-    val books0 = init.map(b => typedLit(b.map(_.toSeq).toSeq))
-    val code0 = (0 until PqM).map { s =>
-      VectorFunctions.nearestCentroidIdx(
-        slice(col("embedding"), s * PqSubDim + 1, PqSubDim), books0(s))
-    }
+    val books0 = init.toIndexedSeq.map(b => typedLit(b.map(_.toSeq).toSeq))
     val sCol = (col("d") / PqSubDim).cast("int")
     val cells = base
-      .select(array(code0: _*).as("codes"), posexplode(col("embedding")).as(Seq("d", "x")))
+      .select(array(pqCodes(books0): _*).as("codes"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(sCol.as("s"), element_at(col("codes"), sCol + 1).as("code"),
         (col("d") % PqSubDim).as("i"), col("x").cast("double").as("x"))
       .groupBy("s", "code", "i").agg(round(avg(col("x")), 6).as("m"))
@@ -398,28 +393,34 @@ object Similarity {
     refined.toIndexedSeq.map(b => typedLit(b.map(_.toSeq).toSeq))
   }
 
+  /** the PQ code of `embedding` under `books`: per subspace s, column
+    * c`s` = the nearest entry of books(s) to the vector's s-th slice
+    * (codegen'd `NearestCentroidIdx`, lowest entry on ties). */
+  private def pqCodes(books: IndexedSeq[Column]): IndexedSeq[Column] = books.indices.map { s =>
+    VectorFunctions.nearestCentroidIdx(slice(col("embedding"), s * PqSubDim + 1, PqSubDim), books(s)).as(s"c$s")
+  }
+
+  /** ADC distance of the raw query `qv` to the row coded c0…c(m−1):
+    * Σ_s ‖qv_s − books(s)[c_s]‖², each term the codegen'd `SqDistFD`,
+    * summed in s order (the oracle's s-ordered `list_reduce`). Negated
+    * it is the probe score: the shared (sim desc, id asc) heap then
+    * ranks by (distance asc, id asc); the 6dp rounding commutes with
+    * the exact negation, and `abs` of the sim restores the served
+    * distance (a zero as +0.0, like the oracle's). */
+  private def adc(books: IndexedSeq[Column]): Column = books.indices.map { s =>
+    VectorFunctions.sqDist(slice(col("qv"), s * PqSubDim + 1, PqSubDim),
+      element_at(books(s), col(s"c$s") + 1))
+  }.foldLeft(lit(0.0))(_ + _)
+
   def annPq(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val base = ck.ckpt(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
       // feeds the coded scan and the query set (training reads its
       // own corpus inside the memoized artifact)
     val books = pqTrainedBooks(spark, dir)
-    val codeCols = (0 until PqM).map { s =>
-      VectorFunctions.nearestCentroidIdx(
-        slice(col("embedding"), s * PqSubDim + 1, PqSubDim), books(s)).as(s"c$s")
-    }
-    val coded = base.select(col("vec_id") +: codeCols: _*)
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val adc = (0 until PqM).map { s =>
-      VectorFunctions.sqDist(
-        slice(col("qv"), s * PqSubDim + 1, PqSubDim),
-        element_at(books(s), col(s"c$s") + 1))
-    }.foldLeft(lit(0.0))(_ + _)
-    val pairs = coded.join(broadcast(queries), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (-round(adc, 6)).as("sim"))
-    rankedTopK(spark, pairs)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), (-col("sim")).as("qdist"))
+    // the corpus side reads the codes only: its embedding is pruned
+    val coded = base.select(col("vec_id") +: col("embedding") +: pqCodes(books): _*)
+    rankedTopK(spark, probePairs(coded, score = -adc(books)))
+      .select(col("query_id"), col("neighbor_id"), col("rank"), abs(col("sim")).as("qdist"))
   }
 
   /** IVF + PQ composed — the production ANN index shape (FAISS IVFPQ
@@ -439,7 +440,7 @@ object Similarity {
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val base = ck.ckpt(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
     rankedTopK(spark, ivfPqAdcPairs(spark, dir, base))
-      .select(col("query_id"), col("neighbor_id"), col("rank"), (-col("sim")).as("qdist"))
+      .select(col("query_id"), col("neighbor_id"), col("rank"), abs(col("sim")).as("qdist"))
   }
 
   /** The IVFPQ candidate scan shared by [[annIvfPq]] (serves ADC ranks
@@ -450,30 +451,12 @@ object Similarity {
     * inside the memoized artifact). */
   private def ivfPqAdcPairs(spark: SparkSession, dir: String, base: DataFrame): DataFrame = {
     val books = pqTrainedBooks(spark, dir)
-    val (labelsLit, matrixLit) = ivfCentroidLits(spark, dir)
-    val codeCols = (0 until PqM).map { s =>
-      VectorFunctions.nearestCentroidIdx(
-        slice(col("embedding"), s * PqSubDim + 1, PqSubDim), books(s)).as(s"c$s")
-    }
-    val listCol = element_at(labelsLit,
-      VectorFunctions.nearestCentroidIdx(col("embedding"), matrixLit) + 1).as("ivf_list")
-    val coded = base.select(col("vec_id") +: listCol +: codeCols: _*)
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        explode(transform(
-          VectorFunctions.topCentroidIdxs(col("embedding"), matrixLit, NProbe),
-          i => element_at(labelsLit, i + 1))).as("ivf_list"))
-    val adc = (0 until PqM).map { s =>
-      VectorFunctions.sqDist(
-        slice(col("qv"), s * PqSubDim + 1, PqSubDim),
-        element_at(books(s), col(s"c$s") + 1))
-    }.foldLeft(lit(0.0))(_ + _)
+    val ivf = ivfQuantizer(spark, dir)
+    val coded = base.select(col("vec_id") +: col("embedding") +:
+      ivf.list(col("embedding")).as("ivf_list") +: pqCodes(books): _*)
     // a corpus vector lives in exactly one list, so a (query, neighbor)
     // pair arises from at most one probed list — no dedup needed
-    coded.join(broadcast(queries), Seq("ivf_list"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (-round(adc, 6)).as("sim"))
+    probePairs(coded, Seq(ivf.probes(col("embedding"))), Seq("ivf_list"), score = -adc(books))
   }
 
   /** Candidates each query passes from the compressed stage to the
@@ -500,14 +483,7 @@ object Similarity {
     val base = ck.ckpt(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
     val cands = rankedTopK(spark, ivfPqAdcPairs(spark, dir, base), RefineR)
       .select(col("query_id"), col("neighbor_id"))
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = cands
-      .join(base.select(col("vec_id").as("neighbor_id"), col("embedding")), "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
-    rankedTopK(spark, exact)
+    rankedTopK(spark, exactPairs(cands, base))
   }
 
   /** PROBE-ONLY fixed-nlist kNN graph — NOT a served query. This is
@@ -525,18 +501,13 @@ object Similarity {
     * population ∝ n and Σ|list|² ∝ n². */
   def knnGraphFixedNlist(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val (labelsLit, matrixLit) = ivfCentroidLits(spark, dir)
-    val listed = base.withColumn("ivf_list",
-      element_at(labelsLit, VectorFunctions.nearestCentroidIdx(col("embedding"), matrixLit) + 1))
-    val probes = base
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        explode(transform(
-          VectorFunctions.topCentroidIdxs(col("embedding"), matrixLit, NProbe),
-          i => element_at(labelsLit, i + 1))).as("ivf_list"))
+    val ivf = ivfQuantizer(spark, dir)
+    val listed = base.withColumn("ivf_list", ivf.list(col("embedding")))
+    // every vector is a query here, so the probe side is not broadcast
+    val probes = querySet(base, Seq(ivf.probes(col("embedding"))), isQuery = lit(true))
     val pairs = listed.join(probes, Seq("ivf_list"))
       .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), sim())
     rankedTopK(spark, pairs)
   }
 
@@ -564,11 +535,6 @@ object Similarity {
   def knnGraph(spark: SparkSession, dir: String): DataFrame =
     knnEdgesOn(Tables.embeddings(spark, dir))
 
-  /** Pre-re-point name of [[knnGraph]], kept so existing consumers and
-    * specs read unambiguously; same plan, same oracle. */
-  def knnGraphScaled(spark: SparkSession, dir: String): DataFrame =
-    knnGraph(spark, dir)
-
   /** Prune threshold of [[knnDiversityPrune]] — the SemDeDup ε. */
   val DiversityCos = 0.99
 
@@ -590,14 +556,7 @@ object Similarity {
     * across a list boundary (the documented recall trade, same both
     * engines). */
   def knnDiversityPrune(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val perturbed = base.select(
-      (col("vec_id") + 1000000L).as("vec_id"),
-      transform(col("embedding"), (x, i) =>
-        (x.cast("double") *
-          (lit(1.0) + ((i % 5) - 2).cast("double") / lit(100.0))).cast("float"))
-        .as("embedding"))
-    val corpus = ck.ckpt(base.union(perturbed))
+    val corpus = ck.ckpt(perturbedCorpus(spark, dir))
     val edges = knnEdgesOn(corpus)
     val dup = edges
       .filter(col("sim") >= DiversityCos && col("neighbor_id") < col("query_id"))
@@ -607,6 +566,34 @@ object Similarity {
       .select(col("vec_id"), coalesce(col("pruned"), lit(false)).as("pruned"))
       .orderBy("vec_id")
   }
+
+  /** The (vec_id, embedding) corpus of the near-dup queries: every
+    * vector plus a deterministically perturbed copy (id + 1,000,000;
+    * dimension d scaled by 1 + ((d % 5) − 2)/100, float-rounded
+    * identically on both engines) — near-but-UNEQUAL pairs at
+    * cos ≈ 0.9998 that exact dedup would miss. [[perturbedCorpusSql]]
+    * is its oracle. */
+  private[ops] def perturbedCorpus(spark: SparkSession, dir: String): DataFrame = {
+    val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    base.union(base.select(
+      (col("vec_id") + 1000000L).as("vec_id"),
+      transform(col("embedding"), (x, i) =>
+        (x.cast("double") *
+          (lit(1.0) + ((i % 5) - 2).cast("double") / lit(100.0))).cast("float"))
+        .as("embedding")))
+  }
+
+  private[ops] val perturbedCorpusSql: String =
+    s"""corpus AS (
+       |  SELECT vec_id, embedding FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + 1000000,
+       |    list_transform(generate_series(1, $Dim), d ->
+       |      CAST(CAST(embedding[d] AS DOUBLE) *
+       |        (CAST(1 AS DOUBLE) + CAST((d - 1) % 5 - 2 AS DOUBLE) / CAST(100 AS DOUBLE))
+       |        AS FLOAT))
+       |  FROM embeddings
+       |)""".stripMargin
 
   /** [[jlProject]] target dimensionality — 64 → 16 is a 4× footprint
     * cut with (by JL) ~O(1/√16) expected metric distortion. */
@@ -643,7 +630,7 @@ object Similarity {
     }: _*)
     // NumQueries rows; both sides of the pair join
     val q = ck.ckpt(Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < NumQueries)
+      .filter(IsQuery)
       .select(col("vec_id"), col("embedding"), proj.as("y")))
     def d2(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, yv) => (x.cast("double") - yv.cast("double"))
@@ -727,13 +714,8 @@ object Similarity {
     * anti-join and the max-sim attach. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val pairs = base.join(broadcast(queries), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
     // Q·R rows; feeds simmat, every greedy step, and the output
-    val cands = ck.ckpt(rankedTopK(spark, pairs, MmrCand)
+    val cands = ck.ckpt(rankedTopK(spark, probePairs(base), MmrCand)
       .select(col("query_id"), col("neighbor_id"),
         expr("CAST(round(sim * 1000000) AS BIGINT)").as("rel")))
     val withVec = broadcast(cands)
@@ -845,15 +827,12 @@ object Similarity {
        |)""".stripMargin
 
   /** (vec_id, embedding) corpus → its scaled-kNN top-[[K]] edge set
-    * (the [[knnGraphScaled]] core, reusable over any corpus). */
+    * (the [[knnGraph]] core, reusable over any corpus). */
   private[ops] def knnEdgesOn(corpus: DataFrame): DataFrame = Checkpoints.scope { ck =>
     val spark = corpus.sparkSession
-    val base = ck.ckpt(corpus.select(col("vec_id"), col("embedding")))
-      // feeds the sizing count plus the quantizer's passes
-    val k = math.max(1L, (base.count() + KnnScaledB - 1) / KnnScaledB)
-    val assigned = ck.ckpt(Centroids.kmeansAssignTwoLevel(base, k)
-      .select(col("vec_id"), col("embedding"), col("cluster")))
-      // feeds both sides of the list self-join
+    // feeds both sides of the list self-join
+    val assigned = Centroids.clusteredCorpus(ck, corpus.select(col("vec_id"), col("embedding")),
+      Centroids.clustersFor(_, KnnScaledB))
     val pairs = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.vec_id") =!= col("b.vec_id"))
@@ -866,89 +845,101 @@ object Similarity {
     """round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
       |             CAST(b.embedding AS DOUBLE[])), 6)""".stripMargin
 
-  // composes ann_ivf's coarse-assignment CTEs with ann_pq's codebook
-  // CTEs verbatim; only `terms` changes — the scan is restricted to
-  // the query's probed lists. Ends at `pairs` (query_id, neighbor_id,
-  // qdist) so ann_ivf_pq (ADC ranks served directly) and ann_refine
-  // (exact re-rank of the same candidate stream) share it verbatim.
-  private val ivfPqPairsCtes: String =
+  /** IVF oracle CTEs (no leading WITH): per-label centroids `cents`,
+    * every vector's lists ranked by (distance, label) `ranked_assign`,
+    * each vector's own list `assigned` (columns `assignedCols`) and the
+    * queries' [[NProbe]] nearest lists `probes`. */
+  private def ivfCtes(assignedCols: String): String =
     s"""cents AS (
-         |  SELECT label, list(avg_val ORDER BY d) AS c FROM (
-         |    SELECT label, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
-         |    FROM embeddings, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-         |    GROUP BY label, d) t
-         |  GROUP BY label
-         |), ranked_assign AS (
-         |  SELECT e.vec_id, e.embedding, c.label AS ivf_list,
-         |         row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |           list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |             list_transform(generate_series(1, $Dim), d ->
-         |               (CAST(e.embedding[d] AS DOUBLE) - c.c[d]) * (CAST(e.embedding[d] AS DOUBLE) - c.c[d]))),
-         |             (a, v) -> a + v) ASC, c.label ASC) AS rn
-         |  FROM embeddings e CROSS JOIN cents c
-         |), assigned AS (
-         |  SELECT vec_id, ivf_list FROM ranked_assign WHERE rn = 1
-         |), probes AS (
-         |  SELECT vec_id, embedding, ivf_list FROM ranked_assign
-         |  WHERE rn <= $NProbe AND vec_id < $NumQueries
-         |), cb0 AS (
-         |  SELECT vec_id AS entry, s, list(v ORDER BY d) AS c FROM (
-         |    SELECT vec_id, CAST((d - 1) // $PqSubDim AS INT) AS s, d,
-         |           CAST(embedding[d] AS DOUBLE) AS v
-         |    FROM embeddings, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-         |    WHERE vec_id < $PqC) t
-         |  GROUP BY vec_id, s
-         |), assign0 AS (
-         |  SELECT e.vec_id, c.s, c.entry,
+       |  ${Centroids.meansSql("label", "embeddings")}
+       |), ranked_assign AS (
+       |  SELECT e.vec_id, e.embedding, c.label AS ivf_list,
+       |         row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |           ${Centroids.sqFdSql("e", "c.c")} ASC, c.label ASC) AS rn
+       |  FROM embeddings e CROSS JOIN cents c
+       |), assigned AS (
+       |  SELECT $assignedCols FROM ranked_assign WHERE rn = 1
+       |), probes AS (
+       |  SELECT vec_id, embedding, ivf_list FROM ranked_assign
+       |  WHERE rn <= $NProbe AND vec_id < $NumQueries
+       |)""".stripMargin
+
+  /** PQ oracle CTEs (no leading WITH): the init codebook `cb0` (first
+    * [[PqC]] vectors' subspace slices), the init codes, the one Lloyd
+    * update `upd` (empty cells keep their init entry) into the trained
+    * codebook `cb`, and every vector's final `codes` (vec_id, s, code). */
+  private val pqCtes: String = {
+    def assign(book: String): String =
+      s"""SELECT e.vec_id, c.s, c.entry,
          |    row_number() OVER (PARTITION BY e.vec_id, c.s ORDER BY
          |      list_reduce(list_prepend(CAST(0 AS DOUBLE),
          |        list_transform(generate_series(1, $PqSubDim), i ->
          |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
          |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
          |        (a, v) -> a + v) ASC, c.entry ASC) AS rn
-         |  FROM embeddings e CROSS JOIN cb0 c
-         |), codes0 AS (
-         |  SELECT vec_id, s, entry AS code FROM assign0 WHERE rn = 1
-         |), upd AS (
-         |  SELECT x.s, x.code, di.i,
-         |         round(avg(CAST(e.embedding[x.s * $PqSubDim + di.i] AS DOUBLE)), 6) AS m
-         |  FROM codes0 x JOIN embeddings e ON e.vec_id = x.vec_id,
-         |       (SELECT unnest(generate_series(1, $PqSubDim)) AS i) di
-         |  GROUP BY x.s, x.code, di.i
-         |), cb AS (
-         |  SELECT c0.entry, c0.s, list(coalesce(u.m, c0.c[di.i]) ORDER BY di.i) AS c
-         |  FROM cb0 c0
-         |  CROSS JOIN (SELECT unnest(generate_series(1, $PqSubDim)) AS i) di
-         |  LEFT JOIN upd u ON u.s = c0.s AND u.code = c0.entry AND u.i = di.i
-         |  GROUP BY c0.entry, c0.s
-         |), assign AS (
-         |  SELECT e.vec_id, c.s, c.entry,
-         |    row_number() OVER (PARTITION BY e.vec_id, c.s ORDER BY
-         |      list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |        list_transform(generate_series(1, $PqSubDim), i ->
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-         |        (a, v) -> a + v) ASC, c.entry ASC) AS rn
-         |  FROM embeddings e CROSS JOIN cb c
-         |), codes AS (
-         |  SELECT vec_id, s, entry AS code FROM assign WHERE rn = 1
-         |), terms AS (
-         |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, x.s,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(generate_series(1, $PqSubDim), i ->
-         |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-         |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-         |      (a, v) -> a + v) AS term
-         |  FROM probes q
-         |  JOIN assigned b ON b.ivf_list = q.ivf_list AND b.vec_id <> q.vec_id
-         |  JOIN codes x ON x.vec_id = b.vec_id
-         |  JOIN cb c ON c.s = x.s AND c.entry = x.code
-         |), pairs AS (
-         |  SELECT query_id, neighbor_id,
-         |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE), list(term ORDER BY s)),
-         |      (a, v) -> a + v), 6) AS qdist
-         |  FROM terms GROUP BY query_id, neighbor_id
-         |)""".stripMargin
+         |  FROM embeddings e CROSS JOIN $book c""".stripMargin
+    s"""cb0 AS (
+       |  SELECT vec_id AS entry, s, list(v ORDER BY d) AS c FROM (
+       |    SELECT vec_id, CAST((d - 1) // $PqSubDim AS INT) AS s, d,
+       |           CAST(embedding[d] AS DOUBLE) AS v
+       |    FROM embeddings, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
+       |    WHERE vec_id < $PqC) t
+       |  GROUP BY vec_id, s
+       |), assign0 AS (
+       |  ${assign("cb0")}
+       |), codes0 AS (
+       |  SELECT vec_id, s, entry AS code FROM assign0 WHERE rn = 1
+       |), upd AS (
+       |  SELECT x.s, x.code, di.i,
+       |         round(avg(CAST(e.embedding[x.s * $PqSubDim + di.i] AS DOUBLE)), 6) AS m
+       |  FROM codes0 x JOIN embeddings e ON e.vec_id = x.vec_id,
+       |       (SELECT unnest(generate_series(1, $PqSubDim)) AS i) di
+       |  GROUP BY x.s, x.code, di.i
+       |), cb AS (
+       |  SELECT c0.entry, c0.s, list(coalesce(u.m, c0.c[di.i]) ORDER BY di.i) AS c
+       |  FROM cb0 c0
+       |  CROSS JOIN (SELECT unnest(generate_series(1, $PqSubDim)) AS i) di
+       |  LEFT JOIN upd u ON u.s = c0.s AND u.code = c0.entry AND u.i = di.i
+       |  GROUP BY c0.entry, c0.s
+       |), assign AS (
+       |  ${assign("cb")}
+       |), codes AS (
+       |  SELECT vec_id, s, entry AS code FROM assign WHERE rn = 1
+       |)""".stripMargin
+  }
+
+  /** ADC oracle CTEs over [[pqCtes]]: per-subspace `terms` of each
+    * candidate pair (neighbor column `neighbor`, pairs drawn `from`
+    * with codes `x`, filtered by `where`), summed in s order into
+    * `pairs` (query_id, neighbor_id, qdist), 6dp. */
+  private def adcPairsCtes(neighbor: String, from: String, where: String = ""): String =
+    s"""terms AS (
+       |  SELECT q.vec_id AS query_id, $neighbor AS neighbor_id, x.s,
+       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |      list_transform(generate_series(1, $PqSubDim), i ->
+       |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
+       |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
+       |      (a, v) -> a + v) AS term
+       |  FROM $from
+       |  JOIN cb c ON c.s = x.s AND c.entry = x.code
+       |  $where
+       |), pairs AS (
+       |  SELECT query_id, neighbor_id,
+       |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE), list(term ORDER BY s)),
+       |      (a, v) -> a + v), 6) AS qdist
+       |  FROM terms GROUP BY query_id, neighbor_id
+       |)""".stripMargin
+
+  // ann_ivf's coarse-assignment CTEs with ann_pq's codebook CTEs; only
+  // the scan changes — restricted to the query's probed lists. Ends at
+  // `pairs` (query_id, neighbor_id, qdist) so ann_ivf_pq (ADC ranks
+  // served directly) and ann_refine (exact re-rank of the same
+  // candidate stream) share it verbatim.
+  private val ivfPqPairsCtes: String =
+    s"""${ivfCtes("vec_id, ivf_list")}, $pqCtes, ${adcPairsCtes("b.vec_id",
+      """probes q
+        |  JOIN assigned b ON b.ivf_list = q.ivf_list AND b.vec_id <> q.vec_id
+        |  JOIN codes x ON x.vec_id = b.vec_id""".stripMargin)}"""
 
   /** Hard-negative mining for contrastive training (the in-batch /
     * BM25-negative upgrade every dense-retriever recipe ships): for
@@ -961,14 +952,8 @@ object Similarity {
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val queries = base.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("embedding").as("qv"))
-    val pairs = base.join(broadcast(queries),
-        col("query_id") =!= col("vec_id") && col("label") =!= col("qlabel"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
-    rankedTopK(spark, pairs)
+    rankedTopK(spark, probePairs(base, Seq(col("label").as("qlabel")),
+      extra = Some(col("label") =!= col("qlabel"))))
   }
 
   private val hardNegativesSql: String =
@@ -1068,8 +1053,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("doc_id"))
     val dense = base.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
-      .select(col("vec_id").as("doc_id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 6).as("sim"))
+      .select(col("vec_id").as("doc_id"), sim())
       .withColumn("dense_rank", row_number().over(dw).cast("long"))
       .filter(col("dense_rank") <= topN)
       .select("doc_id", "dense_rank")
@@ -1145,8 +1129,7 @@ object Similarity {
     val scored = base.filter(col("doc") >= MsQ)
       .join(broadcast(queries), lit(true))
       .select(col("qdoc"), col("qtok"), col("doc"),
-        (round(round(VectorFunctions.cosine(col("qv"), col("embedding")), 6)
-          * 1000000)).cast("long").as("s"))
+        (round(round(cosine, 6) * 1000000)).cast("long").as("s"))
       .groupBy("qdoc", "doc", "qtok").agg(max("s").as("ms"))
       .groupBy("qdoc", "doc").agg(sum("ms").as("maxsim_micros"))
     import org.apache.spark.sql.expressions.Window
@@ -1281,29 +1264,10 @@ object Similarity {
            |), ${rankSql("pairs")}""".stripMargin
 
   private lazy val annIvfOracle: String =
-    s"""WITH cents AS (
-           |  SELECT label, list(avg_val ORDER BY d) AS c FROM (
-           |    SELECT label, d, round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS avg_val
-           |    FROM embeddings, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-           |    GROUP BY label, d) t
-           |  GROUP BY label
-           |), ranked_assign AS (
-           |  SELECT e.vec_id, e.embedding, c.label AS ivf_list,
-           |         row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           |           list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           |             list_transform(generate_series(1, $Dim), d ->
-           |               (CAST(e.embedding[d] AS DOUBLE) - c.c[d]) * (CAST(e.embedding[d] AS DOUBLE) - c.c[d]))),
-           |             (a, v) -> a + v) ASC, c.label ASC) AS rn
-           |  FROM embeddings e CROSS JOIN cents c
-           |), assigned AS (
-           |  SELECT vec_id, embedding, ivf_list FROM ranked_assign WHERE rn = 1
-           |), probes AS (
-           |  SELECT vec_id, embedding, ivf_list FROM ranked_assign
-           |  WHERE rn <= $NProbe AND vec_id < $NumQueries
-           |), pairs AS (
-           |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $cosineSql AS sim
-           |  FROM probes q JOIN assigned b ON q.ivf_list = b.ivf_list AND q.vec_id <> b.vec_id
-           |), ${rankSql("pairs")}""".stripMargin
+    s"""WITH ${ivfCtes("vec_id, embedding, ivf_list")}, pairs AS (
+       |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $cosineSql AS sim
+       |  FROM probes q JOIN assigned b ON q.ivf_list = b.ivf_list AND q.vec_id <> b.vec_id
+       |), ${rankSql("pairs")}""".stripMargin
 
   val entries: Seq[QueryDef] = Seq(
     QueryDef.sql("ann_bruteforce", annBruteOracle)(annBruteforce),
@@ -1328,84 +1292,15 @@ object Similarity {
          |      (q.code[d] - c.code[d]) * (q.code[d] - c.code[d]))), (a, v) -> a + v) AS qdist
          |  FROM codes q JOIN codes c ON q.vec_id <> c.vec_id
          |  WHERE q.vec_id < $NumQueries
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qdist ASC, neighbor_id) AS rank
-         |  FROM pairs
-         |)
-         |SELECT query_id, neighbor_id, rank, qdist FROM ranked
-         |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin)(annSq8),
+         |), ${rankSql("pairs", "qdist", "ASC")}""".stripMargin)(annSq8),
     QueryDef.sql("ann_pq",
-      s"""WITH cb0 AS (
-         |  SELECT vec_id AS entry, s, list(v ORDER BY d) AS c FROM (
-         |    SELECT vec_id, CAST((d - 1) // $PqSubDim AS INT) AS s, d,
-         |           CAST(embedding[d] AS DOUBLE) AS v
-         |    FROM embeddings, (SELECT unnest(generate_series(1, $Dim)) AS d) dims
-         |    WHERE vec_id < $PqC) t
-         |  GROUP BY vec_id, s
-         |), assign0 AS (
-         |  SELECT e.vec_id, c.s, c.entry,
-         |    row_number() OVER (PARTITION BY e.vec_id, c.s ORDER BY
-         |      list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |        list_transform(generate_series(1, $PqSubDim), i ->
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-         |        (a, v) -> a + v) ASC, c.entry ASC) AS rn
-         |  FROM embeddings e CROSS JOIN cb0 c
-         |), codes0 AS (
-         |  SELECT vec_id, s, entry AS code FROM assign0 WHERE rn = 1
-         |), upd AS (
-         |  SELECT x.s, x.code, di.i,
-         |         round(avg(CAST(e.embedding[x.s * $PqSubDim + di.i] AS DOUBLE)), 6) AS m
-         |  FROM codes0 x JOIN embeddings e ON e.vec_id = x.vec_id,
-         |       (SELECT unnest(generate_series(1, $PqSubDim)) AS i) di
-         |  GROUP BY x.s, x.code, di.i
-         |), cb AS (
-         |  SELECT c0.entry, c0.s, list(coalesce(u.m, c0.c[di.i]) ORDER BY di.i) AS c
-         |  FROM cb0 c0
-         |  CROSS JOIN (SELECT unnest(generate_series(1, $PqSubDim)) AS i) di
-         |  LEFT JOIN upd u ON u.s = c0.s AND u.code = c0.entry AND u.i = di.i
-         |  GROUP BY c0.entry, c0.s
-         |), assign AS (
-         |  SELECT e.vec_id, c.s, c.entry,
-         |    row_number() OVER (PARTITION BY e.vec_id, c.s ORDER BY
-         |      list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |        list_transform(generate_series(1, $PqSubDim), i ->
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-         |        (a, v) -> a + v) ASC, c.entry ASC) AS rn
-         |  FROM embeddings e CROSS JOIN cb c
-         |), codes AS (
-         |  SELECT vec_id, s, entry AS code FROM assign WHERE rn = 1
-         |), terms AS (
-         |  SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id, x.s,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(generate_series(1, $PqSubDim), i ->
-         |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-         |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-         |      (a, v) -> a + v) AS term
-         |  FROM embeddings q
-         |  JOIN codes x ON x.vec_id <> q.vec_id
-         |  JOIN cb c ON c.s = x.s AND c.entry = x.code
-         |  WHERE q.vec_id < $NumQueries
-         |), pairs AS (
-         |  SELECT query_id, neighbor_id,
-         |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE), list(term ORDER BY s)),
-         |      (a, v) -> a + v), 6) AS qdist
-         |  FROM terms GROUP BY query_id, neighbor_id
-         |), ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qdist ASC, neighbor_id) AS rank
-         |  FROM pairs
-         |)
-         |SELECT query_id, neighbor_id, rank, qdist FROM ranked
-         |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin)(annPq),
+      s"""WITH $pqCtes, ${adcPairsCtes("x.vec_id",
+        """embeddings q
+          |  JOIN codes x ON x.vec_id <> q.vec_id""".stripMargin, s"WHERE q.vec_id < $NumQueries")},
+         |${rankSql("pairs", "qdist", "ASC")}""".stripMargin)(annPq),
     QueryDef.sql("ann_ivf", annIvfOracle)(annIvf),
     QueryDef.sql("ann_ivf_pq",
-      s"""WITH $ivfPqPairsCtes, ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qdist ASC, neighbor_id) AS rank
-         |  FROM pairs
-         |)
-         |SELECT query_id, neighbor_id, rank, qdist FROM ranked
-         |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin)(annIvfPq),
+      s"WITH $ivfPqPairsCtes, ${rankSql("pairs", "qdist", "ASC")}")(annIvfPq),
     QueryDef.sql("ann_refine",
       s"""WITH $ivfPqPairsCtes, cranked AS (
          |  SELECT query_id, neighbor_id,
@@ -1421,16 +1316,7 @@ object Similarity {
     QueryDef.sql("knn_graph",
       s"""WITH ${knnScaledPairsCtes("embeddings")}, ${rankSql("pairs")}""")(knnGraph),
     QueryDef.sql("knn_diversity_prune",
-      s"""WITH corpus AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000,
-         |    list_transform(generate_series(1, $Dim), d ->
-         |      CAST(CAST(embedding[d] AS DOUBLE) *
-         |        (CAST(1 AS DOUBLE) + CAST((d - 1) % 5 - 2 AS DOUBLE) / CAST(100 AS DOUBLE))
-         |        AS FLOAT))
-         |  FROM embeddings
-         |), ${knnScaledPairsCtes("corpus")},
+      s"""WITH $perturbedCorpusSql, ${knnScaledPairsCtes("corpus")},
          |edges AS (
          |  SELECT query_id, neighbor_id, sim FROM (
          |    SELECT *, row_number() OVER (PARTITION BY query_id

@@ -2061,30 +2061,14 @@ object TextAnalysis {
       |FROM top ORDER BY rank""".stripMargin
 
   final case class TermDoc(term: String, doc_id: Long)
-  final case class PostBuf(var items: List[Long])
 
   /** Keeps the k smallest doc_ids per term — the bounded posting-list
-    * Aggregator: partial buffers never exceed k entries, so a stopword
-    * appearing in every document of a 100 TB corpus still costs O(k)
-    * memory per partition instead of materializing its full posting
-    * list (the failure mode of a naive sort_array(collect_list)). */
+    * Aggregator: a stopword appearing in every document of a 100 TB
+    * corpus still costs O(k) memory per partition instead of
+    * materializing its full posting list (the failure mode of a naive
+    * sort_array(collect_list)). */
   class PostingsAgg(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[TermDoc, PostBuf, Seq[Long]] {
-    private def insert(items: List[Long], v: Long): List[Long] =
-      TopK.insertBounded(items, v, k)(_ < _)
-    override def zero: PostBuf = PostBuf(Nil)
-    override def reduce(b: PostBuf, v: TermDoc): PostBuf = {
-      b.items = insert(b.items, v.doc_id); b
-    }
-    override def merge(a: PostBuf, b: PostBuf): PostBuf = {
-      a.items = b.items.foldLeft(a.items)(insert); a
-    }
-    override def finish(b: PostBuf): Seq[Long] = b.items
-    override def bufferEncoder: org.apache.spark.sql.Encoder[PostBuf] =
-      org.apache.spark.sql.Encoders.product[PostBuf]
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-  }
+      extends TopK.BoundedAgg[TermDoc, Long, Seq[Long]](k, _.doc_id, items => items)(_ < _)
 
   private val PostingsK = 10
 

@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.tables.Tables
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Per-group top-k via a bounded-heap typed Aggregator. The window
   * row_number form (Parity.groupTopK) sorts every group in full; this
@@ -23,35 +25,43 @@ object TopK {
       (front ::: v :: back).take(k)
     }
 
-  final case class Keyed(o_orderpriority: String, o_orderkey: Long, o_totalprice: Double)
-  final case class TopBuf(var items: List[(Double, Long)])
+  /** best-first list of at most k elements — the [[BoundedAgg]] buffer */
+  final case class Heap[E](var items: List[E])
 
-  /** keeps the k best (price, key) pairs, "best" = (price desc, key asc)
-    * — the window form's ordering exactly; buffers are best-first, never
-    * exceed k elements, and the common reduce case (new row worse than
-    * the current k-th) is a single comparison, no sort. */
-  class TopKAgg(k: Int) extends Aggregator[Keyed, TopBuf, Seq[Keyed]] {
-    private def better(a: (Double, Long), b: (Double, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+  /** The bounded-heap Aggregator: per group, the `k` best elements under
+    * `better`, each input mapped to its element by `elem`; `done` turns
+    * the best-first list into the output. Buffers never exceed k
+    * elements, so the map-side partial aggregate ships at most k per
+    * group per partition, and the common reduce case (an element no
+    * better than a full buffer's last) is one comparison, no sort. */
+  class BoundedAgg[IN, E: TypeTag, OUT: TypeTag](k: Int, elem: IN => E, done: List[E] => OUT)(
+      better: (E, E) => Boolean) extends Aggregator[IN, Heap[E], OUT] {
+    private def insert(items: List[E], v: E): List[E] = insertBounded(items, v, k)(better)
 
-    private def insert(items: List[(Double, Long)], v: (Double, Long)): List[(Double, Long)] =
-      insertBounded(items, v, k)(better)
-
-    override def zero: TopBuf = TopBuf(Nil)
-    override def reduce(b: TopBuf, v: Keyed): TopBuf = {
-      b.items = insert(b.items, (v.o_totalprice, v.o_orderkey))
+    override def zero: Heap[E] = Heap(Nil)
+    override def reduce(b: Heap[E], v: IN): Heap[E] = {
+      b.items = insert(b.items, elem(v))
       b
     }
-    override def merge(a: TopBuf, b: TopBuf): TopBuf = {
+    override def merge(a: Heap[E], b: Heap[E]): Heap[E] = {
       a.items = b.items.foldLeft(a.items)(insert)
       a
     }
-    override def finish(b: TopBuf): Seq[Keyed] =
-      b.items.map { case (p, key) => Keyed("", key, p) }
-    override def bufferEncoder: Encoder[TopBuf] = Encoders.product[TopBuf]
-    override def outputEncoder: Encoder[Seq[Keyed]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Keyed]]()
+    override def finish(b: Heap[E]): OUT = done(b.items)
+    override val bufferEncoder: Encoder[Heap[E]] = ExpressionEncoder[Heap[E]]()
+    override val outputEncoder: Encoder[OUT] = ExpressionEncoder[OUT]()
   }
+
+  /** (score desc, id asc): the order of every (score, id) top-k */
+  def scoreDescIdAsc(a: (Double, Long), b: (Double, Long)): Boolean =
+    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+
+  final case class Keyed(o_orderpriority: String, o_orderkey: Long, o_totalprice: Double)
+
+  /** keeps the k best (price, key) pairs, "best" = (price desc, key asc)
+    * — the window form's ordering exactly. */
+  class TopKAgg(k: Int) extends BoundedAgg[Keyed, (Double, Long), Seq[Keyed]](k,
+    v => (v.o_totalprice, v.o_orderkey), _.map { case (p, key) => Keyed("", key, p) })(scoreDescIdAsc)
 
   def groupTopKAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

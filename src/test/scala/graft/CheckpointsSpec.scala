@@ -380,4 +380,29 @@ class CheckpointsSpec extends SparkSpec {
     val trees = mainHits(Seq("def deleteRecursively", "Files.list(", "Files.walk("))
     assert(trees.map(_._1).distinct == List("package.scala"), trees.map(_._2).mkString("\n"))
   }
+
+  test("the vector family writes each probe and quantizer piece once under src/main") {
+    def hits(p: String, skip: String = ""): List[(String, String)] =
+      mainHits(Seq(p)).filterNot(_._1 == skip)
+    def show(hs: List[(String, String)]): String = hs.map(_._2).mkString("\n")
+    // one query set and one cosine probe score (Similarity.IsQuery, .cosine)
+    val queries = hits("vec_id\") < NumQueries").filter(_._1 == "Similarity.scala")
+    assert(queries.size <= 2, show(queries))
+    val cosine = hits("VectorFunctions.cosine(col(\"qv\"), col(\"embedding\"))")
+    assert(cosine.size == 1, show(cosine))
+    // one nearest-centroid lookup per quantizer (k-means/IVF, super-
+    // centroid of a double row, PQ code) and one nprobe explode
+    val nearest = mainHits(Seq("nearestCentroidIdx(", "nearestCentroidIdxD("))
+      .filterNot(_._1 == "VectorFunctions.scala")
+    assert(nearest.size <= 3, show(nearest))
+    val probes = hits("topCentroidIdxs(", "VectorFunctions.scala")
+    assert(probes.size == 1, show(probes))
+    // the perturbed near-dup corpus and embedding_neardup's plain copy
+    val copies = hits("(col(\"vec_id\") + 1000000L)")
+    assert(copies.size == 2, show(copies))
+    // one bounded-heap Aggregator around insertBounded (TopK.BoundedAgg)
+    val heapFiles = hits("insertBounded(").map(_._1).toSet
+    val heapAggs = hits("Aggregator[").filter(h => heapFiles(h._1))
+    assert(heapAggs.size == 1, show(heapAggs))
+  }
 }

@@ -350,11 +350,24 @@ class PlanSpec extends SparkSpec {
       "the 1-row bitmap must reach the probe side via broadcast")
   }
 
-  test("ann_sq8 quantizes and scores inside codegen; queries reach the corpus via broadcast") {
-    val p = planOf("ann_sq8")
-    assert(!p.contains("CartesianProduct"), "pair generation planned cartesian")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      "the query-code side must broadcast against the corpus scan")
+  test("every probe-join query broadcasts its query set and drops self pairs in the join") {
+    // the probe join's line: the query set is the build side, and the
+    // self-pair predicate sits in the join condition, not after it
+    val probe = """Broadcast(HashJoin|NestedLoopJoin).*BuildRight.*NOT \(query_id#\d+L? = vec_id#\d+L?\)""".r
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // only the query set's own broadcast hint may broadcast
+    try Seq("ann_bruteforce", "ann_lsh", "ann_ivf", "ann_sq8", "ann_pq", "ann_ivf_pq",
+            "ann_refine", "hard_negatives", "mmr_rerank").foreach { q =>
+      val ps = servedPlans(SparkEntry.queries(q)(spark, sfDir).collect()).map(_.executedPlan.toString)
+      assert(ps.nonEmpty, s"$q: no action ran")
+      assert(!ps.exists(_.contains("CartesianProduct")), s"$q: pair generation planned cartesian")
+      assert(ps.exists(p => probe.findFirstIn(p).isDefined),
+        s"$q: no broadcast probe join of the query set:\n${ps.mkString("\n")}")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("ann_sq8 quantizes inside codegen") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions
     val lo = typedLit(Seq.fill(64)(0.0))
@@ -365,11 +378,7 @@ class PlanSpec extends SparkSpec {
     assert(codegenStages(coded) > 0, "Quantize8 fell out of codegen")
   }
 
-  test("ann_pq scans codes only: queries broadcast, corpus never re-attaches embeddings") {
-    val p = planOf("ann_pq")
-    assert(!p.contains("CartesianProduct"), "ADC pair generation planned cartesian")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      "the raw-query side must broadcast against the coded corpus scan")
+  test("ann_pq encodes inside codegen") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions
     val book = typedLit(Seq.fill(4)(Seq.fill(4)(0.5)))

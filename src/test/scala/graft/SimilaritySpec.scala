@@ -126,7 +126,7 @@ class SimilaritySpec extends SparkSpec {
     // keeps per-list population ~B at any n, so edge work is n*B
     val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     val k = math.max(1L, (n + Similarity.KnnScaledB - 1) / Similarity.KnnScaledB)
-    val edges = Similarity.knnGraphScaled(spark, sfDir)
+    val edges = Similarity.knnGraph(spark, sfDir)
     assert(edges.count() <= n * Similarity.K, "more than top-K edges per vector")
     // every vector appears (lists of size >= 2 give everyone a neighbor;
     // at B=50 a singleton list would mean the quantizer collapsed)
@@ -319,7 +319,7 @@ class SimilaritySpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap
     // the audit rides the corpus-SCALED graph (the round-16 fix for the
     // inherited fixed-nlist knee) — replay from the same edge source
-    val edges = Similarity.knnGraphScaled(spark, sfDir)
+    val edges = Similarity.knnGraph(spark, sfDir)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val expect = edges.groupBy(_._1).view.mapValues { es =>
