@@ -236,17 +236,11 @@ object Centroids {
     * (vec_id, embedding, cluster, sqd) assignment. `kExpr` is any SQL
     * scalar; s = ⌈√k⌉ is derived inside. */
   private[ops] def kmeansIvfCtes(src: String, kExpr: String): String = {
-    // double-centroid → double-super distance
-    def sqDD(c: String, u: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d ->
-         |    ($c[d] - $u[d]) * ($c[d] - $u[d]))),
-         |  (a, v) -> a + v)""".stripMargin
     def superOfCents(inner: String): String =
       s"""SELECT cluster, c, super FROM (
          |  SELECT t.cluster, t.c, u.super,
          |         row_number() OVER (PARTITION BY t.cluster
-         |           ORDER BY ${sqDD("t.c", "u.sc")} ASC, u.super ASC) AS rn
+         |           ORDER BY ${sqSumSql(Dim, "d", "t.c[d]", "u.sc[d]")} ASC, u.super ASC) AS rn
          |  FROM ($inner) t CROSS JOIN sup u) x WHERE rn = 1""".stripMargin
     def assign(cents: String): String =
       s"""SELECT vec_id, embedding, cluster, sqd FROM (
@@ -287,13 +281,23 @@ object Centroids {
         sum(round(col("sqd") * 1e6).cast("long")).as("inertia_micros"))
       .orderBy("cluster")
 
-  /** squared L2 in SQL from float row `e`'s embedding to the double
-    * list `c` — the index-ordered fold of `SqDistFD`, bit for bit. */
-  private[ops] def sqFdSql(e: String, c: String): String =
+  /** SQL double sum of `term` (an expression in the index variable
+    * `i`) over i = 1..n, folded in index order — the accumulation of
+    * VectorMath's dot and distance kernels, bit for bit. */
+  private[ops] def sumSql(n: Int, i: String, term: String): String =
     s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |  list_transform(generate_series(1, $Dim), d ->
-       |    (CAST($e.embedding[d] AS DOUBLE) - $c[d]) * (CAST($e.embedding[d] AS DOUBLE) - $c[d]))),
+       |  list_transform(generate_series(1, $n), $i -> $term)),
        |  (a, v) -> a + v)""".stripMargin
+
+  /** SQL squared L2 of two n-element lists whose i-th elements are `x`
+    * and `y` (expressions in the index variable `i`), by [[sumSql]]. */
+  private[ops] def sqSumSql(n: Int, i: String, x: String, y: String): String =
+    sumSql(n, i, s"($x - $y) * ($x - $y)")
+
+  /** squared L2 in SQL from float row `e`'s embedding to the double
+    * list `c` — the oracle of `SqDistFD`. */
+  private[ops] def sqFdSql(e: String, c: String): String =
+    sqSumSql(Dim, "d", s"CAST($e.embedding[d] AS DOUBLE)", s"$c[d]")
 
   /** SQL seed centroids (cluster, c): the rows of `src` with
     * vec_id < `bound`, widened to double ([[seedCents]]). */
@@ -653,31 +657,29 @@ object Centroids {
       .orderBy("comp", "d")
   }
 
-  /** [[pcaTopR]]'s oracle: the same R×iters CTE chain with the
-    * deflation folds spelled out per prior component. MATERIALIZED
-    * throughout — the per-iteration vectors are referenced more than
-    * once and DuckDB inlines plain CTEs exponentially. */
+  /** SQL dot product of two [[Dim]]-element double lists, folded in
+    * index order. */
   private def pcaDot64Sql(a: String, b: String): String =
     s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
        |    list_transform(generate_series(1, $Dim), dd -> $a[dd] * $b[dd])),
        |    (x, y) -> x + y)""".stripMargin
 
-  /** The pcaTopR CTE chain through comp1..R / eig1..R — shared verbatim
-    * by the pca_topr and pca_project oracles. */
+  /** [[pcaTopR]]'s oracle: the same R×iters CTE chain with the
+    * deflation folds spelled out per prior component, through
+    * comp1..R / eig1..R — shared verbatim by the pca_topr and
+    * pca_project oracles. MATERIALIZED throughout — the per-iteration
+    * vectors are referenced more than once and DuckDB inlines plain
+    * CTEs exponentially. */
   private val pcaChainCtes: String = {
     val v0 = (1.0 / math.sqrt(Dim.toDouble)).toFloat
     val v0Dec = new java.math.BigDecimal(v0.toDouble).toPlainString
-    def dot64(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |    list_transform(generate_series(1, $Dim), dd -> $a[dd] * $b[dd])),
-         |    (x, y) -> x + y)""".stripMargin
     // one power iteration for component c: matvec, deflate against
     // comp1..comp{c-1} sequentially, norm, re-quantized v
     def iter(c: Int, i: Int): String = {
       val prevV = if (i == 1) s"c${c}v0" else s"c${c}v${i - 1}"
       val matvec =
         s"""c${c}dots$i AS MATERIALIZED (
-           |  SELECT e.vec_id, ${dot64("le", s"$prevV.v")} AS dot
+           |  SELECT e.vec_id, ${pcaDot64Sql("le", s"$prevV.v")} AS dot
            |  FROM (SELECT vec_id, list_transform(generate_series(1, $Dim),
            |          dd -> CAST(embedding[dd] AS DOUBLE)) AS le FROM embeddings) e
            |  CROSS JOIN $prevV
@@ -693,7 +695,7 @@ object Centroids {
         val src = if (p == 1) s"c${c}w$i" else s"c${c}wdef${i}_${p - 1}"
         s"""c${c}wdef${i}_$p AS MATERIALIZED (
            |  SELECT list_transform(generate_series(1, $Dim),
-           |    dd -> s.w[dd] - ${dot64(s"comp$p.v", "s.w")} * comp$p.v[dd]) AS w
+           |    dd -> s.w[dd] - ${pcaDot64Sql(s"comp$p.v", "s.w")} * comp$p.v[dd]) AS w
            |  FROM $src s CROSS JOIN comp$p
            |)""".stripMargin
       }

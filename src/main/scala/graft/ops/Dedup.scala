@@ -2002,8 +2002,7 @@ object Dedup {
        |dups AS (
        |  SELECT DISTINCT a.vec_id FROM a1 a JOIN a1 b
        |    ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-       |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-       |          CAST(b.embedding AS DOUBLE[])), 6) >= $SemanticCos
+       |  WHERE ${Similarity.cosSql("a.embedding", "b.embedding")} >= $SemanticCos
        |)
        |SELECT a.vec_id, a.cluster, (d.vec_id IS NOT NULL) AS pruned
        |FROM a1 a LEFT JOIN dups d ON a.vec_id = d.vec_id
@@ -2202,17 +2201,15 @@ object Dedup {
          |ORDER BY id_a, id_b""".stripMargin)(ngramJaccard),
     QueryDef.sql("prefix_jaccard_join", prefixJaccardSql)(prefixJaccardJoin),
     QueryDef.sql("embedding_neardup",
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT vec_id, embedding FROM embeddings
         |  UNION ALL
         |  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings
         |)
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |             CAST(b.embedding AS DOUBLE[])), 4) AS cos
+        |       ${Similarity.cosSql("a.embedding", "b.embedding", 4)} AS cos
         |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |            CAST(b.embedding AS DOUBLE[])), 4) >= 0.99
+        |WHERE ${Similarity.cosSql("a.embedding", "b.embedding", 4)} >= 0.99
         |ORDER BY id_a, id_b""".stripMargin)(embeddingNearDup),
     QueryDef.sql("substring_dup", substringDupSql)(substringDup),
     QueryDef.sql("dup_spans", dupSpansSql)(dupSpans),

@@ -154,19 +154,22 @@ object Similarity {
     bits.reduce(_ + _)
   }
 
-  /** the same bucket code as a DuckDB SQL expression: per plane, a
-    * left-fold dot product in index order (matching VectorMath.dotF's
-    * accumulation exactly) against the float weights' exact decimals.
-    * `planeOffset` selects the table's plane family, mirroring
-    * [[bucketCode]]. */
+  /** `emb` · plane `p` as a DuckDB SQL expression: a left-fold dot
+    * product in index order (matching VectorMath.dotF's accumulation
+    * exactly) against the float weights' exact decimals. */
+  private def planeDotSql(emb: String, p: Int): String = {
+    val weights = planeWeightsF(p)
+      .map(w => new java.math.BigDecimal(w.toDouble).toPlainString)
+      .mkString("[", ", ", "]")
+    Centroids.sumSql(Dim, "d", s"CAST($emb[d] AS DOUBLE) * ($weights)[d]")
+  }
+
+  /** the same bucket code as a DuckDB SQL expression, one
+    * [[planeDotSql]] sign per plane. `planeOffset` selects the table's
+    * plane family, mirroring [[bucketCode]]. */
   private def bucketSql(embCol: String, planeOffset: Int = 0): String =
     (0 until NumPlanes).map { p =>
-      val weights = planeWeightsF(planeOffset + p)
-        .map(w => new java.math.BigDecimal(w.toDouble).toPlainString)
-        .mkString("[", ", ", "]")
-      s"""(CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d -> CAST($embCol[d] AS DOUBLE) * ($weights)[d])),
-         |  (a, v) -> a + v) >= 0 THEN ${1L << p} ELSE 0 END)""".stripMargin
+      s"(CASE WHEN ${planeDotSql(embCol, planeOffset + p)} >= 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
@@ -328,28 +331,6 @@ object Similarity {
   val PqSubDim = Dim / PqM
   val PqC      = 64
 
-  /** Product-quantization ANN with asymmetric-distance (ADC) scan — the
-    * aggressive end of the vector-compression axis ([[annSq8]] is 4×
-    * smaller than float32; this is 32×: each corpus vector becomes
-    * [[PqM]] small ints = 8 B at cluster width, so a 100 TB float32
-    * corpus scans as ~3 TB of codes while RAW queries keep full
-    * precision).
-    *
-    * Encode: per subspace s, code_s = nearest codebook entry of the
-    * vector's 8-dim slice (codegen'd `NearestCentroidIdx` against the
-    * sliced literal codebook — strict-less-than, lowest entry on ties).
-    * Scan: qdist(q, x) = Σ_s ‖q_s − book_s[x.code_s]‖² with the QUERY
-    * side unquantized — each term is the codegen'd `SqDistFD` against
-    * the codebook entry selected by `element_at`, summed s = 0..m−1 in
-    * a fixed fold order, so the oracle's s-ordered `list_reduce`
-    * reproduces the double bit-for-bit. Ranking reuses the bounded-heap
-    * Aggregator via the exact sim = −qdist embedding (no double-
-    * rounding hazard: negation is exact).
-    *
-    * The broadcast side is the [[NumQueries]]-row query set (the
-    * bruteforce convention); the corpus side never re-attaches raw
-    * embeddings — the scan reads codes only, which is the entire point
-    * of PQ at scale. */
   /** One-Lloyd-round PQ codebook training over `base` (vec_id,
     * embedding) — shared by [[annPq]] and [[annIvfPq]]. Init = subspace
     * slices of the first [[PqC]] vectors (bounded driver metadata, the
@@ -412,6 +393,29 @@ object Similarity {
       element_at(books(s), col(s"c$s") + 1))
   }.foldLeft(lit(0.0))(_ + _)
 
+  /** Product-quantization ANN with asymmetric-distance (ADC) scan — the
+    * aggressive end of the vector-compression axis ([[annSq8]] is 4×
+    * smaller than float32; this is 32×: each corpus vector becomes
+    * [[PqM]] small ints = 8 B at cluster width, so a 100 TB float32
+    * corpus scans as ~3 TB of codes while RAW queries keep full
+    * precision).
+    *
+    * Encode: per subspace s, code_s = nearest codebook entry of the
+    * vector's [[PqSubDim]]-dim slice (codegen'd `NearestCentroidIdx`
+    * against the sliced literal codebook — strict-less-than, lowest
+    * entry on ties).
+    * Scan: qdist(q, x) = Σ_s ‖q_s − book_s[x.code_s]‖² with the QUERY
+    * side unquantized — each term is the codegen'd `SqDistFD` against
+    * the codebook entry selected by `element_at`, summed s = 0..m−1 in
+    * a fixed fold order, so the oracle's s-ordered `list_reduce`
+    * reproduces the double bit-for-bit. Ranking reuses the bounded-heap
+    * Aggregator via the exact sim = −qdist embedding (no double-
+    * rounding hazard: negation is exact).
+    *
+    * The broadcast side is the [[NumQueries]]-row query set (the
+    * bruteforce convention); the corpus side never re-attaches raw
+    * embeddings — the scan reads codes only, which is the entire point
+    * of PQ at scale. */
   def annPq(spark: SparkSession, dir: String): DataFrame = Checkpoints.scope { ck =>
     val base = ck.ckpt(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
       // feeds the coded scan and the query set (training reads its
@@ -651,32 +655,17 @@ object Similarity {
   }
 
   private val jlSql: String = {
-    def dot(k: Int): String = {
-      val weights = planeWeightsF(k)
-        .map(w => new java.math.BigDecimal(w.toDouble).toPlainString)
-        .mkString("[", ", ", "]")
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $Dim), d -> CAST(embedding[d] AS DOUBLE) * ($weights)[d])),
-         |  (a, v) -> a + v)""".stripMargin
-    }
-    val d2o =
-      """round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |  list_transform(generate_series(1, 64), d ->
-        |    (CAST(l.embedding[d] AS DOUBLE) - CAST(r.embedding[d] AS DOUBLE))
-        |    * (CAST(l.embedding[d] AS DOUBLE) - CAST(r.embedding[d] AS DOUBLE)))),
-        |  (a, v) -> a + v), 6)""".stripMargin
-    val d2p =
-      s"""round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |  list_transform(generate_series(1, $JlK), d -> (l.y[d] - r.y[d]) * (l.y[d] - r.y[d]))),
-         |  (a, v) -> a + v), 6)""".stripMargin
+    val d2o = Centroids.sqSumSql(Dim, "d",
+      "CAST(l.embedding[d] AS DOUBLE)", "CAST(r.embedding[d] AS DOUBLE)")
+    val d2p = Centroids.sqSumSql(JlK, "d", "l.y[d]", "r.y[d]")
     s"""WITH proj AS (
        |  SELECT vec_id, embedding,
-       |         [${(0 until JlK).map(dot).mkString(",\n          ")}] AS y
+       |         [${(0 until JlK).map(planeDotSql("embedding", _)).mkString(",\n          ")}] AS y
        |  FROM embeddings WHERE vec_id < $NumQueries
        |), pairs AS (
        |  SELECT l.vec_id AS id_a, r.vec_id AS id_b,
-       |         $d2o AS d2_orig,
-       |         $d2p AS d2_proj
+       |         round($d2o, 6) AS d2_orig,
+       |         round($d2p, 6) AS d2_proj
        |  FROM proj l JOIN proj r ON l.vec_id < r.vec_id
        |)
        |SELECT id_a, id_b, d2_orig, d2_proj,
@@ -782,19 +771,14 @@ object Similarity {
          |  WHERE rnk = 1
          |), selu$k AS (SELECT * FROM selu${k - 1} UNION ALL SELECT * FROM sel$k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |         CAST(round($cosineSql * 1000000) AS BIGINT) AS rel
-       |  FROM embeddings q JOIN embeddings b ON q.vec_id <> b.vec_id
-       |  WHERE q.vec_id < $NumQueries
-       |), rankedc AS (
+    s"""WITH ${probePairsSql(score = s"CAST(round($cosineSql * 1000000) AS BIGINT) AS rel")},
+       |rankedc AS (
        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, neighbor_id) AS rnk
        |  FROM pairs
        |), cands AS (SELECT query_id, neighbor_id, rel FROM rankedc WHERE rnk <= $MmrCand),
        |simmat AS (
        |  SELECT a.query_id, a.neighbor_id AS ca, b.neighbor_id AS cb,
-       |         CAST(round(round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-       |                    CAST(eb.embedding AS DOUBLE[])), 6) * 1000000) AS BIGINT) AS s
+       |         CAST(round(${cosSql("ea.embedding", "eb.embedding")} * 1000000) AS BIGINT) AS s
        |  FROM cands a
        |  JOIN cands b ON a.query_id = b.query_id AND a.neighbor_id <> b.neighbor_id
        |  JOIN embeddings ea ON ea.vec_id = a.neighbor_id
@@ -821,8 +805,7 @@ object Similarity {
           s"SELECT CAST(ceil(count(*) / $KnnScaledB.0) AS BIGINT) FROM $src")},
        |pairs AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-       |          CAST(b.embedding AS DOUBLE[])), 6) AS sim
+       |    ${cosSql("a.embedding", "b.embedding")} AS sim
        |  FROM a1 a JOIN a1 b ON a.cluster = b.cluster AND a.vec_id <> b.vec_id
        |)""".stripMargin
 
@@ -837,13 +820,30 @@ object Similarity {
       .join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        round(VectorFunctions.cosine(col("a.embedding"), col("b.embedding")), 6).as("sim"))
+        sim(VectorFunctions.cosine(col("a.embedding"), col("b.embedding"))))
     rankedTopK(spark, pairs)
   }
 
-  private val cosineSql =
-    """round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-      |             CAST(b.embedding AS DOUBLE[])), 6)""".stripMargin
+  /** SQL cosine of the lists `a` and `b` rounded to `dp` places — the
+    * oracle of a served `sim` */
+  private[ops] def cosSql(a: String, b: String, dp: Int = 6): String =
+    s"round(list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])), $dp)"
+
+  private val cosineSql = cosSql("q.embedding", "b.embedding")
+
+  /** the oracle of [[probePairs]]: the `pairs` CTE of the query rows
+    * `q` of `from` with its other rows `b` equal on `key` and passing
+    * `extra`, each scored by `score` (an aliased SQL column). */
+  private def probePairsSql(from: String = "embeddings", key: Option[String] = None,
+                            extra: Option[String] = None,
+                            score: String = s"$cosineSql AS sim"): String = {
+    val on = (key.map(k => s"q.$k = b.$k").toSeq :+ "q.vec_id <> b.vec_id") ++ extra
+    s"""pairs AS (
+       |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $score
+       |  FROM $from q JOIN $from b ON ${on.mkString(" AND ")}
+       |  WHERE q.vec_id < $NumQueries
+       |)""".stripMargin
+  }
 
   /** IVF oracle CTEs (no leading WITH): per-label centroids `cents`,
     * every vector's lists ranked by (distance, label) `ranked_assign`,
@@ -864,6 +864,11 @@ object Similarity {
        |  WHERE rn <= $NProbe AND vec_id < $NumQueries
        |)""".stripMargin
 
+  /** squared L2 in SQL from row `e`'s subspace `s` slice to codebook
+    * entry `c.c` — the PQ code assignment's and the ADC term's distance */
+  private def subSqSql(e: String, s: String): String =
+    Centroids.sqSumSql(PqSubDim, "i", s"CAST($e.embedding[$s * $PqSubDim + i] AS DOUBLE)", "c.c[i]")
+
   /** PQ oracle CTEs (no leading WITH): the init codebook `cb0` (first
     * [[PqC]] vectors' subspace slices), the init codes, the one Lloyd
     * update `upd` (empty cells keep their init entry) into the trained
@@ -872,11 +877,7 @@ object Similarity {
     def assign(book: String): String =
       s"""SELECT e.vec_id, c.s, c.entry,
          |    row_number() OVER (PARTITION BY e.vec_id, c.s ORDER BY
-         |      list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |        list_transform(generate_series(1, $PqSubDim), i ->
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-         |          (CAST(e.embedding[c.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-         |        (a, v) -> a + v) ASC, c.entry ASC) AS rn
+         |      ${subSqSql("e", "c.s")} ASC, c.entry ASC) AS rn
          |  FROM embeddings e CROSS JOIN $book c""".stripMargin
     s"""cb0 AS (
        |  SELECT vec_id AS entry, s, list(v ORDER BY d) AS c FROM (
@@ -915,11 +916,7 @@ object Similarity {
   private def adcPairsCtes(neighbor: String, from: String, where: String = ""): String =
     s"""terms AS (
        |  SELECT q.vec_id AS query_id, $neighbor AS neighbor_id, x.s,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(generate_series(1, $PqSubDim), i ->
-       |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]) *
-       |        (CAST(q.embedding[x.s * $PqSubDim + i] AS DOUBLE) - c.c[i]))),
-       |      (a, v) -> a + v) AS term
+       |    ${subSqSql("q", "x.s")} AS term
        |  FROM $from
        |  JOIN cb c ON c.s = x.s AND c.entry = x.code
        |  $where
@@ -957,12 +954,7 @@ object Similarity {
   }
 
   private val hardNegativesSql: String =
-    s"""WITH pairs AS (
-       |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $cosineSql AS sim
-       |  FROM embeddings q JOIN embeddings b
-       |    ON q.vec_id <> b.vec_id AND q.label <> b.label
-       |  WHERE q.vec_id < $NumQueries
-       |), ${rankSql("pairs")}""".stripMargin
+    s"WITH ${probePairsSql(extra = Some("q.label <> b.label"))}, ${rankSql("pairs")}"
 
   /** kNN label-consensus noise detection (the confident-learning-lite
     * pass a labeled corpus gets before training): a vector whose
@@ -1148,8 +1140,7 @@ object Similarity {
        |  SELECT doc AS qdoc, vec_id AS qtok, embedding AS qv FROM base WHERE doc < $MsQ
        |), sims AS (
        |  SELECT q.qdoc, q.qtok, b.doc,
-       |         CAST(round(round(list_cosine_similarity(CAST(q.qv AS DOUBLE[]),
-       |                    CAST(b.embedding AS DOUBLE[])), 6) * 1000000) AS BIGINT) AS s
+       |         CAST(round(${cosSql("q.qv", "b.embedding")} * 1000000) AS BIGINT) AS s
        |  FROM base b CROSS JOIN q
        |  WHERE b.doc >= $MsQ
        |), tokmax AS (
@@ -1232,21 +1223,12 @@ object Similarity {
 
   // the four candidate-generation oracles, extracted so the recall
   // matrix can embed each as a subquery beside the brute-force truth
-  private lazy val annBruteOracle: String =
-    s"""WITH pairs AS (
-           |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $cosineSql AS sim
-           |  FROM embeddings q JOIN embeddings b ON q.vec_id <> b.vec_id
-           |  WHERE q.vec_id < $NumQueries
-           |), ${rankSql("pairs")}""".stripMargin
+  private lazy val annBruteOracle: String = s"WITH ${probePairsSql()}, ${rankSql("pairs")}"
 
   private lazy val annLshOracle: String =
     s"""WITH buckets AS (
            |  SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM embeddings
-           |), pairs AS (
-           |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, $cosineSql AS sim
-           |  FROM buckets q JOIN buckets b ON q.bucket = b.bucket AND q.vec_id <> b.vec_id
-           |  WHERE q.vec_id < $NumQueries
-           |), ${rankSql("pairs")}""".stripMargin
+           |), ${probePairsSql("buckets", Some("bucket"))}, ${rankSql("pairs")}""".stripMargin
 
   private lazy val annLshMultiOracle: String =
     s"""WITH buckets AS (

@@ -404,5 +404,15 @@ class CheckpointsSpec extends SparkSpec {
     val heapFiles = hits("insertBounded(").map(_._1).toSet
     val heapAggs = hits("Aggregator[").filter(h => heapFiles(h._1))
     assert(heapAggs.size == 1, show(heapAggs))
+    // the oracle side: one probe-pairs CTE beside ann_ivf's probed-list
+    // join (Similarity.probePairsSql), one SQL cosine (Similarity.cosSql)
+    // and one index-ordered dot/distance fold (Centroids.sumSql), which
+    // leaves Similarity only the ADC sum over its subspace terms
+    val sqlPairs = hits("SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id")
+    assert(sqlPairs.size <= 2, show(sqlPairs))
+    val sqlCosine = hits("list_cosine_similarity(")
+    assert(sqlCosine.size == 1, show(sqlCosine))
+    val folds = hits("list_reduce(list_prepend(CAST(0 AS DOUBLE)").filter(_._1 == "Similarity.scala")
+    assert(folds.size <= 1, show(folds))
   }
 }
