@@ -449,7 +449,7 @@ object Similarity {
 
   /** The IVFPQ candidate scan shared by [[annIvfPq]] (serves ADC ranks
     * directly) and [[annRefine]] (passes them to an exact re-rank):
-    * (query_id, neighbor_id, sim) where sim = −round(ADC distance, 6).
+    * (query_id, neighbor_id, sim) where sim = round(−ADC distance, 6).
     * `base` must be the checkpointed (vec_id, embedding) corpus
     * feeding the coded scan (codebook training derives its own corpus
     * inside the memoized artifact). */
@@ -1199,7 +1199,7 @@ object Similarity {
   }
 
   private lazy val annRecallSql: String = {
-    def m(name: String, oracle: String): String =
+    def m(name: String): String =
       s"""SELECT '$name' AS method,
          |  (SELECT CAST(count(*) AS BIGINT) FROM ${name}_r) AS n_retrieved,
          |  (SELECT CAST(count(*) AS BIGINT)
@@ -1216,8 +1216,7 @@ object Similarity {
        |), ann_lsh_multi_r AS MATERIALIZED (
        |  SELECT query_id, neighbor_id FROM ($annLshMultiOracle) x
        |)
-       |${Seq("ann_ivf" -> "", "ann_lsh" -> "", "ann_lsh_multi" -> "")
-            .map { case (n, _) => m(n, "") }.mkString("\nUNION ALL\n")}
+       |${Seq("ann_ivf", "ann_lsh", "ann_lsh_multi").map(m).mkString("\nUNION ALL\n")}
        |ORDER BY method""".stripMargin
   }
 
